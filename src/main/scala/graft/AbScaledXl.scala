@@ -21,7 +21,7 @@ import graft.graph.{ConnectedComponents, LabelPropagation, PageRank, PageRankGra
   * The session shuffle-partition cap SCALES WITH THE POINT
   * (max(32, |E|/250k) — 32/80/400 at 2M/20M/100M), mirroring how a real
   * cluster's session cap grows with executor count; the graph loops
-  * already derive their partitioning from |E| (`PageRank.loopPartitions`)
+  * already derive their partitioning from |E| (`Fixpoint.loopPartitions`)
   * but respect the session cap, so an undersized fixed cap is a harness
   * artifact, not an operator property. The first XL run (fixed 32
   * partitions, 8 GiB heap) demonstrated exactly that: LPA and CC — whose

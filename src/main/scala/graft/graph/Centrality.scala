@@ -27,8 +27,8 @@ import org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint
   * summation-order-sensitive) the result hash-oracles exactly against an
   * unrolled per-level SQL twin. Scale shape: per hop one edge join + one
   * count-combinable aggregation keyed on (seed, vertex); frontier size is
-  * |seeds|-bounded at the root and the usual BFS hygiene applies
-  * (per-level eager checkpoints, superseded ones freed).
+  * |seeds|-bounded at the root; per-level checkpoints are freed once the
+  * result is materialized.
   */
 object Centrality {
 
@@ -40,22 +40,21 @@ object Centrality {
   def pathLoad(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     require(k >= 1 && k <= 8, s"pathLoad unrolls 2k plan levels; got k=$k")
     val spark = edges.sparkSession
-    // LAZY checkpoints throughout (r18 verdict #4 — this leg regressed
-    // on the per-hop eager levels): every per-level checkpoint is a
-    // LogicalRDD leaf (linear plan growth, same as eager) whose persist
-    // caches it on first compute, but NO level runs its own driver job —
-    // the single eager materialization of `out` at the end computes the
-    // whole 2k-level DAG in ONE job, the forward levels' caches feeding
-    // both their anti-join reuse and the backward sweep. 2k+2 driver
-    // jobs → 2. Shuffle sizing + AQE off for that job via loopPartitions
-    // / withLoopConf (the PageRank/CC/LPA idiom); integer path counts —
-    // partition-count-independent.
+    // Not a Fixpoint.iterate loop: a level has no scalar to act on, so
+    // NO level runs its own driver job (r18 verdict #4 — this leg
+    // regressed on per-hop eager levels). Every per-level checkpoint is a
+    // lazy LogicalRDD leaf (linear plan growth) whose persist caches it
+    // on first compute; the single eager materialization of `out` at the
+    // end computes the whole 2k-level DAG in ONE job, the forward levels'
+    // caches feeding both their anti-join reuse and the backward sweep.
+    // 2k+2 driver jobs → 2. Integer path counts, so the loop sizing
+    // cannot change the result.
     val e = edges
       .select(col(edges.columns(0)).as("src"), col(edges.columns(1)).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint(false)
-    PageRank.withLoopConf(spark, PageRank.loopPartitions(spark, {
+    Fixpoint.withLoopConf(spark, Fixpoint.loopPartitions(spark, {
       e.count() // sizes the loop; materializes the edge checkpoint
     })) {
     var frontier = seeds

@@ -32,13 +32,9 @@ import org.apache.spark.sql.graft.GraftInternals
   * Scale shape, per round: two map-side-combinable `groupBy(u).min`
   * aggregations, two |E|-row equi-joins attaching m(u), two distincts —
   * all key-partitioned shuffles bounded by the paper's O(|E|) edge-count
-  * invariant; no step holds a component in memory. Loop hygiene mirrors
-  * [[PageRank]]: the edge relation advances through eager
-  * `localCheckpoint`s with superseded checkpoints freed (O(1) lineage
-  * and storage in the round count), and convergence is detected from a
-  * constant-size per-round signature (edge count + order-invariant
-  * xxhash64 XOR) — one tiny aggregate job on the already-materialized
-  * round result.
+  * invariant; no step holds a component in memory. The edge relation
+  * advances through [[Fixpoint.iterate]]; convergence is detected from
+  * a constant-size per-round signature, the round's one action.
   */
 object ConnectedComponents {
 
@@ -64,9 +60,9 @@ object ConnectedComponents {
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct()
     val m = seed.count()
-    val parts = PageRank.loopPartitions(spark, m)
+    val parts = Fixpoint.loopPartitions(spark, m)
 
-    PageRank.withLoopConf(spark, parts) {
+    Fixpoint.withLoopConf(spark, parts) {
       val verts = e.select(col("a").as("id"))
         .union(e.select(col("b").as("id")))
         .distinct()
@@ -79,94 +75,75 @@ object ConnectedComponents {
 
       try {
         // Edge state: undirected edges as (u, v); orientation is
-        // re-derived inside each star step as that step requires.
-        var edges = seed.localCheckpoint(true)
-        // Failure-path hygiene: on ANY mid-loop throw (including the
-        // 64-round guard) free the live checkpoints before propagating —
-        // library callers have no Bench-style sweep to catch orphans.
-        var pending: DataFrame = null
-        try {
-        e.unpersist()
-        var signature: (Long, Long) = (-1L, -1L)
-        var converged = false
-        var rounds = 0
-        while (!converged) {
-          rounds += 1
-          require(rounds <= 64, "star-contraction failed to converge in 64 rounds")
-
-          // Large-star: Γ from both orientations; every neighbor w > u
-          // re-attaches to m(u) = min(Γ(u) ∪ {u}).
-          val arcs = edges.select(col("u"), col("v"))
-            .union(edges.select(col("v").as("u"), col("u").as("v")))
-          val mLarge = arcs.groupBy(col("u"))
-            .agg(min(col("v")).as("minv"))
-            .select(col("u"), least(col("minv"), col("u")).as("mu"))
-          // Emissions (m(u), v) with v > u ≥ m(u) are already canonical
-          // (strictly increasing pair), so a single distinct suffices.
-          val afterLarge = arcs.join(mLarge, "u")
-            .filter(col("v") > col("u"))
-            .select(col("mu").as("u"), col("v"))
-            .distinct()
-
-          // Small-star: orient toward the larger endpoint (v ≤ u after
-          // this select); every smaller neighbor AND u itself attach to
-          // m(u) = min of the smaller neighbors.
-          val oriented = afterLarge
-            .select(col("v").as("u"), col("u").as("v")) // now v < u
-          val mSmall = oriented.groupBy(col("u")).agg(min(col("v")).as("mu"))
-          val attached = oriented.join(mSmall, "u")
-          // Emissions (mu, x) are already canonical: mu = min(N(u)) ≤ every
-          // emitted partner (both the v ∈ N(u) and u itself), so one
-          // distinct suffices — no re-canonicalization shuffle.
-          val afterSmall = attached
-            .select(col("mu").as("u"), col("v"))
-            .union(attached.select(col("mu").as("u"), col("u").as("v")))
-            .filter(col("u") =!= col("v"))
-            .distinct()
-
-          // LAZY checkpoint (the PageRank.run idiom): the signature
-          // aggregate below is the round's first action, so ONE job both
-          // computes the round and materializes the checkpoint — the
-          // eager form paid a separate materialization job per round.
-          val next = afterSmall.localCheckpoint(false)
-          pending = next
-          val sig = next
-            .agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))"))
-            .head()
-          val newSignature = (sig.getLong(0), if (sig.isNullAt(1)) 0L else sig.getLong(1))
-          if (sys.env.contains("GRAFT_CC_DEBUG"))
-            println(s"CC star round $rounds edges=${newSignature._1}")
-          converged = newSignature == signature
-          signature = newSignature
-          GraftInternals.freeLocalCheckpoint(edges)
-          edges = next
-          pending = null
+        // re-derived inside each star step as that step requires. A
+        // round's scalar is its constant-size signature (edge count +
+        // order-invariant xxhash64 XOR) and whether it repeats the last.
+        val first = Fixpoint.Round(seed, (s: DataFrame) => {
+          s.count()
+          e.unpersist() // the seed checkpoint no longer needs the pairs
+          ((-1L, -1L), false)
+        })
+        val (edges, _, _) = Fixpoint.iterate(first, 64, "star-contraction") {
+          case (_, (_, true), _) => None
+          case (edges, (signature, false), _) =>
+            Some(Fixpoint.Round(starRound(edges), (s: DataFrame) => {
+              val sig = s.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
+              val next = (sig.getLong(0), if (sig.isNullAt(1)) 0L else sig.getLong(1))
+              (next, next == signature)
+            }))
         }
 
         // Fixpoint: a union of stars (center = component min, stored as
         // (u=center, v=member) after canonicalization). Every non-center
         // member appears in exactly one star edge; centers and isolated
         // vertices label themselves.
-        val memberLabel = edges
-          .select(col("v").as("id"), col("u").as("label"))
-          .groupBy(col("id")).agg(min(col("label")).as("label"))
-        val out = verts.join(memberLabel, Seq("id"), "left")
-          .select(col("id").as("member_id"),
-            coalesce(col("label"), col("id")).as("rep_id"))
-          .orderBy(col("member_id"))
-          .localCheckpoint(true)
-        GraftInternals.freeLocalCheckpoint(edges)
-        out
-        } catch {
-          case t: Throwable =>
-            GraftInternals.freeLocalCheckpoint(edges)
-            if (pending ne null) GraftInternals.freeLocalCheckpoint(pending)
-            throw t
-        }
+        try {
+          val memberLabel = edges
+            .select(col("v").as("id"), col("u").as("label"))
+            .groupBy(col("id")).agg(min(col("label")).as("label"))
+          verts.join(memberLabel, Seq("id"), "left")
+            .select(col("id").as("member_id"),
+              coalesce(col("label"), col("id")).as("rep_id"))
+            .orderBy(col("member_id"))
+            .localCheckpoint(true)
+        } finally GraftInternals.freeLocalCheckpoint(edges)
       } finally {
         e.unpersist()
         verts.unpersist()
       }
     }
+  }
+
+  /** One large-star + small-star round over canonical (u < v) edges. */
+  private def starRound(edges: DataFrame): DataFrame = {
+    // Large-star: Γ from both orientations; every neighbor w > u
+    // re-attaches to m(u) = min(Γ(u) ∪ {u}).
+    val arcs = edges.select(col("u"), col("v"))
+      .union(edges.select(col("v").as("u"), col("u").as("v")))
+    val mLarge = arcs.groupBy(col("u"))
+      .agg(min(col("v")).as("minv"))
+      .select(col("u"), least(col("minv"), col("u")).as("mu"))
+    // Emissions (m(u), v) with v > u ≥ m(u) are already canonical
+    // (strictly increasing pair), so a single distinct suffices.
+    val afterLarge = arcs.join(mLarge, "u")
+      .filter(col("v") > col("u"))
+      .select(col("mu").as("u"), col("v"))
+      .distinct()
+
+    // Small-star: orient toward the larger endpoint (v ≤ u after this
+    // select); every smaller neighbor AND u itself attach to m(u) = min
+    // of the smaller neighbors.
+    val oriented = afterLarge
+      .select(col("v").as("u"), col("u").as("v")) // now v < u
+    val mSmall = oriented.groupBy(col("u")).agg(min(col("v")).as("mu"))
+    val attached = oriented.join(mSmall, "u")
+    // Emissions (mu, x) are already canonical: mu = min(N(u)) ≤ every
+    // emitted partner (both the v ∈ N(u) and u itself), so one distinct
+    // suffices — no re-canonicalization shuffle.
+    attached
+      .select(col("mu").as("u"), col("v"))
+      .union(attached.select(col("mu").as("u"), col("u").as("v")))
+      .filter(col("u") =!= col("v"))
+      .distinct()
   }
 }

@@ -15,8 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * (the authority step looks up h(u) by source) and by `dst` (the hub
   * step looks up a(u) by destination) — and neither copy moves again;
   * only the |V|-sized hub/authority vectors and the map-side-combined
-  * contribution partials shuffle per iteration. The per-half-step global sum is a scalar aggregate
-  * (map-side-combined partials, one driver value), the same pattern as the
+  * contribution partials shuffle per iteration. The per-half-step global
+  * sum is the round's one action in [[Fixpoint.iterate]] (map-side-
+  * combined partials, one driver value), the same pattern as the
   * renormalizing PageRank's correction term.
   */
 object Hits {
@@ -25,8 +26,7 @@ object Hits {
       spark: SparkSession,
       edges: DataFrame,
       iterations: Int): DataFrame = {
-    // The loop materializes `auths` on its first pass; with 0 iterations
-    // the final join would NPE with no hint at the cause.
+    // With 0 iterations there is no authority vector to report.
     require(iterations >= 1, s"HITS needs at least 1 iteration; got $iterations")
     val e0 = edges
       .select(col(edges.columns(0)).as("src"), col(edges.columns(1)).as("dst"))
@@ -34,8 +34,8 @@ object Hits {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val m = e0.count()
-    val parts = PageRank.loopPartitions(spark, m)
-    PageRank.withLoopConf(spark, parts) {
+    val parts = Fixpoint.loopPartitions(spark, m)
+    Fixpoint.withLoopConf(spark, parts) {
       val verts = e0.select(col("src").as("id"))
         .union(e0.select(col("dst").as("id")))
         .distinct()
@@ -45,63 +45,42 @@ object Hits {
         verts.unpersist(); e0.unpersist()
         return verts.select(col("id"), lit(0.0).as("authority"), lit(0.0).as("hub"))
       }
-      // Persisted SORTED by each half-step's join key so the per-iteration
-      // merge joins elide the edge-side sort — the PageRank.prepare idiom.
-      val bySrc = e0.repartition(parts, col("src"))
-        .sortWithinPartitions(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-      val byDst = e0.repartition(parts, col("dst"))
-        .sortWithinPartitions(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-      bySrc.count(); byDst.count()
+      val bySrc = Fixpoint.placed(e0, parts, "src")
+      val byDst = Fixpoint.placed(e0, parts, "dst")
       e0.unpersist()
 
-      /** L1-normalize a (id, score) relation: LAZY checkpoint of the raw
-        * scores, so the total's scalar aggregate — the first action — both
-        * computes the half-step and materializes it (the PageRank.run
-        * idiom; the eager form paid a second job re-running the join to
-        * checkpoint what the total had just computed). The result is a
-        * lazy division over the checkpoint — same values, half the jobs.
-        */
-      def normalized(scores: DataFrame): DataFrame = {
-        val pre = scores.localCheckpoint(false)
-        val total = pre.agg(sum(col("score"))).head.getDouble(0)
-        pre.select(col("id"), (col("score") / lit(total)).as("score"))
-      }
-
       try {
-        var hubs = verts.withColumn("score", lit(1.0 / n)).localCheckpoint(true)
-        var auths: DataFrame = null
-        var i = 0
-        while (i < iterations) {
-          val aRaw = bySrc
-            .join(hubs, bySrc("src") === hubs("id"))
-            .select(bySrc("dst"), col("score"))
-            .groupBy(col("dst"))
-            .agg(sum(col("score")).as("s"))
-          val aNext = normalized(
-            verts.join(aRaw, verts("id") === aRaw("dst"), "left")
-              .select(verts("id"), coalesce(col("s"), lit(0.0)).as("score")))
-          if (auths != null)
-            org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(auths)
-          auths = aNext
-
-          val hRaw = byDst
-            .join(auths, byDst("dst") === auths("id"))
-            .select(byDst("src"), col("score"))
-            .groupBy(col("src"))
-            .agg(sum(col("score")).as("s"))
-          val hNext = normalized(
-            verts.join(hRaw, verts("id") === hRaw("src"), "left")
-              .select(verts("id"), coalesce(col("s"), lit(0.0)).as("score")))
-          org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(hubs)
-          hubs = hNext
-          i += 1
+        // One round per half-step: odd rounds compute authorities from
+        // hubs, even rounds hubs from authorities. A round's checkpoint
+        // holds (id, raw score, the normalized vector it was computed
+        // from), its scalar is the raw total, and the normalized scores
+        // are a lazy division over the checkpoint. h_0 = 1/N is already
+        // normalized, so round 0's total is exactly 1.
+        val first = Fixpoint.Round(
+          verts.select(col("id"), lit(1.0 / n).as("score"), lit(0.0).as("other")),
+          (s: DataFrame) => { s.count(); 1.0 })
+        val (last, total, _) = Fixpoint.iterate(first, 2 * iterations, "HITS") {
+          (state, total, r) =>
+            if (r == 2 * iterations) None
+            else {
+              val cur = state.select(col("id"), (col("score") / lit(total)).as("score"))
+              val (e, from, to) = if (r % 2 == 0) (bySrc, "src", "dst") else (byDst, "dst", "src")
+              val raw = e
+                .join(cur, e(from) === cur("id"))
+                .select(e(to), col("score"))
+                .groupBy(col(to))
+                .agg(sum(col("score")).as("s"))
+              Some(Fixpoint.Round(
+                cur.join(raw, cur("id") === raw(to), "left")
+                  .select(cur("id"), coalesce(col("s"), lit(0.0)).as("score"),
+                    cur("score").as("other")),
+                (s: DataFrame) => s.agg(sum(col("score"))).head.getDouble(0)))
+            }
         }
-        val out = auths.select(col("id"), col("score").as("authority"))
-          .join(hubs.select(col("id"), col("score").as("hub")), Seq("id"))
+        try last.select(col("id"), col("other").as("authority"),
+            (col("score") / lit(total)).as("hub"))
           .localCheckpoint(true)
-        org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(auths)
-        org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(hubs)
-        out
+        finally org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(last)
       } finally {
         verts.unpersist(); bySrc.unpersist(); byDst.unpersist()
       }

@@ -15,11 +15,10 @@ import org.apache.spark.sql.functions._
   * [[Motifs.kHopMinHops]] / [[ShortestPaths.bellmanFord]].
   *
   * Scale shape: per round one map-side-combinable degree aggregation plus
-  * two left-semi joins against the survivor list (Catalyst/AQE picks
-  * broadcast once survivors shrink below the threshold). The edge relation
-  * is eagerly localCheckpoint'ed each round — a lazy r-level plan would
-  * re-derive every prior peel — and superseded checkpoints are freed;
-  * callers sweep the final one with the usual persistent-RDD sweep.
+  * two left-anti joins against the dropped list (broadcast once its size
+  * estimate is below the threshold). The edge relation
+  * advances through [[Fixpoint.iterate]]; callers sweep the final
+  * checkpoint with the usual persistent-RDD sweep.
   *
   * Perf note (r7 "regression" adjudicated r8): the bench flagged
   * g7_kcore at 1.14 s isolated vs 0.67 s the round before. Bisect:
@@ -42,41 +41,41 @@ object KCore {
     require(rounds >= 1 && rounds <= 12,
       s"kCore unrolls `rounds` plan levels; got rounds=$rounds")
     // Canonical-orientation dedup + mirror: see Undirected.symmetrize for
-    // the halved-shuffle rationale.
-    var e = Undirected.symmetrize(edges).localCheckpoint(true)
-    var nEdges = e.count()
-    var done = false
-    // Loop shuffle sizing + AQE off (loopPartitions / withLoopConf, the
-    // PageRank/CC/LPA idiom): each peel round is one degree aggregation
-    // + two anti-joins + a checkpoint block-write; at the session's
-    // partition count those per-round fixed costs scale with cores while
-    // the work doesn't (the r18 scaling block's anti-scaling class).
-    // Exact integer degrees/anti-joins — partition-count-independent.
+    // the halved-shuffle rationale. Its count sizes the loop; round 0
+    // checkpoints it, after which the cache is dropped.
     val spark = edges.sparkSession
-    PageRank.withLoopConf(spark, PageRank.loopPartitions(spark, nEdges)) {
-    for (_ <- 1 to rounds if !done) {
-      // Peel via the DROPPED set, not the keep set: after the first round
-      // a peel wave removes few vertices, so the anti-join side is tiny
-      // and AQE broadcasts it — each late round becomes two shuffle-free
-      // scans of the persisted survivors instead of two 200k-row
-      // semi-join shuffles (measured 1.8× on the 2M-edge power-law probe,
-      // AbGraphOps).
-      val dropped = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < k)
-        .select(col("src").as("v"))
-      val next = e
-        .join(dropped, e("src") === dropped("v"), "left_anti")
-        .join(dropped.select(col("v").as("v2")), e("dst") === col("v2"), "left_anti")
-        // LAZY: the count below materializes it, before the parent
-        // checkpoint is freed (PageRank.run idiom — one job per round).
-        .localCheckpoint(false)
-      val nNext = next.count()
-      org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(e)
-      e = next
-      done = nNext == nEdges // no vertex dropped → exact k-core reached
-      nEdges = nNext
-    }
-    } // withLoopConf
-    e.groupBy(col("src").as("id")).agg(count(lit(1)).as("degree"))
+    val sym = Undirected.symmetrize(edges)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try Fixpoint.withLoopConf(spark, Fixpoint.loopPartitions(spark, sym.count())) {
+      // A round's scalar: its edge count, and whether it dropped nothing
+      // (the survivor set is then the exact k-core).
+      val first = Fixpoint.Round(sym, (s: DataFrame) => {
+        val n = s.count()
+        sym.unpersist()
+        (n, false)
+      })
+      val (e, _, _) = Fixpoint.iterate(first, rounds, "k-core") { case (e, (nEdges, done), r) =>
+        if (done || r == rounds) None
+        else {
+          // Peel via the DROPPED set, not the keep set: after the first
+          // round a peel wave removes few vertices, so the anti-join side
+          // is tiny and broadcasts — each late round becomes two
+          // shuffle-free scans of the survivors instead of two 200k-row
+          // semi-join shuffles (measured 1.8× on the 2M-edge power-law
+          // probe, AbGraphOps).
+          val dropped = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+            .filter(col("deg") < k)
+            .select(col("src").as("v"))
+          val next = e
+            .join(dropped, e("src") === dropped("v"), "left_anti")
+            .join(dropped.select(col("v").as("v2")), e("dst") === col("v2"), "left_anti")
+          Some(Fixpoint.Round(next, (s: DataFrame) => {
+            val n = s.count()
+            (n, n == nEdges)
+          }))
+        }
+      }
+      e.groupBy(col("src").as("id")).agg(count(lit(1)).as("degree"))
+    } finally sym.unpersist()
   }
 }

@@ -22,10 +22,9 @@ import org.apache.spark.sql.functions._
   * label map (only the label side moves — the 2|E| side never
   * re-exchanges), then two map-side-combinable aggregations — the argmax
   * is `max(struct(count, -label))`, no window, no shuffle beyond the
-  * groupBy. Labels are eagerly localCheckpoint'ed per round (a lazy
-  * r-level plan would re-derive every prior round); superseded
-  * checkpoints are freed, the caller sweeps the final one. Power-law
-  * probe (AbGraphOps), ≤4-round runs at local[32]: ~7 s at 2M edges,
+  * groupBy. Labels advance through [[Fixpoint.iterate]]; the caller
+  * sweeps the final checkpoint. Power-law probe (AbGraphOps), ≤4-round
+  * runs at local[32]: ~7 s at 2M edges,
   * ~65–69 s at 20M (an upper bound — the same 20M session's SSSP/k-core
   * legs read 2–4× above their documented idle-box walls, i.e. a
   * contended run) — ~linear in |E|; the vote join on |E| dominates, the
@@ -43,70 +42,49 @@ object LabelPropagation {
     require(rounds >= 1 && rounds <= 12,
       s"labelPropagation unrolls `rounds` plan levels; got rounds=$rounds")
     val spark = edges.sparkSession
-    // Persist the symmetrized relation HASH-PARTITIONED BY src once
-    // (PageRank.prepare's `linked` idiom): the per-round vote join then
-    // reuses this partitioning for the 2|E| side and only the |V|-sized
-    // label map moves. Before this, every round re-shuffled the full
-    // edge relation for the join — at the 100M-edge XL point that
+    // The symmetrized relation is placed by src once: the per-round vote
+    // join reuses that partitioning for the 2|E| side and only the
+    // |V|-sized label map moves. Before this, every round re-shuffled the
+    // full edge relation for the join — at the 100M-edge XL point that
     // per-round exchange was the dominant share of 87 GB of spill.
-    // Shuffle sizing + AQE handling mirror the other fixpoints
-    // (loopPartitions / withLoopConf): the loop's shapes are known up
-    // front, and AQE's coalescing could move a stage off the persisted
-    // partitioning, forcing the re-exchange back.
     val pre = Undirected.symmetrize(edges)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val m = pre.count()
-    val parts = PageRank.loopPartitions(spark, m)
-    PageRank.withLoopConf(spark, parts) {
-      val e = pre.repartition(parts, col("src"))
-        // Sorted once so the per-round vote merge join elides the 2|E|-side
-        // sort (the PageRank.prepare idiom): the label side is a checkpoint
-        // leaf with no size estimate, so the join is sort-merge, and an
-        // unsorted cache re-sorted the full edge relation EVERY round.
-        .sortWithinPartitions(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count()
+    val parts = Fixpoint.loopPartitions(spark, m)
+    Fixpoint.withLoopConf(spark, parts) {
+      val e = Fixpoint.placed(pre, parts, "src")
       pre.unpersist()
       try {
         // Symmetrized: every vertex occurs as src, so the vertex set is
-        // one distinct over src.
-        var labels = e.select(col("src").as("id")).distinct()
-          .select(col("id"), col("id").as("label"))
-          .localCheckpoint(true)
-        var done = false
-        for (r <- 1 to rounds if !done) {
-          val votes = e.join(labels, e("src") === labels("id"))
-            .select(e("dst").as("id"), col("label"))
-            .unionAll(labels)
-          // LAZY checkpoint on every round that still runs the early-stop
-          // compare below (the PageRank.run idiom): that count is the
-          // round's first action, so ONE job both computes the round and
-          // materializes the checkpoint — the eager form paid a separate
-          // materialization job per round. The FINAL bounded round has no
-          // compare job, so it stays eager (it must be materialized before
-          // the finally-block unpersists `e` out from under its plan).
-          val next = votes
-            .groupBy(col("id"), col("label")).agg(count(lit(1)).as("c"))
-            .groupBy(col("id"))
-            // argmax by (count desc, label asc): struct compare is
-            // lexicographic, so max picks the highest count, then the
-            // highest -label = the SMALLEST label.
-            .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-            .select(col("id"), (-col("m.nl")).as("label"))
-            .localCheckpoint(r == rounds)
-          // Early-stop check only while a later round exists to skip — on
-          // the final bounded round `done` is never read, so the |V|-row
-          // compare job would be pure waste.
-          if (r < rounds) {
-            val changed = next
-              .join(labels.select(col("id").as("pid"), col("label").as("prev")),
-                col("id") === col("pid"))
-              .filter(col("label") =!= col("prev"))
-              .count()
-            done = changed == 0
-          }
-          org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(labels)
-          labels = next
+        // one distinct over src. A round's scalar: whether it changed no
+        // label (the map is then a fixpoint and the loop stops).
+        val first = Fixpoint.Round(
+          e.select(col("src").as("id")).distinct().select(col("id"), col("id").as("label")),
+          (l: DataFrame) => { l.count(); false })
+        val (labels, _, _) = Fixpoint.iterate(first, rounds, "label propagation") {
+          (labels, done, r) =>
+            if (done || r == rounds) None
+            else {
+              val votes = e.join(labels, e("src") === labels("id"))
+                .select(e("dst").as("id"), col("label"))
+                .unionAll(labels)
+              val next = votes
+                .groupBy(col("id"), col("label")).agg(count(lit(1)).as("c"))
+                .groupBy(col("id"))
+                // argmax by (count desc, label asc): struct compare is
+                // lexicographic, so max picks the highest count, then the
+                // highest -label = the SMALLEST label.
+                .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+                .select(col("id"), (-col("m.nl")).as("label"))
+              // The final bounded round has no later round to skip, so
+              // its action is a plain count, not the |V|-row compare.
+              Some(Fixpoint.Round(next, (l: DataFrame) =>
+                if (r + 1 == rounds) { l.count(); false }
+                else l.join(labels.select(col("id").as("pid"), col("label").as("prev")),
+                    col("id") === col("pid"))
+                  .filter(col("label") =!= col("prev"))
+                  .count() == 0))
+            }
         }
         labels
       } finally e.unpersist()

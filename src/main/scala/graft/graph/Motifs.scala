@@ -24,7 +24,7 @@ object Motifs {
     * `oriented` back the returned census, and callers release them with
     * the usual persistent-RDD sweep (`RddScope` /
     * `GraftInternals.freeLocalCheckpoint`) once the result is consumed —
-    * the same contract as [[kHopMinHops]]'s per-level checkpoints.
+    * the same contract as [[kHopMinHops]]'s result checkpoint.
     */
   private[graft] def orientedGraph(edges: DataFrame): (DataFrame, DataFrame) = {
     val und = edges
@@ -218,63 +218,53 @@ object Motifs {
     * frontier against the edge relation (equi join on src), then anti-joins
     * the visited set so a vertex is emitted at its first (minimum) level.
     * The edge relation is the only large input and NEVER MOVES: while the
-    * reached set is small (≤ [[BroadcastFrontierMax]] ids — frontiers are
-    * checkpointed, so the count is a cheap cached scan), the frontier
-    * semi-join and visited anti-join broadcast their small side, making
-    * each hop a shuffle-free, sort-free scan of the persisted edges
+    * reached set (the round's scalar) is small (≤ [[BroadcastFrontierMax]]
+    * ids), the frontier semi-join and visited anti-join broadcast their
+    * small side, making each hop a shuffle-free, sort-free scan of the
+    * persisted edges
     * (measured 3× on the sf0.1 supply graph, where the default plan
     * re-shuffled + re-sorted 1.2M edges every hop to merge-join a
     * few-thousand-row frontier). Past the threshold the joins fall back
     * to Catalyst's shuffle planning — the reached set is then large
     * enough that moving the edges pays for itself. k is a bounded
-    * constant (driver-side loop of k plan nodes, no convergence test, no
-    * collect).
+    * constant: k [[Fixpoint.iterate]] rounds, no convergence test, no
+    * collect. The result is the final round's checkpoint.
     */
   def kHopMinHops(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     require(k >= 0 && k <= 12, s"k-hop unrolls k plan levels; got k=$k")
     val e = edges.select(col(edges.columns(0)).as("src"), col(edges.columns(1)).as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Loop shuffle sizing + AQE off (loopPartitions / withLoopConf, the
-    // PageRank/CC/LPA idiom): per hop one distinct shuffle, one anti-join
-    // and a checkpoint block-write over frontier-sized rows — at the
-    // session partition count those fixed per-hop costs scale with cores
-    // while the work doesn't (the r18 scaling block's anti-scaling
-    // class). Exact set algebra — partition-count-independent. The edge
-    // count that sizes the loop also materializes the persisted edges
-    // the first hop was about to pay for.
+    // The edge count that sizes the loop also materializes the persisted
+    // edges the first hop was about to pay for. Exact set algebra, so the
+    // loop sizing cannot change the result.
     val spark = edges.sparkSession
-    PageRank.withLoopConf(spark, PageRank.loopPartitions(spark, e.count())) {
-    // Each level is materialized (eager localCheckpoint): the edge scan and
-    // every frontier run ONCE — a fully lazy k-level plan would re-derive
-    // the edge relation and all previous frontiers at every hop (measured
-    // ~2× on the sf0.1 supply graph) and its exponential lineage would not
-    // survive large k. The returned union references the per-level
-    // checkpoints; callers sweep them with the usual persistent-RDD sweep.
-    var frontier = seeds.select(col(seeds.columns(0)).as("id")).distinct()
-      .localCheckpoint(true)
-    var levels = List(frontier.withColumn("hops", lit(0)))
-    var visited = frontier // lazy union over checkpointed levels — no rework
-    var reached = frontier.count()
-    for (h <- 1 to k) {
-      val small = reached <= BroadcastFrontierMax
-      val fSide = if (small) broadcast(frontier) else frontier
-      val vSide = if (small) broadcast(visited) else visited
-      val next = e.join(fSide, e("src") === frontier("id"), "left_semi")
-        .select(col("dst").as("id"))
-        .distinct()
-        .join(vSide, Seq("id"), "left_anti")
-        // LAZY: the reached-count below materializes it; every parent
-        // (the persisted edges, earlier level checkpoints) stays live
-        // until after the loop (PageRank.run idiom — one job per hop).
-        .localCheckpoint(false)
-      levels ::= next.withColumn("hops", lit(h))
-      visited = visited.unionAll(next)
-      frontier = next
-      reached += next.count() // cached scan of the fresh checkpoint
-    }
-    e.unpersist()
-    levels.reverse.reduce(_.unionAll(_))
-    } // withLoopConf
+    try Fixpoint.withLoopConf(spark, Fixpoint.loopPartitions(spark, e.count())) {
+      // Round state: every vertex reached so far with its hop level; the
+      // newest level is the frontier, and a round's scalar is the reached
+      // count. The edge scan and every level run ONCE — a fully lazy
+      // k-level plan would re-derive the edges and all previous levels at
+      // every hop (measured ~2× on the sf0.1 supply graph).
+      val first = Fixpoint.Round(
+        seeds.select(col(seeds.columns(0)).as("id")).distinct().withColumn("hops", lit(0)),
+        (s: DataFrame) => s.count())
+      val (visited, _, _) = Fixpoint.iterate(first, k, "k-hop BFS") { (visited, reached, h) =>
+        if (h == k) None
+        else {
+          val small = reached <= BroadcastFrontierMax
+          val frontier = visited.filter(col("hops") === h).select(col("id"))
+          val ids = visited.select(col("id"))
+          val fSide = if (small) broadcast(frontier) else frontier
+          val vSide = if (small) broadcast(ids) else ids
+          val next = e.join(fSide, e("src") === frontier("id"), "left_semi")
+            .select(col("dst").as("id"))
+            .distinct()
+            .join(vSide, Seq("id"), "left_anti")
+          Some(Fixpoint.Round(visited.unionAll(next.withColumn("hops", lit(h + 1))),
+            (s: DataFrame) => s.count()))
+        }
+      }
+      visited
+    } finally e.unpersist()
   }
 
   /** Reached-set size up to which the BFS frontier/visited relations are

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,16 +21,11 @@ import org.apache.spark.storage.StorageLevel
   *    partitioning and only the rank table (|V| rows, small side) moves;
   *  - no vertex list is ever collected to the driver (the reference's
   *    `all_node` Python list at `pageRank.py:47-53` does not scale);
-  *  - lineage is truncated per iteration via `localCheckpoint`, otherwise
-  *    plan depth grows linearly with iterations and analysis dominates;
   *  - ONE fused scalar aggregate per iteration crosses to the driver
   *    (L1 delta + next iteration's live mass, from which the lost-mass
   *    sum derives — `pageRank.py:133,137-139`);
-  *  - loop shuffles are sized to the GRAPH, not the session: on toy
-  *    graphs the session-wide partition count schedules thousands of
-  *    mostly-empty tasks across the iterations, and per-iteration driver
-  *    latency — not compute — becomes the whole cost (see
-  *    [[loopPartitions]] / [[withLoopConf]]).
+  *  - loop sizing, lineage truncation and checkpoint hygiene are
+  *    [[Fixpoint]]'s.
   */
 object PageRank {
 
@@ -87,53 +82,14 @@ object PageRank {
   /** Loop-invariant relations, persisted once and shared across runs —
     * the optimization SURVEY §2.9/I2 notes the reference misses (it
     * reloads + re-stripes per β, README.md:273-283). `linked` carries each
-    * edge with its source's out-degree, hash-partitioned by `src` into
+    * edge with its source's out-degree, [[Fixpoint.placed]] by `src` into
     * `parts` partitions, so every iteration of every sweep member is a
     * single equi join + keyed sum over already-placed data. `parts` is
-    * sized to the EDGE count (see [[loopPartitions]]) and recorded here so
-    * the iteration loops can pin `spark.sql.shuffle.partitions` to the
-    * same value — the persisted partitioning then satisfies every
-    * per-iteration join's required distribution with zero re-exchange.
+    * sized to the EDGE count and recorded here so the iteration loops run
+    * with the same shuffle partition count as the placed partitioning.
     */
   final case class PreparedGraph(verts: DataFrame, linked: DataFrame, n: Long, parts: Int) {
     def unpersist(): Unit = { linked.unpersist(); verts.unpersist(); () }
-  }
-
-  /** Shuffle-partition count for the iteration loop: ~one partition per
-    * `EdgesPerPartition` edges, capped at the session's configured
-    * `spark.sql.shuffle.partitions`. On a toy graph (WikiData: ~103k
-    * edges; the sf0.1 lineitem graph: ~240k) the session default means
-    * every per-iteration shuffle schedules 32+ mostly-empty tasks × ~4
-    * stages × 2 jobs × 13 iterations — thousands of no-op tasks whose
-    * scheduling latency dominates the loop at small |E|. At cluster scale
-    * |E|/EdgesPerPartition exceeds the session cap and this is a no-op.
-    */
-  private val EdgesPerPartition = 250000L
-
-  private[graph] def loopPartitions(spark: SparkSession, edgeCount: Long): Int = {
-    val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1L, math.min(session.toLong,
-      (edgeCount + EdgesPerPartition - 1) / EdgesPerPartition)).toInt
-  }
-
-  /** Run `body` with the loop's shuffle sizing: `parts` shuffle partitions
-    * and AQE OFF. AQE's per-stage materialize-and-replan round trips add
-    * driver latency to every one of the loop's ~26 jobs, and its shuffle
-    * coalescing can move a stage away from the persisted `linked`
-    * partitioning (forcing a re-exchange); the loop's shapes are fully
-    * known up front, so adaptive planning buys nothing here. Confs are
-    * restored even on failure.
-    */
-  private[graph] def withLoopConf[T](spark: SparkSession, parts: Int)(body: => T): T = {
-    val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val oldAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try body
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", oldParts)
-      spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
-    }
   }
 
   /** Build and materialize the loop invariants. The caller's edge pipeline
@@ -146,48 +102,17 @@ object PageRank {
     val callerCached = edges.storageLevel != StorageLevel.NONE
     val e = if (callerCached) edges else edges.persist(StorageLevel.MEMORY_AND_DISK)
     val m = e.count() // materializes the cache; sizes the loop shuffles
-    val parts = loopPartitions(spark, m)
-    withLoopConf(spark, parts) {
+    val parts = Fixpoint.loopPartitions(spark, m)
+    Fixpoint.withLoopConf(spark, parts) {
       val verts = vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
       val n = verts.count()
-      val linked = e
-        .join(outDegrees(e), "src")
-        .select(col("src"), col("dst"), col("out_degree"))
-        .repartition(parts, col("src"))
-        // Persist SORTED by the join key: the per-iteration rank join is a
-        // sort-merge (the rank side is a checkpoint leaf with no size
-        // estimate, so it never auto-broadcasts), and an unsorted cached
-        // relation pays a full |E|-row sort EVERY iteration. InMemoryScan
-        // advertises the cached plan's outputOrdering, so with this
-        // one-time sort the loop's merge joins elide the edge-side Sort
-        // node entirely — only the |V|-row rank side is sorted per
-        // iteration. Row order into the join is the same sorted order as
-        // before (the sort just runs once), so results are bit-identical.
-        .sortWithinPartitions(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (n > 0) linked.count() // materialize while e is cached
+      val linked = Fixpoint.placed(
+        e.join(outDegrees(e), "src").select(col("src"), col("dst"), col("out_degree")),
+        parts, "src")
       if (!callerCached) e.unpersist()
       PreparedGraph(verts, linked, n, parts)
     }
   }
-
-  /** Join strategy for the per-iteration vertex-sized side (ranks /
-    * contribs). Broadcasting it LOOKS attractive, but measured A/B on the
-    * WikiData flagship says otherwise: each iteration's broadcast must be
-    * rebuilt (collect + broadcast-build = extra driver jobs), and the
-    * shuffle it avoids is already confined to |V| rank rows because the
-    * edge relation is persisted hash-partitioned by `src` and never moves.
-    * Measured: broadcast ON ≈ 9.7–10.7 s, OFF ≈ 6.0–6.8 s warm
-    * (local[32], 13 iterations). Default is therefore the partitioned
-    * join; set GRAFT_BCAST_VERTS to a vertex-count limit to re-enable
-    * broadcasting for topologies where the edge side's per-iteration sort
-    * dominates instead.
-    */
-  private val BroadcastVertexLimit =
-    sys.env.getOrElse("GRAFT_BCAST_VERTS", "0").toLong
-
-  private def vertexSide(df: DataFrame, nVerts: Long): DataFrame =
-    if (nVerts <= BroadcastVertexLimit) broadcast(df) else df
 
   /** Reference-faithful fixpoint (`pageRank.py:116-145`):
     *   pre_i  = β · Σ_{u→i} rank(u)/deg(u)
@@ -210,80 +135,57 @@ object PageRank {
       return RankResult(verts.withColumn("rank", lit(0.0)), 0, 0.0)
     }
 
-    withLoopConf(spark, parts) {
+    Fixpoint.withLoopConf(spark, parts) {
       // Live flag per vertex (has at least one out-edge), carried through
       // the loop state: the lost-mass scalar of iteration i+1 is then
       // derivable INSIDE iteration i's delta aggregate —
       //   s_{i+1} = Σ_v pre_{i+1}(v) = β · Σ_{u→·} rank_{i+1}(u)/deg(u)
       //           = β · Σ_{live u} rank_{i+1}(u)
-      // — so the loop runs ONE driver job per iteration (join + fused
-      // (L1 delta, live mass) aggregate, the lazy checkpoint riding on
-      // it) instead of two. Same exact math, float summation regrouped
-      // per-vertex instead of per-edge-contribution (ulp-level; the
-      // golden top-100 / 1e-12 fixture gates pin it).
+      // — so each iteration's one action is a fused (L1 delta, live mass)
+      // aggregate instead of two. Same exact math, float summation
+      // regrouped per-vertex instead of per-edge-contribution (ulp-level;
+      // the golden top-100 / 1e-12 fixture gates pin it).
       val srcs = linked.select(col("src").as("id")).distinct()
-      // LAZY checkpoint: the init live-mass aggregate below is the first
-      // action, so one job builds AND materializes the initial state.
-      var state = verts
+      val init = verts
         .join(srcs.withColumn("live", lit(true)), Seq("id"), "left")
         .select(col("id"), lit(1.0 / n).as("rank"),
           coalesce(col("live"), lit(false)).as("live"))
-        .localCheckpoint(false)
-      // The checkpoint backing the current `state` projection; freed once
-      // the next iteration's checkpoint is materialized.
-      var backing = state
-      // Live mass of the CURRENT ranks (rides the init job; thereafter it
-      // arrives with each iteration's fused delta job).
-      var liveMass = {
-        val r0 = state.agg(sum(when(col("live"), col("rank")))).first()
-        if (r0.isNullAt(0)) 0.0 else r0.getDouble(0)
-      }
-      var iter = 0
-      var deltaVal = Double.MaxValue
-      while (deltaVal > params.delta && iter < params.maxIter) {
-        // J2 + F1 + A4: contributions summed by dst (rank side broadcast
-        // when |V| permits — the edge relation never moves).
-        val contribs = linked
-          .join(vertexSide(state, n), linked("src") === state("id"))
-          .select(col("dst"), (col("rank") / col("out_degree")).as("w"))
-          .groupBy(col("dst"))
-          .agg(sum(col("w")).as("c"))
-        // Keep old rank alongside the new pre-normalization mass. LAZY
-        // local checkpoint: the fused aggregate below is the first
-        // action, so one job both computes the iteration and materializes
-        // the checkpoint (1 driver job per iteration total).
-        val merged = state
-          .join(vertexSide(contribs, n), state("id") === contribs("dst"), "left")
-          .select(
-            col("id"),
-            col("rank").as("old_rank"),
-            col("live"),
-            (coalesce(col("c"), lit(0.0)) * params.beta).as("pre"))
-          .localCheckpoint(false)
-        // A5: lost mass (dead ends + teleport) folded back uniformly (A6)
-        // — the scalar was carried out of the previous delta job.
-        val s = params.beta * liveMass
-        val corr = (1.0 - s) / n
-        // A7: global L1 delta drives convergence; the same pass emits the
-        // next iteration's live mass.
-        val row = merged.agg(
-          sum(abs(col("pre") + lit(corr) - col("old_rank"))),
-          sum(when(col("live"), col("pre") + lit(corr)))).first()
-        deltaVal = row.getDouble(0)
-        liveMass = if (row.isNullAt(1)) 0.0 else row.getDouble(1)
-        // Next ranks are a lazy projection over the ALREADY-checkpointed
-        // merge — lineage stays one level deep without a second checkpoint
-        // job per iteration. Free the previous iteration's checkpoint
-        // blocks now that this one is materialized (Dataset.unpersist is a
-        // no-op for local checkpoints — it only clears CacheManager
-        // entries).
-        org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(backing)
-        backing = merged
-        state = merged.select(col("id"),
-          (col("pre") + lit(corr)).as("rank"), col("live"))
-        iter += 1
-      }
-      RankResult(state.select(col("id"), col("rank")), iter, deltaVal)
+      // Scalar per round: (L1 delta, live mass of the round's ranks).
+      def liveMass(r: Row, i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+      val first = Fixpoint.Round[(Double, Double)](init, s => (Double.MaxValue,
+        liveMass(s.agg(sum(when(col("live"), col("rank")))).first(), 0)))
+      val (state, (delta, _), iterations) =
+        Fixpoint.iterate(first, params.maxIter, "PageRank") { case (state, (delta, live), i) =>
+          if (!(delta > params.delta) || i >= params.maxIter) None
+          else {
+            // J2 + F1 + A4: contributions summed by dst (the edge relation
+            // never moves).
+            val contribs = linked
+              .join(state, linked("src") === state("id"))
+              .select(col("dst"), (col("rank") / col("out_degree")).as("w"))
+              .groupBy(col("dst"))
+              .agg(sum(col("w")).as("c"))
+            // A5: lost mass (dead ends + teleport) folded back uniformly
+            // (A6) — the scalar was carried out of the previous round.
+            val corr = (1.0 - params.beta * live) / n
+            val merged = state
+              .join(contribs, state("id") === contribs("dst"), "left")
+              .select(
+                col("id"),
+                col("rank").as("old_rank"),
+                col("live"),
+                (coalesce(col("c"), lit(0.0)) * params.beta + lit(corr)).as("rank"))
+            // A7: global L1 delta drives convergence; the same pass emits
+            // the next iteration's live mass.
+            Some(Fixpoint.Round(merged, m => {
+              val r = m.agg(
+                sum(abs(col("rank") - col("old_rank"))),
+                sum(when(col("live"), col("rank")))).first()
+              (r.getDouble(0), liveMass(r, 1))
+            }))
+          }
+        }
+      RankResult(state.select(col("id"), col("rank")), iterations, delta)
     }
   }
 
@@ -313,39 +215,56 @@ object PageRank {
       iterations: Int): DataFrame = {
     val PreparedGraph(verts, linked, n, parts) = g
     if (n == 0) return verts.withColumn("rank", lit(0.0))
-    withLoopConf(spark, parts) {
-      var ranks = verts.withColumn("rank", lit(1.0 / n)).localCheckpoint(true)
-      var i = 0
-      while (i < iterations) {
-        val prev = ranks
-        ranks = uniformStep(verts, linked, n, beta, prev).localCheckpoint(true)
-        org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(prev)
-        i += 1
-      }
-      ranks
+    Fixpoint.withLoopConf(spark, parts) {
+      teleportLoop(verts, linked, beta, iterations, lit(1.0 / n), lit((1.0 - beta) / n),
+        col("rank") / col("out_degree"), traced = false)._1
     }
   }
 
-  /** One explicit-teleport iteration (the I1 recurrence shared by
-    * [[fixedIterationsOn]] and [[fixedIterationsTrace]]):
-    *   rank'_i = (1 − β)/N + β · Σ_{u→i} rank(u)/deg(u).
+  /** The loop behind every fixed-iteration entry point:
+    *   rank'_i = teleport_i + β · Σ_{u→i} share(u, i),   rank_0 = `rank0`,
+    * over `base` (one row per vertex, `id` plus whatever the terms read)
+    * and the placed `linked` edges. `teleport` is (1 − β)/N or the
+    * personalized (1 − β)·[i ∈ S]/|S|; `share` is rank/out_degree or
+    * rank·frac. A round's action is a count, or with `traced` the round's
+    * L1 delta Σ_v |rank_i(v) − rank_{i−1}(v)|, collected per round.
+    * Returns the final ranks' checkpoint (the caller's to free) and the
+    * deltas.
     */
-  private def uniformStep(
-      verts: DataFrame,
+  private def teleportLoop(
+      base: DataFrame,
       linked: DataFrame,
-      n: Long,
       beta: Double,
-      ranks: DataFrame): DataFrame = {
-    val contribs = linked
-      .join(vertexSide(ranks, n), linked("src") === ranks("id"))
-      .select(col("dst"), (col("rank") / col("out_degree")).as("w"))
-      .groupBy(col("dst"))
-      .agg(sum(col("w")).as("c"))
-    verts
-      .join(vertexSide(contribs, n), verts("id") === contribs("dst"), "left")
-      .select(
-        verts("id"),
-        (lit((1.0 - beta) / n) + lit(beta) * coalesce(col("c"), lit(0.0))).as("rank"))
+      iterations: Int,
+      rank0: Column,
+      teleport: Column,
+      share: Column,
+      traced: Boolean): (DataFrame, Vector[Double]) = {
+    val first = Fixpoint.Round(base.select(col("id"), rank0.as("rank")),
+      (r: DataFrame) => { r.count(); Vector.empty[Double] })
+    val (ranks, deltas, _) =
+      Fixpoint.iterate(first, iterations, "fixed-iteration PageRank") { (ranks, deltas, i) =>
+        if (i == iterations) None
+        else {
+          val contribs = linked
+            .join(ranks, linked("src") === ranks("id"))
+            .select(col("dst"), share.as("w"))
+            .groupBy(col("dst"))
+            .agg(sum(col("w")).as("c"))
+          val next = base
+            .join(contribs, base("id") === contribs("dst"), "left")
+            .select(base("id"),
+              (teleport + lit(beta) * coalesce(col("c"), lit(0.0))).as("rank"))
+          Some(Fixpoint.Round(next, (r: DataFrame) =>
+            if (!traced) { r.count(); deltas }
+            else deltas :+ r
+              .join(ranks.select(col("id").as("pid"), col("rank").as("prev")),
+                col("id") === col("pid"))
+              .agg(sum(abs(col("rank") - col("prev"))))
+              .head.getDouble(0)))
+        }
+      }
+    (ranks, deltas)
   }
 
   /** [[fixedIterationsOn]] with the reference's per-iteration convergence
@@ -366,41 +285,23 @@ object PageRank {
     try {
       val PreparedGraph(verts, linked, n, parts) = g
       require(n > 0, "fixedIterationsTrace needs a non-empty graph")
-      val deltas = withLoopConf(spark, parts) {
-        var ranks = verts.withColumn("rank", lit(1.0 / n)).localCheckpoint(true)
-        val out = Seq.newBuilder[(Int, Double)]
-        var i = 0
-        while (i < iterations) {
-          // LAZY checkpoint (runOn's idiom): the delta aggregate below is
-          // the first action, so ONE job both computes the iteration and
-          // materializes the checkpoint.
-          val next = uniformStep(verts, linked, n, beta, ranks)
-            .localCheckpoint(false)
-          val d = next
-            .join(ranks.select(col("id").as("pid"), col("rank").as("prev")),
-              col("id") === col("pid"))
-            .agg(sum(abs(col("rank") - col("prev"))).as("d"))
-            .head.getDouble(0)
-          out += ((i + 1, d))
-          org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(ranks)
-          ranks = next
-          i += 1
-        }
-        org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(ranks)
-        out.result()
+      val deltas = Fixpoint.withLoopConf(spark, parts) {
+        val (ranks, deltas) = teleportLoop(verts, linked, beta, iterations, lit(1.0 / n),
+          lit((1.0 - beta) / n), col("rank") / col("out_degree"), traced = true)
+        release(ranks)
+        deltas
       }
       import spark.implicits._
-      deltas.toDF("iteration", "l1_delta")
+      deltas.zipWithIndex.map { case (d, i) => (i + 1, d) }.toDF("iteration", "l1_delta")
     } finally g.unpersist()
   }
 
   /** Personalized PageRank, fixed iterations: the teleport mass lands on
     * the `seeds` ∩ V set instead of uniformly —
     *   rank'_i = (1 − β)·[i ∈ S]/|S| + β · Σ_{u→i} rank(u)/deg(u),
-    * r0 = the teleport vector. Same loop shape as [[fixedIterationsOn]]
-    * (edges⋈degrees persisted and hash-partitioned once; only |V| rank
-    * rows move per iteration), same exact ANSI-SQL unrollability — the
-    * oracle chain is generated by `api.GraphQueries`.
+    * r0 = the teleport vector. Same loop as [[fixedIterationsOn]], same
+    * exact ANSI-SQL unrollability — the oracle chain is generated by
+    * `api.GraphQueries`.
     */
   def personalizedFixedIterations(
       spark: SparkSession,
@@ -412,36 +313,18 @@ object PageRank {
     try {
       val PreparedGraph(verts, linked, n, parts) = g
       if (n == 0) return verts.withColumn("rank", lit(0.0))
-      withLoopConf(spark, parts) {
+      Fixpoint.withLoopConf(spark, parts) {
         val s = seeds.select(col(seeds.columns(0)).as("id")).distinct()
         val vt = verts
           .join(s.withColumn("one", lit(1)), Seq("id"), "left")
           .select(col("id"), (coalesce(col("one"), lit(0)) === 1).as("is_seed"))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val sCount = vt.filter(col("is_seed")).count()
-        require(sCount > 0, "personalized PageRank: no seed vertex is in the graph")
-        val teleport = when(col("is_seed"), lit(1.0 / sCount)).otherwise(lit(0.0))
         try {
-          var ranks = vt.select(col("id"), teleport.as("rank")).localCheckpoint(true)
-          var i = 0
-          while (i < iterations) {
-            val contribs = linked
-              .join(vertexSide(ranks, n), linked("src") === ranks("id"))
-              .select(col("dst"), (col("rank") / col("out_degree")).as("w"))
-              .groupBy(col("dst"))
-              .agg(sum(col("w")).as("c"))
-            val next = vt
-              .join(vertexSide(contribs, n), vt("id") === contribs("dst"), "left")
-              .select(
-                vt("id"),
-                (lit(1.0 - beta) * teleport + lit(beta) * coalesce(col("c"), lit(0.0)))
-                  .as("rank"))
-            val prev = ranks
-            ranks = next.localCheckpoint(true)
-            org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(prev)
-            i += 1
-          }
-          ranks
+          val sCount = vt.filter(col("is_seed")).count()
+          require(sCount > 0, "personalized PageRank: no seed vertex is in the graph")
+          val teleport = when(col("is_seed"), lit(1.0 / sCount)).otherwise(lit(0.0))
+          teleportLoop(vt, linked, beta, iterations, teleport, lit(1.0 - beta) * teleport,
+            col("rank") / col("out_degree"), traced = false)._1
         } finally vt.unpersist()
       }
     } finally g.unpersist()
@@ -451,9 +334,8 @@ object PageRank {
     * each vertex distributes rank proportionally —
     *   rank'_i = (1 − β)/N + β · Σ_{u→i} rank(u) · w(u,i)/W(u),  W(u) = Σ_j w(u,j).
     * The unweighted [[fixedIterations]] is the w ≡ 1 special case. Same
-    * loop shape: the edge relation joins its per-source weight sum ONCE,
-    * is hash-partitioned by src and persisted with the normalized fraction
-    * precomputed; per-iteration traffic is |V| rank rows. Exactly
+    * loop: the edge relation joins its per-source weight sum ONCE and is
+    * placed by src with the normalized fraction precomputed. Exactly
     * SQL-unrollable (oracle chain in `api.GraphQueries`).
     */
   def weightedFixedIterations(
@@ -486,8 +368,8 @@ object PageRank {
           "weights must be > 0")
     }
     val m = e.count()
-    val parts = loopPartitions(spark, m)
-    withLoopConf(spark, parts) {
+    val parts = Fixpoint.loopPartitions(spark, m)
+    Fixpoint.withLoopConf(spark, parts) {
       val verts = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id")))
         .distinct()
@@ -495,36 +377,13 @@ object PageRank {
       val n = verts.count()
       if (n == 0) { verts.unpersist(); e.unpersist(); return verts.withColumn("rank", lit(0.0)) }
       val sw = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
-      val linked = e.join(sw, "src")
-        .select(col("src"), col("dst"), (col("w") / col("tw")).as("frac"))
-        .repartition(parts, col("src"))
-        // Sorted once so the per-iteration merge join elides the edge-side
-        // sort — see [[prepare]].
-        .sortWithinPartitions(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      linked.count()
+      val linked = Fixpoint.placed(
+        e.join(sw, "src").select(col("src"), col("dst"), (col("w") / col("tw")).as("frac")),
+        parts, "src")
       e.unpersist()
-      try {
-        var ranks = verts.withColumn("rank", lit(1.0 / n)).localCheckpoint(true)
-        var i = 0
-        while (i < iterations) {
-          val contribs = linked
-            .join(vertexSide(ranks, n), linked("src") === ranks("id"))
-            .select(col("dst"), (col("rank") * col("frac")).as("c0"))
-            .groupBy(col("dst"))
-            .agg(sum(col("c0")).as("c"))
-          val next = verts
-            .join(vertexSide(contribs, n), verts("id") === contribs("dst"), "left")
-            .select(
-              verts("id"),
-              (lit((1.0 - beta) / n) + lit(beta) * coalesce(col("c"), lit(0.0))).as("rank"))
-          val prev = ranks
-          ranks = next.localCheckpoint(true)
-          org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(prev)
-          i += 1
-        }
-        ranks
-      } finally { linked.unpersist(); verts.unpersist() }
+      try teleportLoop(verts, linked, beta, iterations, lit(1.0 / n), lit((1.0 - beta) / n),
+        col("rank") * col("frac"), traced = false)._1
+      finally { linked.unpersist(); verts.unpersist() }
     }
   }
 

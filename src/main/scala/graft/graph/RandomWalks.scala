@@ -26,12 +26,12 @@ import org.apache.spark.storage.StorageLevel
   *    frontier by broadcast against the edge relation — edges are never
   *    shuffled at all. Right while total frontier bytes stay
   *    driver/broadcast-sized (≲ millions of walks).
-  *  - `walkShuffled` (co-partitioned): the edge relation is persisted
-  *    hash-partitioned by src ONCE (the PageRank.prepare / LPA idiom),
-  *    and each step's join exchanges only the |walks|-row frontier onto
-  *    that fixed layout. On local[32] the broadcast shape wins every
-  *    measured point up to 2M concurrent walks (AbWalkScale: 44.8 s vs
-  *    193.0 s at 2M — local "broadcast" is a free shared hash table);
+  *  - `walkShuffled` (co-partitioned): the edge relation is
+  *    [[Fixpoint.placed]] by src ONCE, and each step's join exchanges
+  *    only the |walks|-row frontier onto that fixed layout. On local[32]
+  *    the broadcast shape wins every measured point up to 2M concurrent
+  *    walks (AbWalkScale: 44.8 s vs 193.0 s at 2M — local "broadcast" is
+  *    a free shared hash table);
   *    this shape exists for the ceiling a CLUSTER hits: ~75 B/walk of
   *    broadcast hash table replicated to every executor per step and
   *    built through one node (100M walks ≈ 7.5 GB against the 8 GB
@@ -97,24 +97,15 @@ object RandomWalks {
     * hash-partitioned by src once, frontier checkpointed per step (tiny)
     * so only it moves. The result is eagerly checkpointed before the
     * edge cache and per-step frontiers are released, so the returned
-    * frame owns its single persisted backing (leak-neutral).
+    * frame owns its single persisted backing (leak-neutral). The steps
+    * are not a [[Fixpoint.iterate]] loop: every step's frontier is part
+    * of the returned corpus, so none is superseded, and a step has no
+    * scalar to act on.
     */
   def walkShuffled(
       edges: DataFrame, seeds: DataFrame, steps: Int, nWalks: Int = 1): DataFrame = {
     val (walkIds, e0) = prepare(edges, seeds, steps, nWalks)
-    val spark = edges.sparkSession
-    val before = graft.RddScope.persisted(spark)
-    val pre = e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val m = pre.count()
-    val parts = PageRank.loopPartitions(spark, m)
-    val result = PageRank.withLoopConf(spark, parts) {
-      val e = pre.repartition(parts, col("src"))
-        // Sorted once so each step's frontier merge join elides the
-        // edge-side sort (the PageRank.prepare idiom).
-        .sortWithinPartitions(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      pre.unpersist()
+    onPlacedEdges(e0) { e =>
       var frontier = walkIds.localCheckpoint(true)
       var out = frontier.select(col("walk_id"), lit(0).as("step"),
         col("cur").as("node"))
@@ -129,12 +120,8 @@ object RandomWalks {
           col("cur").as("node")))
         j += 1
       }
-      out.orderBy(col("walk_id"), col("step")).localCheckpoint(true)
+      out.orderBy(col("walk_id"), col("step"))
     }
-    // The result owns its one checkpoint backing; everything else this
-    // call persisted (edge cache, per-step frontiers) is released here.
-    graft.RddScope.sweepExcept(spark, before, result)
-    result
   }
 
   /** node2vec-BIASED walk (Grover & Leskovec, KDD 2016): the transition
@@ -250,7 +237,7 @@ object RandomWalks {
     * `walk`/`walkShuffled` equality pattern); execution differs:
     *
     *  - the edge relation is persisted hash-partitioned by `src` ONCE
-    *    (the `walkShuffled`/`PageRank.prepare` idiom) — each step's
+    *    ([[Fixpoint.placed]]) — each step's
     *    frontier probe exchanges only the |walks|-row frontier onto that
     *    fixed layout, never the edges;
     *  - the (prev, dst) adjacency relation is DERIVED from that same
@@ -280,19 +267,7 @@ object RandomWalks {
       retW: Int = 1, inW: Int = 2, outW: Int = 4): DataFrame = {
     require(retW >= 1 && inW >= 1 && outW >= 1, "weights must be >= 1")
     val (walkIds, e0) = prepare(edges, seeds, steps, nWalks)
-    val spark = edges.sparkSession
-    val before = graft.RddScope.persisted(spark)
-    val pre = e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val m = pre.count()
-    val parts = PageRank.loopPartitions(spark, m)
-    val result = PageRank.withLoopConf(spark, parts) {
-      val e = pre.repartition(parts, col("src"))
-        // Sorted once so each step's frontier merge join elides the
-        // edge-side sort (the PageRank.prepare idiom).
-        .sortWithinPartitions(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      pre.unpersist()
+    onPlacedEdges(e0) { e =>
       val aRel = e.dropDuplicates("src", "dst")
         .select(col("src").as("a_src"), col("dst").as("a_dst"),
           lit(1).as("adj"))
@@ -334,10 +309,8 @@ object RandomWalks {
           col("cur").as("node")))
         j += 1
       }
-      out.orderBy(col("walk_id"), col("step")).localCheckpoint(true)
+      out.orderBy(col("walk_id"), col("step"))
     }
-    graft.RddScope.sweepExcept(spark, before, result)
-    result
   }
 
   /** Skip-gram (center, context) pair counts over a walk corpus — the
@@ -360,6 +333,26 @@ object RandomWalks {
       .groupBy(col("center"), col("context"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("center"), col("context"))
+  }
+
+  /** The shuffled walks' shared frame: `body` runs on the edges
+    * [[Fixpoint.placed]] by src, sized to the graph; its result is
+    * eagerly checkpointed, then everything else this call persisted (edge
+    * cache, per-step frontiers) is released, so the result owns its one
+    * checkpoint backing.
+    */
+  private def onPlacedEdges(e0: DataFrame)(body: DataFrame => DataFrame): DataFrame = {
+    val spark = e0.sparkSession
+    val before = graft.RddScope.persisted(spark)
+    val pre = e0.persist(StorageLevel.MEMORY_AND_DISK)
+    val parts = Fixpoint.loopPartitions(spark, pre.count())
+    val result = Fixpoint.withLoopConf(spark, parts) {
+      val e = Fixpoint.placed(pre, parts, "src")
+      pre.unpersist()
+      body(e).localCheckpoint(true)
+    }
+    graft.RddScope.sweepExcept(spark, before, result)
+    result
   }
 
   private def draw(step: Int): Column =

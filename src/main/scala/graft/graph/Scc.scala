@@ -28,12 +28,14 @@ import org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint
   * Scale shape: each coloring step is one edge join + one min-combinable
   * aggregation; the backward BFS joins a frontier that starts at
   * |roots| and is bounded by the round's output. Everything is keyed on
-  * vertex id (AQE broadcasts shrinking frontiers); per-round relations are
-  * eagerly checkpointed and superseded checkpoints freed, the
-  * [[KCore]]/[[ShortestPaths]] loop hygiene. Outer rounds are bounded and
-  * FAIL FAST when exceeded (the [[ShortestPaths]] contract — a silent
-  * partial answer is worse than an error): rounds needed = nesting depth
-  * of min-reachability, small for real graphs.
+  * vertex id. The coloring and the backward sweep run through
+  * [[Fixpoint.iterate]]. The outer rounds advance two relations at once
+  * (the remaining vertices and edges) and keep every round's components
+  * for the result, so they stay a plain loop over eager checkpoints.
+  * Outer rounds are bounded and FAIL FAST when exceeded (the
+  * [[ShortestPaths]] contract — a silent partial answer is worse than an
+  * error): rounds needed = nesting depth of min-reachability, small for
+  * real graphs.
   */
 object Scc {
 
@@ -45,15 +47,7 @@ object Scc {
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint(true)
-    // Loop shuffle sizing + AQE off, the PageRank/CC/LPA idiom
-    // (loopPartitions / withLoopConf): this fixpoint runs O(rounds ×
-    // propagation steps) tiny jobs, and at the session's partition count
-    // every per-step shuffle, checkpoint block-write and AQE replan
-    // round-trip scales with cores while the work doesn't — the r18
-    // driver's scaling block measured the un-bounded fixpoints running
-    // SLOWER at 32 cores than at 8 (g13 ratio 0.33). Exact integer
-    // min-labels: results are partition-count-independent.
-    PageRank.withLoopConf(spark, PageRank.loopPartitions(spark, e.count())) {
+    Fixpoint.withLoopConf(spark, Fixpoint.loopPartitions(spark, e.count())) {
     var verts = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id")))
       .distinct()
@@ -64,26 +58,20 @@ object Scc {
     while (remaining > 0 && round < maxRounds) {
       round += 1
       // -- 1. forward min-label coloring to fixpoint ---------------------
-      var color = verts.select(col("id"), col("id").as("c")).localCheckpoint(true)
-      var changed = 1L
-      var prop = 0
-      while (changed > 0) {
-        prop += 1
-        require(prop <= maxProp,
-          s"SCC coloring did not converge within $maxProp propagation steps")
-        val msgs = e.join(color, col("src") === col("id"))
-          .select(col("dst").as("id"), col("c"))
-        val next = color.unionAll(msgs)
-          .groupBy(col("id")).agg(min(col("c")).as("c"))
-          // LAZY: the changed-count below is the step's first action and
-          // runs BEFORE the parent color checkpoint is freed — one job
-          // computes the step and materializes it (PageRank.run idiom).
-          .localCheckpoint(false)
-        changed = next
-          .join(color.select(col("id"), col("c").as("c0")), "id")
-          .filter(col("c") =!= col("c0")).count()
-        freeLocalCheckpoint(color)
-        color = next
+      // A step's scalar is how many colors it changed (round 0: all).
+      val (color, _, _) = Fixpoint.iterate(
+        Fixpoint.Round(verts.select(col("id"), col("id").as("c")), (c: DataFrame) => c.count()),
+        maxProp, "SCC coloring") { (color, changed, _) =>
+        if (changed == 0) None
+        else {
+          val msgs = e.join(color, col("src") === col("id"))
+            .select(col("dst").as("id"), col("c"))
+          Some(Fixpoint.Round(
+            color.unionAll(msgs).groupBy(col("id")).agg(min(col("c")).as("c")),
+            (next: DataFrame) => next
+              .join(color.select(col("id"), col("c").as("c0")), "id")
+              .filter(col("c") =!= col("c0")).count()))
+        }
       }
       // -- 2. backward reachability to the root, within each color -------
       // Reversed, color-restricted edge list: walk dst→src where both
@@ -94,31 +82,30 @@ object Scc {
         .filter(col("cs") === col("cd"))
         .select(col("dst").as("from"), col("src").as("to"), col("cs").as("c"))
         .localCheckpoint(true)
-      var frontier = color.filter(col("id") === col("c")).localCheckpoint(true)
-      var spent = List(frontier)
-      var members = frontier
-      var grew = 1L
-      var steps = 0
-      while (grew > 0) {
-        steps += 1
-        require(steps <= maxProp,
-          s"SCC backward sweep did not converge within $maxProp steps")
-        val next = ec
-          .join(frontier.select(col("id").as("from"), col("c")), Seq("from", "c"))
-          .select(col("to").as("id"), col("c"))
-          .distinct()
-          .join(members, Seq("id", "c"), "left_anti")
-          // LAZY: grew's count materializes it; every parent checkpoint
-          // (ec, the spent frontiers) stays live until after the loop.
-          .localCheckpoint(false)
-        grew = next.count()
-        members = members.unionAll(next) // lazy union over checkpoints
-        spent ::= next
-        frontier = next
+      // Sweep state: every member found so far, `fresh` marking the last
+      // step's frontier; a step's scalar is the frontier size.
+      val (members, _, _) = Fixpoint.iterate(
+        Fixpoint.Round(
+          color.filter(col("id") === col("c")).withColumn("fresh", lit(true)),
+          (m: DataFrame) => m.count()),
+        maxProp, "SCC backward sweep") { (members, grew, _) =>
+        if (grew == 0) None
+        else {
+          val next = ec
+            .join(members.filter(col("fresh")).select(col("id").as("from"), col("c")),
+              Seq("from", "c"))
+            .select(col("to").as("id"), col("c"))
+            .distinct()
+            .join(members, Seq("id", "c"), "left_anti")
+          Some(Fixpoint.Round(
+            members.select(col("id"), col("c"), lit(false).as("fresh"))
+              .unionAll(next.withColumn("fresh", lit(true))),
+            (m: DataFrame) => m.filter(col("fresh")).count()))
+        }
       }
       val found = members.select(col("id"), col("c").as("scc_id"))
         .localCheckpoint(true)
-      spent.foreach(freeLocalCheckpoint)
+      freeLocalCheckpoint(members)
       freeLocalCheckpoint(ec)
       result = if (result == null) found else result.unionAll(found)
       // -- 3. remove the emitted components, iterate on the rest ---------

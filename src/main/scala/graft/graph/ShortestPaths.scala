@@ -20,10 +20,9 @@ import org.apache.spark.storage.StorageLevel
   * relaxing everything). While the frontier is small it is broadcast, so a
   * round is a shuffle-free scan of the persisted edges plus a groupBy on
   * the (small) candidate set; past [[Motifs.kHopMinHops]]'s threshold the
-  * joins fall back to Catalyst shuffle planning. Distances are eagerly
-  * localCheckpoint'ed per round (k-level lazy lineage would re-derive every
-  * prior round; superseded checkpoints are freed), callers sweep the final
-  * checkpoint with the usual persistent-RDD sweep.
+  * joins fall back to Catalyst shuffle planning. Distances advance through
+  * [[Fixpoint.iterate]]; callers sweep the final checkpoint with the usual
+  * persistent-RDD sweep.
   */
 object ShortestPaths {
 
@@ -52,49 +51,37 @@ object ShortestPaths {
         s"bellmanFord: $bad edge(s) with null/zero/negative weight — weights must be > 0")
     }
 
-    // Loop shuffle sizing + AQE off (loopPartitions / withLoopConf, the
-    // PageRank/CC/LPA idiom): per round this loop runs one aggregation
-    // shuffle, one full-outer merge join and one checkpoint block-write,
-    // all over frontier/|V|-bounded rows — at the session's partition
-    // count those per-round costs scale with cores while the work
-    // doesn't (r18 scaling block: g6 ran 2.8x SLOWER at 32 cores than at
-    // 8). Results are exact minima (no float sums), so partitioning
-    // cannot change them.
     val spark = edges.sparkSession
     val m = e.count() // cheap scan of the cache the contract check filled
-    PageRank.withLoopConf(spark, PageRank.loopPartitions(spark, m)) {
-    var dist = seeds.select(col(seeds.columns(0)).as("id"))
-      .distinct()
-      .withColumn("dist", lit(0.0))
-      .localCheckpoint(true)
-    var frontier = dist
-    var frontierSize = frontier.count()
-
-    for (_ <- 1 to rounds if frontierSize > 0) {
-      val fSide = if (frontierSize <= BroadcastMax) broadcast(frontier) else frontier
-      // Candidates from the frontier only, pre-combined per target id so
-      // the merge join below sees one row per touched vertex.
-      val cand = e.join(fSide, e("src") === frontier("id"))
-        .select(e("dst").as("id"), (frontier("dist") + e("w")).as("cd"))
-        .groupBy(col("id")).agg(min(col("cd")).as("cd"))
-      val merged = dist.join(cand, Seq("id"), "full_outer")
-        .select(col("id"),
-          least(coalesce(col("dist"), col("cd")), coalesce(col("cd"), col("dist")))
-            .as("dist"),
-          (col("dist").isNull || (col("cd").isNotNull && col("cd") < col("dist")))
-            .as("improved"))
-        // LAZY (the PageRank.run idiom): the frontier count below is the
-        // round's first action — one job computes the round AND
-        // materializes the checkpoint (eager paid a second job per round).
-        .localCheckpoint(false)
-      val prev = dist
-      dist = merged.select(col("id"), col("dist"))
-      frontier = merged.filter(col("improved")).select(col("id"), col("dist"))
-      frontierSize = frontier.count() // cheap scan of the fresh checkpoint
-      org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(prev)
-    }
-    e.unpersist()
-    dist
-    } // withLoopConf
+    try Fixpoint.withLoopConf(spark, Fixpoint.loopPartitions(spark, m)) {
+      // Round state: (id, dist, improved); the frontier is the improved
+      // rows, and a round's scalar is the frontier size.
+      val first = Fixpoint.Round(
+        seeds.select(col(seeds.columns(0)).as("id")).distinct()
+          .select(col("id"), lit(0.0).as("dist"), lit(true).as("improved")),
+        (s: DataFrame) => s.filter(col("improved")).count())
+      val (state, _, _) = Fixpoint.iterate(first, rounds, "bellmanFord") {
+        (state, frontierSize, r) =>
+          if (frontierSize == 0 || r == rounds) None
+          else {
+            val dist = state.select(col("id"), col("dist"))
+            val frontier = state.filter(col("improved")).select(col("id"), col("dist"))
+            val fSide = if (frontierSize <= BroadcastMax) broadcast(frontier) else frontier
+            // Candidates from the frontier only, pre-combined per target
+            // id so the merge join below sees one row per touched vertex.
+            val cand = e.join(fSide, e("src") === frontier("id"))
+              .select(e("dst").as("id"), (frontier("dist") + e("w")).as("cd"))
+              .groupBy(col("id")).agg(min(col("cd")).as("cd"))
+            val merged = dist.join(cand, Seq("id"), "full_outer")
+              .select(col("id"),
+                least(coalesce(col("dist"), col("cd")), coalesce(col("cd"), col("dist")))
+                  .as("dist"),
+                (col("dist").isNull || (col("cd").isNotNull && col("cd") < col("dist")))
+                  .as("improved"))
+            Some(Fixpoint.Round(merged, (s: DataFrame) => s.filter(col("improved")).count()))
+          }
+      }
+      state.select(col("id"), col("dist"))
+    } finally e.unpersist()
   }
 }

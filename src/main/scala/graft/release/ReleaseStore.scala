@@ -348,7 +348,7 @@ object ReleaseStore {
       p: ReleaseParams, path: String,
       vecs: Option[DataFrame] = None): DataFrame = {
     val before = graft.RddScope.persisted(s)
-    // LAZY checkpoints throughout this method (the PageRank.run idiom):
+    // LAZY checkpoints throughout this method (graph.Fixpoint's round idiom):
     // each one's FIRST consumer is itself an action (an aggregate, a store
     // append's write, or a downstream eager materialization), so that
     // action both computes the stage and materializes the checkpoint —
