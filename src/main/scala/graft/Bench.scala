@@ -49,8 +49,8 @@ import graft.graph.{PageRank, PageRankGraphX, SyntheticGraph}
   *    a genuine stray persist; the r9 bar is zeros across the board.
   *  - top-level `cores`, `load1_start`/`load1_end`: session-wide context.
   *  - AUTO A/B: any query whose min wall moved >3× vs the previous round's
-  *    committed `bench_diag.json` is re-measured on a fresh JVM (forked
-  *    [[QBench]] child, after `spark.stop()` idles the box) and the
+  *    floors at the same sf and core count is re-measured on a fresh JVM
+  *    (forked [[QBench]] child, after `spark.stop()` idles the box) and the
   *    session-vs-isolated pair is emitted into `auto_ab` + `notes` — the
   *    artifact adjudicates its own phantom regressions instead of costing
   *    a judge round (r6: i4_personalized 14.6 s in-session vs 3.2 s
@@ -263,39 +263,49 @@ object Bench {
     * loses to the artifact; a fast one only lowers the floor, which flags
     * MORE, never less). Residual exposure is only the dropped-fastest
     * keys, whose floors come from the sidecar alone — annotated in the
-    * source name so the notes say what adjudicated the round. Returns
-    * (floors, sourceName).
+    * source name so the notes say what adjudicated the round.
+    *
+    * Every source must match this run's sf AND core count (`"cpus"` in
+    * `BENCH_rN.json`, `"cores"` in the floors snapshot and the sidecar):
+    * the 8-core r19 run's d13 floor was 18.74 s against 6.29 s at 32
+    * cores, so a floor from another core count loosens or tightens the
+    * 3× gate by accident. A source that records no core count is not
+    * used, and of the round files the newest matching one is read. With
+    * no matching source the map is empty and the name reads
+    * `no baseline at N cores`. Returns (floors, sourceName).
     */
-  private def previousMinWalls(sfDir: String): (Map[String, Double], String) = {
+  private[graft] def previousMinWalls(
+      dir: java.io.File, sfDir: String, cores: Int): (Map[String, Double], String) = {
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble)
-    def parseQueriesMap(txt: String, key: String): Map[String, Double] =
-      ("\"" + key + "\"\\s*:\\s*\\{([^}]*)\\}").r.findAllMatchIn(txt).toSeq
-        .lastOption match { // last: BENCH_r's raw-tail echo precedes `parsed`
-          case None => Map.empty
-          case Some(m) =>
-            "\"([^\"\\\\]+)\"\\s*:\\s*(-?[0-9.]+)".r.findAllMatchIn(m.group(1))
-              .map(g => g.group(1) -> g.group(2).toDouble).toMap
-              .filterNot(_._1.startsWith("_")) // "_dropped_fastest" is a count, not a leg
-        }
-    def fromBenchArtifact(): Option[(Map[String, Double], String)] =
+    def sameSfNum(txt: String): Boolean =
+      "\"sf\"\\s*:\\s*([0-9.]+)".r.findFirstMatchIn(txt)
+        .map(_.group(1).toDouble) == sfNum
+    def sameSfDir(txt: String): Boolean = sfDirOf(txt).contains(sfDir)
+    // (floors, file text) when `f` is a usable source for this run.
+    def accept(f: java.io.File, coresKey: String, queriesKey: String,
+        sameSf: String => Boolean): Option[(Map[String, Double], String)] =
       try {
-        val files = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-          .flatMap { f =>
-            "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(f.getName)
-              .map(m => (m.group(1).toInt, f))
-          }
-        files.sortBy(-_._1).headOption.flatMap { case (n, f) =>
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          val prevSf = "\"sf\"\\s*:\\s*([0-9.]+)".r
-            .findFirstMatchIn(txt).map(_.group(1).toDouble)
-          val truncated = txt.contains("_dropped_fastest")
-          val qs = parseQueriesMap(txt, "queries")
-          val name = if (truncated) s"${f.getName} (truncated slowest-legs subset)"
-                     else f.getName
-          if (qs.nonEmpty && prevSf == sfNum) Some((qs, name)) else None
+        if (!f.isFile) None
+        else {
+          val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+          val qs = parseQueriesMap(txt, queriesKey)
+          if (qs.nonEmpty && sameSf(txt) && intKey(txt, coresKey).contains(cores))
+            Some((qs, txt))
+          else None
         }
       } catch { case _: Throwable => None }
+    // The newest round file named BENCH_r{N}`suffix` that `use` accepts.
+    def newestRound(suffix: String)(
+        use: java.io.File => Option[(Map[String, Double], String)])
+        : Option[(Map[String, Double], String, java.io.File)] =
+      roundFiles(dir, suffix).sortBy(-_._1).iterator
+        .flatMap { case (_, f) => use(f).map { case (qs, txt) => (qs, txt, f) } }
+        .nextOption()
+    val artifact = newestRound("\\.json")(accept(_, "cpus", "queries", sameSfNum))
+      .map { case (qs, txt, f) =>
+        val truncated = txt.contains("_dropped_fastest")
+        (qs, if (truncated) s"${f.getName} (truncated slowest-legs subset)" else f.getName)
+      }
     // Immutable per-round floor snapshots (r12 judge ask #3): the driver
     // artifact can be a truncated slowest-legs subset and the sidecar is
     // a mutable per-run overwrite, so neither alone gives every leg a
@@ -303,39 +313,12 @@ object Bench {
     // map written by the round's final bench run and committed with the
     // round snapshot — the untruncated floor source for the legs the
     // driver tail dropped.
-    def fromFloorsArtifact(): Option[(Map[String, Double], String)] =
-      try {
-        val files = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-          .flatMap { f =>
-            "^BENCH_r(\\d+)_floors\\.json$".r.findFirstMatchIn(f.getName)
-              .map(m => (m.group(1).toInt, f))
-          }
-        files.sortBy(-_._1).headOption.flatMap { case (_, f) =>
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          val prevSf = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r
-            .findFirstMatchIn(txt).map(_.group(1))
-          val qs = parseQueriesMap(txt, "queries_min")
-          if (qs.nonEmpty && prevSf.contains(sfDir)) Some((qs, f.getName)) else None
-        }
-      } catch { case _: Throwable => None }
-    def fromSidecar(): Option[(Map[String, Double], String)] =
-      try {
-        val p = java.nio.file.Paths.get("bench_diag.json")
-        if (!java.nio.file.Files.exists(p)) None
-        else {
-          val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          val prevSf = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r
-            .findFirstMatchIn(txt).map(_.group(1))
-          val qs = parseQueriesMap(txt, "queries_min")
-          if (qs.nonEmpty && prevSf.contains(sfDir))
-            Some((qs, "bench_diag.json queries_min"))
-          else None
-        }
-      } catch { case _: Throwable => None }
-    val sources = Seq(fromBenchArtifact(), fromFloorsArtifact(), fromSidecar())
-      .flatten
-    if (sources.isEmpty) (Map.empty[String, Double], "none")
+    val floors = newestRound("_floors\\.json")(accept(_, "cores", "queries_min", sameSfDir))
+      .map { case (qs, _, f) => (qs, f.getName) }
+    val sidecar = accept(new java.io.File(dir, "bench_diag.json"), "cores",
+      "queries_min", sameSfDir).map { case (qs, _) => (qs, "bench_diag.json queries_min") }
+    val sources = Seq(artifact, floors, sidecar).flatten
+    if (sources.isEmpty) (Map.empty[String, Double], s"no baseline at $cores cores")
     else {
       val merged = sources.flatMap(_._1.keySet).distinct.map { k =>
         k -> sources.flatMap(_._1.get(k)).min
@@ -346,6 +329,70 @@ object Bench {
       (merged, name)
     }
   }
+
+  /** The `key` map of a bench artifact, "_"-prefixed markers dropped
+    * ("_dropped_fastest" is a count, not a leg). The last occurrence wins:
+    * BENCH_r's raw-tail echo precedes its `parsed` copy.
+    */
+  private def parseQueriesMap(txt: String, key: String): Map[String, Double] =
+    ("\"" + key + "\"\\s*:\\s*\\{([^}]*)\\}").r.findAllMatchIn(txt).toSeq
+      .lastOption match {
+        case None => Map.empty
+        case Some(m) =>
+          "\"([^\"\\\\]+)\"\\s*:\\s*(-?[0-9.]+)".r.findAllMatchIn(m.group(1))
+            .map(g => g.group(1) -> g.group(2).toDouble).toMap
+            .filterNot(_._1.startsWith("_"))
+      }
+
+  private def sfDirOf(txt: String): Option[String] =
+    "\"sf\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map(_.group(1))
+
+  private def intKey(txt: String, key: String): Option[Int] =
+    ("\"" + key + "\"\\s*:\\s*([0-9]+)").r.findFirstMatchIn(txt).map(_.group(1).toInt)
+
+  /** BENCH_r{N}`suffix` files in `dir`, with their round number N. */
+  private def roundFiles(dir: java.io.File, suffix: String): Seq[(Int, java.io.File)] =
+    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap { f =>
+      ("^BENCH_r(\\d+)" + suffix + "$").r.findFirstMatchIn(f.getName)
+        .map(m => (m.group(1).toInt, f))
+    }
+
+  private def fmt(d: Double): String = if (d < 0) "-1" else f"$d%.3f"
+
+  /** Immutable floor snapshot for NEXT round's detector: the full
+    * (untruncated) queries_min map under the current round's number —
+    * max(N of BENCH_rN.json)+1, since the driver writes BENCH_r{N}.json
+    * at judging time AFTER this run. MERGED with any existing snapshot
+    * taking per-query min (monotone within a round) — an unconditional
+    * overwrite let a later same-round run clobber the committed
+    * min-merge with one run's warm-JVM minima and reintroduce the
+    * warm-floor false-flag class the r13 g7/g4 bisect adjudicated
+    * (r13 judge "what's wrong" #1). The snapshot records its sf and
+    * core count, and merges only with a snapshot of the same sf AND
+    * cores; any mismatch replaces the file (an sf0.01 dev run or an
+    * 8-core run must not pollute the floors of another box shape).
+    */
+  private[graft] def writeFloorSnapshot(dir: java.io.File, sfDir: String,
+      cores: Int, current: Map[String, Double]): Unit = try {
+    val prevN = roundFiles(dir, "\\.json").map(_._1).foldLeft(0)(math.max)
+    val floorPath = new java.io.File(dir, f"BENCH_r${prevN + 1}%02d_floors.json").toPath
+    val existing: Map[String, Double] =
+      if (java.nio.file.Files.exists(floorPath)) {
+        val txt = new String(java.nio.file.Files.readAllBytes(floorPath), "UTF-8")
+        if (sfDirOf(txt).contains(sfDir) && intKey(txt, "cores").contains(cores))
+          parseQueriesMap(txt, "queries_min")
+        else Map.empty
+      } else Map.empty
+    val merged = (existing.keySet ++ current.keySet).toSeq.sorted.map { k =>
+      val vals = Seq(existing.get(k), current.get(k)).flatten.filter(_ >= 0)
+      k -> (if (vals.isEmpty) -1.0 else vals.min)
+    }
+    val mergedJson = merged
+      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    java.nio.file.Files.write(floorPath,
+      s"""{"queries_min":$mergedJson,"sf":"$sfDir","cores":$cores}""".getBytes("UTF-8"))
+    ()
+  } catch { case _: Throwable => () } // floor snapshot is best-effort
 
   // Spark 4.x on JDK 17 module options for the forked A/B child (the same
   // list build.sbt passes to this JVM; spark-submit would inject them).
@@ -461,12 +508,75 @@ object Bench {
   private final case class Sample(wall: Double, cpuS: Double, gcMs: Long,
       load: Double, rss: Double, leaked: Int)
 
+  /** The session [[Bench]] and [[QBench]] both measure on. One builder,
+    * because [[isolatedAb]] compares a QBench child's numbers against
+    * Bench floors: the two sides must run under the same confs.
+    */
+  private[graft] def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // Many-group ObjectHashAggregate stages (every ANN rank via
+      // TopKPairsAgg: one tiny k-entry buffer per query) fall back to
+      // SORT-BASED partial aggregation after 128 groups per task at the
+      // Spark default, silently re-introducing a per-partition pair sort
+      // (measured 1.6x cpu on the 2x64M-pair rank probe, r10). 64k
+      // groups of the engine's largest grouped buffers (KB-scale
+      // sketches) stay under ~1 GB/task; corpus-scale group counts
+      // beyond that SHOULD fall back - that is the threshold's job.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        "65536")
+      .getOrCreate()
+    // ERROR: the iterative queries' lineage-truncation emits a benign WARN
+    // per unpersist that would otherwise swamp the output stream.
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** Executor CPU time and JVM-GC time, summed over completed stages
+    * (task metrics at stage-completion granularity). The listener bus is
+    * asynchronous, so both `reset` and `read` drain it first: a stage
+    * that finished before the reset cannot land in the next sample, and
+    * one that finished before the read is always counted.
+    */
+  private[graft] final class StageMeter(spark: SparkSession) {
+    private val cpuNs = new AtomicLong(0L)
+    private val gcMs = new AtomicLong(0L)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(done: SparkListenerStageCompleted): Unit = {
+        val m = done.stageInfo.taskMetrics
+        if (m != null) {
+          cpuNs.addAndGet(m.executorCpuTime)
+          gcMs.addAndGet(m.jvmGCTime)
+          ()
+        }
+      }
+    })
+
+    def reset(): Unit = {
+      GraftInternals.drainListenerBus(spark)
+      cpuNs.set(0L)
+      gcMs.set(0L)
+    }
+
+    /** (executor CPU seconds, GC milliseconds) since the last reset. */
+    def read(): (Double, Long) = {
+      GraftInternals.drainListenerBus(spark)
+      (cpuNs.get() / 1e9, gcMs.get())
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cores = cpus.toInt
+    val here = new java.io.File(".")
     // Read before this run overwrites the sidecar at the end (and
     // preferentially from the per-round BENCH_r artifact — see scaladoc).
-    val (prevMin, prevSource) = previousMinWalls(sfDir)
+    val (prevMin, prevSource) = previousMinWalls(here, sfDir, cores)
 
     // ---- TIMEOUT-PROOFING (r16: the driver's run was SIGTERMed mid
     // A/B re-measure and, because this harness printed its JSON exactly
@@ -578,43 +688,9 @@ object Bench {
         }
       }
     }))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Many-group ObjectHashAggregate stages (every ANN rank via
-      // TopKPairsAgg: one tiny k-entry buffer per query) fall back to
-      // SORT-BASED partial aggregation after 128 groups per task at the
-      // Spark default, silently re-introducing a per-partition pair sort
-      // (measured 1.6x cpu on the XL rank leg, AbAnnRankXl r10). 64k
-      // groups of the engine's largest grouped buffers (KB-scale
-      // sketches) stay under ~1 GB/task; corpus-scale group counts
-      // beyond that SHOULD fall back - that is the threshold's job.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .getOrCreate()
+    val spark = session(cpus)
     val sc = spark.sparkContext
-    // ERROR: the iterative queries' lineage-truncation emits a benign WARN
-    // per unpersist that would otherwise swamp the output stream.
-    sc.setLogLevel("ERROR")
-
-    // Executor CPU-time accumulator: stage-completion granularity (summed
-    // task metrics), reset between queries, drained (listener bus is
-    // async) before each read.
-    val cpuNs = new AtomicLong(0L)
-    val gcMs = new AtomicLong(0L)
-    sc.addSparkListener(new SparkListener {
-      override def onStageCompleted(done: SparkListenerStageCompleted): Unit = {
-        val m = done.stageInfo.taskMetrics
-        if (m != null) {
-          cpuNs.addAndGet(m.executorCpuTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          ()
-        }
-      }
-    })
+    val meter = new StageMeter(spark)
 
     /** Unpersist EVERYTHING between queries/runs: cache-manager entries
       * and raw persistent RDDs (GraphX graphs, checkpoint backings —
@@ -641,14 +717,11 @@ object Bench {
       */
     def timeOnce(body: => Option[org.apache.spark.sql.DataFrame]): Sample = {
       val l0 = load1()
-      cpuNs.set(0L)
-      gcMs.set(0L)
+      meter.reset()
       val t0 = System.nanoTime()
       val res = try Some(body) catch { case _: Throwable => None }
       val wall = (System.nanoTime() - t0) / 1e9
-      GraftInternals.drainListenerBus(spark)
-      val cpu = cpuNs.get() / 1e9
-      val gc = gcMs.get()
+      val (cpu, gc) = meter.read()
       val l1 = math.max(l0, load1())
       val rss = rssMb()
       val keep = res.flatten.map(GraftInternals.checkpointRddIds)
@@ -704,8 +777,7 @@ object Bench {
     // copies the template and releases one arriving batch against it,
     // so the leg measures the INCREMENT (gate retrain + near-dup probe
     // + touched-cluster CC + span probe + appends) plus a store-sized
-    // constant file copy. AbReleaseInc prices the same increment
-    // against the from-scratch union re-run at amplified corpus sizes.
+    // constant file copy.
     val p22Params = graft.release.ReleaseParams()
     val p22Template = sinksDir()
     locally {
@@ -728,8 +800,6 @@ object Bench {
     // per-stage plan, but sinks_release_pipeline times exactly the SINK
     // — read-back + shard shuffle + sorted write + manifest — of an
     // already-released corpus, which is what that leg exists to price.
-    // Its floor drops accordingly (a measurement-semantics change,
-    // named in the staticNotes, not a code speedup).
     val relTemplate = sinksDir()
     locally {
       val rel = api.PipelineQueries.releasedCorpus(spark, sfDir)
@@ -902,45 +972,7 @@ object Bench {
     // they measure on a box running Spark once, not twice.
     spark.stop()
 
-    def fmt(d: Double): String = if (d < 0) "-1" else f"$d%.3f"
     def fmtN(d: Double): String = if (d < 0) "-1" else f"$d%.2f"
-
-    // Immutable floor snapshot for NEXT round's detector: the full
-    // (untruncated) queries_min map under the current round's number —
-    // max(N of BENCH_rN.json)+1, since the driver writes BENCH_r{N}.json
-    // at judging time AFTER this run. MERGED with any existing snapshot
-    // taking per-query min (monotone within a round) — an unconditional
-    // overwrite let a later same-round run clobber the committed
-    // min-merge with one run's warm-JVM minima and reintroduce the
-    // warm-floor false-flag class the r13 g7/g4 bisect adjudicated
-    // (r13 judge "what's wrong" #1).
-    def writeFloorSnapshot(): Unit = try {
-      val prevN = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-        .flatMap(f => "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(f.getName)
-          .map(_.group(1).toInt))
-        .foldLeft(0)(math.max)
-      val floorPath = java.nio.file.Paths.get(f"BENCH_r${prevN + 1}%02d_floors.json")
-      val existing: Map[String, Double] =
-        if (java.nio.file.Files.exists(floorPath)) {
-          val txt = new String(java.nio.file.Files.readAllBytes(floorPath), "UTF-8")
-          val sameSf = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt)
-            .exists(_.group(1) == sfDir) // an sf0.01 dev-run floor must not pollute sf0.1
-          if (!sameSf) Map.empty
-          else "\"([^\"\\\\]+)\"\\s*:\\s*(-?[0-9.]+)".r.findAllMatchIn(txt)
-            .map(g => g.group(1) -> g.group(2).toDouble).toMap
-            .filterNot(_._1.startsWith("_"))
-        } else Map.empty
-      val current = results.map { case (k, (s, _)) => k -> s.wall }.toMap
-      val merged = (existing.keySet ++ current.keySet).toSeq.sorted.map { k =>
-        val vals = Seq(existing.get(k), current.get(k)).flatten.filter(_ >= 0)
-        k -> (if (vals.isEmpty) -1.0 else vals.min)
-      }
-      val mergedJson = merged
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-      java.nio.file.Files.write(floorPath,
-        s"""{"queries_min":$mergedJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
-      ()
-    } catch { case _: Throwable => () } // floor snapshot is best-effort
 
     // Early emission (timeout-proofing layer 2): the measured legs are
     // complete — put the driver-parseable line AND the floor snapshot on
@@ -950,7 +982,8 @@ object Bench {
     println(buildDriverLine(results, partial = false))
     Console.out.flush()
     emittedComplete.set(true) // a kill from here on costs only A/B notes
-    writeFloorSnapshot()
+    writeFloorSnapshot(here, sfDir, cores,
+      results.map { case (k, (s, _)) => k -> s.wall }.toMap)
 
     // SELF-DEFENSE against session noise (the r6 lesson: i4_personalized
     // read 14.6 s in-session, 3.2 s isolated — a phantom regression that
@@ -1063,7 +1096,7 @@ object Bench {
         }
       }
       val skipped = abSkipped.map { case (k, p, w) =>
-        s""""auto A/B $k: flagged (prev ${fmtN(p)}s -> session ${fmtN(w)}s) but not isolable on a fresh JVM (session-shared state, e.g. the sinks legs' release template) — A/B manually via the Ab* harnesses""""
+        s""""auto A/B $k: flagged (prev ${fmtN(p)}s -> session ${fmtN(w)}s) but not isolable on a fresh JVM (session-shared state, e.g. the sinks legs' release template) — A/B manually in a full Bench session""""
       }
       // The round-summary verdict line is DERIVED from the individual
       // verdicts, never hand-written: r12's commit message said
@@ -1089,7 +1122,7 @@ object Bench {
         else
           s""""auto A/B SUMMARY: ${flagged.size} flagged — $exonerated exonerated, $candidates regression candidate(s) pending bisect ($underLoad of them UNDER-LOAD at >cores/4 — bisect those last), $failedOrSkipped unadjudicated (NOT clean unless candidates+unadjudicated are 0)""""
       if (prevMin.isEmpty)
-        Seq(""""auto A/B: no previous-round baseline (no same-sf BENCH_r artifact or bench_diag sidecar) — mover detection skipped this run"""")
+        Seq(s""""auto A/B: no previous-round baseline (no same-sf, same-cores BENCH_r artifact, floors snapshot or bench_diag sidecar: $prevSource) — mover detection skipped this run"""")
       else if (flagged.isEmpty)
         Seq(summary)
       else summary +: s""""auto A/B baseline: $prevSource"""" +: (measured ++ skipped)
@@ -1126,186 +1159,10 @@ object Bench {
     // isolated A/Bs): in-session cpu_s for codegen/JIT-heavy queries
     // (n2_ann_lsh, the PageRank loop family, GraphX probes) is
     // JIT-position-dependent and NOT a cross-round signal on its own;
-    // walls swing ±30% with box state. The auto A/B notes below now carry
-    // the per-round adjudication that used to be manual.
-    val staticNotes = Seq(
-      "\"in-session cpu_s for codegen/JIT-heavy queries (n2, PR loop family, GraphX) is JIT-position-dependent; walls swing ±30% with box state — see auto A/B notes for this round's adjudication\"",
-      // r9 bisect of the four r8-verdict regression candidates, quiet box
-      // (load1 0.1), r7 TREE (239094b) vs HEAD under the same fresh-JVM
-      // harness: identical floors on both trees, so nothing regressed —
-      // the quoted r7 'floors' were warm-JVM in-session minima below the
-      // fresh-JVM floor (the g7_kcore pattern).
-      "\"r9 bisect (fresh-JVM QBench, r7 tree vs HEAD): p8_pack_chunks 0.64 vs 0.63 s, t9_quality_gopher 0.47 vs 0.52 s, d6_decontaminate 0.84 vs 0.81 s — identical floors, exonerated; r7 in-session mins (0.32/0.28/0.67) were warm-JVM artifacts\"",
-      "\"r9 bisect (AbScaledXl 2M/10it, quiet box): pagerank_scaled_graphx r7 tree 12.29 s cpu 246 vs HEAD 12.39 s cpu 243 (code git-identical since r7); i6_weighted_pagerank isolated floor 2.60 s vs r7 2.48 s — both exonerated, r8's 13.28 s ran at load1 10.35\"",
-      // r10 bisect of the four r9-verdict cpu_s jumps, quiet box (load1
-      // ~1), r8 TREE (a9ec68a) vs HEAD, fresh-JVM QBench per query:
-      // identical-or-better floors on HEAD, so TopKPairsAgg costs nothing
-      // at sf0.1 and the PR-loop pair's in-session jump was leg-order JIT.
-      "\"r10 bisect (fresh-JVM QBench, r8 tree vs HEAD, wall/cpu floors): n2_ann_lsh 3.42/8.73 vs 2.32/6.61 (HEAD faster), n8_ann_pq 4.26-4.53/3.48-3.55 vs 4.21-4.86/3.40-3.81 (identical), pr_renorm 4.68/21.89 vs 4.17/20.83, pr_graphx 1.65/3.03 vs 1.69/3.03 — all four exonerated; r9 in-session cpu_s (28.7/14.1/14.0/6.1) were leg-position warm-JVM artifacts\"",
-      // r10 sketch-statistics A/B published (AbCmsJoin, x64-amplified
-      // sf0.1 corpus so the stream's child-sized static estimate honestly
-      // exceeds the default 10 MB broadcast threshold; AQE ON both legs).
-      "\"r10 AbCmsJoin (stored-sketch planner stats, quiet box): stock AQE wall 15.59 s / 346.5 MiB shuffle-write / SortMergeJoin=2 vs sketch-hinted 9.65 s / 163.2 MiB / BroadcastHashJoin=2 — 1.6x wall, 2.1x shuffle bytes; HLL lgK=14 estimates exact (931/931 bigram keys, 31/31 unigram keys); residual 163 MiB is the doc_id window + two groupBy shuffles common to both legs\"",
-      // r10 rank-stage A/B pinned as a leg (AbAnnRankXl): see README.
-      "\"r10 AbAnnRankXl (2x64M duplicate-bearing pairs, N=8000, quiet box): topk_agg wall 6.20 s / cpu 149 s / 24.5 MiB shuffle-write vs distinct+row_number window 20.15 s / cpu 538 s / 1653 MiB — 3.2x wall, 67x shuffle bytes; on a duplicate-FREE stream Spark 4's WindowGroupLimit closes most of the wall gap (4.28 vs 3.38 s), so the structural win is the insert-time dedup replacing the full-stream distinct shuffle\"",
-      "\"r10 AbAnnRankXl at XL_N=24000 (2x576M pairs): topk_agg completes on the default 8 GB heap at 36.9 s / 1030 cpu-s / 74.8 MiB shuffle-write; distinct+window OOMs 8 GB and needs 48 GB to finish 169.4 s / 4814 cpu-s / 14782 MiB. Also surfaced: ObjectHashAggregate's 128-group sort-based fallback cost the rank stage 1.6x cpu (60.6 s at the default threshold) — bench/QBench sessions now run fallbackThreshold=65536; Verify/tests keep the default so the fallback path stays correctness-covered\"",
-      // r11 adjudication of the r10 verdict's one unadjudicated mover
-      // (quiet box, load1 0.8, fresh-JVM AbScaledXl 2M edges/10 iters,
-      // two runs) + the detector fix that let it slip.
-      "\"r11 adjudication pagerank_scaled_graphx (r10 session 29.59 s, cpu 570.9, load1 12.58): fresh-JVM quiet-box floors 13.21 s/cpu 221 and 14.82 s/cpu 247 — consistent with the r9 bisect (12.3 s, cpu 246; code git-identical since r7), so the r10 leg was box contention, exonerated\"",
-      "\"r11 detector fix: auto A/B floors now come from the previous ROUND's committed BENCH_r{n-1}.json artifact (written once per round) instead of the working-dir bench_diag.json this harness overwrites per run — mid-round sidecar commits masked the r10 mover; the baseline source is named in the auto A/B note each run\"",
-      // r10 incremental-dedup A/B (AbDedupInc, distinct-replica corpus,
-      // sf0.01 batch): the asymptotic point of DedupStore.
-      "\"r10 AbDedupInc (adjudicate a 500-doc batch vs an Nx corpus): incremental searchNew wall nearly flat 3.5/4.4/6.5 s at corpus 32x/128x/512x while the batch operator on the union grows linearly 3.9/12.0/29.9 s (4.6x at 512x, widening); one-time store build 10.5/17.3/41.1 s amortizes across increments. Incremental residual growth is the stored band/shingle parquet scans - id-bucketed layout would prune further on a cluster\"",
-      // r11 DedupStore.compact measured (the maintenance path the r10
-      // note asked for): 512x corpus arriving as 16 increments.
-      "\"r11 AbDedupInc compaction leg (512x corpus, 16 appends): fragmented store 2192 files / probe 5.8 s; compact() one-time 7.5 s collapses to 32 id-clustered files and the probe drops to 3.6 s - below even the single-save store's 6.1 s floor (a save itself leaves shuffle-parallelism x bands files). Residual scan growth flattened; searchNew results spec-pinned identical across layouts\"",
-      // r12 adjudication of the r11 auto-A/B's one regression candidate
-      // (quiet box load1 0.7, fresh-JVM QBench, two interleaved reps per
-      // tree): g14's code path is git-identical since its creation, and
-      // both trees floor far below the flagged session wall.
-      "\"r12 adjudication g14_path_load (r11 session 12.27 s at load1 4.7; r10 'prev' 3.85 was an in-session warm-JVM wall): fresh-JVM quiet-box floors HEAD 4.46/5.09 s vs r10 tree 3.64/4.03 s, cpu floors 3.99 vs 3.22 - Centrality.pathLoad and the g14 entry are git-identical since r9 (only sibling map entries and oracle strings changed), so the 12.27 s leg was box state and the residual 0.8 s tree delta is fresh-JVM JIT variance; exonerated, no mover\"",
-      // r12 SemDeDup candidate-stage A/B (AbSemDedup, planted-dup
-      // corpus, quiet box): the d18 scale claim measured.
-      "\"r12 AbSemDedup (131072x64-d vectors, 25% planted near-dups, eps 0.95, quiet box): exact all-pairs 42.3 s / 8.59B candidate cosines vs sign-cell-scoped dims=8 (256 cells) 1.17 s / 33.6M candidates - 36x wall, 256x less quadratic work, at eps-pair recall 0.998; dims=4 midpoint 7.1 s / 0.999. Full d18 operator at dims=8: 32699/32768 planted pairs land in one group (0.9979) - the boundary loss is pairs split by a quantizer hyperplane, the same trade the paper's k-means cells make; at 32768 vectors the same legs read 3.5/0.8/0.3 s\"",
-      // r12 detector hardening (the r11 ADVICE items): artifact floors
-      // can be a truncated slowest-legs subset, so the baseline now
-      // merges artifact + sidecar per-query minima.
-      "\"r12 detector fix: BENCH_r artifacts that overflow the driver tail carry only a slowest-legs subset (_dropped_fastest: 39 in r11), so artifact-only floors silently unguarded the 39 fastest legs; previousMinWalls now merges the artifact with the sidecar's queries_min taking per-query min (min() is immune to mid-round sidecar overwrites for shared keys: a slow mid-round value loses to the artifact, a fast one only flags more) and skips the _dropped_fastest marker\"",
-      // r12 classifier-trainer orchestration A/B (AbClassifier, 64k
-      // synthetic docs x 1.29M feature rows, dims=32, quiet box): the
-      // t22 sufficient-statistics design priced against MLlib-style
-      // per-iteration distributed gradients on the SAME exact integer
-      // trajectory (bit-identical weights asserted both runs).
-      "\"r12 AbClassifier (64k docs / 1.29M feature rows, dims=32, quiet box, identical integer trajectories asserted): T=32 summary-GD wall 1.10 s / 0.6 MiB shuffle-write vs per-iteration distributed GD 21.70 s / 278.8 MiB - 20x wall, 465x shuffle bytes (iterations are free once the (dims+1)^2 Gram is collected); honest flip side at T=1: 1.67 vs 1.50 s (6.1 MiB) - per-iteration only competes when T is tiny or dims too large to square, exactly the regime split the scaladoc claims\"",
-      // r12 flagship wall adjudication: the end-of-round session min
-      // (6.12 s at load1 4.1) sits above the r10/r11 in-session 3.1-3.5 s
-      // because those were warm-JVM minima late in low-load sessions;
-      // isolated fresh-JVM BenchFlagship floors 5.91/6.11 s match the r8
-      // isolated record (5.53 s), and the flagship code path
-      // (graph/PageRank.scala, SparkEntry) is git-identical since r11.
-      "\"r12 flagship adjudication: BenchFlagship fresh-JVM floors 5.91/6.11 s (code git-identical since r11; r8 isolated record 5.53 s) - the 3.1-3.5 s r10/r11 session values were warm-JVM in-session minima; bar is <=12.7 s (2x reference), met with margin either way\"",
-      // r12 incremental classifier retraining (AbClassifierInc, 4k-doc
-      // batch against an Nx-batch corpus): the ClassifierStore
-      // asymptotic point, with bit-identical weights asserted at every
-      // scale (statistics additivity, not approximation).
-      "\"r12 AbClassifierInc (4k-doc batch, dims=32, T=32): incremental append+trainStored stays flat 3.6/2.1/2.5 s at corpus 16x/64x/256x (64k/256k/1M docs) while the from-scratch retrain grows linearly 4.0/6.5/12.7 s (5.1x at 256x, widening); one-time store build 8.6/5.8/12.8 s amortizes across increments; weights bit-identical to the union train at every point (integer sufficient-statistics additivity)\"",
-      // r13 bisect of the two r12 auto-A/B regression candidates (quiet
-      // box load1 0.2-1.6, fresh-JVM QBench, two interleaved reps per
-      // tree, r11 tree 7d3db45 vs HEAD): identical floors on both trees,
-      // and both entries + the whole graph/ package are git-identical
-      // since r11 — the r12 'prev' floors (0.76/1.10 s) were warm-JVM
-      // in-session minima below the fresh-JVM floor (the documented r8
-      // g7_kcore pattern).
-      "\"r13 bisect g7_kcore + g4_khop (fresh-JVM QBench, r11 tree vs HEAD, two interleaved reps): g7_kcore wall floors r11 1.14/1.43 s vs HEAD 1.32/1.41 s (cpu 0.41/0.51 vs 0.46/0.50), g4_khop r11 1.33/1.49 s vs HEAD 1.50/1.52 s (cpu 0.73/0.79 vs 0.80/0.87) — identical within fresh-JVM variance, code git-identical since r11; the r12 prev floors 0.76/1.10 s were warm-JVM in-session minima; both exonerated\"",
-      // r13 IVF-store compaction measured (AbIvfCompact — the r12 verdict
-      // missing-piece #1, the DedupStore.compact pattern applied to the
-      // Hive cell layout): 256x corpus (128k vectors) arriving as 32
-      // appends.
-      "\"r13 AbIvfCompact (256x embeddings corpus = 128k vectors, dims=6/64 cells, 32 appends, quiet box): fragmented store 2048 files / dedupNew probe 1.9 s; compact() one-time 1.8 s collapses to 64 id-clustered files (one per cell) and the probe drops to 0.7 s — below the single-save store's 1.1 s; probe results row-identical across layouts (IndexStoreSpec pins search + dedupNew on static AND tuned layouts; swap is the crash-safe rename-aside)\"",
-      // r13 incremental span dedup (AbSpanInc — the r12 verdict
-      // missing-piece #2, the DedupStore searchNew lifecycle applied to
-      // the d10 anchor-gram relation): sf0.01 batch against an
-      // Nx rep-prefixed corpus, new-touching spans only.
-      "\"r13 AbSpanInc (sf0.01 batch vs Nx corpus, L=6): incremental SpanStore.searchNew stays near-flat 3.2/3.4/5.2-10.2 s at corpus 32x/128x/512x while spanDedup on the union grows linearly 3.8/6.9/28.5-30.0 s (2.9-5.5x at 512x, widening); one-time store build ~30 s at 512x amortizes across increments; spans identical both paths (SpanStoreSpec pins union-restricted equality + exactly-2 stored scans, never a stored self-join). Residual incremental growth is the stored gram parquet scan the content join must read\"",
-      // r13 SpanStore compaction leg (the third store gets the same
-      // maintenance path; 512x corpus arriving as 16 appends).
-      "\"r13 AbSpanInc compaction leg (512x corpus, 16 appends): fragmented gram store 160 files / probe 3.5 s; compact() one-time 6.6 s collapses to 8 gram-range-clustered files and the probe drops to 1.7 s - below even the single-save store's 5.2 s (a save leaves shuffle-parallelism unclustered files); probe results row-identical across layouts (SpanStoreSpec pins it; swap is the shared crash-safe rename-aside)\"",
-      // r15 composed incremental release (AbReleaseInc — the r13/r14
-      // verdicts' #1 ask, p22): the four stores composed into the
-      // per-crawl-batch release, priced against the from-scratch batch
-      // chain on the union.
-      "\"r15 AbReleaseInc (composed p22 release: gate retrain + near-dup probe + touched-cluster CC + span probe + appends; sf0.01 batch vs Nx rep-prefixed corpus, stopwords kept so the gate keeps its real distribution): ReleaseStore.increment stays near-flat 10.6/13.0/12.6/14.0 s at corpus 16x/64x/256x/512x while the batch chain on the union grows linearly 9.1/16.4/41.1/75.1 s - 5.4x at 512x, widening, crossover ~32x; one-time store build 25.9/34.6/65.3/90.9 s amortizes across increments; released rows identical both paths at every point (178/220/208/196) and the sf0.001 equality is spec-pinned in ReleaseStoreSpec including dethroning + composed-takedown scenarios\"",
-      "\"r15 AbReleaseInc compaction leg (64x corpus arriving as 16 real increments): fragmented composed store probes the next batch at 10.2 s; ReleaseStore.compact one-time 4.5 s (sub-store compacts + clusters folded to latest generation) drops it to 8.6 s - below even the single-save store's 11.1 s; released rows identical across layouts (220; spec-pinned in ReleaseStoreSpec)\"",
-      // r15 span stop-gram cap priced (AbSpanSkew — the r13 #5 / r14 #2
-      // ask's measurement leg): a planted 30-token boilerplate run in
-      // EVERY doc, the quadratic hot key the cap exists for.
-      "\"r15 AbSpanSkew (every doc carries the same 30-token boilerplate run; sf0.01 xN corpus; maxDf=16): uncapped spanDedup is quadratic in gram df as predicted - 29.8 s / 2.0M spans at 2000 docs -> 116.5 s / 8.0M spans at 4000 docs (3.9x wall for 2x docs) while the capped operator stays linear 8.8 -> 10.9 s (6k/12k organic spans) - speedup 3.4x -> 10.7x, widening quadratically; incremental probe same story: capped SpanStore.searchNew flat 3.2/2.6 s vs uncapped 8.6/23.0 s (2.7x/8.7x), the heavy-gram list summed from the stored gramdf partials + batch df, never a stored pos-level rescan; cap semantics property-pinned in DedupProperties, capped-probe==capped-union pinned in SpanStoreSpec\"",
-      // r15 adjudication of the three r14-verdict contention suspects
-      // (fresh-JVM QBench, interleaved HEAD vs r14 tree 7349db8 in
-      // .bisect-r14, load1 0.9-3.5 from the harness itself): all three
-      // entries are git-identical between trees and both trees floor
-      // far below the flagged session walls — exonerated.
-      "\"r15 adjudication g14_path_load (r14 session 8.55 s at load1 3.9-5.0): fresh-JVM floors HEAD 4.72/5.06 s vs r14 tree 3.72/4.76 s, cpu 3.9-4.6 both; i4_personalized (session 2.68 s): HEAD 2.24/2.41 vs r14 1.55/2.05; d20_threshold_sweep (session 3.31 s): HEAD 1.69/1.82 vs r14 1.42/1.83 - all three git-identical between trees, inter-tree deltas within the load swing observed across reps (a same-tree rep at load1 3.5 floored at 6.24 s); box contention, all exonerated per the standing r10/r11/r13 protocol\"",
-      // r15 composed-chain scale shares (AbRelease — the r13 #7 ask):
-      // per-stage walls of the p20/p22 batch chain at Nx corpus, warm
-      // JVM (an amp=1 warm-up pass absorbs JIT before the quoted amps).
-      "\"r15 AbRelease (composed-chain per-stage scale shares, warm JVM, 4x/16x/64x sf0.01 corpus = 2k/8k/32k docs): total wall 6.3/8.2/12.4 s - 2x wall for 16x docs, no composed stage superlinear; shares gate 27-49% / neardup 50-70% / span+split 1-3% (survivor spans are few on the rep-prefixed corpus; standalone spanDedupApply over the full 32k corpus is 1.1 s); gate/neardup executor-cpu grows ~linearly with the corpus (1->13 s and 3->21 s at 4x->64x)\"",
-      // r16 bisect of the four r15 auto-A/B regression candidates
-      // (fresh-JVM QBench, interleaved HEAD vs r14 tree 7349db8 in
-      // .bisect-r14, two reps per tree per query, box load1 1.2-5.5
-      // from the harness itself): all four entries and their operator
-      // code are git-identical between trees and the inter-tree floor
-      // deltas are within single-rep variance — the r15 driver run's
-      // flagged iso minima (3.73/5.66/2.38/3.98) were contention on a
-      // box swinging load1 1.3-8.6, and the sub-1.5 s 'prev' floors
-      // were the documented warm-JVM in-session class.
-      "\"r16 bisect (fresh-JVM QBench, r14 tree 7349db8 vs HEAD, two interleaved reps, wall floors): n11_ann_ivf_multiprobe HEAD 3.13/2.81 vs r14 2.77/2.73, d16_jaccard_prefix 1.72/1.53 vs 1.56/2.12, n2_ann_lsh 2.00/1.97 vs 1.94/1.81, d3_minhash_lsh 1.43/1.51 vs 1.36/1.43 - all four git-identical between trees, deltas within fresh-JVM variance; the r15 flagged iso minima (3.73/5.66/2.38/3.98) were box contention and the sub-1.5 s prev floors (2.11/1.32/1.10/1.07) warm-JVM in-session minima; all four exonerated per the standing protocol, bisect queue clear\"",
-      // r16 v2 store layouts (the r15 verdict #6 ask): id-/gram-bucketed
-      // Hive partitions + planning-time file pruning on the incremental
-      // probes, single-orientation arms halving the stored scans.
-      "\"r16 AbReleaseInc on the v2 bucketed layouts (sf0.01 batch vs Nx corpus, load1 2-7): increment wall 13.7/12.3/11.2 s at 16x/64x/256x - FLAT where r15 measured 10.6->14.0 creep at 16x->512x (the stored-scan slope was the probes' file reads; v2 prunes them to hit buckets and the single-orientation arms halve what remains), at +2-3 s fixed per-increment cost (bucket-discovery jobs + bucketed appends' repartition); union re-run 10.3/15.7/40.2 s, crossover ~32x, 3.6x at 256x and widening. The fixed cost initially pushed the sf0.1 p22 leg 11.7->15.8 s; three fixes recovered 11.95 s (~= the r15 floor): a 256 MB size gate on the pruning DISCOVERY pass (below it a straight scan beats the discovery job), the layout meta as a plain FS JSON file (a one-row-parquet read was a Spark job on every probe/append), and gramidx projected from the gramdf aggregation checkpoint (no second distinct shuffle per append) - adjudicated, not an open regression\"",
-      "\"r16 AbDedupInc PRUNE (hit-sparse narrow probe, 8 docs with stored twins, 512x corpus, interleaved fresh reps): legacy full-scan refine 3.4 s vs v2 pruned 2.3 s - the 1.1 s delta is exactly the shingle/count IO pruned to the STORED candidate ids' idb buckets; broad batches saturate the 32-bucket set and adaptively skip the filter. AbSpanInc PRUNE 128x/512x: wall-neutral locally (0.8-1.8 s both layouts) - the gramidx hash-index scan costs about what the rep-prefixed gram scan does at local sf (synthetic r<N>_ tokens compress ~perfectly), the structural win is bytes-per-row on high-entropy real text; the broad 512x probe (5.7 s at load1 11) sits in r13's 5.2-10.2 s band, no regression, and probe equality across layouts incl. capped + append/remove lifecycle is spec-pinned\"",
-      // r17 high-entropy SpanStore v2 measurement (the r16 verdict #4
-      // ask): the bytes-per-row claim as recorded numbers, on hashed
-      // token surrogates (AB-SPANINC-PRUNE-ENTROPY leg).
-      "\"r17 AbSpanInc ENTROPY (hashed-token-surrogate corpus, quiet box, 8-doc narrow probe, interleaved reps): stored grams 229 MB vs gramidx 24 MB at 128x and 1043 vs 97 MB at 512x - the existence index is ~10x fewer bytes than the pos-level relation once tokens stop compressing, the number the r16 note could only claim structurally. Probe WALLS stay near-neutral locally (0.7/0.8 s at 128x, 1.6/1.5 s at 512x): local NVMe streams 1 GB across 32 threads in well under a second, so the shared join/merge stages dominate both layouts - the wall win needs storage where scan bytes ~ wall (object stores / disaggregated clusters), where v2 reads 97 MB + hit buckets instead of 1043 MB per probe. Same run, rep-prefix corpus for contrast: PRUNE v2 1.4x faster at 512x (4.3 vs 3.0 s); probe results row-identical across layouts in every leg (spec-pinned)\"",
-      // r17 adjudication of the five r16 driver flags (the r16 timeout
-      // run's unfinished A/B queue) — quiet box (load1 0.3 at start,
-      // only the harness running), fresh-JVM QBench (3 runs per child,
-      // min quoted), all five on code git-identical since r14.
-      "\"r17 adjudication of the 5 pending r16 driver flags (quiet box load1 0.3, fresh-JVM QBench wall/cpu mins): t9_quality_gopher 0.89/0.14 s (flagged session 30.18), e19_funnel_latency 0.84/0.11 (26.66), t24_classifier_calibration 1.96/0.83 (32.93), t21_ccnet_buckets 1.07/0.34 (8.79), d17_ngram_boilerplate 2.41/1.60 (19.72) - every floor 8-36x below its flagged wall and within the fresh-JVM band of its r15/r16 committed floors; the r16 driver box ran 10-90x slow across the board (rc 124 timeout), all five exonerated as contention per the standing protocol, A/B queue clear\"",
-      // r17 re-validation of the r16 12-leg floor watch-list (same
-      // harness/run): the +15% r16 floor geomean was measured at
-      // load1 2-7 (builder's closing run) on git-identical code.
-      "\"r17 watch-list re-measure (quiet box, fresh-JVM QBench wall/cpu mins vs r15 committed floors): n1 1.18/0.17 (r15 0.19), d18_semdedup 23.5/5.6 (4.81 - see next note), p18 2.23/0.16 (0.36), g3_triangles 8.39/50.9 (4.05; cpu 50.9 vs the r16 in-session 52.9 - work IDENTICAL, wall is box state), g11 3.86/10.7 (1.98), g6 4.39/13.3 (1.96), e18 0.60/0.02 (0.09), t13 1.68/0.99 (0.63), d24 1.04/0.28 (0.32), p17 9.74/15.2 (6.29), d2 2.08/2.82 (1.27), g7_kcore 1.66/0.51 (0.56; its documented r8 fresh floor is 1.14-1.43) - all 12 carry the known fresh-JVM overhead over warm in-session floors, none shows a cpu regression, all on git-identical operator code; the r16 floor creep was load1 2-7 contention, all exonerated\"",
-      // d18's fresh-JVM wall deserves its own line: it looks alarming
-      // (23.5 vs the 4.8-7.5 in-session band) and is NOT a regression.
-      "\"r17 d18_semdedup fresh-JVM profile: wall 23.5-31.5 s but cpu only 5.6-6.8 s (in-session: 7.5 wall / 3.6 cpu) - the KMeans quantizer runs hundreds of tiny RDD-path jobs whose per-stage scheduling cost dominates a fresh JVM and never fully JITs in 3 runs (the g7_kcore pattern at larger scale); cpu is within fresh-JIT inflation of the in-session value and the operator code is git-identical since r12 - not a mover, but d18's auto-A/B verdicts must be read on cpu, not wall\"",
-      // r17 p22 adjudication: the one elevated leg of the r17 closing
-      // runs sits on a path this round DID touch (the increment's
-      // dropsB/cc broadcasts went from forced to size-gated), so it was
-      // bisected immediately rather than left for the judge.
-      "\"r17 p22 bisect (AbP22 focused harness - template once, 3 timed copy+increment reps per fresh JVM, two interleaved JVMs per tree, HEAD vs pre-change r16 tree a334155): HEAD wall floors 20.60/20.48 s vs r16 tree 20.99/22.05 s - HEAD is not slower, the Hints.broadcastIfSmall gating of the increment's dropsB/cc joins costs nothing (checkpoint-backed stats keep the estimates known, the gate passes, the plan keeps its broadcasts); the r17 in-session p22 walls (22.6 run1 / 16.6 run2 vs the r16 11.95 floor) tracked the box cooling between runs and are contention, exonerated\"",
-      // r17 shared-stage bench mode (the r16 verdict #7 ask): the
-      // sinks leg's floor DROP is a measurement-semantics change, not
-      // a speedup — read it against this note, not the old floor.
-      "\"r17 bench change sinks_release_pipeline: the release chain is materialized once to an untimed shared template (p20 still times the full shipped chain, p21 its own funnel plan); the sinks leg now times exactly the SINK (read-back + shard shuffle + sorted write + manifest) of the already-released corpus - its floor drops from the ~chain-sized 12.x s to the export cost by construction; shipped query plans unchanged\"",
-      // r17 reconcile cadence (the r16 verdict #8 ask, documented in
-      // ReleaseStore.reconcile's scaladoc): the cost model that sets
-      // the schedule.
-      // r18 scoped-reconcile lifecycle priced (the r17 verdict #6
-      // stretch): AB-RELEASEINC-RECONCILE-SCOPED, a dethroning
-      // increment + the reconcile scoped to its own released rep_ids,
-      // as one number, vs the bare increment and the full-store sweep.
-      "\"r18 increment+scoped-reconcile lifecycle MEASURED (AB-RELEASEINC-RECONCILE-SCOPED, 64-doc dethroning batch, 16x/64x sf0.01 corpora): increment+scoped 15.2/22.3 s vs bare increment 12.8/19.5 s - the eager same-window maintenance costs +2.4/+2.8 s, FLAT in corpus (the election pass is batch-sized), while the full-store reconcile on the same stores grows 2.5 -> 4.4 s retiring 75/255; the no-op check stays 0.4-0.6 s. Cadence guidance confirmed with prices: close dethroning spikes eagerly with the scoped pass, leave the full sweep paired with compact's per-N-increments window\"",
-      // r18 adjudication of the five r17 driver flags (the r17 run's
-      // contended A/B phase: two children OOM-killed rc=137, one
-      // budget-capped, two non-query legs deferred) — quiet box (load1
-      // 0.1-0.3 at each leg's start; only the harness loading it),
-      // fresh-JVM QBench / AbScaledXl on the committed r17 tree.
-      "\"r18 adjudication of the 5 pending r17 driver flags (quiet box, fresh-JVM wall/cpu mins, 2-3 reps each): g18_negative_sampling 6.97/16.8 (prev floor 6.71, flagged session 77.5 at load1 8.2), d16_jaccard_prefix 1.84/3.0 (prev 1.63, flagged 16.1), g20_modularity 6.14/19.2 (prev 6.46, flagged 27.6 - floor BELOW prev), pagerank_scaled via AbScaledXl 2M/10it 13.25-15.55/78-82 (flagged 38.3), pagerank_scaled_graphx 18.27-19.22/317-332 (flagged 209.3 - 11x above even the fresh floor) - all five on code git-identical since r15, every flagged wall 4-11x its quiet fresh floor; the r17 driver session ran at load1 3.7-8.2, all five exonerated as contention per the standing protocol, A/B queue clear\"",
-      // r18 closing-run-2 auto-A/B flagged d18b (prev 5.33 → session
-      // 23.0, iso walls declining 25.6/11.6/8.8 with cpu 6.7/4.0/3.6) —
-      // re-measured on a fully quiet box (load1 0.03) the same evening.
-      "\"r18 d18b_semdedup_portable adjudication (closing-run-2 flag, quiet box load1 0.03, fresh-JVM QBench): d18b walls 27.9/12.7/10.2 cpu 5.9/3.6/3.4, d18 walls 21.8/21.5/15.1 cpu 6.1/5.4/4.3 - the EXACT r17-documented fresh-JVM class (KMeans quantizer's hundreds of tiny RDD-path scheduling-bound jobs, never fully JITed in 3 reps; r17 profile: wall 23.5-31.5 cpu 5.6-6.8); cpu matches the r17 profile, testdata and code git-identical since r12, flag exonerated as the known JIT/scheduler class, not a regression\"",
-      // r18 closing-run-4 auto-A/B flagged a23 (prev 0.26 → session
-      // 1.02 — both sides a hair over the detector's floors) while the
-      // session JVM still held the box at load1 3.7.
-      "\"r18 a23_kll_rollup adjudication (closing-run-4 flag, then idle-box fresh-JVM QBench): walls 4.0/1.4/1.1 but cpu 0.68/0.08/0.07 - work identical to the r17-adjudicated noise band (a22/a23/a24 sub-second sketch rollups 'below any meaningful signal on a 32-thread box'); a 0.26 s floor only exists inside a warm 129-leg session, fresh JVMs pay scheduling+JIT many times the leg itself; exonerated as the noise-band class, queue clear\"",
-      // The graphx fresh floor deserves its own line: today's SAME-TREE
-      // wall/cpu (19 s / 317-332 cpu-s, 3 consistent reps) sits ~1.35x
-      // above the r9/r11 era readings (12.3-14.8 s / 221-247 cpu-s) on
-      // byte-identical code (graph/ untouched since 18bf29b) — cpu
-      // moving WITH wall on an identical tree is an environment shift
-      // (host/CPU-frequency class), not a plan regression; recorded so
-      // the next round reads its graphx floors against today's band.
-      "\"r18 environment note: AbScaledXl 2M/10it same-tree floors moved 12.3-14.8s/cpu 221-247 (r9/r11) -> 18.3-19.2s/cpu 317-332 (r18, quiet box, 3 reps) on byte-identical graph code - wall AND cpu together = box/env shift, not a regression; pr_df floor 13.3-14.7s/cpu 78-82 same runs\"",
-      // r18 flagship floor re-measure (r17 verdict #3: committed floor
-      // drifted 3.67 -> 4.92 s on untouched code): isolated fresh-JVM
-      // BenchFlagship floors today MATCH the r8 record exactly.
-      "\"r18 flagship adjudication (BenchFlagship fresh-JVM, quiet box, 3 JVMs x 4 runs): pagerank_wikidata floors 5.53/5.98/6.93 s - the 5.53 equals the r8 isolated record exactly and the SAME binary floored 5.53 then 6.93 forty minutes apart on the same quiet box, so the 3.67 (r16) -> 4.92 (r17) committed-floor drift sits inside the box's own same-binary swing on git-identical code, not a regression; pagerank_wikidata_graphx fresh floors 2.14/2.15 s (committed 1.10 -> 1.69 warm in-session minima, also in-band); bar <=12.7 s (2x reference 6.35 s), met 2.3x over\"",
-      "\"r17 reconcile cadence, MEASURED (AB-RELEASEINC-RECONCILE: 64 longer-near-dup arrivals dethrone stored canonicals, then reconcile twice on the same store): reconcile-with-retirements 4.0 s / 75 retired at 16x and 3.9 s / 255 retired at 64x - flat in corpus and ~0.3x the SAME store's compact (12.3 s both points), because the rewrites are relation-sized but parallel and the span remove skips the pos-level rescan (negated df partials); the idempotent no-op pass (retired empty - the election-only check) is 0.6 s, cheap enough to schedule eagerly. Guidance stands with sharper numbers: both reconcile and compact are store-sized asymptotically, so pair them per-N-increments, but a scheduled reconcile that finds nothing costs ~nothing and a dethroning spike can be closed immediately without waiting for the compact window\"")
+    // walls swing ±30% with box state. The auto A/B notes below carry
+    // each run's adjudication.
+    val standingNote =
+      "\"in-session cpu_s for codegen/JIT-heavy queries (n2, PR loop family, GraphX) is JIT-position-dependent; walls swing ±30% with box state — see auto A/B notes for this round's adjudication\""
     // Round-over-round floor watch (r17 verdict #5): the ratio report the
     // round comparison reads, with the SAME noise floor the auto-A/B
     // detector applies — BOTH sides >= 0.25 s. Sub-noise legs (r17
@@ -1334,7 +1191,7 @@ object Bench {
     val recallJson = recalls
       .map { case (k, r) => "\"" + k + "\":" + fmtN(r) }
       .mkString("{", ",", "}")
-    val notes = (staticNotes ++ recallNotes ++ (floorWatchNote +: autoNotes))
+    val notes = ((standingNote +: recallNotes) ++ (floorWatchNote +: autoNotes))
       .mkString(",")
     // The sidecar carries the FULL wall history (min + mean + cpu) so a
     // truncated stdout tail can never lose a round's perf record again.

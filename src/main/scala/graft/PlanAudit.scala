@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for representative queries so the
   * partitioning/pushdown/broadcast story can be audited by eye:
-  * `sbt "runMain graft.PlanAudit [sfDir] [query ...]"`.
+  * `sbt "runMain graft.PlanAudit [sfDir] [query ...]"`. Kept as a main
+  * because it is the documented command behind README §Plan audit.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {

@@ -1,16 +1,13 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.GraftInternals
 
 /** Isolated per-query A/B microbench: runs the named `SparkEntry.queries`
-  * entries on a FRESH JVM (one `runMain` per invocation) with the same
-  * session config and cpu-time listener as [[Bench]], so a single query's
-  * wall/cpu can be compared across commits without the 60-query session's
-  * JIT/cache history in the way.
+  * entries or [[harnessLegs]] on a FRESH JVM (one `runMain` per
+  * invocation) with [[Bench]]'s session and stage meter, so a single
+  * query's wall/cpu can be compared across commits without the 60-query
+  * session's JIT/cache history in the way. The one A/B entry point: the
+  * auto-A/B detector forks it, and it is the tool for a by-hand A/B.
   *
   *   sbt "runMain graft.QBench g3_triangles n2_ann_lsh"   # 3 runs each
   */
@@ -18,12 +15,12 @@ object QBench {
 
   /** Bench harness legs that are NOT SparkEntry queries but are still
     * auto-A/B re-measurable on a fresh JVM — the r17 deferral class: a
-    * flagged `pagerank_*` leg fell to an "A/B manually via
-    * BenchFlagship/AbScaledXl" note that never ran, leaving the flag
-    * pending at judging time. Bodies mirror the Bench legs exactly
-    * (same data, params, and top-k materialization). The sinks legs
-    * stay manual: they time an export of the release chain's shared
-    * template, which only exists inside a full Bench session.
+    * flagged `pagerank_*` leg fell to a "re-measure by hand" note that
+    * never ran, leaving the flag pending at judging time. Bodies mirror
+    * the Bench legs exactly (same data, params, and top-k
+    * materialization). The sinks legs stay manual: they time an export
+    * of the release chain's shared template, which only exists inside a
+    * full Bench session.
     */
   private[graft] val harnessLegs: Map[String, SparkSession => Unit] = {
     import graft.graph.{PageRank, PageRankGraphX, SyntheticGraph}
@@ -62,59 +59,31 @@ object QBench {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QBench <queryName>...")
+    // Resolve every name before the session starts: a typo must not
+    // cost a Spark start-up and then fail as a bare "key not found".
+    val known = harnessLegs.keySet ++ SparkEntry.queries.keySet
+    val unknown = args.filterNot(known)
+    require(unknown.isEmpty,
+      s"unknown leg(s) ${unknown.mkString(", ")}: not a SparkEntry query or a QBench harness leg")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Many-group ObjectHashAggregate stages (every ANN rank via
-      // TopKPairsAgg: one tiny k-entry buffer per query) fall back to
-      // SORT-BASED partial aggregation after 128 groups per task at the
-      // Spark default, silently re-introducing a per-partition pair sort
-      // (measured 1.6x cpu on the XL rank leg, AbAnnRankXl r10). 64k
-      // groups of the engine's largest grouped buffers (KB-scale
-      // sketches) stay under ~1 GB/task; corpus-scale group counts
-      // beyond that SHOULD fall back - that is the threshold's job.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     val sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
-    val cpuNs = new AtomicLong(0L)
-    val gcMs = new AtomicLong(0L)
-    sc.addSparkListener(new SparkListener {
-      override def onStageCompleted(done: SparkListenerStageCompleted): Unit = {
-        val m = done.stageInfo.taskMetrics
-        if (m != null) {
-          cpuNs.addAndGet(m.executorCpuTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          ()
-        }
-      }
-    })
+    val meter = new Bench.StageMeter(spark)
     spark.read.parquet(s"$sfDir/lineitem.parquet").count() // session warm-up
-    // Drain the async listener bus so the warm-up job's stage CPU metrics
-    // cannot land after cpuNs.set(0) and inflate the first sample.
-    GraftInternals.drainListenerBus(spark)
     args.foreach { name =>
       val samples = (1 to 3).map { _ =>
-        cpuNs.set(0L)
-        gcMs.set(0L)
+        meter.reset()
         val t0 = System.nanoTime()
         harnessLegs.get(name) match {
           case Some(run) => run(spark)
           case None => SparkEntry.queries(name)(spark, sfDir).count(); ()
         }
         val wall = (System.nanoTime() - t0) / 1e9
-        GraftInternals.drainListenerBus(spark)
-        val cpu = cpuNs.get() / 1e9
-        val gc = gcMs.get() / 1e3
+        val (cpu, gcMs) = meter.read()
         spark.catalog.clearCache()
         sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        (wall, cpu, gc)
+        (wall, cpu, gcMs / 1e3)
       }
       // gc AFTER cpu: Bench.isolatedAb parses "wall=X cpu=Y" pairs, so
       // the added field must not sit between them.

@@ -10,6 +10,9 @@ object Verify {
     // the driver always passes exactly <sfDir> <outDir> → full run).
     val only: Set[String] = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Not Bench.session: this session keeps Spark's default
+    // sort-based-aggregation fallback threshold, so that path stays
+    // covered by the oracle compare.
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -26,7 +26,8 @@ object PipelineQueries {
   /** d16's threshold: prefix filtering prunes with power 1−t, so its
     * design regime is high-similarity joins (near-dup detection at
     * t ≈ 0.8) — at d2's 0.3 the prefix keeps ~70% of the index and the
-    * bookkeeping costs more than it saves (measured: AbPrefixSkew).
+    * bookkeeping costs more than it saves (measured: 6.3 s vs d2's 1.6 s
+    * at sf0.1).
     */
   private val PrefixJoinThreshold = 0.8
   private val CosineThreshold = 0.35
@@ -379,7 +380,7 @@ object PipelineQueries {
     }),
 
     // t13 with the STORED-SKETCH planner hint applied end to end
-    // ([[graft.stats.SketchStats]], the AbCmsJoin-measured shape: 1.6×
+    // ([[graft.stats.SketchStats]], the measured shape: 1.6×
     // wall / 2.1× shuffle bytes at 64× amplification): the bigram stream
     // is profiled (HLL per join key + avg width + rows — in a warehouse
     // that row is stored next to the corpus and amortized over every
@@ -612,7 +613,7 @@ object PipelineQueries {
     // Prefix-filtered (AllPairs/PPJoin) exact Jaccard at its design-point
     // threshold 0.8 — output-identical to jaccardPairs at the same t, but
     // the inverted index holds only each doc's ~0.2·n rarest shingles.
-    // Measured in the regime it exists for (AbPrefixSkew, 20k docs with a
+    // Measured in the regime it exists for (20k docs with a
     // shared footer on 50%): 7.4 s vs 35.0 s plain index vs 119.8 s
     // DF-capped — and exact, unlike the cap.
     "d16_jaccard_prefix" -> ((s, d) =>
@@ -1055,8 +1056,9 @@ object PipelineQueries {
     // ship (r8 verdict: n11's 0.66 recall@5 is below a usable default;
     // faiss practice tunes to >=0.9). Finer cells (32), 8 probes AND
     // 3-way candidate assignment: recall@5 = 0.94 on the sf0.1
-    // embeddings (published per round in bench_diag.recall; full
-    // (nCells, probes, assign) grid in AbAnnRecall/README). Honest cost
+    // embeddings (published per round in bench_diag.recall; the
+    // (nCells, probes, assign) sweep is in Similarity.annIvfMultiProbe's
+    // scaladoc). Honest cost
     // accounting: per-query candidate coverage is probes/nCells×assign
     // ≈ 75% here — this weakly-clustered synthetic corpus is near the
     // IVF worst case, and at these tiny cell counts recall is bought
@@ -1209,7 +1211,7 @@ object PipelineQueries {
     // centroids are engine-specific, so rows-only — the portable twin n8
     // carries the hash oracle; recall vs exact n1 is the spec here.
     // nCodes=256 (8-bit codes, the faiss default) after the r10
-    // AbPqRecall sweep: recall@10 0.794 at the old nCodes=64 → 0.908 at
+    // nCodes sweep: recall@10 0.794 at the old nCodes=64 → 0.908 at
     // 256, same train wall. Honest caveat: 256 codes per 2-dim subspace
     // over the sf0.1 corpus approaches sub-vector memorization — the
     // residual recall loss is ADC ranking noise, not quantization; at
@@ -1696,7 +1698,7 @@ object PipelineQueries {
     // count): every λ = trace >> shift reuses the ONE collected Gram;
     // H λ values × T iterations cost zero extra cluster passes (the
     // float-GD alternative pays H·T corpus-derived shuffles — measured
-    // per-iteration cost in AbClassifier). The corpus is touched exactly
+    // per-iteration cost). The corpus is touched exactly
     // twice: the Gram pass and ONE scoring join against the 4×33-row
     // broadcast weight relation, fanned per λ inside the aggregation.
     // Output per λ: training accuracy and the shrinking L1 norm — the

@@ -438,7 +438,7 @@ object RelationalQueries {
       .orderBy(col("l_suppkey"))),
 
     // Custom mergeable HLL sketch (TypedImperativeAggregate) — rows-only;
-    // accuracy spec in HllSpec, extension wiring in ExtensionsDemo.
+    // accuracy spec in HllSpec, extension wiring in ExprSpec.
     "a11_hll_distinct" -> ((s, d) => lineitem(s, d)
       .groupBy(col("l_suppkey"))
       .agg(org.apache.spark.sql.graft.HllSketchAgg

@@ -271,26 +271,25 @@ object Dedup {
     * — while the inverted index shrinks by ≈t and, because the global
     * order puts the RAREST shingles in the prefix, the per-shingle
     * candidate fan-out collapses (frequent boilerplate shingles fall out
-    * of every prefix instead of being hard-capped as in
-    * [[jaccardPairsCapped]]). A size filter (t·|a| ≤ |b| ≤ |a|/t, a
-    * necessary condition for j ≥ t) prunes cross-length candidates before
-    * the refine. Float guard: both ⌈t·n⌉ sites subtract 1e-9 before
-    * `ceil` so binary rounding of t·n can only lengthen a prefix / admit
-    * a borderline candidate (safe direction); the exact refine restores
-    * precision.
+    * of every prefix instead of being hard-capped by document frequency).
+    * A size filter (t·|a| ≤ |b| ≤ |a|/t, a necessary condition for
+    * j ≥ t) prunes cross-length candidates before the refine. Float
+    * guard: both ⌈t·n⌉ sites subtract 1e-9 before `ceil` so binary
+    * rounding of t·n can only lengthen a prefix / admit a borderline
+    * candidate (safe direction); the exact refine restores precision.
     *
-    * Regime (measured, AbPrefixSkew + QBench): the prefix keeps
+    * Regime (measured, fresh-JVM A/B): the prefix keeps
     * `n − ⌈t·n⌉ + 1 ≈ (1−t)·n` shingles, so pruning power scales with t.
     * At t = 0.8 on a 20k-doc corpus with a shared footer on half the
     * docs this wins 4.7× over the plain inverted index (7.4 s vs 35.0 s)
-    * and 16× over the DF-capped index (119.8 s) — while staying exact,
-    * which the cap is not (it silently dropped 4 of 34k pairs in the
-    * t = 0.3 leg of the same probe). At t = 0.3 it LOSES (~70% of the
-    * index survives the prefix and the DF-join + rank windows cost more
-    * than they save: QBench sf0.1 6.3 s vs d2's 1.6 s). So: use this for
-    * high-threshold near-dup joins at crawl scale; use [[jaccardPairs]]
-    * for low-threshold similarity mining on bounded corpora; use
-    * [[jaccardPairsCapped]] only when approximate recall is acceptable.
+    * and 16× over a document-frequency-capped index (119.8 s) — while
+    * staying exact, which the cap is not (it silently dropped 4 of 34k
+    * pairs in the t = 0.3 leg of the same probe). At t = 0.3 it LOSES
+    * (~70% of the index survives the prefix and the DF-join + rank
+    * windows cost more than they save: QBench sf0.1 6.3 s vs d2's
+    * 1.6 s). So: use this for high-threshold near-dup joins at crawl
+    * scale; use [[jaccardPairs]] for low-threshold similarity mining on
+    * bounded corpora.
     */
   def jaccardPairsPrefix(
       docs: DataFrame, idCol: String, textCol: String,
@@ -352,34 +351,6 @@ object Dedup {
       .filter(col("j_raw") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("j_raw"), 6).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** [[jaccardPairs]] with a document-frequency cap on the inverted index:
-    * shingles occurring in more than `maxDf` documents are dropped before
-    * candidate generation (the exact-Jaccard refine still uses FULL
-    * shingle sets, so surviving pairs carry their true jaccard). This is
-    * the standard defense that keeps the inverted-index join sub-quadratic
-    * at corpus scale: a boilerplate shingle shared by k documents alone
-    * generates k(k−1)/2 candidates — one viral template line in 10⁶ docs
-    * would produce 5·10¹¹ pairs — while the cap bounds per-shingle work at
-    * maxDf². Pairs whose ONLY shared shingles are boilerplate are missed
-    * by design (boilerplate sharing is not near-duplication). Fully
-    * deterministic → fully oracled, unlike the probabilistic blockers.
-    */
-  def jaccardPairsCapped(
-      docs: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, maxDf: Int): DataFrame = {
-    val sh = shingleIndex(docs, idCol, textCol, n).localCheckpoint(true)
-    val rare = sh.groupBy(col("s")).agg(count(lit(1)).as("df_s"))
-      .filter(col("df_s") <= maxDf)
-      .select(col("s"))
-    val capped = sh.join(rare, "s")
-    val candidates = capped.select(col("id").as("doc_a"), col("s"))
-      .join(capped.select(col("id").as("doc_b"), col("s")), "s")
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    refineJaccard(candidates, sh, threshold)
   }
 
   /** MinHash-LSH candidate pairs refined by exact Jaccard.
@@ -785,8 +756,8 @@ object Dedup {
     * partitions by (pair, diagonal), which is seed-count-sized. The skew
     * risk is a boilerplate gram shared by many documents (quadratic in
     * its df) — same profile as the shingle index; at corpus scale cap or
-    * drop stop-grams by document frequency first (the jaccardPairsCapped
-    * rare-gram pattern) and let AQE skew-split the residue.
+    * drop stop-grams by document frequency first (`maxDf`, via
+    * `capGramsByDf`) and let AQE skew-split the residue.
     */
   def spanDedup(
       docs: DataFrame, idCol: String, textCol: String, minTokens: Int,

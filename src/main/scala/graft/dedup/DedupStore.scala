@@ -247,7 +247,8 @@ object DedupStore {
     * splatter (every [[append]] writes shuffle-parallelism × |bands|
     * band files plus a shingle/count file set), so a many-increment
     * store's probe cost grows with FILE COUNT even while its row count
-    * is stable — the residual growth the AbDedupInc notes name. One
+    * is stable (measured: 2192 files / 5.8 s probe at 512× and 16
+    * appends). One
     * compaction pays a bounded rewrite to restore the fresh-store scan:
     *
     *   - `bands`: one task per band (hash-repartition on the Hive

@@ -163,7 +163,8 @@ object SpanStore {
   /** Maintenance: rewrite the gram relation into `files` gram-clustered
     * files. Each [[append]] leaves its own shuffle-parallelism-sized file
     * set, so a many-increment store's probe pays a file-count tax on the
-    * two stored scans (the AbSpanInc residual) — the same fragmentation
+    * two stored scans (the measured residual: 160 files / 3.5 s probe
+    * at 512× and 16 appends) — the same fragmentation
     * [[DedupStore.compact]] and [[graft.sim.IndexStore.compact]] fix.
     * Rows are range-repartitioned and sorted by gram content, so each
     * file carries a tight min/max `g` range in its parquet footer and

@@ -62,7 +62,7 @@ object KCore {
           // is tiny and broadcasts — each late round becomes two
           // shuffle-free scans of the survivors instead of two 200k-row
           // semi-join shuffles (measured 1.8× on the 2M-edge power-law
-          // probe, AbGraphOps).
+          // probe).
           val dropped = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
             .filter(col("deg") < k)
             .select(col("src").as("v"))

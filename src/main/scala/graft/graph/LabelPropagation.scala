@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * re-exchanges), then two map-side-combinable aggregations — the argmax
   * is `max(struct(count, -label))`, no window, no shuffle beyond the
   * groupBy. Labels advance through [[Fixpoint.iterate]]; the caller
-  * sweeps the final checkpoint. Power-law probe (AbGraphOps), ≤4-round
+  * sweeps the final checkpoint. Power-law probe, ≤4-round
   * runs at local[32]: ~7 s at 2M edges,
   * ~65–69 s at 20M (an upper bound — the same 20M session's SSSP/k-core
   * legs read 2–4× above their documented idle-box walls, i.e. a

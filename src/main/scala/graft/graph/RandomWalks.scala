@@ -30,7 +30,7 @@ import org.apache.spark.storage.StorageLevel
   *    [[Fixpoint.placed]] by src ONCE, and each step's join exchanges
   *    only the |walks|-row frontier onto that fixed layout. On local[32]
   *    the broadcast shape wins every measured point up to 2M concurrent
-  *    walks (AbWalkScale: 44.8 s vs 193.0 s at 2M — local "broadcast" is
+  *    walks (44.8 s vs 193.0 s at 2M, 4 steps — local "broadcast" is
   *    a free shared hash table);
   *    this shape exists for the ceiling a CLUSTER hits: ~75 B/walk of
   *    broadcast hash table replicated to every executor per step and

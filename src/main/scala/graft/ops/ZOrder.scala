@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * implementation shortcut, with the honest caveat that heavy value
   * skew concentrates cells and weakens pruning (the fix at scale is
   * quantile-boundary scaling from a KLL sketch, which composes with
-  * this same interleave). Measured in [[graft.AbZOrder]] (sf0.1
+  * this same interleave). Measured on a fresh JVM (sf0.1
   * lineitem, 256 files, ~2-3% selective range predicate per column):
   * the z-ordered layout decodes 22% / 14% of rows for the two
   * single-column predicates where sorted-by-partkey decodes 2.3% /

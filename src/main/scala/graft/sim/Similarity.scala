@@ -274,7 +274,7 @@ object Similarity {
     * probes×assign boundary coverage is bought for assign× index storage
     * instead of probes× query scan — the right trade when queries far
     * outnumber index rebuilds. The r9 sweep on the sf0.1 embeddings
-    * (weakly clustered, unit-norm 64-d; AbAnnRecall): assign=1 recall@5
+    * (weakly clustered, unit-norm 64-d): assign=1 recall@5
     * tracks coverage (0.66 at 3/8), while (nCells=32, probes=8,
     * assign=2) reaches ≥0.9. Per-query candidate coverage is
     * probes/nCells × assign — ≈ 50-75% for the shipped configs on this

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Optimizer statistics from STORED sketches — the warehouse pattern the
   * sketch family (a22/a24) supports, packaged as a first-class API and
-  * measured in [[graft.AbCmsJoin]] (README "Measured rounds 9–10": 1.6×
-  * wall / 2.1× shuffle bytes on the t13 join shape).
+  * measured on a fresh JVM at 64× amplification (README "Measured
+  * rounds 9–10": 1.6× wall / 2.1× shuffle bytes on the t13 join shape).
   *
   * The problem it solves: Catalyst's static size estimate for an
   * aggregate is its CHILD's size, so `stream.groupBy(k).count()` looks

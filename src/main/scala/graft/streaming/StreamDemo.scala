@@ -9,7 +9,10 @@ import org.apache.spark.sql.streaming.Trigger
 /** Runnable end-to-end streaming demo: drives [[Streams.hourlyCounts]] and
   * [[Streams.sessionize]] (production path, processing-time timeouts ON)
   * against a live `rate` source for a few seconds and prints what was
-  * emitted. Usage: `sbt "runMain graft.streaming.StreamDemo"`.
+  * emitted. Usage: `sbt "runMain graft.streaming.StreamDemo"`. Kept as a
+  * main because it is the only caller of `sessionize(withTimeouts =
+  * true)`, the production timeout path: the specs run with timeouts off
+  * so their finite `AvailableNow` runs terminate.
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {

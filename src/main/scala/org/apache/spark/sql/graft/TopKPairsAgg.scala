@@ -78,7 +78,7 @@ final class TopKPairsBuffer(val k: Int) extends Serializable {
   * result is the top k DISTINCT pairs: precisely the rank-dedup-rerank
   * semantics the window spelling needed three passes for.
   *
-  * Nuance (r10, AbAnnRankXl): Spark 4's WindowGroupLimit pushes
+  * Nuance (r10, 2x64M-pair rank probe): Spark 4's WindowGroupLimit pushes
   * `row_number ≤ k` down as a map-side group limit, so on a
   * duplicate-FREE stream the window spelling no longer pays the full
   * sort (within 1.3× of this aggregate at 64M pairs). The structural

@@ -49,7 +49,7 @@ class ExprSpec extends SparkSpec {
     // .withExtensions(new GraftExtensions) sharing the test SparkContext,
     // driving the injected SQL builders (arity guard, decimal ranks
     // conversion) through spark.sql — the cluster-deployment path, in CI
-    // rather than only in the manual ExtensionsDemo runMain.
+    // rather than only by hand.
     val base = spark
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()

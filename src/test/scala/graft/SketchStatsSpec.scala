@@ -7,7 +7,8 @@ import graft.stats.SketchStats
   * estimates must track truth on real testdata, the decisions must flip
   * at the threshold, and a hint made from a stored profile must change
   * the EXECUTED plan (BroadcastHashJoin where stock planning sort-merges
-  * under a tight threshold) — the end-to-end claim AbCmsJoin measures.
+  * under a tight threshold) — the end-to-end claim behind the measured
+  * 1.6× wall / 2.1× shuffle-byte win (README "Measured rounds 9–10").
   */
 class SketchStatsSpec extends SparkSpec {
   import spark.implicits._
