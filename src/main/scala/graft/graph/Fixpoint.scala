@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** The iterative-fixpoint driver behind this package's loops (PageRank,
   * connected components, label propagation, HITS, k-core, shortest
-  * paths, SCC, k-hop BFS). It owns three decisions, so each loop states
+  * paths, SCC, k-hop BFS). It owns four decisions, so each loop states
   * only its own round:
   *
   *  - '''Loop sizing''' ([[loopPartitions]], [[withLoopConf]]): a loop's
@@ -21,7 +21,13 @@ import org.apache.spark.storage.StorageLevel
   *    [[placed]] partitioning and force a re-exchange every round.
   *  - '''The placed loop invariant''' ([[placed]]): the big side (the edge
   *    relation) is hash-partitioned by the join key once, sorted within
-  *    partitions and persisted, so only the |V|-sized round state moves.
+  *    partitions and persisted.
+  *  - '''Co-partitioned round state''' ([[keyed]], [[inPlace]]): a loop
+  *    over a placed relation starts from a state [[keyed]] by the vertex
+  *    key into the same `parts`, and hash-joins it in place. Neither side
+  *    of a round's joins re-exchanges and nothing is broadcast: a round
+  *    shuffles only for its per-key aggregates (GraphX's layout, vertex
+  *    state co-partitioned with its edges; Gonzalez et al., OSDI 2014).
   *  - '''The round loop''' ([[iterate]]): each round's output is
   *    checkpointed LAZILY, and the round's one action (its convergence
   *    scalar) is what computes the round and materializes the checkpoint,
@@ -31,11 +37,11 @@ import org.apache.spark.storage.StorageLevel
   *    `GraftInternals.freeLocalCheckpoint`), a round guard bounds the
   *    loop, and every live checkpoint is freed if a round throws.
   *
-  * The checkpointed state carries a size estimate, so while |V| is below
-  * the broadcast threshold Catalyst plans the state side of a round's
-  * joins as a broadcast (`BroadcastHashJoin … BuildRight`): a round's
-  * action is then two driver jobs, the `BroadcastExchange` and the
-  * aggregate itself.
+  * The checkpoint's `LogicalRDD` records the round's output partitioning,
+  * so a round whose output keeps the keyed state's `hashpartitioning(id,
+  * parts)` hands the next round a state that needs no exchange either: a
+  * round's action is one driver job (PageRank's: the per-`dst` sums'
+  * shuffle, then the scalar).
   */
 private[graft] object Fixpoint {
 
@@ -78,18 +84,34 @@ private[graft] object Fixpoint {
   /** `df` hash-partitioned by `key` into `parts` partitions, sorted by
     * `key` within them, persisted and materialized. Each round's join on
     * `key` then reuses the partitioning with zero re-exchange. The sort
-    * runs once: when the state side is too big to broadcast the join is
-    * a sort-merge, and the cached relation's advertised ordering lets it
-    * skip the |E|-row sort every round; either way the rows reach the
-    * per-key sums in the same order.
+    * runs once and fixes the order in which the joined rows reach the
+    * per-key sums. If materializing throws, the persist is dropped.
     */
   def placed(df: DataFrame, parts: Int, key: String): DataFrame = {
-    val p = df.repartition(parts, col(key))
+    val p = keyed(df, parts, key)
       .sortWithinPartitions(col(key))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
+    try { p.count(); p }
+    catch { case e: Throwable => p.unpersist(); throw e }
   }
+
+  /** `df` hash-partitioned by `key` into `parts` partitions: the layout
+    * [[placed]] gives a loop's edges, so a round state keyed this way
+    * joins them without an exchange. Free when `df` is already so
+    * partitioned (a distinct or a group-by on `key` under
+    * [[withLoopConf]]): Catalyst drops a repartition its child already
+    * satisfies.
+    */
+  def keyed(df: DataFrame, parts: Int, key: String): DataFrame =
+    df.repartition(parts, col(key))
+
+  /** `df` as the hash-built side of a round join between co-partitioned
+    * relations. Without the `shuffle_hash` hint Catalyst broadcasts any
+    * side whose size estimate is under the threshold, as a checkpointed
+    * |V|-row state's is, and each broadcast is one more driver job per
+    * round.
+    */
+  def inPlace(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
   /** Run rounds from `init` until `step` returns `None`. Round 0 is
     * `init`; given round r's checkpoint, its scalar and r, `step` returns

@@ -13,10 +13,11 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape: HITS alternates join direction every half-step, so the
   * deduped edge relation is persisted TWICE — hash-partitioned by `src`
   * (the authority step looks up h(u) by source) and by `dst` (the hub
-  * step looks up a(u) by destination) — and neither copy moves again;
-  * only the |V|-sized hub/authority vectors and the map-side-combined
-  * contribution partials shuffle per iteration. The per-half-step global
-  * sum is the round's one action in [[Fixpoint.iterate]] (map-side-
+  * step looks up a(u) by destination) — and neither copy moves again.
+  * The hub/authority state is [[Fixpoint.keyed]] by `id` into the same
+  * partitions, so both of a half-step's joins run in place and only the
+  * map-side-combined contribution partials shuffle. The per-half-step
+  * global sum is the round's one action in [[Fixpoint.iterate]] (map-side-
   * combined partials, one driver value), the same pattern as the
   * renormalizing PageRank's correction term.
   */
@@ -56,8 +57,9 @@ object Hits {
         // from), its scalar is the raw total, and the normalized scores
         // are a lazy division over the checkpoint. h_0 = 1/N is already
         // normalized, so round 0's total is exactly 1.
-        val first = Fixpoint.Round(
+        val first = Fixpoint.Round(Fixpoint.keyed(
           verts.select(col("id"), lit(1.0 / n).as("score"), lit(0.0).as("other")),
+          parts, "id"),
           (s: DataFrame) => { s.count(); 1.0 })
         val (last, total, _) = Fixpoint.iterate(first, 2 * iterations, "HITS") {
           (state, total, r) =>
@@ -66,12 +68,12 @@ object Hits {
               val cur = state.select(col("id"), (col("score") / lit(total)).as("score"))
               val (e, from, to) = if (r % 2 == 0) (bySrc, "src", "dst") else (byDst, "dst", "src")
               val raw = e
-                .join(cur, e(from) === cur("id"))
+                .join(Fixpoint.inPlace(cur), e(from) === cur("id"))
                 .select(e(to), col("score"))
                 .groupBy(col(to))
                 .agg(sum(col("score")).as("s"))
               Some(Fixpoint.Round(
-                cur.join(raw, cur("id") === raw(to), "left")
+                cur.join(Fixpoint.inPlace(raw), cur("id") === raw(to), "left")
                   .select(cur("id"), coalesce(col("s"), lit(0.0)).as("score"),
                     cur("score").as("other")),
                 (s: DataFrame) => s.agg(sum(col("score"))).head.getDouble(0)))

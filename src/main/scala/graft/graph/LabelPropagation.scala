@@ -18,11 +18,11 @@ import org.apache.spark.sql.functions._
   * in both engines and results stay hash-comparable.
   *
   * Scale shape: the symmetrized edge relation is persisted hash-
-  * partitioned by src ONCE; per round ONE join against the |V|-sized
-  * label map (only the label side moves — the 2|E| side never
-  * re-exchanges), then two map-side-combinable aggregations — the argmax
-  * is `max(struct(count, -label))`, no window, no shuffle beyond the
-  * groupBy. Labels advance through [[Fixpoint.iterate]]; the caller
+  * partitioned by src ONCE and the label map is [[Fixpoint.keyed]] by id
+  * into the same partitions; per round ONE in-place join of the two
+  * (neither side moves), then two map-side-combinable aggregations — the
+  * argmax is `max(struct(count, -label))`, no window, no shuffle beyond
+  * the groupBy. Labels advance through [[Fixpoint.iterate]]; the caller
   * sweeps the final checkpoint. Power-law probe, ≤4-round
   * runs at local[32]: ~7 s at 2M edges,
   * ~65–69 s at 20M (an upper bound — the same 20M session's SSSP/k-core
@@ -42,10 +42,10 @@ object LabelPropagation {
     require(rounds >= 1 && rounds <= 12,
       s"labelPropagation unrolls `rounds` plan levels; got rounds=$rounds")
     val spark = edges.sparkSession
-    // The symmetrized relation is placed by src once: the per-round vote
-    // join reuses that partitioning for the 2|E| side and only the
-    // |V|-sized label map moves. Before this, every round re-shuffled the
-    // full edge relation for the join — at the 100M-edge XL point that
+    // The symmetrized relation is placed by src once and the labels keyed
+    // by id into the same partitions: the per-round vote join moves
+    // neither. Before the placement, every round re-shuffled the full
+    // edge relation for the join — at the 100M-edge XL point that
     // per-round exchange was the dominant share of 87 GB of spill.
     val pre = Undirected.symmetrize(edges)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -58,14 +58,15 @@ object LabelPropagation {
         // Symmetrized: every vertex occurs as src, so the vertex set is
         // one distinct over src. A round's scalar: whether it changed no
         // label (the map is then a fixpoint and the loop stops).
-        val first = Fixpoint.Round(
+        val first = Fixpoint.Round(Fixpoint.keyed(
           e.select(col("src").as("id")).distinct().select(col("id"), col("id").as("label")),
+          parts, "id"),
           (l: DataFrame) => { l.count(); false })
         val (labels, _, _) = Fixpoint.iterate(first, rounds, "label propagation") {
           (labels, done, r) =>
             if (done || r == rounds) None
             else {
-              val votes = e.join(labels, e("src") === labels("id"))
+              val votes = e.join(Fixpoint.inPlace(labels), e("src") === labels("id"))
                 .select(e("dst").as("id"), col("label"))
                 .unionAll(labels)
               val next = votes
@@ -80,7 +81,8 @@ object LabelPropagation {
               // its action is a plain count, not the |V|-row compare.
               Some(Fixpoint.Round(next, (l: DataFrame) =>
                 if (r + 1 == rounds) { l.count(); false }
-                else l.join(labels.select(col("id").as("pid"), col("label").as("prev")),
+                else l.join(Fixpoint.inPlace(
+                      labels.select(col("id").as("pid"), col("label").as("prev"))),
                     col("id") === col("pid"))
                   .filter(col("label") =!= col("prev"))
                   .count() == 0))

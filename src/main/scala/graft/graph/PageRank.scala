@@ -8,17 +8,19 @@ import org.apache.spark.storage.StorageLevel
   *
   * Re-expression of the reference Block-Stripe Update pipeline
   * (`/root/reference/pageRank.py:116-145`) as a Spark dataflow:
-  * the per-iteration "stripe pass" is a hash join of the (static) edge
-  * relation with the (evolving) rank relation followed by a shuffled
-  * partial+final sum aggregation keyed by `dst` — Spark's hash
+  * the per-iteration "stripe pass" is an in-place hash join of the
+  * (static) edge relation with the (evolving) rank relation, both hash-
+  * partitioned by the vertex key into the same partitions, followed by a
+  * shuffled partial+final sum aggregation keyed by `dst` — Spark's hash
   * partitioning of that shuffle IS the block-stripe decomposition, with
   * `spark.sql.shuffle.partitions` playing the role of the block count
   * (`/root/reference/pageRank.py:96-113`).
   *
   * Scale design (100 TB mindset):
   *  - the edge relation (the big side) is joined with out-degrees ONCE,
-  *    hash-partitioned by `src` and persisted, so each iteration reuses the
-  *    partitioning and only the rank table (|V| rows, small side) moves;
+  *    hash-partitioned by `src` and persisted, and the rank table (|V|
+  *    rows) is [[Fixpoint.keyed]] the same way, so neither side of an
+  *    iteration's joins moves: its one shuffle is the per-`dst` sums;
   *  - no vertex list is ever collected to the driver (the reference's
   *    `all_node` Python list at `pageRank.py:47-53` does not scale);
   *  - ONE fused scalar aggregate per iteration crosses to the driver
@@ -101,17 +103,22 @@ object PageRank {
     val spark = edges.sparkSession
     val callerCached = edges.storageLevel != StorageLevel.NONE
     val e = if (callerCached) edges else edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val m = e.count() // materializes the cache; sizes the loop shuffles
-    val parts = Fixpoint.loopPartitions(spark, m)
-    Fixpoint.withLoopConf(spark, parts) {
-      val verts = vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
-      val n = verts.count()
-      val linked = Fixpoint.placed(
-        e.join(outDegrees(e), "src").select(col("src"), col("dst"), col("out_degree")),
-        parts, "src")
-      if (!callerCached) e.unpersist()
-      PreparedGraph(verts, linked, n, parts)
-    }
+    try {
+      val m = e.count() // materializes the cache; sizes the loop shuffles
+      val parts = Fixpoint.loopPartitions(spark, m)
+      Fixpoint.withLoopConf(spark, parts) {
+        // A distinct under the loop conf: hash-partitioned by `id` into
+        // `parts`, so the loops' keyed state costs no exchange.
+        val verts = vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val n = verts.count()
+          val linked = Fixpoint.placed(
+            e.join(outDegrees(e), "src").select(col("src"), col("dst"), col("out_degree")),
+            parts, "src")
+          PreparedGraph(verts, linked, n, parts)
+        } catch { case t: Throwable => verts.unpersist(); throw t }
+      }
+    } finally if (!callerCached) e.unpersist()
   }
 
   /** Reference-faithful fixpoint (`pageRank.py:116-145`):
@@ -146,10 +153,10 @@ object PageRank {
       // regrouped per-vertex instead of per-edge-contribution (ulp-level;
       // the golden top-100 / 1e-12 fixture gates pin it).
       val srcs = linked.select(col("src").as("id")).distinct()
-      val init = verts
+      val init = Fixpoint.keyed(verts
         .join(srcs.withColumn("live", lit(true)), Seq("id"), "left")
         .select(col("id"), lit(1.0 / n).as("rank"),
-          coalesce(col("live"), lit(false)).as("live"))
+          coalesce(col("live"), lit(false)).as("live")), parts, "id")
       // Scalar per round: (L1 delta, live mass of the round's ranks).
       def liveMass(r: Row, i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
       val first = Fixpoint.Round[(Double, Double)](init, s => (Double.MaxValue,
@@ -158,18 +165,21 @@ object PageRank {
         Fixpoint.iterate(first, params.maxIter, "PageRank") { case (state, (delta, live), i) =>
           if (!(delta > params.delta) || i >= params.maxIter) None
           else {
-            // J2 + F1 + A4: contributions summed by dst (the edge relation
-            // never moves).
+            // J2 + F1 + A4: contributions summed by dst. Edges and state
+            // share their partitioning, so the join moves neither; the
+            // sums' shuffle is the round's only exchange.
             val contribs = linked
-              .join(state, linked("src") === state("id"))
+              .join(Fixpoint.inPlace(state), linked("src") === state("id"))
               .select(col("dst"), (col("rank") / col("out_degree")).as("w"))
               .groupBy(col("dst"))
               .agg(sum(col("w")).as("c"))
             // A5: lost mass (dead ends + teleport) folded back uniformly
             // (A6) — the scalar was carried out of the previous round.
             val corr = (1.0 - params.beta * live) / n
+            // The sums arrive partitioned by dst, the state by id: the
+            // merge joins in place and keeps the state's partitioning.
             val merged = state
-              .join(contribs, state("id") === contribs("dst"), "left")
+              .join(Fixpoint.inPlace(contribs), state("id") === contribs("dst"), "left")
               .select(
                 col("id"),
                 col("rank").as("old_rank"),
@@ -216,7 +226,7 @@ object PageRank {
     val PreparedGraph(verts, linked, n, parts) = g
     if (n == 0) return verts.withColumn("rank", lit(0.0))
     Fixpoint.withLoopConf(spark, parts) {
-      teleportLoop(verts, linked, beta, iterations, lit(1.0 / n), lit((1.0 - beta) / n),
+      teleportLoop(verts, linked, parts, beta, iterations, lit(1.0 / n), lit((1.0 - beta) / n),
         col("rank") / col("out_degree"), traced = false)._1
     }
   }
@@ -224,7 +234,9 @@ object PageRank {
   /** The loop behind every fixed-iteration entry point:
     *   rank'_i = teleport_i + β · Σ_{u→i} share(u, i),   rank_0 = `rank0`,
     * over `base` (one row per vertex, `id` plus whatever the terms read)
-    * and the placed `linked` edges. `teleport` is (1 − β)/N or the
+    * and the `linked` edges placed by `src` into `parts`. `base` and the
+    * ranks are [[Fixpoint.keyed]] by `id` into the same `parts`, so every
+    * join in a round is in place. `teleport` is (1 − β)/N or the
     * personalized (1 − β)·[i ∈ S]/|S|; `share` is rank/out_degree or
     * rank·frac. A round's action is a count, or with `traced` the round's
     * L1 delta Σ_v |rank_i(v) − rank_{i−1}(v)|, collected per round.
@@ -234,31 +246,34 @@ object PageRank {
   private def teleportLoop(
       base: DataFrame,
       linked: DataFrame,
+      parts: Int,
       beta: Double,
       iterations: Int,
       rank0: Column,
       teleport: Column,
       share: Column,
       traced: Boolean): (DataFrame, Vector[Double]) = {
-    val first = Fixpoint.Round(base.select(col("id"), rank0.as("rank")),
+    val keyedBase = Fixpoint.keyed(base, parts, "id")
+    val first = Fixpoint.Round(keyedBase.select(col("id"), rank0.as("rank")),
       (r: DataFrame) => { r.count(); Vector.empty[Double] })
     val (ranks, deltas, _) =
       Fixpoint.iterate(first, iterations, "fixed-iteration PageRank") { (ranks, deltas, i) =>
         if (i == iterations) None
         else {
           val contribs = linked
-            .join(ranks, linked("src") === ranks("id"))
+            .join(Fixpoint.inPlace(ranks), linked("src") === ranks("id"))
             .select(col("dst"), share.as("w"))
             .groupBy(col("dst"))
             .agg(sum(col("w")).as("c"))
-          val next = base
-            .join(contribs, base("id") === contribs("dst"), "left")
-            .select(base("id"),
+          val next = keyedBase
+            .join(Fixpoint.inPlace(contribs), keyedBase("id") === contribs("dst"), "left")
+            .select(keyedBase("id"),
               (teleport + lit(beta) * coalesce(col("c"), lit(0.0))).as("rank"))
           Some(Fixpoint.Round(next, (r: DataFrame) =>
             if (!traced) { r.count(); deltas }
             else deltas :+ r
-              .join(ranks.select(col("id").as("pid"), col("rank").as("prev")),
+              .join(Fixpoint.inPlace(
+                  ranks.select(col("id").as("pid"), col("rank").as("prev"))),
                 col("id") === col("pid"))
               .agg(sum(abs(col("rank") - col("prev"))))
               .head.getDouble(0)))
@@ -286,7 +301,7 @@ object PageRank {
       val PreparedGraph(verts, linked, n, parts) = g
       require(n > 0, "fixedIterationsTrace needs a non-empty graph")
       val deltas = Fixpoint.withLoopConf(spark, parts) {
-        val (ranks, deltas) = teleportLoop(verts, linked, beta, iterations, lit(1.0 / n),
+        val (ranks, deltas) = teleportLoop(verts, linked, parts, beta, iterations, lit(1.0 / n),
           lit((1.0 - beta) / n), col("rank") / col("out_degree"), traced = true)
         release(ranks)
         deltas
@@ -323,7 +338,7 @@ object PageRank {
           val sCount = vt.filter(col("is_seed")).count()
           require(sCount > 0, "personalized PageRank: no seed vertex is in the graph")
           val teleport = when(col("is_seed"), lit(1.0 / sCount)).otherwise(lit(0.0))
-          teleportLoop(vt, linked, beta, iterations, teleport, lit(1.0 - beta) * teleport,
+          teleportLoop(vt, linked, parts, beta, iterations, teleport, lit(1.0 - beta) * teleport,
             col("rank") / col("out_degree"), traced = false)._1
         } finally vt.unpersist()
       }
@@ -381,7 +396,7 @@ object PageRank {
         e.join(sw, "src").select(col("src"), col("dst"), (col("w") / col("tw")).as("frac")),
         parts, "src")
       e.unpersist()
-      try teleportLoop(verts, linked, beta, iterations, lit(1.0 / n), lit((1.0 - beta) / n),
+      try teleportLoop(verts, linked, parts, beta, iterations, lit(1.0 / n), lit((1.0 - beta) / n),
         col("rank") * col("frac"), traced = false)._1
       finally { linked.unpersist(); verts.unpersist() }
     }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.graph.PageRank
 
 /** FIXTURES.md §2 analytic graphs + the reference golden output.
@@ -90,6 +91,25 @@ class PageRankSpec extends SparkSpec {
     }
     assert(thrown.getMessage.toLowerCase.contains("malformed")
       || Option(thrown.getCause).exists(_.getMessage.toLowerCase.contains("malformed")))
+  }
+
+  test("a malformed edge file fails the run without leaking a persist") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-badedges-leak")
+    val f = dir.resolve("edges.txt")
+    java.nio.file.Files.writeString(f, "1\t2\n3\tnot_a_number\n4\t5\n")
+    val before = RddScope.persisted(spark)
+    val in = PageRank.edgesFromText(spark, f.toString)
+    intercept[org.apache.spark.SparkException](PageRank.run(spark, in))
+    assert(in.storageLevel == StorageLevel.NONE,
+      "prepare's persist of the edges outlived the throw")
+    assert(RddScope.persisted(spark) == before)
+    // A caller-owned persist is the caller's to drop.
+    val owned = PageRank.edgesFromText(spark, f.toString).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      intercept[org.apache.spark.SparkException](PageRank.run(spark, owned))
+      assert(owned.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally owned.unpersist(blocking = true)
+    assert(RddScope.persisted(spark) == before)
   }
 
   test("empty edge file yields empty frame, comments skipped") {
