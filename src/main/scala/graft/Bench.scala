@@ -249,7 +249,8 @@ object Bench {
     *
     * The artifact alone is NOT a complete floor set: when the bench line
     * overflows the driver's 2000-char tail, the emitted queries map is a
-    * slowest-legs subset marked `"_dropped_fastest": N` (r11 dropped 39
+    * slowest-legs subset marked `"_dropped_fastest": N` (inside `queries`
+    * in the committed artifacts, top-level in newer lines; r11 dropped 39
     * legs that way), so a fast leg regressing 3× would have no floor and
     * sail through — the same failure mode the artifact move was meant to
     * eliminate. And the artifact records single-run session walls taken
@@ -569,6 +570,49 @@ object Bench {
     }
   }
 
+  /** The one-line JSON result Bench prints on stdout: per-leg walls (`walls`,
+    * wall < 0 = the leg failed), their total over the legs that ran,
+    * and the names of the failed legs under a top-level `"failed"` key.
+    * Walls are at 2-decimal precision: the 3-decimal map crossed the
+    * 1800-char guard once the surface hit ~70 legs (observed 1803 →
+    * total-only fallback, which loses the round's per-query record);
+    * 10 ms resolution is ample for the min-wall comparison, and
+    * bench_diag.json keeps the 3-decimal history. A line that still
+    * overflows keeps the SLOWEST legs that fit (they carry the perf
+    * signal), counts the rest under a top-level `"_dropped_fastest"`,
+    * and names the committed sidecar holding every leg under `"full"`.
+    * Neither key sits inside `queries`, where a reader would take the
+    * count for a leg's wall, and the `"failed"` list is never truncated,
+    * so a failed leg cannot vanish from the line at the cut.
+    */
+  private[graft] def buildDriverLine(
+      walls: Seq[(String, Double)], sfNum: String, partial: Boolean): String = {
+    def entry(k: String, w: Double): String =
+      "\"" + k + "\":" + (if (w < 0) "-1" else f"$w%.2f")
+    val totalS = f"${walls.map(_._2).filter(_ >= 0).sum}%.3f"
+    val failed = walls.collect { case (k, w) if w < 0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val tail = s""","failed":$failed,"sf":$sfNum""" +
+      (if (partial) ""","partial":true""" else "")
+    def line(queries: Seq[String], extra: String): String =
+      s"""{"metric":"total","value":$totalS,"unit":"sec","queries":""" +
+        queries.mkString("{", ",", "}") + extra + tail + "}"
+    val full = line(walls.map { case (k, w) => entry(k, w) }, "")
+    if (full.length <= 1800) full
+    else {
+      val ran = walls.filter(_._2 >= 0).sortBy(-_._2).map { case (k, w) => entry(k, w) }
+      def extra(dropped: Int): String =
+        s""","_dropped_fastest":$dropped,"full":"bench_partial.json""""
+      var room = 1800 - line(Nil, extra(ran.size)).length
+      val kept = scala.collection.mutable.ListBuffer[String]()
+      ran.foreach { e => if (e.length + 1 <= room) { kept += e; room -= e.length + 1 } }
+      val dropped = ran.size - kept.size
+      System.err.println(
+        s"bench line ${full.length} chars overflows the driver's 2000-char tail; emitting slowest-legs subset ($dropped fastest legs dropped; full map in bench_partial.json)")
+      line(kept.toSeq, extra(dropped))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -608,48 +652,8 @@ object Bench {
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1))
       .filter(s => scala.util.Try(s.toDouble).isSuccess)
       .getOrElse("\"" + sfDir + "\"")
-    // Driver-line map at 2-decimal precision: the 3-decimal map crossed
-    // the 1800-char guard once the surface hit ~70 legs (observed 1803 →
-    // total-only fallback, which loses the round's per-query record).
-    // 10 ms resolution is ample for the driver's min-wall comparison;
-    // bench_diag.json keeps the 3-decimal history. A line that still
-    // overflows keeps the SLOWEST legs that fit (they carry the perf
-    // signal) with an explicit dropped-count marker; the full map is in
-    // the sidecars regardless.
-    def buildDriverLine(
-        rs: Seq[(String, (Sample, Double))], partial: Boolean): String = {
-      def w2(w: Double): String = if (w < 0) "-1" else f"$w%.2f"
-      val total = rs.map(_._2._1.wall).filter(_ >= 0).sum
-      val totalS = if (total < 0) "-1" else f"$total%.3f"
-      val partialKey = if (partial) s""","partial":true""" else ""
-      val full = rs.map { case (k, (s, _)) => "\"" + k + "\":" + w2(s.wall) }
-        .mkString("{", ",", "}")
-      val line =
-        s"""{"metric":"total","value":$totalS,"unit":"sec","queries":$full,"sf":$sfNum$partialKey}"""
-      if (line.length <= 1800) line
-      else {
-        val entries = rs
-          .map { case (k, (s, _)) => (s.wall, "\"" + k + "\":" + w2(s.wall)) }
-          .sortBy { case (w, _) => -w }
-        val budget = 1700 - 120 // line scaffolding + marker headroom
-        val kept = scala.collection.mutable.ListBuffer[String]()
-        var used = 0
-        entries.foreach { case (_, e) =>
-          if (used + e.length + 1 <= budget) { kept += e; used += e.length + 1 }
-        }
-        val dropped = entries.size - kept.size
-        val qsTrunc = (kept :+ s""""_dropped_fastest":$dropped""")
-          .mkString("{", ",", "}")
-        System.err.println(
-          s"bench line ${line.length} chars overflows the driver's 2000-char tail; emitting slowest-legs subset ($dropped fastest legs dropped; full map in bench_partial.json)")
-        // Top-level "full" names the committed sidecar holding EVERY leg's
-        // min wall (r18 verdict #5/#7: the truncated queries subset made
-        // the driver's PERF manufacture phantom dropped_from_bench /
-        // new_in_bench churn at the tail cutoff every round — the full map
-        // was always on disk, the line just never said where).
-        s"""{"metric":"total","value":$totalS,"unit":"sec","queries":$qsTrunc,"full":"bench_partial.json","sf":$sfNum$partialKey}"""
-      }
-    }
+    def driverLine(rs: Seq[(String, (Sample, Double))], partial: Boolean): String =
+      buildDriverLine(rs.map { case (k, (smp, _)) => k -> smp.wall }, sfNum, partial)
     // Per-leg sidecar: whole-file rewrite through a rename (readable
     // mid-run, never half-written, survives any kill).
     def writePartialSidecar(): Unit =
@@ -683,7 +687,7 @@ object Bench {
       if (!normalExit.get && !emittedComplete.get) {
         val rs = snapshot()
         if (rs.nonEmpty) {
-          println(buildDriverLine(rs, partial = !legsAllDone.get))
+          println(driverLine(rs, partial = !legsAllDone.get))
           Console.out.flush()
         }
       }
@@ -979,7 +983,7 @@ object Bench {
     // record BEFORE the A/B phase, whose forked children are the slow
     // tail a driver timeout lands on. A/B progress prints to stderr, so
     // if the phase is killed this stays the last stdout JSON.
-    println(buildDriverLine(results, partial = false))
+    println(driverLine(results, partial = false))
     Console.out.flush()
     emittedComplete.set(true) // a kill from here on costs only A/B notes
     writeFloorSnapshot(here, sfDir, cores,
@@ -1206,7 +1210,7 @@ object Bench {
     // The early line already went out before the A/B phase; close the
     // run with the same (complete) line as the TRUE last stdout line —
     // the driver parses the tail, and BENCH_DIAG above must not be it.
-    println(buildDriverLine(results, partial = false))
+    println(driverLine(results, partial = false))
     normalExit.set(true)
   }
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextFns
 
@@ -164,38 +164,19 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** Per-document distinct word-n-gram shingle relation: (id, s).
-    * Two interchangeable formulations (A/B'd at sf0.1, window-`lead` form
-    * ships — see [[UseWindowShingles]] for the measurements); both produce
-    * exactly the same shingle set as `TextFns.shingles`.
+  /** Per-document distinct word-n-gram shingle relation: (id, s) — exactly
+    * the shingle set of `TextFns.shingles`, assembled by posexplode → per-doc
+    * window `lead`, so every operator is whole-stage-codegen'd at the cost of
+    * one shuffle+sort of the exploded token relation. Measured at sf0.1
+    * (local[32], min of 3) against exploding `TextFns.shingles` per row, it
+    * wins every shingle consumer by 2.9–5.2× (d2 1.48 s vs 4.79, d3 2.15 vs
+    * 4.18, d3b 2.70 vs 13.0, d6 0.65 vs 3.34): that form's `transform` +
+    * `slice` lambdas are CodegenFallback, interpreted per row, a cost that
+    * grows linearly with the corpus. The streaming twins still explode
+    * `TextFns.shingles`, because window functions are unsupported on
+    * streams.
     */
   def shingleIndex(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    if (UseWindowShingles) shingleIndexWindow(docs, idCol, textCol, n)
-    else shingleIndexArray(docs, idCol, textCol, n)
-
-  /** A/B switch for the two [[shingleIndex]] formulations (identical
-    * output — same row counts on every consumer, asserted in DedupSimSpec).
-    * Default = window-`lead`: measured A/B at sf0.1 (local[32], min of 3)
-    * it wins every shingle consumer by 2.9–5.2×:
-    *   d2 1.48 s vs 4.79, d3 2.15 vs 4.18, d3b 2.70 vs 13.0, d6 0.65 vs
-    *   3.34 (array-slice).
-    * The array form's per-row interpreted lambdas (`transform`+`slice` are
-    * CodegenFallback) cost far more than the window's token-relation
-    * shuffle — and that interpretation cost ALSO scales linearly with
-    * corpus size, so the gap does not invert by itself at 100 TB. The
-    * residual cluster-scale risk is shuffle NETWORK bytes (local[32]
-    * shuffles through memory/disk only); the switch stays so a cluster
-    * profile can re-run this A/B with one flag.
-    */
-  private[graft] var UseWindowShingles = true
-
-  /** Window-`lead` formulation (the measured winner, see
-    * [[UseWindowShingles]]): posexplode → per-doc window — every operator
-    * whole-stage-codegen'd; costs one shuffle+sort of the exploded token
-    * relation.
-    */
-  private[graft] def shingleIndexWindow(
-      docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     shingleIndexFromTokens(
       docs.select(
         col(idCol).as("id"),
@@ -218,21 +199,6 @@ object Dedup {
       .select(col("id"), col("s"))
       .distinct()
   }
-
-  /** Array-slice formulation: shingles assembled INSIDE each document row
-    * (`transform`/`slice` over the token array) then exploded — zero
-    * shuffle before the shingle relation exists (the per-doc dedup rides
-    * `array_distinct` in the same projection). Measured LOSER at sf0.1
-    * (2.9–5.2× slower than the window form — the CodegenFallback lambdas
-    * are interpreted per row and dominate); kept because the streaming
-    * twins need it (window functions are unsupported on streams) and as
-    * the one-flag re-run path for a cluster-network A/B.
-    */
-  private[graft] def shingleIndexArray(
-      docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs.select(
-      col(idCol).as("id"),
-      explode(TextFns.shingles(col(textCol), n)).as("s"))
 
   /** Exact n-gram Jaccard near-duplicate pairs (doc_a < doc_b, j ≥ threshold).
     * jaccard = |A∩B| / (|A|+|B|−|A∩B|) — pure integer arithmetic until the
@@ -1018,7 +984,4 @@ object Dedup {
     graft.RddScope.sweepExcept(spark, persistedBefore, out)
     out
   }
-
-  /** Hamming distance between two simhashes (builtin bit_count of xor). */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 }

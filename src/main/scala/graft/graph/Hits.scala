@@ -34,58 +34,56 @@ object Hits {
       .where(col("src") =!= col("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val m = e0.count()
-    val parts = Fixpoint.loopPartitions(spark, m)
-    Fixpoint.withLoopConf(spark, parts) {
-      val verts = e0.select(col("src").as("id"))
-        .union(e0.select(col("dst").as("id")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = verts.count()
-      if (n == 0) {
-        verts.unpersist(); e0.unpersist()
-        return verts.select(col("id"), lit(0.0).as("authority"), lit(0.0).as("hub"))
+    try {
+      val parts = Fixpoint.loopPartitions(spark, e0.count())
+      Fixpoint.withLoopConf(spark, parts) {
+        val verts = PageRank.vertices(e0).persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val n = verts.count()
+          if (n == 0) verts.select(col("id"), lit(0.0).as("authority"), lit(0.0).as("hub"))
+          else {
+            val bySrc = Fixpoint.placed(e0, parts, "src")
+            val byDst =
+              try Fixpoint.placed(e0, parts, "dst")
+              catch { case t: Throwable => bySrc.unpersist(); throw t }
+            e0.unpersist()
+            try {
+              // One round per half-step: odd rounds compute authorities from
+              // hubs, even rounds hubs from authorities. A round's checkpoint
+              // holds (id, raw score, the normalized vector it was computed
+              // from), its scalar is the raw total, and the normalized scores
+              // are a lazy division over the checkpoint. h_0 = 1/N is already
+              // normalized, so round 0's total is exactly 1.
+              val first = Fixpoint.Round(Fixpoint.keyed(
+                verts.select(col("id"), lit(1.0 / n).as("score"), lit(0.0).as("other")),
+                parts, "id"),
+                (s: DataFrame) => { s.count(); 1.0 })
+              val (last, total, _) = Fixpoint.iterate(first, 2 * iterations, "HITS") {
+                (state, total, r) =>
+                  if (r == 2 * iterations) None
+                  else {
+                    val cur = state.select(col("id"), (col("score") / lit(total)).as("score"))
+                    val (e, from, to) = if (r % 2 == 0) (bySrc, "src", "dst") else (byDst, "dst", "src")
+                    val raw = e
+                      .join(Fixpoint.inPlace(cur), e(from) === cur("id"))
+                      .select(e(to), col("score"))
+                      .groupBy(col(to))
+                      .agg(sum(col("score")).as("s"))
+                    Some(Fixpoint.Round(
+                      cur.join(Fixpoint.inPlace(raw), cur("id") === raw(to), "left")
+                        .select(cur("id"), coalesce(col("s"), lit(0.0)).as("score"),
+                          cur("score").as("other")),
+                      (s: DataFrame) => s.agg(sum(col("score"))).head.getDouble(0)))
+                  }
+              }
+              try last.select(col("id"), col("other").as("authority"),
+                  (col("score") / lit(total)).as("hub"))
+                .localCheckpoint(true)
+              finally org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(last)
+            } finally { bySrc.unpersist(); byDst.unpersist() }
+          }
+        } finally verts.unpersist()
       }
-      val bySrc = Fixpoint.placed(e0, parts, "src")
-      val byDst = Fixpoint.placed(e0, parts, "dst")
-      e0.unpersist()
-
-      try {
-        // One round per half-step: odd rounds compute authorities from
-        // hubs, even rounds hubs from authorities. A round's checkpoint
-        // holds (id, raw score, the normalized vector it was computed
-        // from), its scalar is the raw total, and the normalized scores
-        // are a lazy division over the checkpoint. h_0 = 1/N is already
-        // normalized, so round 0's total is exactly 1.
-        val first = Fixpoint.Round(Fixpoint.keyed(
-          verts.select(col("id"), lit(1.0 / n).as("score"), lit(0.0).as("other")),
-          parts, "id"),
-          (s: DataFrame) => { s.count(); 1.0 })
-        val (last, total, _) = Fixpoint.iterate(first, 2 * iterations, "HITS") {
-          (state, total, r) =>
-            if (r == 2 * iterations) None
-            else {
-              val cur = state.select(col("id"), (col("score") / lit(total)).as("score"))
-              val (e, from, to) = if (r % 2 == 0) (bySrc, "src", "dst") else (byDst, "dst", "src")
-              val raw = e
-                .join(Fixpoint.inPlace(cur), e(from) === cur("id"))
-                .select(e(to), col("score"))
-                .groupBy(col(to))
-                .agg(sum(col("score")).as("s"))
-              Some(Fixpoint.Round(
-                cur.join(Fixpoint.inPlace(raw), cur("id") === raw(to), "left")
-                  .select(cur("id"), coalesce(col("s"), lit(0.0)).as("score"),
-                    cur("score").as("other")),
-                (s: DataFrame) => s.agg(sum(col("score"))).head.getDouble(0)))
-            }
-        }
-        try last.select(col("id"), col("other").as("authority"),
-            (col("score") / lit(total)).as("hub"))
-          .localCheckpoint(true)
-        finally org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(last)
-      } finally {
-        verts.unpersist(); bySrc.unpersist(); byDst.unpersist()
-      }
-    }
+    } finally e0.unpersist()
   }
 }

@@ -49,47 +49,48 @@ object LabelPropagation {
     // per-round exchange was the dominant share of 87 GB of spill.
     val pre = Undirected.symmetrize(edges)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val m = pre.count()
-    val parts = Fixpoint.loopPartitions(spark, m)
-    Fixpoint.withLoopConf(spark, parts) {
-      val e = Fixpoint.placed(pre, parts, "src")
-      pre.unpersist()
-      try {
-        // Symmetrized: every vertex occurs as src, so the vertex set is
-        // one distinct over src. A round's scalar: whether it changed no
-        // label (the map is then a fixpoint and the loop stops).
-        val first = Fixpoint.Round(Fixpoint.keyed(
-          e.select(col("src").as("id")).distinct().select(col("id"), col("id").as("label")),
-          parts, "id"),
-          (l: DataFrame) => { l.count(); false })
-        val (labels, _, _) = Fixpoint.iterate(first, rounds, "label propagation") {
-          (labels, done, r) =>
-            if (done || r == rounds) None
-            else {
-              val votes = e.join(Fixpoint.inPlace(labels), e("src") === labels("id"))
-                .select(e("dst").as("id"), col("label"))
-                .unionAll(labels)
-              val next = votes
-                .groupBy(col("id"), col("label")).agg(count(lit(1)).as("c"))
-                .groupBy(col("id"))
-                // argmax by (count desc, label asc): struct compare is
-                // lexicographic, so max picks the highest count, then the
-                // highest -label = the SMALLEST label.
-                .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-                .select(col("id"), (-col("m.nl")).as("label"))
-              // The final bounded round has no later round to skip, so
-              // its action is a plain count, not the |V|-row compare.
-              Some(Fixpoint.Round(next, (l: DataFrame) =>
-                if (r + 1 == rounds) { l.count(); false }
-                else l.join(Fixpoint.inPlace(
-                      labels.select(col("id").as("pid"), col("label").as("prev"))),
-                    col("id") === col("pid"))
-                  .filter(col("label") =!= col("prev"))
-                  .count() == 0))
-            }
-        }
-        labels
-      } finally e.unpersist()
-    }
+    try {
+      val parts = Fixpoint.loopPartitions(spark, pre.count())
+      Fixpoint.withLoopConf(spark, parts) {
+        val e = Fixpoint.placed(pre, parts, "src")
+        pre.unpersist()
+        try {
+          // Symmetrized: every vertex occurs as src, so the vertex set is
+          // one distinct over src. A round's scalar: whether it changed no
+          // label (the map is then a fixpoint and the loop stops).
+          val first = Fixpoint.Round(Fixpoint.keyed(
+            e.select(col("src").as("id")).distinct().select(col("id"), col("id").as("label")),
+            parts, "id"),
+            (l: DataFrame) => { l.count(); false })
+          val (labels, _, _) = Fixpoint.iterate(first, rounds, "label propagation") {
+            (labels, done, r) =>
+              if (done || r == rounds) None
+              else {
+                val votes = e.join(Fixpoint.inPlace(labels), e("src") === labels("id"))
+                  .select(e("dst").as("id"), col("label"))
+                  .unionAll(labels)
+                val next = votes
+                  .groupBy(col("id"), col("label")).agg(count(lit(1)).as("c"))
+                  .groupBy(col("id"))
+                  // argmax by (count desc, label asc): struct compare is
+                  // lexicographic, so max picks the highest count, then the
+                  // highest -label = the SMALLEST label.
+                  .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+                  .select(col("id"), (-col("m.nl")).as("label"))
+                // The final bounded round has no later round to skip, so
+                // its action is a plain count, not the |V|-row compare.
+                Some(Fixpoint.Round(next, (l: DataFrame) =>
+                  if (r + 1 == rounds) { l.count(); false }
+                  else l.join(Fixpoint.inPlace(
+                        labels.select(col("id").as("pid"), col("label").as("prev"))),
+                      col("id") === col("pid"))
+                    .filter(col("label") =!= col("prev"))
+                    .count() == 0))
+              }
+          }
+          labels
+        } finally e.unpersist()
+      }
+    } finally pre.unpersist()
   }
 }

@@ -374,32 +374,32 @@ object PageRank {
         sum(col("w")).as("w"),
         count_if(col("w").isNull || col("w") <= 0).as("n_bad"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val badRow = e.agg(sum(col("n_bad"))).head()
-    val bad = if (badRow.isNullAt(0)) 0L else badRow.getLong(0)
-    if (bad != 0L) {
-      e.unpersist(blocking = false) // don't leak the cache on the failure path
-      throw new IllegalArgumentException(
-        s"weightedFixedIterations: $bad edge(s) with null/zero/negative weight — " +
-          "weights must be > 0")
-    }
-    val m = e.count()
-    val parts = Fixpoint.loopPartitions(spark, m)
-    Fixpoint.withLoopConf(spark, parts) {
-      val verts = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = verts.count()
-      if (n == 0) { verts.unpersist(); e.unpersist(); return verts.withColumn("rank", lit(0.0)) }
-      val sw = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
-      val linked = Fixpoint.placed(
-        e.join(sw, "src").select(col("src"), col("dst"), (col("w") / col("tw")).as("frac")),
-        parts, "src")
-      e.unpersist()
-      try teleportLoop(verts, linked, parts, beta, iterations, lit(1.0 / n), lit((1.0 - beta) / n),
-        col("rank") * col("frac"), traced = false)._1
-      finally { linked.unpersist(); verts.unpersist() }
-    }
+    try {
+      val badRow = e.agg(sum(col("n_bad"))).head()
+      val bad = if (badRow.isNullAt(0)) 0L else badRow.getLong(0)
+      if (bad != 0L)
+        throw new IllegalArgumentException(
+          s"weightedFixedIterations: $bad edge(s) with null/zero/negative weight — " +
+            "weights must be > 0")
+      val parts = Fixpoint.loopPartitions(spark, e.count())
+      Fixpoint.withLoopConf(spark, parts) {
+        val verts = vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val n = verts.count()
+          if (n == 0) verts.withColumn("rank", lit(0.0))
+          else {
+            val sw = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
+            val linked = Fixpoint.placed(
+              e.join(sw, "src").select(col("src"), col("dst"), (col("w") / col("tw")).as("frac")),
+              parts, "src")
+            e.unpersist()
+            try teleportLoop(verts, linked, parts, beta, iterations, lit(1.0 / n),
+              lit((1.0 - beta) / n), col("rank") * col("frac"), traced = false)._1
+            finally linked.unpersist()
+          }
+        } finally verts.unpersist()
+      }
+    } finally e.unpersist()
   }
 
   /** O3+O4: top-k pages by score, ties broken by id — Catalyst plans this

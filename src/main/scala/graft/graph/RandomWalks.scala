@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deterministic seeded random walks — the corpus generator for
   * embedding-style graph training data (DeepWalk, Perozzi et al. KDD'14 /
@@ -19,25 +18,16 @@ import org.apache.spark.storage.StorageLevel
   *
   * The per-step argmin is duplicate-insensitive (min over a multiset),
   * so the edge relation needs NO dedup shuffle — same trick as the g4
-  * BFS. Two execution shapes, both producing identical output
-  * (spec-asserted):
-  *
-  *  - `walk` (frontier-broadcast): each step joins the |walks|-row
-  *    frontier by broadcast against the edge relation — edges are never
-  *    shuffled at all. Right while total frontier bytes stay
-  *    driver/broadcast-sized (≲ millions of walks).
-  *  - `walkShuffled` (co-partitioned): the edge relation is
-  *    [[Fixpoint.placed]] by src ONCE, and each step's join exchanges
-  *    only the |walks|-row frontier onto that fixed layout. On local[32]
-  *    the broadcast shape wins every measured point up to 2M concurrent
-  *    walks (44.8 s vs 193.0 s at 2M, 4 steps — local "broadcast" is
-  *    a free shared hash table);
-  *    this shape exists for the ceiling a CLUSTER hits: ~75 B/walk of
-  *    broadcast hash table replicated to every executor per step and
-  *    built through one node (100M walks ≈ 7.5 GB against the 8 GB
-  *    broadcast cap × the fleet's network). Hub skew stays bounded in
-  *    both shapes because a walk contributes exactly ONE frontier row
-  *    per step (no wedge-style expansion).
+  * BFS. Each step joins the |walks|-row frontier by broadcast against the
+  * edge relation, so edges are never shuffled at all. On local[32] this
+  * shape beat a co-partitioned one (edges placed by src once, only the
+  * frontier exchanged per step) at every measured point up to 2M
+  * concurrent walks (44.8 s vs 193.0 s at 2M, 4 steps), because a local
+  * "broadcast" is a free shared hash table. Its ceiling is a cluster's:
+  * ~75 B/walk of broadcast hash table replicated to every executor per
+  * step (100M walks ≈ 7.5 GB against the 8 GB broadcast cap). Hub skew
+  * stays bounded because a walk contributes exactly ONE frontier row per
+  * step (no wedge-style expansion).
   *
   * Returns (walk_id, step, node): steps 0..steps, step 0 = the seed.
   * Dead-end walks (no out-edge) simply stop early — their later steps
@@ -93,37 +83,6 @@ object RandomWalks {
     out.orderBy(col("walk_id"), col("step"))
   }
 
-  /** [[walk]]'s at-scale twin: same output, edges persisted
-    * hash-partitioned by src once, frontier checkpointed per step (tiny)
-    * so only it moves. The result is eagerly checkpointed before the
-    * edge cache and per-step frontiers are released, so the returned
-    * frame owns its single persisted backing (leak-neutral). The steps
-    * are not a [[Fixpoint.iterate]] loop: every step's frontier is part
-    * of the returned corpus, so none is superseded, and a step has no
-    * scalar to act on.
-    */
-  def walkShuffled(
-      edges: DataFrame, seeds: DataFrame, steps: Int, nWalks: Int = 1): DataFrame = {
-    val (walkIds, e0) = prepare(edges, seeds, steps, nWalks)
-    onPlacedEdges(e0) { e =>
-      var frontier = walkIds.localCheckpoint(true)
-      var out = frontier.select(col("walk_id"), lit(0).as("step"),
-        col("cur").as("node"))
-      var j = 1
-      while (j <= steps) {
-        frontier = e.join(frontier, col("cur") === col("src"))
-          .groupBy(col("walk_id"))
-          .agg(min(struct(draw(j).as("h"), col("dst"))).as("pick"))
-          .select(col("walk_id"), col("pick.dst").as("cur"))
-          .localCheckpoint(true)
-        out = out.unionAll(frontier.select(col("walk_id"), lit(j).as("step"),
-          col("cur").as("node")))
-        j += 1
-      }
-      out.orderBy(col("walk_id"), col("step"))
-    }
-  }
-
   /** node2vec-BIASED walk (Grover & Leskovec, KDD 2016): the transition
     * out of `cur` is weighted by where the walk just came from — return
     * edges (dst = prev) by 1/p, triangle edges (dst adjacent to prev)
@@ -152,14 +111,13 @@ object RandomWalks {
     * (dst, r) draws — min over a multiset), so adjacency-side
     * multiplicity from parallel edges changes nothing, exactly as
     * candidate-side multiplicity already did — simple-graph node2vec
-    * semantics either way, bit-identical picks (spec-pinned against
-    * [[walkBiasedShuffled]], which keeps the deduped co-partitioned
-    * probe). This removes the former per-step shuffle+sort of the FULL
-    * deduped edge relation (1.2M rows at sf0.1, re-exchanged at every
-    * step of g16–g19 because a checkpoint leaf reports no size estimate
-    * and the left join fell to sort-merge). Frontier stays one row per
-    * walk per step; at cluster scale (unbounded walk counts) the
-    * bucketed-by-src layout of [[walkBiasedShuffled]] is the right shape.
+    * semantics either way. This removes the former per-step shuffle+sort
+    * of the FULL deduped edge relation (1.2M rows at sf0.1, re-exchanged
+    * at every step of g16–g19 because a checkpoint leaf reports no size
+    * estimate and the left join fell to sort-merge). Frontier stays one
+    * row per walk per step; the broadcast ceiling documented on the
+    * object applies here sooner, since the frontier carries the extra
+    * `prev` column and the candidate stream is degree-multiplied.
     */
   def walkBiased(
       edges: DataFrame, seeds: DataFrame, steps: Int, nWalks: Int = 1,
@@ -181,8 +139,7 @@ object RandomWalks {
       val weighted =
         if (j == 1)
           // No previous node: every neighbor weighs 1 — the same draws as
-          // the all-null `prev IS NULL` arm (w = 1 → r = 1 only), the
-          // walkBiasedShuffled step-1 idiom, bit-identical picks.
+          // the all-null `prev IS NULL` arm (w = 1 → r = 1 only).
           cands.select(col("walk_id"), col("cur"), col("dst"),
             lit(1).as("r"))
         else {
@@ -232,87 +189,6 @@ object RandomWalks {
     out.orderBy(col("walk_id"), col("step"))
   }
 
-  /** [[walkBiased]]'s at-scale twin — the co-partitioned biased walk the
-    * scaladoc above promises. Identical output (spec-asserted, the
-    * `walk`/`walkShuffled` equality pattern); execution differs:
-    *
-    *  - the edge relation is persisted hash-partitioned by `src` ONCE
-    *    ([[Fixpoint.placed]]) — each step's
-    *    frontier probe exchanges only the |walks|-row frontier onto that
-    *    fixed layout, never the edges;
-    *  - the (prev, dst) adjacency relation is DERIVED from that same
-    *    layout: `dropDuplicates(src, dst)` on a src-partitioned relation
-    *    needs no new exchange (src-clustering satisfies the (src, dst)
-    *    distribution), so the dedup'd adjacency inherits the bucketed-
-    *    by-src layout and is persisted once. The per-step candidate
-    *    stream (|walks| × avg-degree rows) shuffles on (prev, dst) to
-    *    meet it — a co-partitioned hash join against a parked relation,
-    *    NOT a per-step broadcast of a growing frontier hash table;
-    *  - step 1 skips the adjacency probe entirely: with no previous node
-    *    every candidate weighs 1 (exactly [[walkBiased]]'s `prev IS
-    *    NULL` arm, same draw at r = 1, so picks are bit-identical) —
-    *    which also keeps the all-null `prev` key of step 1 from hashing
-    *    the whole candidate stream into one partition;
-    *  - frontier checkpointed per step (lineage stays flat); result
-    *    eagerly checkpointed, all other backings swept (leak-neutral).
-    *
-    * This removes the broadcast-frontier ceiling (~8 GB / replicated
-    * per-executor build) the uniform walk already documents, which the
-    * biased walk hits SOONER: its frontier carries the extra `prev`
-    * column (more bytes/walk) and its candidate stream is degree-
-    * multiplied before the argmin.
-    */
-  def walkBiasedShuffled(
-      edges: DataFrame, seeds: DataFrame, steps: Int, nWalks: Int = 1,
-      retW: Int = 1, inW: Int = 2, outW: Int = 4): DataFrame = {
-    require(retW >= 1 && inW >= 1 && outW >= 1, "weights must be >= 1")
-    val (walkIds, e0) = prepare(edges, seeds, steps, nWalks)
-    onPlacedEdges(e0) { e =>
-      val aRel = e.dropDuplicates("src", "dst")
-        .select(col("src").as("a_src"), col("dst").as("a_dst"),
-          lit(1).as("adj"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      aRel.count()
-      var frontier = walkIds
-        .withColumn("prev", lit(null).cast("string")).localCheckpoint(true)
-      var out = frontier.select(col("walk_id"), lit(0).as("step"),
-        col("cur").as("node"))
-      var j = 1
-      while (j <= steps) {
-        val drawB = graft.ops.Portable.md5Long(
-          concat_ws(":", col("walk_id"), lit(j), col("cur"), col("dst"),
-            col("r")))
-        val cands = e.join(frontier, col("cur") === col("src"))
-        val weighted =
-          if (j == 1)
-            // no previous node: every neighbor weighs 1 (r = 1 only)
-            cands.select(col("walk_id"), col("cur"), col("dst"),
-              lit(1).as("r"))
-          else {
-            val w = when(col("dst") === col("prev"), lit(retW))
-              .when(col("adj") === 1, lit(inW))
-              .otherwise(lit(outW))
-            cands
-              .join(aRel, col("prev") === col("a_src") &&
-                col("dst") === col("a_dst"), "left")
-              .select(col("walk_id"), col("cur"), col("dst"),
-                explode(sequence(lit(1), w)).as("r"))
-          }
-        frontier = weighted
-          .groupBy(col("walk_id"))
-          .agg(min(struct(drawB.as("h"), col("dst"), col("r"))).as("pick"),
-            first(col("cur")).as("was"))
-          .select(col("walk_id"), col("was").as("prev"),
-            col("pick.dst").as("cur"))
-          .localCheckpoint(true)
-        out = out.unionAll(frontier.select(col("walk_id"), lit(j).as("step"),
-          col("cur").as("node")))
-        j += 1
-      }
-      out.orderBy(col("walk_id"), col("step"))
-    }
-  }
-
   /** Skip-gram (center, context) pair counts over a walk corpus — the
     * training-data emission step of DeepWalk/node2vec: within each
     * walk, every ordered pair of nodes at step distance 1..`window`
@@ -333,26 +209,6 @@ object RandomWalks {
       .groupBy(col("center"), col("context"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("center"), col("context"))
-  }
-
-  /** The shuffled walks' shared frame: `body` runs on the edges
-    * [[Fixpoint.placed]] by src, sized to the graph; its result is
-    * eagerly checkpointed, then everything else this call persisted (edge
-    * cache, per-step frontiers) is released, so the result owns its one
-    * checkpoint backing.
-    */
-  private def onPlacedEdges(e0: DataFrame)(body: DataFrame => DataFrame): DataFrame = {
-    val spark = e0.sparkSession
-    val before = graft.RddScope.persisted(spark)
-    val pre = e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val parts = Fixpoint.loopPartitions(spark, pre.count())
-    val result = Fixpoint.withLoopConf(spark, parts) {
-      val e = Fixpoint.placed(pre, parts, "src")
-      pre.unpersist()
-      body(e).localCheckpoint(true)
-    }
-    graft.RddScope.sweepExcept(spark, before, result)
-    result
   }
 
   private def draw(step: Int): Column =

@@ -11,49 +11,13 @@ import org.apache.spark.sql.functions._
   * ([[decodeAudioBands]]: `javax.sound.sampled` WAV/AIFF/AU PCM, pure
   * JVM); VIDEO genuinely needs container codecs (ffmpeg-class, absent
   * here) and remains STUBBED with deterministic fakes, clearly marked
-  * below — swapping a codec in changes only `decodeStub`.
+  * below — a codec would replace [[extractFeaturesPortable]]'s
+  * md5-derived features and [[frameSample]]'s frame counts.
   */
 object Multimodal {
 
   /** A media row: payload + metadata. */
   case class MediaRecord(media_id: Long, mime: String, bytes: Array[Byte])
-
-  /** Extracted features (what a real decoder would emit). */
-  case class MediaFeatures(
-      media_id: Long,
-      mime: String,
-      n_bytes: Long,
-      width: Int,
-      height: Int,
-      feature: Array[Float])
-
-  /** ===== STUB ===== deterministic fake decode: derives dimensions and a
-    * feature vector from the payload bytes. A real implementation would
-    * decode the image/audio here (e.g. via javax.imageio / ffmpeg bindings).
-    */
-  def decodeStub(r: MediaRecord): MediaFeatures = {
-    val n = r.bytes.length.toLong
-    var h = 1125899906842597L // deterministic FNV-ish roll over the payload
-    var i = 0
-    while (i < r.bytes.length) { h = h * 31 + r.bytes(i); i += 1 }
-    val feat = Array.tabulate(8) { j =>
-      (((h >>> (j * 8)) & 0xff).toFloat / 255.0f) - 0.5f
-    }
-    MediaFeatures(
-      r.media_id, r.mime, n,
-      width = (640 + (n % 1280)).toInt,
-      height = (360 + ((n * 7) % 720)).toInt,
-      feature = feat)
-  }
-
-  /** Distributed decode: mapPartitions so a real codec could amortize
-    * per-partition initialization (model load, decoder context); partition
-    * count follows the input, no shuffle is introduced.
-    */
-  def extractFeatures(media: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it => it.map(decodeStub) }
-  }
 
   /** Binary-column metadata projection, builtins only (no decode): payload
     * size, content digest, and stub dimensions — the part of the media

@@ -137,10 +137,8 @@ object IndexStore {
     * single id-clustered file and the probe's cell equi-join reads
     * sequentially.
     *
-    * Works on both the static and the tuned layout (same
-    * (vec_id, v, cell) schema). [[searchIvfStatic]]/[[searchIvfTuned]]/
-    * [[dedupNewIvfStatic]] results are row-identical before/after (the
-    * store holds the same rows; IndexStoreSpec pins it).
+    * [[searchIvfStatic]]/[[dedupNewIvfStatic]] results are row-identical
+    * before/after (the store holds the same rows; IndexStoreSpec pins it).
     *
     * Crash safety, the DedupStore rename-aside pattern: the rewrite
     * stages into a sibling `<path>.compact.tmp`, then swaps with two
@@ -176,12 +174,10 @@ object IndexStore {
 
   /** Takedown: rewrite the store WITHOUT the given vector ids (first
     * column of `ids`, castable to long) — [[graft.dedup.DedupStore
-    * .remove]]'s ANN sibling. Works on both the static and the tuned
-    * layout (a tuned vector's ≤3 assignment rows share its vec_id, so
-    * the anti-join drops all of them). After remove, [[searchIvfStatic]]
-    * / [[searchIvfTuned]] / [[dedupNewIvfStatic]] behave exactly as if
-    * the removed vectors had never been saved (IndexStoreSpec pins probe
-    * equality with a from-scratch store built without them). One
+    * .remove]]'s ANN sibling. After remove, [[searchIvfStatic]] /
+    * [[dedupNewIvfStatic]] behave exactly as if the removed vectors had
+    * never been saved (IndexStoreSpec pins probe equality with a
+    * from-scratch store built without them). One
     * anti-join rewrite through the compact's crash-safe rename-aside
     * swap — O(store) like a compact; batch takedown ids together.
     * Removing every stored vector leaves an empty store that must be
@@ -204,67 +200,5 @@ object IndexStore {
     require(fs.rename(tmp, live), "remove: rename of rewrite into place failed")
     fs.delete(old, true)
     ()
-  }
-
-  /** Persist the TUNED layout ([[Similarity.annIvfStaticTuned]]'s
-    * parameters — 32 cells, 3-way redundant assignment): every vector is
-    * written into its home cell AND its two least-confident-flip cells,
-    * so the store is ×3 larger and queries buy boundary recall with
-    * probe count instead of scan fraction. Same Hive `cell=K` partition
-    * layout as [[saveIvfStatic]] — probing prunes directories at
-    * planning time.
-    */
-  def saveIvfTuned(vectors: DataFrame, path: String): Unit =
-    Similarity.tunedAssigned(vectors)
-      .select(col("vec_id"), col("v"), col("cell").as("home"),
-        explode(Similarity.tunedCandMasks).as("m"))
-      .select(col("vec_id"), col("v"),
-        col("home").bitwiseXOR(col("m")).as("cell"))
-      // The 3 assignment cells (home, flip b1, flip b2) coincide when two
-      // coordinates tie on |v| (b1 == b2) — dedup so the store never
-      // carries duplicate (vec_id, cell) rows; search results are
-      // unchanged either way (rankTopK's insert-time dedup), this keeps
-      // the LAYOUT canonical: ≤3 rows per vector, exactly 3 absent ties.
-      .dropDuplicates("vec_id", "cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-
-  /** Add a batch to the persisted TUNED store — [[appendIvfStatic]]'s
-    * sibling for the ×3-assignment layout: same per-vector cell set as
-    * [[saveIvfTuned]] (home + 2 least-confident flips, deduped), appended
-    * into the same Hive cell layout; stored state is never rewritten.
-    */
-  def appendIvfTuned(vectors: DataFrame, path: String): Unit =
-    Similarity.tunedAssigned(vectors)
-      .select(col("vec_id"), col("v"), col("cell").as("home"),
-        explode(Similarity.tunedCandMasks).as("m"))
-      .select(col("vec_id"), col("v"),
-        col("home").bitwiseXOR(col("m")).as("cell"))
-      .dropDuplicates("vec_id", "cell")
-      .write.mode("append").partitionBy("cell").parquet(path)
-
-  /** Search the persisted tuned store with the 8-probe perturbation set.
-    * Result-identical to [[Similarity.annIvfStaticTuned]] when `queries`
-    * is the corpus itself (pinned in IndexStoreSpec): a pair met through
-    * several shared cells collapses in the rank stage's insert-time
-    * dedup, exactly as in the one-plan spelling.
-    */
-  def searchIvfTuned(
-      spark: SparkSession, path: String, queries: DataFrame,
-      k: Int): DataFrame = {
-    val q = Similarity.tunedAssigned(
-        queries.select(col("query_id").as("vec_id"), col("qv").as("v")))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cell"),
-        explode(Similarity.tunedQueryMasks).as("m"))
-      .select(col("query_id"), col("qv"),
-        col("cell").bitwiseXOR(col("m")).as("cell"))
-    val probeCells = q.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val store = spark.read.parquet(path)
-      .filter(col("cell").isin(probeCells: _*))
-    val scored = q.join(store, "cell")
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("cand_id"),
-        round(Similarity.cosine(col("qv"), col("v")), 4).as("cosine"))
-    Similarity.rankTopK(scored, k).orderBy(col("query_id"), col("rnk"))
   }
 }

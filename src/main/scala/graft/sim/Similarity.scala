@@ -452,7 +452,7 @@ object Similarity {
   /** The tuned static quantizer's per-vector state: home `cell` plus
     * `b1..b5`, the flip-bit values of the coordinates ordered by |v|
     * ascending (confidence ascending) — shared by [[annIvfStaticTuned]]
-    * and the persisted layout ([[IndexStore.saveIvfTuned]]).
+    * and [[annProbeSweep]].
     */
   private[sim] def tunedAssigned(vectors: DataFrame): DataFrame = {
     val dims = 5

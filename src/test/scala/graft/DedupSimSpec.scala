@@ -250,9 +250,12 @@ class DedupSimSpec extends SparkSpec {
   test("window and array shingle-index forms produce identical relations") {
     val docs = Tables.documents(spark, Sf001)
     Seq(2, 3, 4).foreach { n =>
-      val w = Dedup.shingleIndexWindow(docs, "doc_id", "text", n)
-      val a = Dedup.shingleIndexArray(docs, "doc_id", "text", n)
-      assert(w.exceptAll(a).isEmpty && a.exceptAll(w).isEmpty,
+      val w = Dedup.shingleIndex(docs, "doc_id", "text", n)
+      // The array form: TextFns.shingles exploded per row, as the
+      // streaming twins build it.
+      val ref = docs.select(col("doc_id").as("id"),
+        explode(graft.text.TextFns.shingles(col("text"), n)).as("s"))
+      assert(w.exceptAll(ref).isEmpty && ref.exceptAll(w).isEmpty,
         s"shingle forms diverge at n=$n")
     }
   }
@@ -335,16 +338,6 @@ class DedupSimSpec extends SparkSpec {
     assert(exact.size >= 40, s"planted dups missing from ground truth: ${exact.size}")
     val recall = lsh.size.toDouble / exact.size
     assert(recall >= 0.9, s"recall=$recall (${lsh.size}/${exact.size})")
-  }
-
-  test("media feature extraction is deterministic and typed") {
-    val media = graft.media.Multimodal.fromDocuments(
-      spark, Tables.documents(spark, Sf001).limit(10))
-    val feats = graft.media.Multimodal.extractFeatures(media).collect()
-    assert(feats.length == 10)
-    assert(feats.forall(_.feature.length == 8))
-    val again = graft.media.Multimodal.extractFeatures(media).collect()
-    assert(feats.map(_.width).toSeq == again.map(_.width).toSeq)
   }
 
   test("IVF ANN overlaps brute force on sf0.001") {
@@ -452,9 +445,10 @@ class DedupSimSpec extends SparkSpec {
     // similarity operators as the embeddings table — full pipeline shape.
     val media = graft.media.Multimodal.fromDocuments(
       spark, Tables.documents(spark, Sf001).limit(50))
-    val feats = graft.media.Multimodal.extractFeatures(media)
-      .select(col("media_id"),
-        graft.sim.Similarity.asDouble(col("feature")).as("v"))
+    val feats = graft.media.Multimodal.extractFeaturesPortable(media).toDF()
+      .groupBy(col("media_id"))
+      .agg(sort_array(collect_list(struct(col("j"), col("feat")))).as("s"))
+      .select(col("media_id"), expr("transform(s, p -> p.feat)").as("v"))
     val ann = graft.sim.Similarity.annBrute(
       feats.filter(col("media_id") < 5)
         .select(col("media_id").as("query_id"), col("v").as("qv")),

@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.agg.L1Delta
 import org.apache.spark.sql.graft.CosineSimilarityExpr
 import graft.sim.Similarity
 
 /** Custom Catalyst surface: native cosine expression (interpreted + codegen
-  * + SQL registration) and the L1-delta typed aggregator.
+  * + SQL registration).
   */
 class ExprSpec extends SparkSpec {
   import spark.implicits._
@@ -206,14 +205,5 @@ class ExprSpec extends SparkSpec {
     val confirmed = pre.join(keys.select(col("s").as("k")), col("s") === col("k"), "left_semi")
       .collect().map(_.getString(0)).toSet
     assert(confirmed == Set("k1", "k2", "k3"))
-  }
-
-  test("L1Delta aggregator equals sum(abs(a-b))") {
-    val pairs = Seq((1.0, 0.5), (2.0, 2.5), (0.0, 0.25)).toDS()
-    val viaAgg = pairs.select(new L1Delta().toColumn).collect().head
-    val viaSql = pairs.toDF("a", "b")
-      .agg(sum(abs(col("a") - col("b")))).collect().head.getDouble(0)
-    assert(math.abs(viaAgg - 1.25) < 1e-15)
-    assert(math.abs(viaAgg - viaSql) < 1e-15)
   }
 }

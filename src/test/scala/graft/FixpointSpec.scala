@@ -192,11 +192,13 @@ class FixpointSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-placed-throw")
     val f = dir.resolve("edges.txt")
     java.nio.file.Files.writeString(f, "1\t2\n3\tnot_a_number\n")
+    spark.catalog.clearCache()
     val before = RddScope.persisted(spark)
     val in = PageRank.edgesFromText(spark, f.toString)
     intercept[org.apache.spark.SparkException] {
       Fixpoint.withLoopConf(spark, 4)(Fixpoint.placed(in, 4, "src"))
     }
+    assert(noCachedPlans, "placed's persist outlived the throw")
     assert(RddScope.persisted(spark) == before)
   }
 

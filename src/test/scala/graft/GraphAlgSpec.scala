@@ -72,99 +72,54 @@ class GraphAlgSpec extends SparkSpec {
     assert(pw == Seq("a", "b", "a", "b", "a"), pw)
 
     // Reference parity on a denser graph: an independent implementation
-    // of the replica-argmin sampler (weight classes 1/2/4, draw
-    // "walk:step:cur:dst:r", argmin with (dst, r) tie-break) must
-    // reproduce every transition — the same lockstep contract the
-    // uniform-walk test pins, extended with prev-dependent weights.
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"),
-      ("c", "d"), ("b", "a"), ("a", "d")).toDF("src", "dst")
-    val seeds = Seq("a", "b", "c", "d").toDF("id")
-    val got = RandomWalks.walkBiased(edges, seeds, steps = 5, nWalks = 2)
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2)))
-      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
+    // of the replica-argmin sampler (draw "walk:step:cur:dst:r", argmin
+    // with (dst, r) tie-break) must reproduce every transition — the same
+    // lockstep contract the uniform-walk test pins, extended with
+    // prev-dependent weights. Checked at the shipped weight classes
+    // (1, 2, 4) and at a non-default set, so every weight arm is pinned;
+    // e has no out-edge, so walks reaching it must stop early.
     val edgeSet = Set("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "c",
-      "d" -> "a", "c" -> "d", "b" -> "a", "a" -> "d")
+      "d" -> "a", "c" -> "d", "b" -> "a", "a" -> "d", "d" -> "e")
+    val edges = edgeSet.toSeq.toDF("src", "dst")
+    val seeds = Seq("a", "b", "c", "d").toDF("id")
     val adj = edgeSet.toSeq.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    got.keys.foreach { w =>
-      var prev: Option[String] = None
-      var cur = w.takeWhile(_ != '#')
-      val expected = Seq(cur) ++ (1 to 5).flatMap { j =>
-        adj.get(cur) match {
-          case None => None
-          case Some(ns) =>
-            val picked = ns.flatMap { d =>
-              val wgt =
-                if (prev.isEmpty) 1
-                else if (prev.contains(d)) 1
-                else if (edgeSet(prev.get -> d)) 2
-                else 4
-              (1 to wgt).map(r => ((md5Long(s"$w:$j:$cur:$d:$r"), d, r), d))
-            }.minBy(_._1)._2
-            prev = Some(cur); cur = picked
-            Some(picked)
+    def checked(retW: Int, inW: Int, outW: Int): Map[String, Seq[String]] = {
+      val byWalk = RandomWalks.walkBiased(edges, seeds, steps = 5, nWalks = 2,
+          retW = retW, inW = inW, outW = outW)
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2)))
+        .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
+      byWalk.keys.foreach { w =>
+        var prev: Option[String] = None
+        var cur = w.takeWhile(_ != '#')
+        val expected = Seq(cur) ++ (1 to 5).flatMap { j =>
+          adj.get(cur) match {
+            case None => None
+            case Some(ns) =>
+              val picked = ns.flatMap { d =>
+                val wgt =
+                  if (prev.isEmpty) 1
+                  else if (prev.contains(d)) retW
+                  else if (edgeSet(prev.get -> d)) inW
+                  else outW
+                (1 to wgt).map(r => ((md5Long(s"$w:$j:$cur:$d:$r"), d, r), d))
+              }.minBy(_._1)._2
+              prev = Some(cur); cur = picked
+              Some(picked)
+          }
         }
+        assert(byWalk(w) == expected, s"$w diverged from the biased md5 " +
+          s"reference at ($retW, $inW, $outW): got ${byWalk(w)}, want $expected")
       }
-      assert(got(w) == expected,
-        s"$w diverged from the biased md5 reference: got ${got(w)}, want $expected")
+      byWalk
     }
+    val got = checked(1, 2, 4)
+    checked(3, 1, 5)
     // The bias must actually change something vs the uniform walk on
     // this graph (different draws AND different weights).
     val uni = RandomWalks.walk(edges, seeds, steps = 5, nWalks = 2)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2)))
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
     assert(got != uni, "biased walk identical to uniform — bias inactive?")
-  }
-
-  test("walkShuffled (co-partitioned shape) = walk (broadcast shape), leak-neutral") {
-    import graft.graph.RandomWalks
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"),
-      ("c", "d"), ("b", "a")).toDF("src", "dst")
-    val seeds = Seq("a", "b", "c", "d").toDF("id")
-    val bc = RandomWalks.walk(edges, seeds, steps = 5, nWalks = 2)
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    val before = RddScope.persisted(spark)
-    val sh = RandomWalks.walkShuffled(edges, seeds, steps = 5, nWalks = 2)
-    val got = sh.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq
-    assert(got == bc, s"shapes diverge: ${got.diff(bc).take(5)}")
-    // Leak contract: the only persisted blocks this call left behind are
-    // the result's own checkpoint backing.
-    val leaked = RddScope.persisted(spark) -- before --
-      org.apache.spark.sql.graft.GraftInternals.checkpointRddIds(sh)
-    assert(leaked.isEmpty, s"walkShuffled leaked RDDs: $leaked")
-  }
-
-  test("walkBiasedShuffled (co-partitioned shape) = walkBiased (broadcast shape), leak-neutral") {
-    import graft.graph.RandomWalks
-    // Dense enough that all three weight classes (return / triangle /
-    // outward) occur, plus a dead-end (e has no out-edge) so the early-
-    // stop path is exercised in both shapes.
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"),
-      ("c", "d"), ("b", "a"), ("a", "d"), ("d", "e")).toDF("src", "dst")
-    val seeds = Seq("a", "b", "c", "d").toDF("id")
-    val bc = RandomWalks.walkBiased(edges, seeds, steps = 5, nWalks = 2)
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    val before = RddScope.persisted(spark)
-    val sh = RandomWalks.walkBiasedShuffled(edges, seeds, steps = 5, nWalks = 2)
-    val got = sh.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq
-    assert(got == bc, s"shapes diverge: ${got.diff(bc).take(5)}")
-    // Leak contract: the only persisted blocks the call left behind are
-    // the result's own checkpoint backing.
-    val leaked = RddScope.persisted(spark) -- before --
-      org.apache.spark.sql.graft.GraftInternals.checkpointRddIds(sh)
-    assert(leaked.isEmpty, s"walkBiasedShuffled leaked RDDs: $leaked")
-    // Non-default weights must agree too (the j==1 fast path and the
-    // weight arms are shape-independent, not tuned to (1, 2, 4)).
-    val bcW = RandomWalks.walkBiased(edges, seeds, steps = 4, nWalks = 1,
-      retW = 3, inW = 1, outW = 5)
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    val shW = RandomWalks.walkBiasedShuffled(edges, seeds, steps = 4, nWalks = 1,
-      retW = 3, inW = 1, outW = 5)
-    val gotW = shW.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq
-    assert(gotW == bcW, s"non-default-weight shapes diverge: ${gotW.diff(bcW).take(5)}")
-    org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(shW)
   }
 
   test("biased walk: edge multiplicity changes nothing (argmin duplicate-insensitivity)") {
@@ -249,6 +204,27 @@ class GraphAlgSpec extends SparkSpec {
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(got(2) > got(3) * 2)
     assert(math.abs(got.values.sum - 1.0) < 1e-9) // dangling-free: mass conserved
+  }
+
+  test("weighted PR: a malformed edge file fails the run without leaking a persist") {
+    val path = edgeFile("1\t2\t1.0", "2\t3\tnot_a_number", "3\t1\t1.0")
+    val in = spark.read.schema("src LONG, dst LONG, w DOUBLE")
+      .option("delimiter", "\t").option("mode", "FAILFAST").csv(path)
+    spark.catalog.clearCache()
+    val before = RddScope.persisted(spark)
+    intercept[org.apache.spark.SparkException](
+      PageRank.weightedFixedIterations(spark, in, 0.85, 2))
+    assert(noCachedPlans, "the weighted edges' persist outlived the throw")
+    assert(RddScope.persisted(spark) == before)
+  }
+
+  test("HITS: a malformed edge file fails the run without leaking a persist") {
+    val in = PageRank.edgesFromText(spark, edgeFile("1\t2", "3\tnot_a_number", "4\t5"))
+    spark.catalog.clearCache()
+    val before = RddScope.persisted(spark)
+    intercept[org.apache.spark.SparkException](Hits.fixedIterations(spark, in, 3))
+    assert(noCachedPlans, "the deduped edges' persist outlived the throw")
+    assert(RddScope.persisted(spark) == before)
   }
 
   test("HITS: two hubs, one authority") {

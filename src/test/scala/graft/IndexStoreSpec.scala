@@ -52,31 +52,6 @@ class IndexStoreSpec extends SparkSpec {
     assert(rows.map(_._2).toSet == Set(1L, 2L), rows.mkString(","))
   }
 
-  test("tuned store (x3 assignment, 8-probe search) equals the one-plan tuned ANN") {
-    val dir = Files.createTempDirectory("graft_ivf_tuned").toString
-    IndexStore.saveIvfTuned(vecs, path = s"$dir/ivf")
-    // The store holds each vector AT MOST 3 times (home + 2 flips); the
-    // write dedups (vec_id, cell), so with this fixture's tie-free |v|
-    // coordinates the 3 cells are distinct and the count is exactly 3N.
-    val stored = spark.read.parquet(s"$dir/ivf")
-    assert(stored.count() == vecs.count() * 3)
-    assert(stored.select("vec_id", "cell").distinct().count() == stored.count())
-    val queries = vecs
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val searched = IndexStore.searchIvfTuned(spark, s"$dir/ivf", queries, k = 5)
-    val got = searched.collect()
-    val exp = Similarity.annIvfStaticTuned(vecs, k = 5).collect()
-    assert(got.sameElements(exp),
-      s"tuned store search diverged: got ${got.take(3).mkString(",")} " +
-        s"exp ${exp.take(3).mkString(",")}")
-    // Same layout contract as the static store: probe cells must prune
-    // at the partition level, before any file opens. With > 10 probed
-    // cells Spark renders the predicate as INSET, not IN.
-    val plan = searched.queryExecution.executedPlan.toString
-    assert("PartitionFilters:\\s*\\[cell#\\d+ IN(SET)? ".r.findFirstIn(plan).isDefined,
-      s"tuned probe cells not pushed as a partition filter:\n${plan.take(2000)}")
-  }
-
   test("dedupNew flags arriving near-dups vs stored + earlier-batch; probe prunes; append completes") {
     val dir = Files.createTempDirectory("graft_ivf_dedupnew").toString
     val eps = 0.35
@@ -196,27 +171,6 @@ class IndexStoreSpec extends SparkSpec {
     assert(search().sameElements(before), "stale .old leaked into results")
   }
 
-  test("compact on the tuned layout: searchIvfTuned row-identical, one file per cell") {
-    val dir = Files.createTempDirectory("graft_ivf_tuned_compact").toString
-    // two halves saved/appended so the tuned store is fragmented too
-    IndexStore.saveIvfTuned(vecs.filter(col("vec_id") < 250), path = s"$dir/ivf")
-    IndexStore.appendIvfTuned(vecs.filter(col("vec_id") >= 250), path = s"$dir/ivf")
-    val queries = vecs.limit(50)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    def search() = IndexStore.searchIvfTuned(spark, s"$dir/ivf", queries, k = 5)
-      .collect()
-    val before = search()
-    val filesBefore = parquetFiles(s"$dir/ivf")
-    IndexStore.compact(spark, s"$dir/ivf")
-    val cells = spark.read.parquet(s"$dir/ivf").select(col("cell"))
-      .distinct().count()
-    val filesAfter = parquetFiles(s"$dir/ivf")
-    assert(filesAfter == cells && filesAfter < filesBefore,
-      s"tuned compact: $filesBefore -> $filesAfter files over $cells cells")
-    assert(search().sameElements(before),
-      "searchIvfTuned diverged across layouts")
-  }
-
   test("remove: search + dedupNew behave as if the removed vectors had never been saved") {
     // Takedown, ANN edition: after remove(ids), both probe shapes equal
     // a from-scratch store built WITHOUT those vectors.
@@ -254,19 +208,5 @@ class IndexStoreSpec extends SparkSpec {
       dims = 3, eps = 0.999).collect()
     assert(gotDedup.sameElements(wantDedup),
       "post-remove dedupNew diverged from never-saved store")
-    // Tuned layout: one remove drops ALL of a vector's ≤3 assignment rows.
-    val tdir = Files.createTempDirectory("graft_ivf_remove_tuned").toString
-    IndexStore.saveIvfTuned(vecs, path = s"$tdir/ivf")
-    IndexStore.remove(spark, s"$tdir/ivf", removedIds.toDF("vec_id"))
-    assert(spark.read.parquet(s"$tdir/ivf")
-      .filter(col("vec_id").isin(removedIds: _*)).count() == 0,
-      "tuned layout kept assignment rows of removed vectors")
-    val tref = Files.createTempDirectory("graft_ivf_remove_tuned_ref").toString
-    IndexStore.saveIvfTuned(vecs.filter(!col("vec_id").isin(removedIds: _*)),
-      path = s"$tref/ivf")
-    val tq = vecs.limit(50).select(col("vec_id").as("query_id"), col("v").as("qv"))
-    assert(IndexStore.searchIvfTuned(spark, s"$tdir/ivf", tq, k = 5).collect()
-      .sameElements(IndexStore.searchIvfTuned(spark, s"$tref/ivf", tq, k = 5).collect()),
-      "post-remove tuned search diverged from never-saved store")
   }
 }

@@ -50,6 +50,15 @@ class LpaSpec extends SparkSpec {
     }
   }
 
+  test("a malformed edge file fails the run without leaking a persist") {
+    val in = graft.graph.PageRank.edgesFromText(spark, edgeFile("1\t2", "3\tnot_a_number", "4\t5"))
+    spark.catalog.clearCache()
+    val before = RddScope.persisted(spark)
+    intercept[org.apache.spark.SparkException](LabelPropagation.run(in, 3))
+    assert(noCachedPlans, "the symmetrized edges' persist outlived the throw")
+    assert(RddScope.persisted(spark) == before)
+  }
+
   test("two cliques with one bridge resolve to two communities") {
     val cliqueA = for (a <- 1L to 4L; b <- 1L to 4L if a < b) yield (a, b)
     val cliqueB = for (a <- 10L to 13L; b <- 10L to 13L if a < b) yield (a, b)

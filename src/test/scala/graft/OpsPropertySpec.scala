@@ -223,33 +223,4 @@ object OpsProperties extends Properties("Ops") {
       }
       Prop(ok) :| s"walk divergence: got=$got"
     }
-
-  property("ZOrder.interleave == reference Morton bit interleave") =
-    forAll(
-      Gen.listOfN(6, Gen.zip(Gen.choose(0L, 255L), Gen.choose(0L, 255L)))) { pts =>
-      import spark.implicits._
-      val bits = 8
-      def ref(a: Long, b: Long): Long =
-        (0 until bits).map { j =>
-          (((a >> j) & 1L) << (2 * j)) | (((b >> j) & 1L) << (2 * j + 1))
-        }.sum
-      val got = pts.toDF("a", "b")
-        .select(col("a"), col("b"),
-          graft.ops.ZOrder.interleave(Seq(col("a"), col("b")), bits).as("z"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      Prop(pts.forall { case (a, b) => got((a, b)) == ref(a, b) }) :|
-        s"interleave mismatch: $got"
-    }
-
-  property("ZOrder.gridCell clamps to [0, 2^bits) and is monotone") =
-    forAll(Gen.listOfN(8, Gen.choose(-50.0, 150.0))) { vs =>
-      import spark.implicits._
-      val cells = vs.toDF("v")
-        .select(col("v"), graft.ops.ZOrder.gridCell(col("v"), 0.0, 100.0, 4).as("c"))
-        .collect().map(r => r.getDouble(0) -> r.getLong(1))
-      val inRange = cells.forall { case (_, c) => c >= 0L && c <= 15L }
-      val sorted = cells.sortBy(_._1).map(_._2)
-      Prop(inRange && sorted.zip(sorted.tail).forall { case (x, y) => x <= y }) :|
-        s"gridCell violated bounds/monotonicity: ${cells.mkString(", ")}"
-    }
 }

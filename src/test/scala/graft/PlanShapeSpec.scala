@@ -349,8 +349,9 @@ class PlanShapeSpec extends SparkSpec {
     // constant-folded away (step 1's prev is literal null), plus one
     // LogicalRDD leaf per later step. The steps-2+ adjacency probes run
     // at each step's own checkpoint planning, byte-identically
-    // constructed — GraphAlgSpec pins their output against
-    // walkBiasedShuffled. Nothing may degenerate to a cartesian product,
+    // constructed — GraphAlgSpec pins their output against an
+    // independent md5 reference sampler. Nothing may degenerate to a
+    // cartesian product,
     // and the edge relation must never exchange by src inside the loop.
     // collect() (not count(), which builds a separate plan) so AQE
     // finalizes THIS df's join strategies.

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.io.{Sinks, Sources}
+import graft.io.Sinks
 
 /** File sinks: formatted-text result lines (S3) and CSV (S2/S5). */
 class SinksSpec extends SparkSpec {
@@ -53,45 +53,6 @@ class SinksSpec extends SparkSpec {
     val a = docs.orderBy("doc_id").collect()
     val b = back.orderBy("doc_id").collect()
     assert(a.sameElements(b))
-  }
-
-  test("Sources.jsonl: malformed-line policy — capture, drop, or fail") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("src_jsonl").toString
-    Files.write(java.nio.file.Paths.get(dir, "part.jsonl"),
-      java.util.Arrays.asList(
-        """{"doc_id": 1, "text": "ok one"}""",
-        """{"doc_id": 2 "text": "missing comma"}""", // malformed
-        """{"doc_id": 3, "text": "ok three"}""",
-        """not json at all""")) // malformed
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    // PERMISSIVE: all 4 lines appear; the 2 bad ones carry the raw line.
-    val permissive = Sources.jsonl(spark, dir, schema)
-    assert(permissive.count() == 4)
-    val bad = Sources.corruptLines(spark, dir, schema)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(bad.length == 2 && bad.forall(_._2 == 1L), bad.mkString("; "))
-    assert(bad.exists(_._1.contains("missing comma")), bad.mkString("; "))
-    val good = permissive.filter($"_corrupt_record".isNull)
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(good == Set(1L, 3L))
-    // DROPMALFORMED: only the 2 good lines survive.
-    assert(Sources.jsonl(spark, dir, schema, "DROPMALFORMED").count() == 2)
-    // FAILFAST: the first bad line fails the scan with a named error.
-    val err = intercept[Exception] {
-      Sources.jsonl(spark, dir, schema, "FAILFAST").count()
-    }
-    // The malformed-record error arrives wrapped (FAILED_READ_FILE →
-    // task failure → parse cause); scan the cause chain.
-    val chain = Iterator.iterate[Throwable](err)(_.getCause)
-      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-    assert(chain.toLowerCase.contains("malformed"), chain)
-    // And writeJsonl round-trips the good subset.
-    Sources.writeJsonl(
-      permissive.filter($"_corrupt_record".isNull).select($"doc_id", $"text"),
-      s"$dir/clean")
-    assert(Sources.jsonl(spark, s"$dir/clean", schema, "FAILFAST").count() == 2)
   }
 
   test("partitioned parquet sink prunes partitions at the scan") {

@@ -23,4 +23,19 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val Sf001 = "/root/testdata/sf0.001"
   val Sf01 = "/root/testdata/sf0.01"
+
+  /** A tab-separated edge file holding `rows`, one per line. */
+  def edgeFile(rows: String*): String = {
+    val f = java.nio.file.Files.createTempDirectory("graft-edges").resolve("edges.txt")
+    java.nio.file.Files.writeString(f, rows.mkString("", "\n", "\n"))
+    f.toString
+  }
+
+  /** The session's cache manager holds no persisted plan. A persist whose
+    * first action throws keeps its entry there although no RDD of it
+    * stays registered, so an RDD-id diff alone misses that leak.
+    */
+  def noCachedPlans: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
 }
