@@ -3,9 +3,8 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.GraftInternals
-import graft.graph.{PageRank, PageRankGraphX, SyntheticGraph}
 
 /** Headline benchmark (driver-run per round → BENCH_r{N}.json).
   *
@@ -47,54 +46,27 @@ import graft.graph.{PageRank, PageRankGraphX, SyntheticGraph}
   *    result by design — QueriesSpec enforces the same contract), all
   *    swept (unpersisted) before the next query starts. Non-zero here is
   *    a genuine stray persist; the r9 bar is zeros across the board.
+  *  - `diag.<q>.error`: the exception class and message of the leg's
+  *    first failed run. A failed run is caught, so one bad leg cannot
+  *    stop the run, and its wall reads -1 when no run succeeded; this
+  *    field says why.
   *  - top-level `cores`, `load1_start`/`load1_end`: session-wide context.
-  *  - AUTO A/B: any query whose min wall moved >3× vs the previous round's
-  *    floors at the same sf and core count is re-measured on a fresh JVM
-  *    (forked [[QBench]] child, after `spark.stop()` idles the box) and the
-  *    session-vs-isolated pair is emitted into `auto_ab` + `notes` — the
-  *    artifact adjudicates its own phantom regressions instead of costing
-  *    a judge round (r6: i4_personalized 14.6 s in-session vs 3.2 s
-  *    isolated was adjudicated by hand).
+  *  - `floor_watch`: every leg whose min wall moved > 1.3x against the
+  *    previous round's floors at the same sf and core count, both sides
+  *    >= 0.25 s. Bench measures and lists; it does not adjudicate. A
+  *    listed leg is re-measured on a fresh JVM by hand with [[QBench]].
   *
   * Output contract: the FINAL stdout line is the compact driver-parsed JSON
   * (min-wall per query only — it must fit the driver's 2000-char stdout
   * tail); the full diagnosis payload is printed earlier as `BENCH_DIAG {...}`
   * and written to `bench_diag.json` for the round snapshot.
   *
-  * TIMEOUT-PROOF (r16: the driver's post-commit run was SIGTERMed inside
-  * the A/B phase and, with a single end-of-run print, the whole round's
-  * bench data was lost): each completed leg immediately rewrites
-  * `bench_partial.json` (atomic rename — survives SIGKILL); the final
-  * line is printed BOTH right after the measured legs (before the A/B
-  * phase, whose stderr-only children are the slow tail) and again at
-  * normal exit; a shutdown hook emits a `"partial":true` line from
-  * whatever legs completed if the JVM is terminated mid-legs; and the
-  * A/B phase is capped by the remaining wall budget
-  * (`SPARK_GRAFT_BENCH_BUDGET_S`, default 3300 s) — flagged legs past
-  * the cap get explicit "unadjudicated: budget" notes instead of the
-  * phase dying mid-child.
+  * A kill costs the tail, never the run: each completed leg immediately
+  * rewrites `bench_partial.json` (atomic rename — survives SIGKILL), and a
+  * shutdown hook prints the one-line result from whatever legs completed,
+  * marked `"partial":true` while legs are still outstanding.
   */
 object Bench {
-
-  /** Auto-A/B clearing rules (the SUMMARY's "exonerated" predicate;
-    * BenchAbSpec pins them). Wall rule: an isolated fresh-JVM wall
-    * within 1.5× the prior floor is session noise. Micro-leg cpu rule
-    * (r18): for prev < 0.5 s — under the fresh JVM's own scheduling+JIT
-    * floor, so the wall comparison is meaningless — exonerate when the
-    * isolated run's total cpu is at or below the prev WALL: the work
-    * cannot have grown past the old floor, while a real 3× work
-    * regression grows cpu with wall and still flags.
-    */
-  private[graft] def abWallCleared(prev: Double, walls: Seq[Double]): Boolean =
-    walls.nonEmpty && walls.min <= 1.5 * prev
-
-  private[graft] def abCpuCleared(
-      prev: Double, walls: Seq[Double], cpus: Seq[Double]): Boolean =
-    walls.nonEmpty && prev < 0.5 && cpus.nonEmpty && cpus.min <= prev
-
-  private[graft] def abCleared(
-      prev: Double, walls: Seq[Double], cpus: Seq[Double]): Boolean =
-    abWallCleared(prev, walls) || abCpuCleared(prev, walls, cpus)
 
   private val Headline: Seq[String] = Seq(
     "q1_pricing_summary",
@@ -225,17 +197,7 @@ object Bench {
     "pr_renorm",
     "pr_graphx")
 
-  /** Scaled flagship graph: 2M power-law edges over 200k vertices, run for
-    * exactly 10 renormalizing iterations (delta = 0 forces maxIter) so DF
-    * and GraphX do identical work and the numbers are comparable across
-    * rounds.
-    */
-  private[graft] val ScaledVerts = 200000L
-  private[graft] val ScaledEdges = 2000000L
-  private[graft] val ScaledParams =
-    PageRank.Params(beta = 0.85, delta = 0.0, maxIter = 10)
-
-  /** Previous ROUND's per-query min walls — the auto-A/B baseline.
+  /** Previous ROUND's per-query min walls — the floor-watch baseline.
     *
     * Primary source: the highest-numbered `BENCH_r{N}.json` driver
     * artifact, which is written exactly once per round at judging time.
@@ -245,13 +207,13 @@ object Bench {
     * same-round floor and a genuine 8.01 → 29.59 s mover
     * (pagerank_scaled_graphx, r10) sailed through unflagged. Round
     * artifacts can't be overwritten mid-round, so they are the floors
-    * that make "moved >3× vs last round" mean what it says.
+    * that make "moved vs last round" mean what it says.
     *
     * The artifact alone is NOT a complete floor set: when the bench line
     * overflows the driver's 2000-char tail, the emitted queries map is a
     * slowest-legs subset marked `"_dropped_fastest": N` (inside `queries`
     * in the committed artifacts, top-level in newer lines; r11 dropped 39
-    * legs that way), so a fast leg regressing 3× would have no floor and
+    * legs that way), so a fast leg regressing would have no floor and
     * sail through — the same failure mode the artifact move was meant to
     * eliminate. And the artifact records single-run session walls taken
     * under whatever load that round ran at, where the sidecar stores
@@ -264,13 +226,13 @@ object Bench {
     * loses to the artifact; a fast one only lowers the floor, which flags
     * MORE, never less). Residual exposure is only the dropped-fastest
     * keys, whose floors come from the sidecar alone — annotated in the
-    * source name so the notes say what adjudicated the round.
+    * source name so the notes say what set the floors.
     *
     * Every source must match this run's sf AND core count (`"cpus"` in
     * `BENCH_rN.json`, `"cores"` in the floors snapshot and the sidecar):
     * the 8-core r19 run's d13 floor was 18.74 s against 6.29 s at 32
     * cores, so a floor from another core count loosens or tightens the
-    * 3× gate by accident. A source that records no core count is not
+    * floor watch by accident. A source that records no core count is not
     * used, and of the round files the newest matching one is read. With
     * no matching source the map is empty and the name reads
     * `no baseline at N cores`. Returns (floors, sourceName).
@@ -360,7 +322,7 @@ object Bench {
 
   private def fmt(d: Double): String = if (d < 0) "-1" else f"$d%.3f"
 
-  /** Immutable floor snapshot for NEXT round's detector: the full
+  /** Immutable floor snapshot for NEXT round's floor watch: the full
     * (untruncated) queries_min map under the current round's number —
     * max(N of BENCH_rN.json)+1, since the driver writes BENCH_r{N}.json
     * at judging time AFTER this run. MERGED with any existing snapshot
@@ -395,88 +357,6 @@ object Bench {
     ()
   } catch { case _: Throwable => () } // floor snapshot is best-effort
 
-  // Spark 4.x on JDK 17 module options for the forked A/B child (the same
-  // list build.sbt passes to this JVM; spark-submit would inject them).
-  private val Jdk17AddOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  /** Isolated fresh-JVM A/B for one flagged query: fork a child `java`
-    * with THIS JVM's classpath running [[QBench]] (3 timed runs after a
-    * session warm-up) and parse its wall/cpu samples. Runs after
-    * `spark.stop()` so the child measures on an otherwise-idle box —
-    * but the PARENT JVM's committed heap is still resident (stop()
-    * frees blocks, not RSS), so the child heap is bounded independently
-    * of `SPARK_DRIVER_MEM` (`SPARK_GRAFT_AB_MEM`, default 8g) and a
-    * child the OS kills (rc 137/143 — the r17 driver run lost two
-    * adjudications this way) is RETRIED ONCE at a smaller heap (5g)
-    * after a parent `System.gc()` nudge, the retry annotated in the
-    * returned error/samples. `timeoutS` caps EACH attempt's wall
-    * (budget-derived by the caller). Returns (walls, cpus,
-    * errorOrEmpty).
-    */
-  private def isolatedAb(
-      name: String, sfDir: String, cpus: String,
-      timeoutS: Long = 900L): (Seq[Double], Seq[Double], String) = {
-    def attempt(heap: String): (Seq[Double], Seq[Double], String, Int) =
-      try {
-        val javaBin =
-          java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString
-        val cmd = Seq(javaBin) ++ Jdk17AddOpens ++ Seq(
-          "-Xmx" + heap,
-          "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-          "-cp", sys.props.getOrElse("java.class.path", ""),
-          "graft.QBench", name)
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-        pb.redirectErrorStream(true)
-        val proc = pb.start()
-        val killer = new Thread(() => {
-          try {
-            if (!proc.waitFor(timeoutS, java.util.concurrent.TimeUnit.SECONDS)) {
-              proc.destroyForcibly(); ()
-            }
-          } catch { case _: InterruptedException => () }
-        })
-        killer.setDaemon(true)
-        killer.start()
-        val out = new java.io.BufferedReader(
-          new java.io.InputStreamReader(proc.getInputStream, "UTF-8"))
-        val sb = new StringBuilder
-        var line = out.readLine()
-        while (line != null) { sb.append(line).append('\n'); line = out.readLine() }
-        val rc = proc.waitFor()
-        val pairs = "wall=([0-9.]+) cpu=([0-9.]+)".r.findAllMatchIn(sb.toString).toSeq
-        if (rc != 0 || pairs.isEmpty)
-          (Nil, Nil, s"child rc=$rc, no samples (tail: ${sb.toString.takeRight(160).replaceAll("[\"\\\\\\n]", " ")})", rc)
-        else (pairs.map(_.group(1).toDouble), pairs.map(_.group(2).toDouble), "", rc)
-      } catch {
-        case t: Throwable =>
-          (Nil, Nil, s"spawn failed: ${t.getClass.getSimpleName}", -1)
-      }
-    val first = attempt(sys.env.getOrElse("SPARK_GRAFT_AB_MEM", "8g"))
-    first match {
-      case (Nil, Nil, err, rc) if rc == 137 || rc == 143 =>
-        // OS kill, almost always memory pressure alongside the session
-        // JVM's resident heap: nudge the parent to uncommit (G1 on
-        // JDK 17 returns freed regions after a full GC) and retry once
-        // at a heap that fits beside it.
-        System.gc()
-        val (w2, c2, err2, _) = attempt("5g")
-        if (w2.nonEmpty) (w2, c2, "retried at 5g heap after rc=" +
-          (if (rc == 137) "137" else "143") + " kill")
-        else (Nil, Nil, s"$err; retry at 5g heap also failed ($err2)")
-      case (w, c, err, _) => (w, c, err)
-    }
-  }
-
   /** 1-minute loadavg (first field of /proc/loadavg); -1 if unreadable. */
   private def load1(): Double =
     try {
@@ -504,19 +384,27 @@ object Bench {
     * JVM-GC milliseconds (summed task metrics — GC thrash inflates wall
     * AND gc_ms while CPU steal inflates wall alone), peak load1, end-of-
     * run driver RSS (MB), and the persistent-RDD count the query left
-    * behind.
+    * behind. A failed run also carries its exception class and message.
     */
-  private final case class Sample(wall: Double, cpuS: Double, gcMs: Long,
-      load: Double, rss: Double, leaked: Int)
+  private[graft] final case class Sample(wall: Double, cpuS: Double, gcMs: Long,
+      load: Double, rss: Double, leaked: Int, error: Option[String] = None)
+
+  /** The core count every main runs Spark at: `SPARK_GRAFT_CPUS`, else
+    * this machine's available processors. Bench floors are keyed by it,
+    * so an unset variable must name the box the run is on.
+    */
+  private[graft] def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The session [[Bench]] and [[QBench]] both measure on. One builder,
-    * because [[isolatedAb]] compares a QBench child's numbers against
-    * Bench floors: the two sides must run under the same confs.
+    * because a QBench re-measure is read against Bench floors: the two
+    * sides must run under the same confs.
     */
-  private[graft] def session(cpus: String): SparkSession = {
+  private[graft] def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -570,6 +458,67 @@ object Bench {
     }
   }
 
+  /** Unpersist EVERYTHING between queries/runs: cache-manager entries
+    * and raw persistent RDDs (GraphX graphs, checkpoint backings —
+    * invisible to `clearCache`). Returns how many of them were LEAKS —
+    * persisted RDDs that are NOT checkpoint backings of the leg's own
+    * result. Iterative results are checkpoint-backed BY DESIGN (the
+    * backing IS the result; QueriesSpec enforces the same contract per
+    * query at sf0.001), so counting those as "leaked" buried the
+    * signal: r8's diag showed 28 legs leaking 1-4 RDDs, all but a
+    * handful of which were result backings. With `keep` excluded, a
+    * non-zero count here is a genuine stray persist.
+    */
+  private[graft] def sweep(spark: SparkSession, keep: Set[Int] = Set.empty): Int = {
+    spark.catalog.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs
+    val leaked = persisted.values.count(r => !keep(r.id))
+    persisted.values.foreach(_.unpersist(blocking = false))
+    leaked
+  }
+
+  /** One timed run of a leg, the loop both [[Bench]] and [[QBench]]
+    * measure with. `body` returns the leg's result DataFrame when it has
+    * one (query legs) so its checkpoint backings can be excluded from the
+    * leak count; sink/flagship legs release their own state and return
+    * None. A throw is caught, so one bad leg cannot stop the run: the
+    * sample's wall and cpu read -1 and its error names the exception.
+    */
+  private[graft] def timeOnce(spark: SparkSession, meter: StageMeter)(
+      body: => Option[DataFrame]): Sample = {
+    val l0 = load1()
+    meter.reset()
+    val t0 = System.nanoTime()
+    val res = try Right(body) catch { case t: Throwable => Left(t) }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val (cpu, gc) = meter.read()
+    val l1 = math.max(l0, load1())
+    val rss = rssMb()
+    val keep = res.toOption.flatten.map(GraftInternals.checkpointRddIds)
+      .getOrElse(Set.empty[Int])
+    val leaked = sweep(spark, keep)
+    res match {
+      case Right(_) => Sample(wall, cpu, gc, l1, rss, leaked)
+      case Left(t) =>
+        val msg = Option(t.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+        Sample(-1.0, -1.0, gc, l1, rss, leaked, Some(s"${t.getClass.getName}: $msg"))
+    }
+  }
+
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character (< 0x20) escaped — a tab or CR in an oracle's SQL or an
+    * exception message would otherwise break the reader's `json.load`.
+    */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** The one-line JSON result Bench prints on stdout: per-leg walls (`walls`,
     * wall < 0 = the leg failed), their total over the legs that ran,
     * and the names of the failed legs under a top-level `"failed"` key.
@@ -615,35 +564,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cores = cpus.toInt
+    val cores = cpus
     val here = new java.io.File(".")
     // Read before this run overwrites the sidecar at the end (and
     // preferentially from the per-round BENCH_r artifact — see scaladoc).
     val (prevMin, prevSource) = previousMinWalls(here, sfDir, cores)
 
-    // ---- TIMEOUT-PROOFING (r16: the driver's run was SIGTERMed mid
-    // A/B re-measure and, because this harness printed its JSON exactly
-    // once at the very end, the whole round's bench data was lost).
-    // Three layers, so a kill costs the tail, never the round:
-    //  1. per-leg: every completed leg immediately rewrites the
-    //     bench_partial.json sidecar (atomic rename; survives SIGKILL)
-    //     and logs a BENCH_LEG stderr line;
-    //  2. early emission: the driver-parsed final line is printed as
-    //     soon as the measured legs finish — BEFORE the A/B phase,
-    //     whose children are the slow tail — and printed again as the
-    //     true last line on normal exit (A/B progress goes to stderr,
-    //     so the early copy stays the last stdout JSON if the phase is
-    //     killed);
-    //  3. a JVM shutdown hook (SIGTERM runs these) emits a
-    //     partial-but-parseable line from whatever legs completed.
-    // The A/B phase is additionally capped by the remaining WALL budget
-    // (SPARK_GRAFT_BENCH_BUDGET_S, default 3300 s): flagged legs past
-    // the cap get an explicit "unadjudicated: budget" note instead of
-    // the phase dying mid-child.
+    // A kill costs the tail, never the run: every completed leg
+    // immediately rewrites the bench_partial.json sidecar (atomic rename;
+    // survives SIGKILL) and logs a BENCH_LEG stderr line, and a JVM
+    // shutdown hook (SIGTERM runs these) prints a parseable result line
+    // from whatever legs completed.
     val runStartNs = System.nanoTime()
-    val benchBudgetS: Double = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(3300.0)
     def elapsedS(): Double = (System.nanoTime() - runStartNs) / 1e9
     val resultsBuf =
       scala.collection.mutable.ArrayBuffer.empty[(String, (Sample, Double))]
@@ -674,17 +606,14 @@ object Bench {
       } catch { case _: Throwable => () } // sidecar is best-effort
     val normalExit = new java.util.concurrent.atomic.AtomicBoolean(false)
     // legsAllDone: every measured leg is in (set the moment the last leg
-    // lands, BEFORE the recall/A-B tail) — the hook labels its line
-    // partial by THIS, not by mere exit state: a kill in the recall or
-    // A/B phase has a complete measurement set and must say so (the r17
-    // ADVICE mislabel; an sf0.001 kill drill then caught the same
-    // mislabel in the recall window). emittedComplete: the early
-    // partial=false line already went out — the hook stays silent, that
-    // line is already the stdout tail the driver parses.
+    // lands, BEFORE the recall and output tail) — the hook labels its
+    // line partial by THIS, not by mere exit state: a kill in that tail
+    // has a complete measurement set and must say so (the r17 ADVICE
+    // mislabel; an sf0.001 kill drill then caught the same mislabel in
+    // the recall window).
     val legsAllDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val emittedComplete = new java.util.concurrent.atomic.AtomicBoolean(false)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      if (!normalExit.get && !emittedComplete.get) {
+      if (!normalExit.get) {
         val rs = snapshot()
         if (rs.nonEmpty) {
           println(driverLine(rs, partial = !legsAllDone.get))
@@ -692,61 +621,24 @@ object Bench {
         }
       }
     }))
-    val spark = session(cpus)
-    val sc = spark.sparkContext
+    val spark = session(cores)
     val meter = new StageMeter(spark)
 
-    /** Unpersist EVERYTHING between queries/runs: cache-manager entries
-      * and raw persistent RDDs (GraphX graphs, checkpoint backings —
-      * invisible to `clearCache`). Returns how many of them were LEAKS —
-      * persisted RDDs that are NOT checkpoint backings of the leg's own
-      * result. Iterative results are checkpoint-backed BY DESIGN (the
-      * backing IS the result; QueriesSpec enforces the same contract per
-      * query at sf0.001), so counting those as "leaked" buried the
-      * signal: r8's diag showed 28 legs leaking 1-4 RDDs, all but a
-      * handful of which were result backings. With `keep` excluded, a
-      * non-zero count here is a genuine stray persist.
-      */
-    def sweep(keep: Set[Int] = Set.empty): Int = {
-      spark.catalog.clearCache()
-      val persisted = sc.getPersistentRDDs
-      val leaked = persisted.values.count(r => !keep(r.id))
-      persisted.values.foreach(_.unpersist(blocking = false))
-      leaked
-    }
-
-    /** `body` returns the leg's result DataFrame when it has one (query
-      * legs) so its checkpoint backings can be excluded from the leak
-      * count; sink/flagship legs release their own state and return None.
-      */
-    def timeOnce(body: => Option[org.apache.spark.sql.DataFrame]): Sample = {
-      val l0 = load1()
-      meter.reset()
-      val t0 = System.nanoTime()
-      val res = try Some(body) catch { case _: Throwable => None }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val (cpu, gc) = meter.read()
-      val l1 = math.max(l0, load1())
-      val rss = rssMb()
-      val keep = res.flatten.map(GraftInternals.checkpointRddIds)
-        .getOrElse(Set.empty[Int])
-      val leaked = sweep(keep)
-      if (res.isDefined) Sample(wall, cpu, gc, l1, rss, leaked)
-      else Sample(-1.0, -1.0, gc, l1, rss, leaked)
-    }
-
     // min/mean over `runs` executions; diagnostics ride with the min-wall
-    // run (the number the driver compares). The first run of each query
-    // absorbs whole-stage-codegen compilation and JIT warm-up (measured
-    // 3-8x inflation on a cold JVM); the reference's 6.35 s baseline
-    // likewise excludes interpreter start-up.
-    def time(runs: Int)(body: => Option[org.apache.spark.sql.DataFrame])
-        : (Sample, Double) = {
-      val ss = (1 to runs).map(_ => timeOnce(body)).filter(_.wall >= 0)
-      if (ss.isEmpty) (Sample(-1.0, -1.0, -1L, -1.0, -1.0, 0), -1.0)
+    // run (the number rounds compare), the error with the first
+    // failed run. The first run of each query absorbs whole-stage-codegen
+    // compilation and JIT warm-up (measured 3-8x inflation on a cold
+    // JVM); the reference's 6.35 s baseline likewise excludes interpreter
+    // start-up.
+    def time(runs: Int)(body: => Option[DataFrame]): (Sample, Double) = {
+      val all = (1 to runs).map(_ => timeOnce(spark, meter)(body))
+      val ss = all.filter(_.error.isEmpty)
+      val error = all.flatMap(_.error).headOption
+      if (ss.isEmpty) (Sample(-1.0, -1.0, -1L, -1.0, -1.0, 0, error), -1.0)
       else (ss.minBy(_.wall).copy(
         load = ss.map(_.load).max,
-        leaked = ss.map(_.leaked).max),
+        leaked = ss.map(_.leaked).max,
+        error = error),
         ss.map(_.wall).sum / ss.size)
     }
 
@@ -792,7 +684,7 @@ object Bench {
       GraftInternals.freeLocalCheckpoint(graft.release.ReleaseStore.init(
         spark, stored, "doc_id", "text", p22Params,
         p22Template.resolve("st").toString))
-      sweep()
+      sweep(spark)
       ()
     }
     // Shared-stage release materialization (r16 verdict #7): p20, p21
@@ -810,29 +702,26 @@ object Bench {
       rel.write.mode("overwrite")
         .parquet(relTemplate.resolve("released").toString)
       GraftInternals.freeLocalCheckpoint(rel)
-      sweep()
+      sweep(spark)
       ()
     }
 
     // Each leg lands in the buffer (and the partial sidecar) the moment
-    // it completes — see the timeout-proofing note at the top of main.
-    def leg(name: String, runs: Int)(
-        body: => Option[org.apache.spark.sql.DataFrame]): Unit = {
+    // it completes — see the kill note at the top of main.
+    def leg(name: String, runs: Int)(body: => Option[DataFrame]): Unit = {
       val r = time(runs)(body)
       resultsBuf.synchronized { resultsBuf += name -> r }
       System.err.println(
         f"BENCH_LEG $name min=${r._1.wall}%.3f mean=${r._2}%.3f " +
-          f"(${resultsBuf.size} legs, ${elapsedS()}%.0f s elapsed)")
+          f"(${resultsBuf.size} legs, ${elapsedS()}%.0f s elapsed)" +
+          r._1.error.fold("")(" error=" + _))
       writePartialSidecar()
     }
+    // A leg QBench can also run by name: one body for both mains.
+    def namedLeg(name: String, runs: Int): Unit =
+      leg(name, runs)(QBench.legs(name)(spark, sfDir))
 
-    Headline.foreach { name =>
-      leg(name, 2) {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.count()
-        Some(df)
-      }
-    }
+    Headline.foreach(namedLeg(_, 2))
     leg("sinks_training_shards", 2) {
       val dir = sinksDir()
       try {
@@ -890,43 +779,16 @@ object Bench {
         None
       } finally rmTree(dir)
     }
-    leg("pagerank_wikidata", 3) { // 3 runs: this leg is THE
-      // baseline-bar artifact (<= 2x of BASELINE.md 6.35 s); one extra
-      // run keeps a single noisy sample from deciding the round.
-      val edges = PageRank.edgesFromText(spark, "/root/reference/WikiData.txt")
-      val res = PageRank.run(spark, edges, PageRank.Params(beta = 0.85, delta = 1e-5))
-      val n = PageRank.topK(res.ranks, 100).count()
-      require(n == 100)
-      res.release()
-      None
-    }
-    leg("pagerank_wikidata_graphx", 2) {
-      // Scale-path twin of the flagship: identical semantics/iterations
-      // (GraphXSpec asserts 1e-9 L1 parity), Pregel-style execution.
-      val edges = PageRank.edgesFromText(spark, "/root/reference/WikiData.txt")
-      val res = PageRankGraphX.run(
-        spark, edges, PageRank.Params(beta = 0.85, delta = 1e-5))
-      require(PageRank.topK(res.ranks, 100).count() == 100)
-      res.release()
-      None
-    }
-    leg("pagerank_scaled", 1) {
-      val edges = SyntheticGraph.powerLaw(spark, ScaledVerts, ScaledEdges)
-      val res = PageRank.run(spark, edges, ScaledParams)
-      require(res.iterations == ScaledParams.maxIter)
-      require(PageRank.topK(res.ranks, 100).count() == 100)
-      res.release()
-      None
-    }
-    leg("pagerank_scaled_graphx", 1) {
-      val edges = SyntheticGraph.powerLaw(spark, ScaledVerts, ScaledEdges)
-      val res = PageRankGraphX.run(spark, edges, ScaledParams)
-      require(res.iterations == ScaledParams.maxIter)
-      require(PageRank.topK(res.ranks, 100).count() == 100)
-      res.release()
-      None
-    }
-    legsAllDone.set(true) // recall/A-B kills now carry a complete set
+    // pagerank_wikidata gets 3 runs: it is THE baseline-bar artifact
+    // (<= 2x of BASELINE.md 6.35 s), and one extra run keeps a single
+    // noisy sample from deciding the round. Its GraphX twin has identical
+    // semantics/iterations (GraphXSpec asserts 1e-9 L1 parity); the
+    // scaled pair is long enough that one run on the warm JVM suffices.
+    namedLeg("pagerank_wikidata", 3)
+    namedLeg("pagerank_wikidata_graphx", 2)
+    namedLeg("pagerank_scaled", 1)
+    namedLeg("pagerank_scaled_graphx", 1)
+    legsAllDone.set(true) // recall/output-tail kills now carry a complete set
     val results: Seq[(String, (Sample, Double))] = snapshot()
 
     // ANN recall for the TRAINED approximate paths — their centroids are
@@ -936,23 +798,23 @@ object Bench {
     // protocol, recall@5 of n4 KMeans-IVF vs an exact all-pairs top-5
     // under n4's own protocol (every vector queries, self excluded).
     val recalls: Seq[(String, Double)] = try {
-      def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      def pairSet(df: DataFrame): Set[(Long, Long)] =
         df.select("query_id", "cand_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       val exactN1 = pairSet(SparkEntry.queries("n1_ann_brute")(spark, sfDir))
       val gotN9 = pairSet(SparkEntry.queries("n9_pq_trained")(spark, sfDir))
-      sweep()
+      sweep(spark)
       val v = Tables.embeddings(spark, sfDir).select(
         org.apache.spark.sql.functions.col("vec_id"),
         graft.sim.Similarity.asDouble(
           org.apache.spark.sql.functions.col("embedding")).as("v"))
       val exactAll = pairSet(graft.sim.Similarity.annBruteAll(v, k = 5))
       val gotN4 = pairSet(SparkEntry.queries("n4_ann_ivf")(spark, sfDir))
-      sweep()
+      sweep(spark)
       val gotN11 = pairSet(SparkEntry.queries("n11_ann_ivf_multiprobe")(spark, sfDir))
-      sweep()
+      sweep(spark)
       val gotN13 = pairSet(SparkEntry.queries("n13_ann_ivf_tuned")(spark, sfDir))
-      sweep()
+      sweep(spark)
       def r(got: Set[(Long, Long)], exact: Set[(Long, Long)]): Double =
         if (exact.isEmpty) -1.0
         else got.intersect(exact).size.toDouble / exact.size
@@ -966,180 +828,17 @@ object Bench {
     } catch {
       case t: Throwable =>
         System.err.println(s"recall stage failed: ${t.getClass.getSimpleName}: ${t.getMessage}")
-        sweep(); Seq.empty
+        sweep(spark); Seq.empty
     }
 
     val loadEnd = load1()
     rmTree(p22Template)
     rmTree(relTemplate)
-    // Free the session's executors/heap BEFORE the isolated A/B children so
-    // they measure on a box running Spark once, not twice.
     spark.stop()
 
-    def fmtN(d: Double): String = if (d < 0) "-1" else f"$d%.2f"
-
-    // Early emission (timeout-proofing layer 2): the measured legs are
-    // complete — put the driver-parseable line AND the floor snapshot on
-    // record BEFORE the A/B phase, whose forked children are the slow
-    // tail a driver timeout lands on. A/B progress prints to stderr, so
-    // if the phase is killed this stays the last stdout JSON.
-    println(driverLine(results, partial = false))
-    Console.out.flush()
-    emittedComplete.set(true) // a kill from here on costs only A/B notes
     writeFloorSnapshot(here, sfDir, cores,
       results.map { case (k, (s, _)) => k -> s.wall }.toMap)
-
-    // SELF-DEFENSE against session noise (the r6 lesson: i4_personalized
-    // read 14.6 s in-session, 3.2 s isolated — a phantom regression that
-    // cost a manual adjudication). Any query whose min wall moved >3× vs
-    // the previous round's committed sidecar gets an automatic fresh-JVM
-    // A/B via QBench; the pair lands in bench_diag.json so the artifact
-    // adjudicates itself. Floors: prev ≥ 0.25 s and session ≥ 1 s keep
-    // tiny-query jitter out. No count cap (r7 lesson: 12 movers flagged,
-    // the fixed top-5 cap left 7 unadjudicated) — flagged queries are
-    // ranked worst-ratio-first and measured until the 1200 s child time
-    // budget runs out, so the biggest movers ALWAYS get the fresh JVM and
-    // any budget exhaustion is named per-query in the notes.
-    val flagged = results.collect {
-      case (k, (s, _))
-          if s.wall >= 1.0 &&
-            prevMin.get(k).exists(p => p >= 0.25 && s.wall > 3.0 * p) =>
-        (k, prevMin(k), s.wall)
-    }.sortBy { case (_, p, w) => -(w / p) }
-    val (abEligible, abSkipped) =
-      flagged.partition { case (k, _, _) =>
-        SparkEntry.queries.contains(k) || QBench.harnessLegs.contains(k)
-      }
-    // The A/B phase cap: its own 1200 s ceiling AND the remaining WALL
-    // budget (less 120 s headroom for the emission tail), whichever is
-    // tighter — r16's driver run was SIGTERMed INSIDE this phase, so it
-    // must degrade to explicit "unadjudicated: budget" notes rather
-    // than run past the driver's wall.
-    val AbBudgetS =
-      math.min(1200.0, math.max(0.0, benchBudgetS - elapsedS() - 120.0))
-    val abStart = System.nanoTime()
-    def abElapsed(): Double = (System.nanoTime() - abStart) / 1e9
-    // Per-leg load context (the r15/r14 lesson: two rounds in a row the
-    // driver's post-commit run landed on a loaded box and manufactured
-    // adjudication debt): each flagged leg is annotated with the load1
-    // its SESSION run saw and the load1 its isolated re-measure saw, and
-    // any reading above cores/4 carries an explicit UNDER-LOAD marker —
-    // pre-sorting flagged-under-load legs (bisect them last, they are
-    // almost always contention) from flagged-while-quiet ones (the legs
-    // that can actually move).
-    val loadedCut = cpus.toDouble / 4.0
-    val legLoad: Map[String, Double] =
-      results.map { case (k, (s, _)) => k -> s.load }.toMap
-    def loadTag(l: Double): String =
-      if (l < 0) "load1 unknown"
-      else if (l > loadedCut) f"load1 $l%.1f UNDER-LOAD (> cores/4 = $loadedCut%.0f)"
-      else f"load1 $l%.1f quiet"
-    val autoAb: Seq[(String, Double, Double, Seq[Double], Seq[Double], String, Double)] =
-      abEligible.map { case (k, p, w) =>
-        // The cap is enforced PER CHILD via the child timeout, not just
-        // between children (the r17 run overran its 303 s cap by 60 s:
-        // the old max(60, remaining) floor handed a child more time than
-        // the phase had left). A child needs ~120 s to be worth starting
-        // (JVM + session warm-up before the first sample); less than
-        // that left → an explicit budget note instead of a doomed fork.
-        val remaining = AbBudgetS - abElapsed()
-        if (remaining < 120.0)
-          (k, p, w, Seq.empty[Double], Seq.empty[Double],
-            f"unadjudicated: budget — A/B cap ${AbBudgetS}%.0f s (wall " +
-              f"budget ${benchBudgetS}%.0f s) leaves ${math.max(0.0, remaining)}%.0f s, " +
-              "below the 120 s a child needs",
-            -1.0)
-        else {
-          System.err.println(f"auto A/B: re-measuring $k (prev $p%.2f s, session $w%.2f s) on a fresh JVM")
-          val l0 = load1()
-          val childCap = math.min(900L, remaining.toLong)
-          val (walls, cpuSamples, err) = isolatedAb(k, sfDir, cpus, childCap)
-          (k, p, w, walls, cpuSamples, err, math.max(l0, load1()))
-        }
-      }
-    // GC/RSS context for the flagged leg's session run (verdict r17 #7:
-    // adjudications kept resting on load1-only inference; gc_ms vs wall
-    // separates GC thrash from CPU steal as recorded evidence).
-    val legGcRss: Map[String, (Long, Double)] =
-      results.map { case (k, (s, _)) => k -> (s.gcMs, s.rss) }.toMap
-    def gcTag(k: String): String = legGcRss.get(k) match {
-      case Some((gc, rss)) if gc >= 0 =>
-        f", session gc ${gc / 1000.0}%.1fs" +
-          (if (rss >= 0) f" rss ${rss}%.0fMB" else "")
-      case _ => ""
-    }
-    val autoNotes: Seq[String] = {
-      val measured = autoAb.map { case (k, p, w, walls, cpuSamples, err, isoLoad) =>
-        val loads = s"session ${loadTag(legLoad.getOrElse(k, -1.0))}, " +
-          s"iso ${loadTag(isoLoad)}" + gcTag(k)
-        if (walls.isEmpty) s""""auto A/B $k: isolated re-measure FAILED ($err) — session ${fmtN(w)}s vs prev ${fmtN(p)}s unadjudicated ($loads)""""
-        else {
-          // NOTE on the second verdict: `prev` is the prior round's
-          // committed min, which for late-position queries came from a
-          // long-warm shared JVM — a 3-run fresh JVM has a higher JIT
-          // floor for many-small-stage loops (r8 bisect: g7_kcore showed
-          // an identical ~1.2 s iso floor on BOTH the r6 and r7 trees
-          // while its in-session r6 min was 0.67 s). So a confirmed flag
-          // here means "re-bisect against the prior TREE under this same
-          // harness", not "code regressed".
-          // Verdicts via the object-level rules (BenchAbSpec pins them):
-          // wall rule first, then the r18 micro-leg cpu rule (a23 flagged
-          // at prev 0.26 s and could never wall-exonerate — a fresh JVM's
-          // scheduling+JIT floor is ~0.7-1 s regardless of the leg).
-          val verdict =
-            if (abWallCleared(p, walls)) "session noise, exonerated"
-            else if (abCpuCleared(p, walls, cpuSamples))
-              "noise-band micro-leg: fresh-JVM wall floor sits above the " +
-                "sub-0.5s warm prev, but isolated cpu <= prev wall — work " +
-                "unchanged, exonerated"
-            else "isolated min still >1.5x prev — regression candidate; " +
-              "bisect vs prior tree under this harness before believing it " +
-              "(prev may be a warm-JVM in-session min below the fresh-JVM floor)"
-          val retried = if (err.isEmpty) "" else s"; $err"
-          s""""auto A/B $k: prev ${fmtN(p)}s, session ${fmtN(w)}s; isolated fresh-JVM wall [${walls.map(fmtN).mkString(",")}] cpu [${cpuSamples.map(fmtN).mkString(",")}]$retried — $verdict ($loads)""""
-        }
-      }
-      val skipped = abSkipped.map { case (k, p, w) =>
-        s""""auto A/B $k: flagged (prev ${fmtN(p)}s -> session ${fmtN(w)}s) but not isolable on a fresh JVM (session-shared state, e.g. the sinks legs' release template) — A/B manually in a full Bench session""""
-      }
-      // The round-summary verdict line is DERIVED from the individual
-      // verdicts, never hand-written: r12's commit message said
-      // "auto-A/B clean" while the sidecar carried two `regression
-      // candidate` verdicts (true only on the 3x threshold, misleading
-      // about the detector's own output — r12 judge finding #1). This
-      // line is what the README/commit summary must quote.
-      val exonerated = autoAb.count { case (_, p, _, walls, cpus, _, _) =>
-        abCleared(p, walls, cpus)
-      }
-      val candidateLegs = autoAb.filter { case (_, p, _, walls, cpus, _, _) =>
-        walls.nonEmpty && !abCleared(p, walls, cpus)
-      }
-      val candidates = candidateLegs.size
-      val underLoad = candidateLegs.count { case (k, _, _, _, _, _, isoLoad) =>
-        legLoad.getOrElse(k, -1.0) > loadedCut || isoLoad > loadedCut
-      }
-      val failedOrSkipped = autoAb.count(_._4.isEmpty) + abSkipped.size
-      val summary =
-        if (prevMin.isEmpty) ""
-        else if (flagged.isEmpty)
-          s""""auto A/B SUMMARY: clean — no query moved >3x vs previous round (baseline: $prevSource; floors: prev>=0.25s, session>=1s)""""
-        else
-          s""""auto A/B SUMMARY: ${flagged.size} flagged — $exonerated exonerated, $candidates regression candidate(s) pending bisect ($underLoad of them UNDER-LOAD at >cores/4 — bisect those last), $failedOrSkipped unadjudicated (NOT clean unless candidates+unadjudicated are 0)""""
-      if (prevMin.isEmpty)
-        Seq(s""""auto A/B: no previous-round baseline (no same-sf, same-cores BENCH_r artifact, floors snapshot or bench_diag sidecar: $prevSource) — mover detection skipped this run"""")
-      else if (flagged.isEmpty)
-        Seq(summary)
-      else summary +: s""""auto A/B baseline: $prevSource"""" +: (measured ++ skipped)
-    }
-    val autoAbJson = autoAb.map { case (k, p, w, walls, cpuSamples, err, isoLoad) =>
-      "\"" + k + "\":{\"prev\":" + fmtN(p) + ",\"session\":" + fmtN(w) +
-        ",\"iso_wall\":[" + walls.map(fmtN).mkString(",") + "]" +
-        ",\"iso_cpu\":[" + cpuSamples.map(fmtN).mkString(",") + "]" +
-        ",\"session_load1\":" + fmt(legLoad.getOrElse(k, -1.0)) +
-        ",\"iso_load1\":" + fmt(isoLoad) +
-        (if (err.isEmpty) "" else ",\"err\":\"" + err + "\"") + "}"
-    }.mkString("{", ",", "}")
-
+    def fmtN(d: Double): String = if (d < 0) "-1" else f"$d%.2f"
     val qs = results.map { case (k, (s, _)) => "\"" + k + "\":" + fmt(s.wall) }
       .mkString("{", ",", "}")
     val qsMean = results.map { case (k, (_, avg)) => "\"" + k + "\":" + fmt(avg) }
@@ -1149,9 +848,9 @@ object Bench {
         ",\"gc_ms\":" + s.gcMs +
         ",\"rss_mb\":" + (if (s.rss < 0) "-1" else f"${s.rss}%.0f") +
         ",\"load1\":" + fmt(s.load) +
-        ",\"leaked_rdds\":" + s.leaked + "}"
+        ",\"leaked_rdds\":" + s.leaked +
+        s.error.fold("")(e => ",\"error\":" + jsonStr(e)) + "}"
     }.mkString("{", ",", "}")
-    val total = results.map(_._2._1.wall).filter(_ >= 0).sum
     // The driver captures only the LAST ~2000 chars of stdout and parses the
     // JSON line found there (r04's line, grown by the diag/mean maps, started
     // before that window — the round lost its perf record). So: the final
@@ -1159,20 +858,17 @@ object Bench {
     // well under the window net of sbt's trailing "[success]" line; the full
     // self-diagnosis payload goes to bench_diag.json (committed with the
     // round snapshot) and to an EARLIER stdout line for log readers.
-    // Standing context (pinned rounds 4-6, adjudicated by judge-run
-    // isolated A/Bs): in-session cpu_s for codegen/JIT-heavy queries
-    // (n2_ann_lsh, the PageRank loop family, GraphX probes) is
-    // JIT-position-dependent and NOT a cross-round signal on its own;
-    // walls swing ±30% with box state. The auto A/B notes below carry
-    // each run's adjudication.
-    val standingNote =
-      "\"in-session cpu_s for codegen/JIT-heavy queries (n2, PR loop family, GraphX) is JIT-position-dependent; walls swing ±30% with box state — see auto A/B notes for this round's adjudication\""
+    // Standing context (pinned rounds 4-6, adjudicated by isolated A/Bs):
+    // in-session cpu_s for codegen/JIT-heavy queries (n2_ann_lsh, the
+    // PageRank loop family, GraphX probes) is JIT-position-dependent and
+    // NOT a cross-round signal on its own; walls swing ±30% with box state.
+    val standingNote = jsonStr("in-session cpu_s for codegen/JIT-heavy queries (n2, PR loop family, GraphX) is JIT-position-dependent; walls swing ±30% with box state")
     // Round-over-round floor watch (r17 verdict #5): the ratio report the
-    // round comparison reads, with the SAME noise floor the auto-A/B
-    // detector applies — BOTH sides >= 0.25 s. Sub-noise legs (r17
-    // flagged a22/a23/a24 at 1.3-1.6x on 0.14-0.25 s floors — below any
-    // meaningful signal on a 32-thread box) are counted, never listed,
-    // so the floors comparison stops manufacturing noise-band flags.
+    // round comparison reads, with a noise floor on BOTH sides of 0.25 s.
+    // Sub-noise legs (r17 flagged a22/a23/a24 at 1.3-1.6x on 0.14-0.25 s
+    // floors — below any meaningful signal on a 32-thread box) are
+    // counted, never listed, so the floors comparison stops manufacturing
+    // noise-band flags. Bench lists; a listed leg is re-measured by hand.
     val floorWatch = results.collect {
       case (k, (s, _))
           if s.wall >= 0.25 &&
@@ -1187,29 +883,29 @@ object Bench {
       "\"" + k + "\":{\"prev\":" + fmtN(p) + ",\"wall\":" + fmtN(w) +
         ",\"ratio\":" + f"${w / p}%.2f" + "}"
     }.mkString("{", ",", "}")
-    val floorWatchNote =
-      s""""floor watch protocol: legs with wall > 1.3x prev floor AND both sides >= 0.25 s (the auto-A/B noise floor, applied to round-over-round reporting per the r17 verdict #5); $noiseExcluded sub-0.25s mover(s) excluded as noise-band this run""""
+    val floorWatchNote = jsonStr(
+      s"floor watch against $prevSource: legs with wall > 1.3x prev floor AND both sides >= 0.25 s; " +
+        s"$noiseExcluded sub-0.25s mover(s) excluded as noise-band this run; re-measure a listed " +
+        "leg on a fresh JVM with sbt \"runMain graft.QBench <leg>\" before believing it")
     val recallNotes = recalls.map { case (k, r) =>
       "\"recall " + k + " vs exact baseline: " + fmtN(r) + "\""
     }
     val recallJson = recalls
       .map { case (k, r) => "\"" + k + "\":" + fmtN(r) }
       .mkString("{", ",", "}")
-    val notes = ((standingNote +: recallNotes) ++ (floorWatchNote +: autoNotes))
-      .mkString(",")
+    val notes = ((standingNote +: recallNotes) :+ floorWatchNote).mkString(",")
     // The sidecar carries the FULL wall history (min + mean + cpu) so a
     // truncated stdout tail can never lose a round's perf record again.
     val diagJson =
-      s"""{"queries_min":$qs,"queries_mean":$qsMean,"diag":$diag,"auto_ab":$autoAbJson,"floor_watch":$floorWatchJson,"recall":$recallJson,"notes":[$notes],"cores":$cpus,"load1_start":${fmt(loadStart)},"load1_end":${fmt(loadEnd)},"sf":"$sfDir"}"""
+      s"""{"queries_min":$qs,"queries_mean":$qsMean,"diag":$diag,"floor_watch":$floorWatchJson,"recall":$recallJson,"notes":[$notes],"cores":$cores,"load1_start":${fmt(loadStart)},"load1_end":${fmt(loadEnd)},"sf":"$sfDir"}"""
     println(s"BENCH_DIAG $diagJson")
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_diag.json"),
         diagJson.getBytes("UTF-8"))
     } catch { case _: Throwable => () } // diag file is best-effort
-    // The early line already went out before the A/B phase; close the
-    // run with the same (complete) line as the TRUE last stdout line —
-    // the driver parses the tail, and BENCH_DIAG above must not be it.
+    // The TRUE last stdout line: the result is parsed from the tail, and
+    // BENCH_DIAG above must not be it.
     println(driverLine(results, partial = false))
     normalExit.set(true)
   }

@@ -14,7 +14,7 @@ object Flagship {
   def main(args: Array[String]): Unit = {
     val edgesPath = args.headOption.getOrElse("/root/reference/WikiData.txt")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_result"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Bench.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-flagship")

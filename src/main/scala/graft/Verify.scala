@@ -9,7 +9,7 @@ object Verify {
     // Optional extra args: restrict to the named queries (dev spot-check;
     // the driver always passes exactly <sfDir> <outDir> → full run).
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Bench.cpus.toString
     // Not Bench.session: this session keeps Spark's default
     // sort-based-aggregation fallback threshold, so that path stays
     // covered by the oracle compare.
@@ -38,18 +38,6 @@ object Verify {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Scale-regime guards: an oracle that is exact only below a documented
     // data size (the sketch rollups) is probed against the ACTUAL data; a
     // violated guard WITHDRAWS the oracle — loudly — instead of
@@ -70,7 +58,7 @@ object Verify {
       }
     }.toSet
     val json = (SparkEntry.oracleSql -- demoted)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jsonStr(k)}: ${Bench.jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

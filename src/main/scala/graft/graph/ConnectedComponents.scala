@@ -56,62 +56,59 @@ object ConnectedComponents {
       .filter(col("a").isNotNull && col("b").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val seed = e.filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-    val m = seed.count()
-    val parts = Fixpoint.loopPartitions(spark, m)
-
-    Fixpoint.withLoopConf(spark, parts) {
-      val verts = e.select(col("a").as("id"))
-        .union(e.select(col("b").as("id")))
+    try {
+      val seed = e.filter(col("a") =!= col("b"))
+        .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = verts.count()
-      if (n == 0) {
-        e.unpersist(); verts.unpersist()
-        return verts.select(col("id").as("member_id"), col("id").as("rep_id"))
-      }
+      val m = seed.count()
+      val parts = Fixpoint.loopPartitions(spark, m)
 
-      try {
-        // Edge state: undirected edges as (u, v); orientation is
-        // re-derived inside each star step as that step requires. A
-        // round's scalar is its constant-size signature (edge count +
-        // order-invariant xxhash64 XOR) and whether it repeats the last.
-        val first = Fixpoint.Round(seed, (s: DataFrame) => {
-          s.count()
-          e.unpersist() // the seed checkpoint no longer needs the pairs
-          ((-1L, -1L), false)
-        })
-        val (edges, _, _) = Fixpoint.iterate(first, 64, "star-contraction") {
-          case (_, (_, true), _) => None
-          case (edges, (signature, false), _) =>
-            Some(Fixpoint.Round(starRound(edges), (s: DataFrame) => {
-              val sig = s.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-              val next = (sig.getLong(0), if (sig.isNullAt(1)) 0L else sig.getLong(1))
-              (next, next == signature)
-            }))
-        }
-
-        // Fixpoint: a union of stars (center = component min, stored as
-        // (u=center, v=member) after canonicalization). Every non-center
-        // member appears in exactly one star edge; centers and isolated
-        // vertices label themselves.
+      Fixpoint.withLoopConf(spark, parts) {
+        val verts = e.select(col("a").as("id"))
+          .union(e.select(col("b").as("id")))
+          .distinct()
+          .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          val memberLabel = edges
-            .select(col("v").as("id"), col("u").as("label"))
-            .groupBy(col("id")).agg(min(col("label")).as("label"))
-          verts.join(memberLabel, Seq("id"), "left")
-            .select(col("id").as("member_id"),
-              coalesce(col("label"), col("id")).as("rep_id"))
-            .orderBy(col("member_id"))
-            .localCheckpoint(true)
-        } finally GraftInternals.freeLocalCheckpoint(edges)
-      } finally {
-        e.unpersist()
-        verts.unpersist()
+          if (verts.count() == 0)
+            verts.select(col("id").as("member_id"), col("id").as("rep_id"))
+          else {
+            // Edge state: undirected edges as (u, v); orientation is
+            // re-derived inside each star step as that step requires. A
+            // round's scalar is its constant-size signature (edge count +
+            // order-invariant xxhash64 XOR) and whether it repeats the last.
+            val first = Fixpoint.Round(seed, (s: DataFrame) => {
+              s.count()
+              e.unpersist() // the seed checkpoint no longer needs the pairs
+              ((-1L, -1L), false)
+            })
+            val (edges, _, _) = Fixpoint.iterate(first, 64, "star-contraction") {
+              case (_, (_, true), _) => None
+              case (edges, (signature, false), _) =>
+                Some(Fixpoint.Round(starRound(edges), (s: DataFrame) => {
+                  val sig = s.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
+                  val next = (sig.getLong(0), if (sig.isNullAt(1)) 0L else sig.getLong(1))
+                  (next, next == signature)
+                }))
+            }
+
+            // Fixpoint: a union of stars (center = component min, stored as
+            // (u=center, v=member) after canonicalization). Every non-center
+            // member appears in exactly one star edge; centers and isolated
+            // vertices label themselves.
+            try {
+              val memberLabel = edges
+                .select(col("v").as("id"), col("u").as("label"))
+                .groupBy(col("id")).agg(min(col("label")).as("label"))
+              verts.join(memberLabel, Seq("id"), "left")
+                .select(col("id").as("member_id"),
+                  coalesce(col("label"), col("id")).as("rep_id"))
+                .orderBy(col("member_id"))
+                .localCheckpoint(true)
+            } finally GraftInternals.freeLocalCheckpoint(edges)
+          }
+        } finally verts.unpersist()
       }
-    }
+    } finally e.unpersist()
   }
 
   /** One large-star + small-star round over canonical (u < v) edges. */

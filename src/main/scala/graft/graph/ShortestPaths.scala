@@ -42,46 +42,46 @@ object ShortestPaths {
         col(edges.columns(1)).as("dst"),
         col(edges.columns(2)).cast("double").as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // The contract check materializes the persisted edge cache the loop
-    // was about to pay for anyway — no extra upstream scan.
-    val bad = e.filter(col("w").isNull || col("w") <= 0).count()
-    if (bad != 0L) {
-      e.unpersist(blocking = false) // don't leak the cache on the failure path
-      throw new IllegalArgumentException(
-        s"bellmanFord: $bad edge(s) with null/zero/negative weight — weights must be > 0")
-    }
+    try {
+      // The contract check materializes the persisted edge cache the loop
+      // was about to pay for anyway — no extra upstream scan.
+      val bad = e.filter(col("w").isNull || col("w") <= 0).count()
+      if (bad != 0L)
+        throw new IllegalArgumentException(
+          s"bellmanFord: $bad edge(s) with null/zero/negative weight — weights must be > 0")
 
-    val spark = edges.sparkSession
-    val m = e.count() // cheap scan of the cache the contract check filled
-    try Fixpoint.withLoopConf(spark, Fixpoint.loopPartitions(spark, m)) {
-      // Round state: (id, dist, improved); the frontier is the improved
-      // rows, and a round's scalar is the frontier size.
-      val first = Fixpoint.Round(
-        seeds.select(col(seeds.columns(0)).as("id")).distinct()
-          .select(col("id"), lit(0.0).as("dist"), lit(true).as("improved")),
-        (s: DataFrame) => s.filter(col("improved")).count())
-      val (state, _, _) = Fixpoint.iterate(first, rounds, "bellmanFord") {
-        (state, frontierSize, r) =>
-          if (frontierSize == 0 || r == rounds) None
-          else {
-            val dist = state.select(col("id"), col("dist"))
-            val frontier = state.filter(col("improved")).select(col("id"), col("dist"))
-            val fSide = if (frontierSize <= BroadcastMax) broadcast(frontier) else frontier
-            // Candidates from the frontier only, pre-combined per target
-            // id so the merge join below sees one row per touched vertex.
-            val cand = e.join(fSide, e("src") === frontier("id"))
-              .select(e("dst").as("id"), (frontier("dist") + e("w")).as("cd"))
-              .groupBy(col("id")).agg(min(col("cd")).as("cd"))
-            val merged = dist.join(cand, Seq("id"), "full_outer")
-              .select(col("id"),
-                least(coalesce(col("dist"), col("cd")), coalesce(col("cd"), col("dist")))
-                  .as("dist"),
-                (col("dist").isNull || (col("cd").isNotNull && col("cd") < col("dist")))
-                  .as("improved"))
-            Some(Fixpoint.Round(merged, (s: DataFrame) => s.filter(col("improved")).count()))
-          }
+      val spark = edges.sparkSession
+      val m = e.count() // cheap scan of the cache the contract check filled
+      Fixpoint.withLoopConf(spark, Fixpoint.loopPartitions(spark, m)) {
+        // Round state: (id, dist, improved); the frontier is the improved
+        // rows, and a round's scalar is the frontier size.
+        val first = Fixpoint.Round(
+          seeds.select(col(seeds.columns(0)).as("id")).distinct()
+            .select(col("id"), lit(0.0).as("dist"), lit(true).as("improved")),
+          (s: DataFrame) => s.filter(col("improved")).count())
+        val (state, _, _) = Fixpoint.iterate(first, rounds, "bellmanFord") {
+          (state, frontierSize, r) =>
+            if (frontierSize == 0 || r == rounds) None
+            else {
+              val dist = state.select(col("id"), col("dist"))
+              val frontier = state.filter(col("improved")).select(col("id"), col("dist"))
+              val fSide = if (frontierSize <= BroadcastMax) broadcast(frontier) else frontier
+              // Candidates from the frontier only, pre-combined per target
+              // id so the merge join below sees one row per touched vertex.
+              val cand = e.join(fSide, e("src") === frontier("id"))
+                .select(e("dst").as("id"), (frontier("dist") + e("w")).as("cd"))
+                .groupBy(col("id")).agg(min(col("cd")).as("cd"))
+              val merged = dist.join(cand, Seq("id"), "full_outer")
+                .select(col("id"),
+                  least(coalesce(col("dist"), col("cd")), coalesce(col("cd"), col("dist")))
+                    .as("dist"),
+                  (col("dist").isNull || (col("cd").isNotNull && col("cd") < col("dist")))
+                    .as("improved"))
+              Some(Fixpoint.Round(merged, (s: DataFrame) => s.filter(col("improved")).count()))
+            }
+        }
+        state.select(col("id"), col("dist"))
       }
-      state.select(col("id"), col("dist"))
     } finally e.unpersist()
   }
 }

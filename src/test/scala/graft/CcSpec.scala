@@ -56,6 +56,15 @@ class CcSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 5L -> 5L))
   }
 
+  test("a pair that fails its cast fails the run without leaking a persist") {
+    val pairs = spark.read.option("delimiter", "\t").csv(edgeFile("1\t2", "1\tx"))
+    spark.catalog.clearCache()
+    val before = RddScope.persisted(spark)
+    intercept[NumberFormatException](ConnectedComponents.run(pairs))
+    assert(noCachedPlans, "the normalized pairs' persist outlived the throw")
+    assert(RddScope.persisted(spark) == before)
+  }
+
   test("leaves no persisted RDDs behind (checkpoint backing aside)") {
     val before = RddScope.persisted(spark)
     val out = ConnectedComponents.run(Seq((1L, 2L), (2L, 3L)).toDF("a", "b"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.graph.{Hits, PageRank}
+import graft.graph.{Hits, PageRank, ShortestPaths}
 
 /** Semantics of the round-5 iterative operators: personalized PageRank
   * (teleport concentrated on a seed set) and HITS (hubs/authorities).
@@ -214,6 +214,15 @@ class GraphAlgSpec extends SparkSpec {
     val before = RddScope.persisted(spark)
     intercept[org.apache.spark.SparkException](
       PageRank.weightedFixedIterations(spark, in, 0.85, 2))
+    assert(noCachedPlans, "the weighted edges' persist outlived the throw")
+    assert(RddScope.persisted(spark) == before)
+  }
+
+  test("SSSP: a weight that fails its cast fails the run without leaking a persist") {
+    val edges = spark.read.option("delimiter", "\t").csv(edgeFile("1\t2\t1.0", "2\t3\tx"))
+    spark.catalog.clearCache()
+    val before = RddScope.persisted(spark)
+    intercept[NumberFormatException](ShortestPaths.bellmanFord(edges, Seq("1").toDF("id"), 2))
     assert(noCachedPlans, "the weighted edges' persist outlived the throw")
     assert(RddScope.persisted(spark) == before)
   }
