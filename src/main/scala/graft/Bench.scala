@@ -275,8 +275,10 @@ object Bench {
     // committed baseline. BENCH_r{N}_floors.json is the FULL queries_min
     // map written by the round's final bench run and committed with the
     // round snapshot — the untruncated floor source for the legs the
-    // driver tail dropped.
-    val floors = newestRound("_floors\\.json")(accept(_, "cores", "queries_min", sameSfDir))
+    // driver tail dropped. Older snapshots carry no core count in the
+    // name (BENCH_r{N}_floors.json); their "cores" field picks them.
+    val floors = newestRound("(_c\\d+)?_floors\\.json")(
+      accept(_, "cores", "queries_min", sameSfDir))
       .map { case (qs, _, f) => (qs, f.getName) }
     val sidecar = accept(new java.io.File(dir, "bench_diag.json"), "cores",
       "queries_min", sameSfDir).map { case (qs, _) => (qs, "bench_diag.json queries_min") }
@@ -330,15 +332,18 @@ object Bench {
     * overwrite let a later same-round run clobber the committed
     * min-merge with one run's warm-JVM minima and reintroduce the
     * warm-floor false-flag class the r13 g7/g4 bisect adjudicated
-    * (r13 judge "what's wrong" #1). The snapshot records its sf and
-    * core count, and merges only with a snapshot of the same sf AND
-    * cores; any mismatch replaces the file (an sf0.01 dev run or an
-    * 8-core run must not pollute the floors of another box shape).
+    * (r13 judge "what's wrong" #1). The file is named by round AND core
+    * count (`BENCH_r{N}_c{cores}_floors.json`), so a run on one box
+    * shape never replaces another's floors; it records its sf and cores
+    * and merges only with a snapshot of the same sf AND cores, any
+    * mismatch replacing the file (an sf0.01 dev run must not pollute
+    * the sf0.1 floors).
     */
   private[graft] def writeFloorSnapshot(dir: java.io.File, sfDir: String,
       cores: Int, current: Map[String, Double]): Unit = try {
     val prevN = roundFiles(dir, "\\.json").map(_._1).foldLeft(0)(math.max)
-    val floorPath = new java.io.File(dir, f"BENCH_r${prevN + 1}%02d_floors.json").toPath
+    val floorPath =
+      new java.io.File(dir, f"BENCH_r${prevN + 1}%02d_c${cores}_floors.json").toPath
     val existing: Map[String, Double] =
       if (java.nio.file.Files.exists(floorPath)) {
         val txt = new String(java.nio.file.Files.readAllBytes(floorPath), "UTF-8")
@@ -505,6 +510,24 @@ object Bench {
     }
   }
 
+  /** One leg of [[main]]'s loop, guarded against a kill. Once JVM
+    * shutdown begins (`stopping`, set first thing by main's hook),
+    * Spark's own hook stops the SparkContext, and every leg run after it
+    * fails on the stopped context within milliseconds. So a leg is not
+    * measured once `stopping` is set, nor recorded if it was set while
+    * the leg ran; either way the throw ends the loop, and the hook's
+    * partial line reports the legs recorded before it.
+    */
+  private[graft] def guardedLeg(stopping: java.util.concurrent.atomic.AtomicBoolean,
+      name: String)(measure: => (Sample, Double))(record: ((Sample, Double)) => Unit): Unit = {
+    def stop() = throw new IllegalStateException(
+      s"JVM shutdown began: leg $name and the legs after it are not recorded")
+    if (stopping.get) stop()
+    val r = measure
+    if (stopping.get) stop()
+    record(r)
+  }
+
   /** `s` as a JSON string literal: quote, backslash and every control
     * character (< 0x20) escaped — a tab or CR in an oracle's SQL or an
     * exception message would otherwise break the reader's `json.load`.
@@ -612,7 +635,9 @@ object Bench {
     // mislabel; an sf0.001 kill drill then caught the same mislabel in
     // the recall window).
     val legsAllDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val stopping = new java.util.concurrent.atomic.AtomicBoolean(false)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      stopping.set(true)
       if (!normalExit.get) {
         val rs = snapshot()
         if (rs.nonEmpty) {
@@ -708,15 +733,15 @@ object Bench {
 
     // Each leg lands in the buffer (and the partial sidecar) the moment
     // it completes — see the kill note at the top of main.
-    def leg(name: String, runs: Int)(body: => Option[DataFrame]): Unit = {
-      val r = time(runs)(body)
-      resultsBuf.synchronized { resultsBuf += name -> r }
-      System.err.println(
-        f"BENCH_LEG $name min=${r._1.wall}%.3f mean=${r._2}%.3f " +
-          f"(${resultsBuf.size} legs, ${elapsedS()}%.0f s elapsed)" +
-          r._1.error.fold("")(" error=" + _))
-      writePartialSidecar()
-    }
+    def leg(name: String, runs: Int)(body: => Option[DataFrame]): Unit =
+      guardedLeg(stopping, name)(time(runs)(body)) { r =>
+        resultsBuf.synchronized { resultsBuf += name -> r }
+        System.err.println(
+          f"BENCH_LEG $name min=${r._1.wall}%.3f mean=${r._2}%.3f " +
+            f"(${resultsBuf.size} legs, ${elapsedS()}%.0f s elapsed)" +
+            r._1.error.fold("")(" error=" + _))
+        writePartialSidecar()
+      }
     // A leg QBench can also run by name: one body for both mains.
     def namedLeg(name: String, runs: Int): Unit =
       leg(name, runs)(QBench.legs(name)(spark, sfDir))

@@ -8,6 +8,7 @@ import graft.text.TextFns
 import graft.dedup.Dedup
 import graft.ml.LinearClassifier
 import graft.graph.ConnectedComponents
+import graft.release.{ReleaseParams, ReleaseStore}
 import graft.sim.Similarity
 import graft.media.Multimodal
 
@@ -953,11 +954,8 @@ object PipelineQueries {
       org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(pairs)
       val ntok = docs.select(col("doc_id").as("member_id"),
         size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
-      val keep = cl.join(ntok, "member_id")
-        .groupBy(col("rep_id"))
-        .agg(max(struct(col("n_tok"), (-col("member_id")).as("neg"))).as("b"))
-        .select((-col("b.neg")).as("keep_id"))
-      val drops = cl.join(keep, cl("member_id") === keep("keep_id"), "left_anti")
+      val keep = Dedup.canonical(cl.join(ntok, "member_id"))
+      val drops = cl.join(keep, cl("member_id") === keep("canon_id"), "left_anti")
         .select(col("member_id"))
       docs.join(graft.ops.Hints.broadcastIfSmall(drops),
           col("doc_id") === col("member_id"), "left_anti")
@@ -1520,11 +1518,8 @@ object PipelineQueries {
         .join(cl, col("doc_id") === col("member_id"), "left")
         .select(col("doc_id"),
           coalesce(col("rep_id"), col("doc_id")).as("rep_id"))
-      val bucket = pmod(graft.ops.Portable.md5Long(
-        concat(lit("split:"), col("rep_id").cast("string"))), lit(10L))
       rep.select(col("doc_id"), col("rep_id"),
-          when(bucket < 8, "train").when(bucket === 8, "val")
-            .otherwise("test").as("split"))
+          ReleaseStore.splitOf(col("rep_id")).as("split"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1605,13 +1600,8 @@ object PipelineQueries {
     // gram/moment scans skip the tokenize/hash stage, and freed before
     // return (training is eager; the weight relation doesn't reference it).
     "t22_classifier_train" -> ((s, d) => {
-      val docs = documents(s, d)
-      val before = graft.RddScope.persisted(s)
-      val feat = LinearClassifier.features(docs, "doc_id", "text", ClassifierDims)
-        .localCheckpoint(true)
-      graft.RddScope.sweepExcept(s, before, feat)
-      val lab = LinearClassifier.weakLabels(docs, "doc_id", "text")
-      val w = LinearClassifier.train(s, feat, lab, ClassifierDims, ClassifierIters)
+      val (feat, _, w) =
+        LinearClassifier.fit(documents(s, d), ClassifierDims, ClassifierIters)
       org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(feat)
       w.orderBy(col("dim"))
     }),
@@ -1620,13 +1610,8 @@ object PipelineQueries {
     // margin, sign prediction, and agreement with the weak label — the
     // relation a curation pipeline thresholds to keep/drop documents.
     "t23_classifier_score" -> ((s, d) => {
-      val docs = documents(s, d)
-      val before = graft.RddScope.persisted(s)
-      val feat = LinearClassifier.features(docs, "doc_id", "text", ClassifierDims)
-        .localCheckpoint(true)
-      graft.RddScope.sweepExcept(s, before, feat)
-      val lab = LinearClassifier.weakLabels(docs, "doc_id", "text")
-      val w = LinearClassifier.train(s, feat, lab, ClassifierDims, ClassifierIters)
+      val (feat, lab, w) =
+        LinearClassifier.fit(documents(s, d), ClassifierDims, ClassifierIters)
       LinearClassifier.score(feat, lab, w).orderBy(col("doc_id"))
     }),
 
@@ -1641,13 +1626,8 @@ object PipelineQueries {
     // the aggregation is map-side combinable — the 100 TB-safe spelling
     // of a reliability diagram (bounded ≤64 bands × 2 signs output).
     "t24_classifier_calibration" -> ((s, d) => {
-      val docs = documents(s, d)
-      val before = graft.RddScope.persisted(s)
-      val feat = LinearClassifier.features(docs, "doc_id", "text", ClassifierDims)
-        .localCheckpoint(true)
-      graft.RddScope.sweepExcept(s, before, feat)
-      val lab = LinearClassifier.weakLabels(docs, "doc_id", "text")
-      val w = LinearClassifier.train(s, feat, lab, ClassifierDims, ClassifierIters)
+      val (feat, lab, w) =
+        LinearClassifier.fit(documents(s, d), ClassifierDims, ClassifierIters)
       LinearClassifier.score(feat, lab, w)
         .select(col("pred"), col("correct"),
           length(bin(abs(col("margin")))).cast("long").as("margin_band"))
@@ -1671,25 +1651,17 @@ object PipelineQueries {
     // through the shared unrolled-GD CTEs.
     "p19_classifier_release" -> ((s, d) => {
       val docs = documents(s, d)
-      val before = graft.RddScope.persisted(s)
-      val feat = LinearClassifier.features(docs, "doc_id", "text", ClassifierDims)
-        .localCheckpoint(true)
-      graft.RddScope.sweepExcept(s, before, feat)
-      val lab = LinearClassifier.weakLabels(docs, "doc_id", "text")
-      val w = LinearClassifier.train(s, feat, lab, ClassifierDims, ClassifierIters)
+      val (feat, lab, w) = LinearClassifier.fit(docs, ClassifierDims, ClassifierIters)
       val kept = LinearClassifier.score(feat, lab, w)
         .filter(col("margin") > 0)
         .select(col("doc_id"), col("margin"))
       val keptH = kept
         .join(docs.select(col("doc_id"), md5(col("text")).as("h")), "doc_id")
       val reps = keptH.groupBy(col("h")).agg(min(col("doc_id")).as("rep_id"))
-      val bucket = pmod(graft.ops.Portable.md5Long(
-        concat(lit("split:"), col("doc_id").cast("string"))), lit(10L))
       keptH.join(reps, "h")
         .filter(col("doc_id") === col("rep_id"))
         .select(col("doc_id"), col("margin"),
-          when(bucket < 8, "train").when(bucket === 8, "val")
-            .otherwise("test").as("split"))
+          ReleaseStore.splitOf(col("doc_id")).as("split"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1705,12 +1677,7 @@ object PipelineQueries {
     // model-selection table. Fully integer trajectory → hash oracle
     // (shift-keyed unrolled-GD CTEs).
     "t25_ridge_sweep" -> ((s, d) => {
-      val docs = documents(s, d)
-      val before = graft.RddScope.persisted(s)
-      val feat = LinearClassifier.features(docs, "doc_id", "text", ClassifierDims)
-        .localCheckpoint(true)
-      graft.RddScope.sweepExcept(s, before, feat)
-      val lab = LinearClassifier.weakLabels(docs, "doc_id", "text")
+      val (feat, lab) = LinearClassifier.labelled(documents(s, d), ClassifierDims)
       val w = LinearClassifier.trainRidgeSweep(s, feat, lab,
         ClassifierDims, ClassifierIters, RidgeShifts)
       val margins = feat
@@ -1743,13 +1710,8 @@ object PipelineQueries {
     // integer counts + two rounded divisions → full hash oracle through
     // the shared unrolled-GD CTEs.
     "t26_classifier_threshold" -> ((s, d) => {
-      val docs = documents(s, d)
-      val before = graft.RddScope.persisted(s)
-      val feat = LinearClassifier.features(docs, "doc_id", "text", ClassifierDims)
-        .localCheckpoint(true)
-      graft.RddScope.sweepExcept(s, before, feat)
-      val lab = LinearClassifier.weakLabels(docs, "doc_id", "text")
-      val w = LinearClassifier.train(s, feat, lab, ClassifierDims, ClassifierIters)
+      val (feat, lab, w) =
+        LinearClassifier.fit(documents(s, d), ClassifierDims, ClassifierIters)
       val sc = LinearClassifier.score(feat, lab, w)
         .select(col("margin"), col("y"))
       val pos = sc.agg(sum(when(col("y") === 1, 1L).otherwise(0L)).as("n_pos"))
@@ -1778,9 +1740,11 @@ object PipelineQueries {
         .orderBy(col("band_min"))
     }),
 
-    // THE full curation release, end to end in ONE plan — the flagship
-    // LLM-pipeline query a data team actually ships (each stage is the
-    // already-oracled single-stage operator, composed p15-style):
+    // THE full curation release, end to end — the flagship LLM-pipeline
+    // query a data team actually ships. Stages 1–4 ARE ReleaseStore's
+    // batch chain (the chain the incremental store's init runs) with the
+    // portable md5 pair family, so this oracle pins the store's chain;
+    // each stage is the already-oracled single-stage operator:
     //   (1) model gate: the trained t22 classifier keeps margin>0 docs;
     //   (2) near-dup drop among the KEPT docs — d13's machinery (d3b
     //       portable MinHash-LSH pairs → d7b connected components →
@@ -1801,7 +1765,8 @@ object PipelineQueries {
     // while the estimate fits; AQE decides on a dup-heavy corpus where
     // both scale with the duplicate count). Deterministic end to
     // end → full hash oracle (the unrolled-GD + recursive-CC + span CTE
-    // chains composed).
+    // chains composed). The chain's eager checkpoints (kept docs, CC
+    // labels, survivors) each cut the lineage the next stage re-reads.
     "p20_release_pipeline" -> ((s, d) =>
       TextFns.packChunks(
         releasedCorpus(s, d).filter(col("split") === "train"),
@@ -1812,23 +1777,22 @@ object PipelineQueries {
     // dataset datasheet carries, Gebru et al. 2021): documents and
     // tokens at corpus input → classifier gate → near-dup drop → the
     // released splits (token counts post span-excision). One row per
-    // stage, ordered by pipeline position. Rides p20's stage relations:
-    // the survivor checkpoint means the last four rows are aggregations
-    // of a materialized relation, not gate-chain re-runs. All integer
-    // counts → trivial hash oracle over the shared p20 CTE chain.
-    "p21_release_funnel" -> ((s, d) => {
-      val docs = documents(s, d)
-      val (keptDocs, withRep, released) = releaseStages(s, d)
+    // stage, ordered by pipeline position. Rides p20's chain: the kept
+    // and survivor checkpoints mean every row past the input is an
+    // aggregation of a materialized relation, not a gate-chain re-run.
+    // All integer counts → trivial hash oracle over the shared p20 CTE
+    // chain.
+    "p21_release_funnel" -> ((s, d) => releaseChain(s, d) { c =>
       def row(ord: Int, stage: String, df: DataFrame, textCol: String) =
         df.agg(count(lit(1)).as("n_docs"),
             coalesce(sum(TextFns.tokenCount(col(textCol)).cast("long")), lit(0L))
               .as("n_tokens"))
           .select(lit(ord.toLong).as("stage_ord"), lit(stage).as("stage"),
             col("n_docs"), col("n_tokens"))
-      row(0, "input", docs, "text")
-        .unionAll(row(1, "classifier_kept", keptDocs, "text"))
-        .unionAll(row(2, "neardup_survivors", withRep, "text"))
-        .unionAll(releasedSplitRows(released))
+      row(0, "input", documents(s, d), "text")
+        .unionAll(row(1, "classifier_kept", c.keptDocs, "text"))
+        .unionAll(row(2, "neardup_survivors", c.withRep, "text"))
+        .unionAll(releasedSplitRows(c.released))
         .orderBy(col("stage_ord"))
     })
   )
@@ -1862,96 +1826,22 @@ object PipelineQueries {
   }
 
   /** p20's stages 1–4 as a reusable relation — the release a trainer
-    * reads: (doc_id, text_dedup, split) after classifier gate, near-dup
-    * drop, span excision, and the leakage-safe split draw. The p20 query
-    * packs its train split; [[graft.Bench]]'s sink leg exports it through
-    * [[graft.io.Sinks.trainingShards]].
+    * reads: (doc_id, rep_id, split, text_dedup) after classifier gate,
+    * near-dup drop, span excision, and the leakage-safe split draw. The
+    * p20 query packs its train split; [[graft.Bench]]'s sink leg exports
+    * it through [[graft.io.Sinks.trainingShards]].
     */
-  def releasedCorpus(s: SparkSession, d: String): DataFrame = {
-    val (keptDocs, _, released) = releaseStages(s, d)
-    // The released relation reads only the survivor checkpoint; the
-    // gate-side feat checkpoint (alive for p21's stage counts) is
-    // unreachable from it — free it here so single-relation consumers
-    // (p20, the sinks leg) stay leak-neutral.
-    org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(keptDocs)
-    released
-  }
+  def releasedCorpus(s: SparkSession, d: String): DataFrame =
+    releaseChain(s, d)(_.released)
 
-  /** The release chain's stage relations — (classifier-kept docs,
-    * near-dup survivors decorated with their cluster rep, released
-    * corpus). p21's attrition funnel reads all three; the survivor
-    * relation is checkpointed so downstream stage counts don't re-run
-    * the gate chain.
+  /** [[ReleaseStore.batchChain]] over the documents in the p20
+    * configuration with the portable pair family; `use` picks the stage
+    * relations a query reads, and only their checkpoints outlive it.
     */
-  private def releaseStages(
-      s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val docs = documents(s, d)
-    val before = graft.RddScope.persisted(s)
-    val feat = LinearClassifier.features(docs, "doc_id", "text", ClassifierDims)
-      .localCheckpoint(true)
-    graft.RddScope.sweepExcept(s, before, feat)
-    val lab = LinearClassifier.weakLabels(docs, "doc_id", "text")
-    val w = LinearClassifier.train(s, feat, lab, ClassifierDims, ClassifierIters)
-    val kept = LinearClassifier.score(feat, lab, w)
-      .filter(col("margin") > 0)
-      .select(col("doc_id"))
-    val keptDocs = docs.join(kept, "doc_id").select(col("doc_id"), col("text"))
-    val pairs = Dedup.minhashLshPairsPortable(keptDocs, "doc_id", "text",
-        n = 3, bands = 8, rowsPerBand = 4, threshold = JaccardThreshold)
-      .select(col("doc_a"), col("doc_b"))
-    val cl = ConnectedComponents.run(pairs)
-    // run() materializes behind its own checkpoint, cutting the pair
-    // build (and its shingle checkpoint) out of the result lineage —
-    // free it now (the d13 idiom; QueriesSpec leak contract).
-    org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(pairs)
-    val ntok = keptDocs.select(col("doc_id").as("member_id"),
-      size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
-    // canonical member per cluster (keep_id) + the cluster rep for the
-    // split draw; both cluster-sized → size-gated broadcast below
-    // (duplicate-count-proportional on a dup-heavy corpus).
-    val canon = cl.join(ntok, "member_id")
-      .groupBy(col("rep_id"))
-      .agg(max(struct(col("n_tok"), (-col("member_id")).as("neg"))).as("b"))
-      .select((-col("b.neg")).as("doc_id"), col("rep_id"))
-    val drops = cl.join(canon, cl("member_id") === canon("doc_id"), "left_anti")
-      .select(col("member_id"))
-    val survivors = keptDocs
-      .join(graft.ops.Hints.broadcastIfSmall(drops),
-        col("doc_id") === col("member_id"), "left_anti")
-    // Materialize the survivor relation ONCE: the span stage reads it
-    // three times (anchor grams, token stream, token counts) and the
-    // split join a fourth — each un-checkpointed read re-ran the whole
-    // gate chain (scoring join + two anti-joins; measured 14.3 s → the
-    // checkpoint cuts the leg roughly in half at sf0.1). The backing IS
-    // the result's lineage (QueriesSpec-exempt); everything upstream it
-    // orphans — the feat checkpoint, the pair build's shingle
-    // checkpoint, the CC fixpoint backing — is swept here (the r10 n13
-    // orphaned-checkpoint class), the g17/p17 idiom.
-    val withRep = survivors
-      .join(graft.ops.Hints.broadcastIfSmall(canon), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("text"),
-        coalesce(col("rep_id"), col("doc_id")).as("rep_id"))
-      .localCheckpoint(true)
-    // Sweep orphaned intermediates (shingle index, CC backing), keeping
-    // the survivor checkpoint AND the feat checkpoint — keptDocs is a
-    // returned stage relation (p21 aggregates it) and its plan reads
-    // feat; releasedCorpus frees feat for single-relation consumers.
-    val keep = org.apache.spark.sql.graft.GraftInternals.checkpointRddIds(withRep) ++
-      org.apache.spark.sql.graft.GraftInternals.checkpointRddIds(keptDocs)
-    s.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !before.contains(id) && !keep.contains(id) }
-      .values.foreach(_.unpersist(blocking = false))
-    val deduped = Dedup.spanDedupApply(
-      withRep.select(col("doc_id"), col("text")), "doc_id", "text", minTokens = 6)
-    val bucket = pmod(graft.ops.Portable.md5Long(
-      concat(lit("split:"), col("rep_id").cast("string"))), lit(10L))
-    val released = deduped
-      .join(withRep.select(col("doc_id"), col("rep_id")), "doc_id")
-      .select(col("doc_id"), col("text_dedup"),
-        when(bucket < 8, "train").when(bucket === 8, "val")
-          .otherwise("test").as("split"))
-    (keptDocs, withRep, released)
-  }
+  private def releaseChain(s: SparkSession, d: String)(
+      use: ReleaseStore.Chain => DataFrame): DataFrame =
+    ReleaseStore.batchChain(documents(s, d), ReleaseParams(),
+      portablePairs = true, vecs = None)(use)
 
   /** p7's curation pipeline (quality gate → exact-dup representative →
     * benchmark decontamination) as a reusable stage — p15 composes it

@@ -984,4 +984,14 @@ object Dedup {
     graft.RddScope.sweepExcept(spark, persistedBefore, out)
     out
   }
+
+  /** The canonical member of each near-dup cluster — longest
+    * tokenization, min id on ties — from (member_id, rep_id, n_tok) rows:
+    * (rep_id, canon_id), one row per cluster. d13 and the release
+    * chain's batch run, increment and reconcile all elect by this rule.
+    */
+  def canonical(members: DataFrame): DataFrame = members
+    .groupBy(col("rep_id"))
+    .agg(max(struct(col("n_tok"), (-col("member_id")).as("neg"))).as("b"))
+    .select(col("rep_id"), (-col("b.neg")).as("canon_id"))
 }

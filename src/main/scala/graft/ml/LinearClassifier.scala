@@ -91,6 +91,25 @@ object LinearClassifier {
     feat.join(lab, "doc_id")
       .groupBy(col("dim")).agg(sum(col("n") * col("y")).as("by"))
 
+  /** The fit prologue every classifier consumer shares, over a
+    * (doc_id, text) corpus: hashed features behind an eager checkpoint
+    * (the gram, moment and scoring passes each scan it) with whatever
+    * the checkpoint orphaned swept, and the weak labels. Returns
+    * (feat, lab); the caller frees `feat`.
+    */
+  def labelled(docs: DataFrame, dims: Int): (DataFrame, DataFrame) = {
+    val before = graft.RddScope.persisted(docs.sparkSession)
+    val feat = features(docs, "doc_id", "text", dims).localCheckpoint(true)
+    graft.RddScope.sweepExcept(docs.sparkSession, before, feat)
+    (feat, weakLabels(docs, "doc_id", "text"))
+  }
+
+  /** [[labelled]] then [[train]]: (feat, lab, weights). */
+  def fit(docs: DataFrame, dims: Int, iters: Int): (DataFrame, DataFrame, DataFrame) = {
+    val (feat, lab) = labelled(docs, dims)
+    (feat, lab, train(docs.sparkSession, feat, lab, dims, iters))
+  }
+
   /** Train: collect the (dims+1)²-bounded statistics (the documented
     * bounded driver step), run the exact integer GD, return the weight
     * relation (dim BIGINT, w BIGINT), dims+1 rows, dim -1 = bias.

@@ -117,12 +117,10 @@ final case class ReleaseParams(
   * equality with the never-saw store, split stability against it).
   *
   * Near-dup blocking uses the store's production xxhash64 MinHash
-  * family ([[Dedup.minhashLshPairs]]); p20 itself uses the portable
-  * md5 family so its end-to-end hash oracle exists (the d3/d3b
-  * precedent: production path vs oracle-able twin). The chain around
-  * the pair stage is pinned identical to p20 by running
-  * [[batchRelease]] with `portablePairs = true` against
-  * `PipelineQueries.releasedCorpus` in ReleaseStoreSpec.
+  * family ([[Dedup.minhashLshPairs]]). p20 and p21 ARE this batch chain
+  * ([[batchChain]]) with the portable md5 pair family swapped in, so
+  * their end-to-end hash oracles pin every other stage of it (the
+  * d3/d3b precedent: production path vs oracle-able twin).
   *
   * Scale shape per increment, at 100 TB corpus / crawl-batch arrivals:
   * one pass over the batch for features + shingles + grams; the
@@ -140,8 +138,9 @@ object ReleaseStore {
   private def norm(docs: DataFrame, idCol: String, textCol: String) =
     docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
 
-  /** The p17 split draw on the near-dup cluster rep (private[graft]:
-    * the streaming front-door draws the same split for novel docs).
+  /** The 80/10/10 train/val/test draw on md5("split:" ‖ key): p17 and
+    * the chain draw it on the near-dup cluster rep, p19 and the
+    * streaming front door on the doc id.
     */
   private[graft] def splitOf(rep: Column): Column = {
     val bucket = pmod(graft.ops.Portable.md5Long(
@@ -178,17 +177,13 @@ object ReleaseStore {
   private case class Stages(feat: DataFrame, lab: DataFrame, chain: Chain)
 
   /** The batch release chain (p20's stages 1–4, parameterized), shared
-    * by [[batchRelease]] and [[init]] so the store's generation-zero
-    * state IS a batch run's state.
+    * by [[batchRelease]], [[init]] and p20/p21 ([[batchChain]]) so the
+    * store's generation-zero state IS a batch run's state.
     */
   private def batchStages(
       docs: DataFrame, p: ReleaseParams, portablePairs: Boolean,
       vecs: Option[DataFrame]): Stages = {
-    val s = docs.sparkSession
-    val feat = LinearClassifier.features(docs, "doc_id", "text", p.dims)
-      .localCheckpoint(true)
-    val lab = LinearClassifier.weakLabels(docs, "doc_id", "text")
-    val w = LinearClassifier.train(s, feat, lab, p.dims, p.iters)
+    val (feat, lab, w) = LinearClassifier.fit(docs, p.dims, p.iters)
     val kept = LinearClassifier.score(feat, lab, w)
       .filter(col("margin") > 0).select(col("doc_id"))
     val keptDocs = docs.join(kept, "doc_id")
@@ -218,10 +213,8 @@ object ReleaseStore {
     free(pairs) // cl materialized behind its own checkpoint (p20 idiom)
     val ntokKept = keptDocs.select(col("doc_id").as("member_id"),
       nTok(col("text")).as("n_tok"))
-    val canon = cl.join(ntokKept, "member_id")
-      .groupBy(col("rep_id"))
-      .agg(max(struct(col("n_tok"), (-col("member_id")).as("neg"))).as("b"))
-      .select((-col("b.neg")).as("doc_id"), col("rep_id"))
+    val canon = Dedup.canonical(cl.join(ntokKept, "member_id"))
+      .select(col("canon_id").as("doc_id"), col("rep_id"))
     val drops = cl.join(canon, cl("member_id") === canon("doc_id"), "left_anti")
       .select(col("member_id"))
     // drops (all near-dup losers) and canon (one row per cluster) are
@@ -272,23 +265,29 @@ object ReleaseStore {
     Chain(keptDocs, cl, ntokKept, withRep, released, survVecs)
   }
 
-  /** One-shot batch release: (doc_id, rep_id, split, text_dedup). The
-    * reference [[increment]] is pinned against; `portablePairs = true`
-    * swaps in the md5 LSH family and makes the chain output-identical
-    * to `PipelineQueries.releasedCorpus` (spec-pinned). Caller frees
-    * the returned checkpoint.
+  /** The batch chain on (doc_id, text) `docs`, then a sweep of every
+    * intermediate that the relation `use` builds from it does not read.
+    * p20 and p21 run it with `portablePairs = true` on the p20
+    * configuration; the store runs it with the production family.
+    */
+  private[graft] def batchChain(
+      docs: DataFrame, p: ReleaseParams, portablePairs: Boolean,
+      vecs: Option[DataFrame])(use: Chain => DataFrame): DataFrame = {
+    val before = graft.RddScope.persisted(docs.sparkSession)
+    val out = use(batchStages(docs, p, portablePairs, vecs).chain)
+    graft.RddScope.sweepExcept(docs.sparkSession, before, out)
+    out
+  }
+
+  /** One-shot batch release: (doc_id, rep_id, split, text_dedup) — the
+    * reference [[increment]] is pinned against. Caller frees the
+    * returned checkpoint.
     */
   def batchRelease(
       docs0: DataFrame, idCol: String, textCol: String, p: ReleaseParams,
-      portablePairs: Boolean = false,
-      vecs: Option[DataFrame] = None): DataFrame = {
-    val s = docs0.sparkSession
-    val before = graft.RddScope.persisted(s)
-    val st = batchStages(norm(docs0, idCol, textCol), p, portablePairs, vecs)
-    val released = st.chain.released.localCheckpoint(true)
-    graft.RddScope.sweepExcept(s, before, released)
-    released
-  }
+      vecs: Option[DataFrame] = None): DataFrame =
+    batchChain(norm(docs0, idCol, textCol), p, portablePairs = false, vecs)(
+      _.released.localCheckpoint(true))
 
   /** Generation zero: run the batch chain on the initial corpus and
     * persist every store the increments probe. Returns the released
@@ -483,9 +482,7 @@ object ReleaseStore {
     val membersW = cc.join(
       coRows.select(col("member_id"), col("n_tok")).unionAll(ntokNew),
       "member_id")
-    val canon = membersW.groupBy(col("rep_id"))
-      .agg(max(struct(col("n_tok"), (-col("member_id")).as("neg"))).as("b"))
-      .select(col("rep_id"), (-col("b.neg")).as("canon_id"))
+    val canon = Dedup.canonical(membersW)
     val losers = cc.join(canon, "rep_id")
       .filter(col("member_id") =!= col("canon_id"))
       .select(col("member_id").as("doc_id"))
@@ -729,9 +726,7 @@ object ReleaseStore {
         latest(s.read.parquet(s"$path/clusters"))
           .join(reps, Seq("rep_id"), "left_semi")
     }
-    val canon = scoped.groupBy(col("rep_id"))
-      .agg(max(struct(col("n_tok"), (-col("member_id")).as("neg"))).as("b"))
-      .select(col("rep_id"), (-col("b.neg")).as("canon_id"))
+    val canon = Dedup.canonical(scoped)
     // Retired = released members that lost the re-election. The current
     // canonical is always already released (increment pins the election
     // against the batch run per arrival), so this is exactly the set the

@@ -62,20 +62,39 @@ class BenchFloorsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("bench_floors")
     write(dir, "BENCH_r19.json", """{"n": 19, "cpus": 32, "sf": 0.1}""")
     Bench.writeFloorSnapshot(dir.toFile, Sf, 8, Map("a" -> 5.0, "b" -> 1.0))
-    assert(text(dir, "BENCH_r20_floors.json") ==
+    assert(text(dir, "BENCH_r20_c8_floors.json") ==
       s"""{"queries_min":{"a":5.000,"b":1.000},"sf":"$Sf","cores":8}""")
     // Same sf and cores: per-leg min with the existing snapshot.
     Bench.writeFloorSnapshot(dir.toFile, Sf, 8, Map("a" -> 4.0, "b" -> 2.0, "c" -> 3.0))
-    assert(text(dir, "BENCH_r20_floors.json") ==
+    assert(text(dir, "BENCH_r20_c8_floors.json") ==
       s"""{"queries_min":{"a":4.000,"b":1.000,"c":3.000},"sf":"$Sf","cores":8}""")
-    // Another core count replaces the file instead of merging into it.
+    // Another core count writes its own file and leaves this one alone.
     Bench.writeFloorSnapshot(dir.toFile, Sf, 32, Map("a" -> 9.0))
-    assert(text(dir, "BENCH_r20_floors.json") ==
+    assert(text(dir, "BENCH_r20_c32_floors.json") ==
       s"""{"queries_min":{"a":9.000},"sf":"$Sf","cores":32}""")
+    assert(text(dir, "BENCH_r20_c8_floors.json") ==
+      s"""{"queries_min":{"a":4.000,"b":1.000,"c":3.000},"sf":"$Sf","cores":8}""")
+    // Another sf replaces the file instead of merging into it.
+    Bench.writeFloorSnapshot(dir.toFile, "/data/sf0.01", 32, Map("b" -> 7.0))
+    assert(text(dir, "BENCH_r20_c32_floors.json") ==
+      """{"queries_min":{"b":7.000},"sf":"/data/sf0.01","cores":32}""")
     // So does a snapshot that records no core count.
-    write(dir, "BENCH_r20_floors.json", s"""{"queries_min":{"a":0.5},"sf":"$Sf"}""")
+    write(dir, "BENCH_r20_c32_floors.json", s"""{"queries_min":{"a":0.5},"sf":"$Sf"}""")
     Bench.writeFloorSnapshot(dir.toFile, Sf, 32, Map("a" -> 9.0))
-    assert(text(dir, "BENCH_r20_floors.json") ==
+    assert(text(dir, "BENCH_r20_c32_floors.json") ==
       s"""{"queries_min":{"a":9.000},"sf":"$Sf","cores":32}""")
+  }
+
+  test("a 4-core snapshot next to the old-named 8-core floors leaves them intact; each run reads its own") {
+    val dir = fixture()
+    val eight = text(dir, "BENCH_r20_floors.json")
+    Bench.writeFloorSnapshot(dir.toFile, Sf, 4, Map("a" -> 0.7, "d" -> 0.2))
+    assert(text(dir, "BENCH_r20_floors.json") == eight)
+    assert(text(dir, "BENCH_r20_c4_floors.json") ==
+      s"""{"queries_min":{"a":0.700,"d":0.200},"sf":"$Sf","cores":4}""")
+    assert(Bench.previousMinWalls(dir.toFile, Sf, 4) ==
+      (Map("a" -> 0.7, "d" -> 0.2), "BENCH_r20_c4_floors.json (sole floor source)"))
+    assert(Bench.previousMinWalls(dir.toFile, Sf, 8)._2 ==
+      "min(BENCH_r20_floors.json, bench_diag.json queries_min)")
   }
 }

@@ -48,24 +48,6 @@ class ReleaseStoreSpec extends SparkSpec {
       LinearClassifier.features(d, "doc_id", "text", P.dims),
       LinearClassifier.weakLabels(d, "doc_id", "text"), P.dims, P.iters)
 
-  test("batchRelease(portablePairs) == p20's releasedCorpus: the chain IS p20's") {
-    // The store runs the production xxhash64 LSH family; p20 runs the
-    // portable md5 family for its hash oracle (the d3/d3b precedent).
-    // Swapping the family in must reproduce p20's release EXACTLY —
-    // this pins every other stage (gate, canonical election, span
-    // excision, split draw) to the oracled chain.
-    val got = freedRows(ReleaseStore.batchRelease(
-        docs, "doc_id", "text", P, portablePairs = true))
-      .map { case (id, _, split, text) => (id, split, text) }
-    val p20 = graft.api.PipelineQueries.releasedCorpus(spark, Sf001)
-    val want = p20.select(col("doc_id"), col("split"), col("text_dedup"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(p20)
-    assert(got == want,
-      s"chain drifted from p20: missing=${(want -- got).take(2)} " +
-        s"extra=${(got -- want).take(2)}")
-  }
-
   test("init + two increments == the frozen-gate batch chain on each union, restricted to the new docs") {
     // Real corpus. Retraining on real data SHIFTS the gate boundary for
     // a few percent of stored docs (measured: ~20 of 300 here), so the
