@@ -335,32 +335,39 @@ object Bench {
     * (r13 judge "what's wrong" #1). The file is named by round AND core
     * count (`BENCH_r{N}_c{cores}_floors.json`), so a run on one box
     * shape never replaces another's floors; it records its sf and cores
-    * and merges only with a snapshot of the same sf AND cores, any
-    * mismatch replacing the file (an sf0.01 dev run must not pollute
-    * the sf0.1 floors).
+    * and merges only with a snapshot of the same sf AND cores. A
+    * snapshot at ANOTHER sf is left untouched and nothing is written (an
+    * sf0.01 dev run must not replace the sf0.1 floors); the returned
+    * note names the kept file. A same-sf snapshot recording no or other
+    * cores is replaced.
     */
   private[graft] def writeFloorSnapshot(dir: java.io.File, sfDir: String,
-      cores: Int, current: Map[String, Double]): Unit = try {
+      cores: Int, current: Map[String, Double]): Option[String] = try {
     val prevN = roundFiles(dir, "\\.json").map(_._1).foldLeft(0)(math.max)
     val floorPath =
       new java.io.File(dir, f"BENCH_r${prevN + 1}%02d_c${cores}_floors.json").toPath
-    val existing: Map[String, Double] =
-      if (java.nio.file.Files.exists(floorPath)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(floorPath), "UTF-8")
-        if (sfDirOf(txt).contains(sfDir) && intKey(txt, "cores").contains(cores))
-          parseQueriesMap(txt, "queries_min")
-        else Map.empty
-      } else Map.empty
-    val merged = (existing.keySet ++ current.keySet).toSeq.sorted.map { k =>
-      val vals = Seq(existing.get(k), current.get(k)).flatten.filter(_ >= 0)
-      k -> (if (vals.isEmpty) -1.0 else vals.min)
+    val prev =
+      if (java.nio.file.Files.exists(floorPath))
+        Some(new String(java.nio.file.Files.readAllBytes(floorPath), "UTF-8"))
+      else None
+    prev.flatMap(sfDirOf).filter(_ != sfDir) match {
+      case Some(kept) =>
+        Some(s"floor snapshot ${floorPath.getFileName} kept: it holds $kept floors; " +
+          s"this run at $sfDir wrote none")
+      case None =>
+        val existing = prev.filter(intKey(_, "cores").contains(cores))
+          .map(parseQueriesMap(_, "queries_min")).getOrElse(Map.empty[String, Double])
+        val merged = (existing.keySet ++ current.keySet).toSeq.sorted.map { k =>
+          val vals = Seq(existing.get(k), current.get(k)).flatten.filter(_ >= 0)
+          k -> (if (vals.isEmpty) -1.0 else vals.min)
+        }
+        val mergedJson = merged
+          .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+        java.nio.file.Files.write(floorPath,
+          s"""{"queries_min":$mergedJson,"sf":"$sfDir","cores":$cores}""".getBytes("UTF-8"))
+        None
     }
-    val mergedJson = merged
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    java.nio.file.Files.write(floorPath,
-      s"""{"queries_min":$mergedJson,"sf":"$sfDir","cores":$cores}""".getBytes("UTF-8"))
-    ()
-  } catch { case _: Throwable => () } // floor snapshot is best-effort
+  } catch { case _: Throwable => None } // floor snapshot is best-effort
 
   /** 1-minute loadavg (first field of /proc/loadavg); -1 if unreadable. */
   private def load1(): Double =
@@ -861,8 +868,8 @@ object Bench {
     rmTree(relTemplate)
     spark.stop()
 
-    writeFloorSnapshot(here, sfDir, cores,
-      results.map { case (k, (s, _)) => k -> s.wall }.toMap)
+    val floorNote = writeFloorSnapshot(here, sfDir, cores,
+      results.map { case (k, (s, _)) => k -> s.wall }.toMap).map(jsonStr)
     def fmtN(d: Double): String = if (d < 0) "-1" else f"$d%.2f"
     val qs = results.map { case (k, (s, _)) => "\"" + k + "\":" + fmt(s.wall) }
       .mkString("{", ",", "}")
@@ -918,7 +925,8 @@ object Bench {
     val recallJson = recalls
       .map { case (k, r) => "\"" + k + "\":" + fmtN(r) }
       .mkString("{", ",", "}")
-    val notes = ((standingNote +: recallNotes) :+ floorWatchNote).mkString(",")
+    val notes = ((standingNote +: recallNotes) ++ (floorWatchNote +: floorNote.toSeq))
+      .mkString(",")
     // The sidecar carries the FULL wall history (min + mean + cpu) so a
     // truncated stdout tail can never lose a round's perf record again.
     val diagJson =

@@ -13,14 +13,14 @@ import org.apache.spark.sql.functions._
   *   `<path>/bands`:    (band, bucket, id) — the blocking state, Hive-
   *                      partitioned by `band` (bands are always probed
   *                      together, but the partition keeps per-band files
-  *                      mergeable and lets a band count change migrate)
+  *                      mergeable)
   *   `<path>/shingles`: (id, s) — the exact-refine state
-  *   `<path>/layout`:   one-row meta (id_buckets) — v2 stores Hive-
-  *                      partition `shingles`/`counts` by
+  *   `<path>/counts`:   (id, n_sh) — per-doc shingle counts
+  *   `<path>/layout`:   meta (id_buckets), fixed by [[save]]: `shingles`
+  *                      and `counts` are Hive-partitioned by
   *                      idb = pmod(id, id_buckets), so the refine's
   *                      candidate-id restriction prunes store FILES at
-  *                      planning time (pre-upgrade stores read as
-  *                      legacy; [[compact]] migrates them)
+  *                      planning time
   *
   * [[Dedup.minhashBanded]]'s hash family is deterministic across
   * batches, so probing stored bands with a new batch's bands is
@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   */
 object DedupStore {
 
-  /** Default id-bucket count for new stores (the v2 layout below). */
+  /** Id-bucket count of every store [[save]] writes. */
   private[dedup] val DefaultIdBuckets = 32
 
   private def idbOf(id: Column, buckets: Int): Column =
@@ -81,36 +81,19 @@ object DedupStore {
   }
 
   /** Layout metadata — one tiny JSON FILE at `<path>/layout` recording
-    * the store's bucket count. A plain FS read/write, deliberately NOT
-    * parquet: every probe/append consults it, and a Spark job per
-    * consult (~0.3 s of scheduling) would tax the very increments the
-    * layout exists to speed up. Written rename-aside (atomic), so a
-    * crash mid-write never leaves a half-readable meta. AUTHORITATIVE:
-    * readers prune/write bucketed only when it exists and parses. A
-    * store whose relations carry partition dirs but no meta (a crash
-    * inside a migrating compact's swap, before its layout — ordered
-    * last — went in) READS correctly as legacy via the explicit column
-    * projections, just unpruned; APPENDS are refused in that state
-    * ([[appendLayout]]) because a flat append next to partition dirs
-    * corrupts partition discovery for every later read.
+    * the store's bucket count, written once by `save`. A plain FS
+    * read/write, deliberately NOT parquet: every probe/append consults
+    * it, and a Spark job per consult (~0.3 s of scheduling) would tax
+    * the very increments the layout exists to speed up. Written
+    * rename-aside (atomic), so a crash mid-write never leaves a
+    * half-readable meta.
     */
   private[dedup] def writeLayout(
-      spark: SparkSession, path: String, key: String, buckets: Int): Unit =
-    writeLayoutFile(spark, s"$path/layout", key, buckets)
-
-  /** [[writeLayout]] at an explicit FILE path — so a migrating
-    * [[compact]] can STAGE the meta inside its `.compact.tmp` dir and
-    * move it through the same rename-aside swap as the relations
-    * (ordered last), instead of writing it after the swap where a crash
-    * leaves bucketed relations with no meta.
-    */
-  private[dedup] def writeLayoutFile(
-      spark: SparkSession, filePath: String, key: String, buckets: Int): Unit = {
+      spark: SparkSession, path: String, key: String, buckets: Int): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(filePath)
+    val dst = new org.apache.hadoop.fs.Path(s"$path/layout")
     val fs = dst.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(
-      dst.getParent, "." + dst.getName + ".tmp")
+    val tmp = new org.apache.hadoop.fs.Path(dst.getParent, ".layout.tmp")
     val out = fs.create(tmp, true)
     try out.write(s"""{"$key":$buckets}""".getBytes("UTF-8"))
     finally out.close()
@@ -118,59 +101,22 @@ object DedupStore {
     require(fs.rename(tmp, dst), "layout meta: rename into place failed")
   }
 
-  /** True iff `dest` exists and carries Hive partition dirs for `key`
-    * (`key=N/...`) — the on-disk evidence of a bucketed relation,
-    * consulted when the layout meta is MISSING (a crash between a
-    * migrating compact's relation swaps and its layout swap).
+  /** The store's bucket count from its layout meta. Every probe, append,
+    * compact and remove reads it before touching the store, so a path
+    * without the meta (not written by `save`) fails before any write.
     */
-  private[dedup] def hasPartitionDirs(
-      spark: SparkSession, dest: String, key: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dest)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith(key + "="))
-  }
-
-  /** The write layout for an APPEND, derived from the meta AND the disk.
-    * A meta-less store whose relation carries `key=` partition dirs is a
-    * crashed migration: appending FLAT files next to the partition dirs
-    * would wedge every subsequent read ('Conflicting directory
-    * structures'), and inferring a bucket count from the dirs risks
-    * silently-wrong pruning (a sparse store need not materialize every
-    * bucket) — so the append REFUSES and directs the operator to the
-    * idempotent repair (recover + compact re-run, which rewrites the
-    * relations and commits the meta through the same swap).
-    */
-  private[dedup] def appendLayout(
-      spark: SparkSession, path: String, key: String, probeRel: String,
-      partKey: String): Option[Int] = {
-    val layout = readLayout(spark, path, key)
-    if (layout.isEmpty)
-      require(!hasPartitionDirs(spark, s"$path/$probeRel", partKey),
-        s"$path/$probeRel is $partKey-bucketed on disk but the store's " +
-          "layout meta is missing (crashed migration?) — run recover() " +
-          "then compact() before appending; a flat append here would " +
-          "corrupt partition discovery for every subsequent read")
-    layout
-  }
-
   private[dedup] def readLayout(
-      spark: SparkSession, path: String, key: String): Option[Int] = {
+      spark: SparkSession, path: String, key: String): Int = {
     val p = new org.apache.hadoop.fs.Path(s"$path/layout")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else if (fs.getFileStatus(p).isDirectory)
-      // transitional: the first v2 spelling persisted the meta as a
-      // one-row parquet directory
-      Some(spark.read.parquet(p.toString).select(col(key)).first().getInt(0))
-    else {
-      val in = fs.open(p)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      ("\"" + key + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(body)
-        .map(_.group(1).toInt)
-    }
+    require(fs.exists(p), s"store $path has no layout meta at $p")
+    val in = fs.open(p)
+    val body =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    val buckets = ("\"" + key + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(body)
+    require(buckets.isDefined, s"store $path: layout meta $p has no $key")
+    buckets.get.group(1).toInt
   }
 
   private def writeIdBucketed(
@@ -185,62 +131,45 @@ object DedupStore {
   private def write(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int, path: String,
-      mode: String, idBuckets: Option[Int]): Unit = {
+      mode: String, buckets: Int): Unit = {
     val sh = Dedup.shingleIndex(docs, idCol, textCol, n).localCheckpoint(true)
     Dedup.minhashBanded(sh, bands, rowsPerBand)
       .write.mode(mode).partitionBy("band").parquet(s"$path/bands")
     val counts = sh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
     // Per-doc shingle counts, stored so the refine never re-aggregates
     // the corpus-sized shingle relation per probe. Both id-keyed
-    // relations are Hive-partitioned by idb = pmod(id, buckets) (the v2
-    // layout): the refine only ever reads CANDIDATE-involved ids — a
+    // relations are Hive-partitioned by idb = pmod(id, buckets): the
+    // refine only ever reads CANDIDATE-involved ids — a
     // batch-hit-bounded set — so the probe collects their distinct
     // buckets (≤ buckets scalars) and prunes the stored FILES at
     // planning time, the IVF store's cell trick applied to ids. One
     // repartition by bucket per write keeps it to `buckets` files per
     // increment (same order as today's shuffle-file splatter).
-    idBuckets match {
-      case Some(b) =>
-        writeIdBucketed(sh, b, s"$path/shingles", mode)
-        writeIdBucketed(counts, b, s"$path/counts", mode)
-      case None =>
-        sh.write.mode(mode).parquet(s"$path/shingles")
-        counts.write.mode(mode).parquet(s"$path/counts")
-    }
+    writeIdBucketed(sh, buckets, s"$path/shingles", mode)
+    writeIdBucketed(counts, buckets, s"$path/counts", mode)
     org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(sh)
   }
 
-  /** Build + persist the index for an initial corpus. `idBuckets` picks
-    * the id-bucket count of the v2 layout (≤ 1 = the legacy unbucketed
-    * layout, kept for the A/B harnesses and pre-upgrade parity).
+  /** Build + persist the index for an initial corpus, with
+    * [[DefaultIdBuckets]] id buckets recorded in its layout meta.
     */
   def save(
       docs: DataFrame, idCol: String, textCol: String,
-      n: Int, bands: Int, rowsPerBand: Int, path: String,
-      idBuckets: Int = DefaultIdBuckets): Unit = {
-    val b = if (idBuckets > 1) Some(idBuckets) else None
-    write(docs, idCol, textCol, n, bands, rowsPerBand, path, "overwrite", b)
-    b match {
-      case Some(x) => writeLayout(docs.sparkSession, path, "id_buckets", x)
-      case None =>
-        val lp = new org.apache.hadoop.fs.Path(s"$path/layout")
-        val fs = lp.getFileSystem(
-          docs.sparkSession.sparkContext.hadoopConfiguration)
-        fs.delete(lp, true)
-        ()
-    }
+      n: Int, bands: Int, rowsPerBand: Int, path: String): Unit = {
+    write(docs, idCol, textCol, n, bands, rowsPerBand, path, "overwrite",
+      DefaultIdBuckets)
+    writeLayout(docs.sparkSession, path, "id_buckets", DefaultIdBuckets)
   }
 
   /** Add a new batch to the stored index (call AFTER [[searchNew]] has
     * adjudicated it). Append-only: old state is untouched; the batch is
-    * written in whatever layout the store declares (a legacy store
-    * stays legacy until [[compact]] migrates it).
+    * bucketed by the store's own id-bucket count.
     */
   def append(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int, path: String): Unit =
     write(docs, idCol, textCol, n, bands, rowsPerBand, path, "append",
-      appendLayout(docs.sparkSession, path, "id_buckets", "shingles", "idb"))
+      readLayout(docs.sparkSession, path, "id_buckets"))
 
   /** Maintenance: rewrite the store's three relations into few large,
     * clustered files. Append-only increments each leave their own file
@@ -255,10 +184,9 @@ object DedupStore {
     *     partition key), rows sorted by (bucket, id) — each band
     *     directory collapses to a single bucket-clustered file, so the
     *     probe's band equi-join reads sequentially;
-    *   - `shingles`/`counts`: range-repartitioned and sorted by `id`
-    *     into `idFiles` files — each file carries a TIGHT min/max id
-    *     range in its parquet footer (the id-bucketed layout the store
-    *     notes promise), which clusters the refine's id-restricted scan
+    *   - `shingles`/`counts`: one file per id bucket, rows sorted by
+    *     `id` — each file carries a TIGHT min/max id range in its
+    *     parquet footer, which clusters the refine's id-restricted scan
     *     and positions the layout for row-group skipping.
     *
     * [[searchNew]] results are byte-identical before/after (the store
@@ -273,8 +201,8 @@ object DedupStore {
     * with a manifest/transaction log (Delta/Iceberg-style), which is
     * out of scope for the path-based store.
     */
-  def compact(spark: SparkSession, path: String, idFiles: Int = 8): Unit = {
-    require(idFiles >= 1, s"idFiles must be >= 1; got $idFiles")
+  def compact(spark: SparkSession, path: String): Unit = {
+    val buckets = readLayout(spark, path, "id_buckets")
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
@@ -286,19 +214,7 @@ object DedupStore {
         .sortWithinPartitions(col("bucket"), col("id"))
         .write.partitionBy("band").parquet(s"$tmp/bands")
     }
-    // A bucketed store compacts to ONE id-sorted file per bucket; a
-    // LEGACY store MIGRATES to the bucketed layout here (the gramdf-
-    // backfill precedent: compact is the store's upgrade point). The
-    // layout meta is STAGED into tmp and moves through the same
-    // rename-aside swap as the relations, ordered LAST: a crash
-    // anywhere mid-migration leaves bucketed relations with a missing
-    // (never a wrong) meta — reads stay correct as legacy, and
-    // [[appendLayout]] refuses appends until the idempotent
-    // recover + compact re-run commits the meta. (The reverse order
-    // would leave a bucketed meta over still-legacy relations, which
-    // would corrupt the next append's partition discovery.)
-    val buckets = readLayout(spark, path, "id_buckets")
-      .getOrElse(DefaultIdBuckets)
+    // The id-keyed relations compact to ONE id-sorted file per bucket.
     stagedWrite(spark, s"$tmp/shingles") {
       writeIdBucketed(spark.read.parquet(s"$path/shingles")
           .select(col("id"), col("s")),
@@ -309,9 +225,20 @@ object DedupStore {
           .select(col("id"), col("n_sh")),
         buckets, s"$tmp/counts", "overwrite", sortById = true)
     }
-    writeLayoutFile(spark, s"$tmp/layout", "id_buckets", buckets)
-    swapRelations(fs, root, tmp, Seq("bands", "shingles", "counts", "layout"))
+    swapRelations(fs, root, tmp, Seq("bands", "shingles", "counts"))
   }
+
+  /** TEST-ONLY failpoint: the number of [[swapRelations]] renames —
+    * counted ACROSS calls, so a multi-store operation like
+    * `ReleaseStore.remove` (three swaps back to back) exposes every
+    * kill point of every swap — completed before an injected
+    * IOException is thrown. k = 0 .. total-renames−1 covers a crash
+    * before/between/after every rename, including the cross-relation
+    * and cross-store mixed-generation windows (SwapCrashSpec /
+    * ReleaseStoreSpec drive them all). Int.MaxValue (= never) in
+    * production; the injected throw resets it.
+    */
+  @volatile private[graft] var swapFailAfterRenames: Int = Int.MaxValue
 
   /** The shared crash-safe swap (compact/remove): for each staged
     * relation, live → `<rel>.old`, tmp → live, delete `.old`. A crash
@@ -334,18 +261,6 @@ object DedupStore {
     * multi-relation swap atomic behind a manifest/transaction log
     * (Delta/Iceberg-style), out of scope for the path-based store.
     */
-  /** TEST-ONLY failpoint: the number of [[swapRelations]] renames —
-    * counted ACROSS calls, so a multi-store operation like
-    * `ReleaseStore.remove` (three swaps back to back) exposes every
-    * kill point of every swap — completed before an injected
-    * IOException is thrown. k = 0 .. total-renames−1 covers a crash
-    * before/between/after every rename, including the cross-relation
-    * and cross-store mixed-generation windows (SwapCrashSpec /
-    * ReleaseStoreSpec drive them all). Int.MaxValue (= never) in
-    * production; the injected throw resets it.
-    */
-  @volatile private[graft] var swapFailAfterRenames: Int = Int.MaxValue
-
   private[graft] def swapRelations(
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       tmp: org.apache.hadoop.fs.Path, rels: Seq[String]): Unit = {
@@ -365,9 +280,8 @@ object DedupStore {
       val live = new org.apache.hadoop.fs.Path(root, rel)
       val old = new org.apache.hadoop.fs.Path(root, rel + ".old")
       fs.delete(old, true) // leftover from a prior crashed swap
-      // A relation can lack a live dir: a pre-upgrade store gaining a
-      // backfilled relation (SpanStore gramdf), or recovery from a crash
-      // that already moved it aside. Nothing to rename aside then.
+      // A relation can lack a live dir after a crash that already moved
+      // it aside. Nothing to rename aside then.
       if (fs.exists(live)) rename(live, old, s"live $rel aside")
       rename(new org.apache.hadoop.fs.Path(tmp, rel), live, s"$rel into place")
       fs.delete(old, true)
@@ -399,12 +313,9 @@ object DedupStore {
     }
   }
 
-  /** [[recoverRelations]] over this store's relation set (the layout
-    * meta moves through the same swap since it was staged — recover it
-    * like any relation; a legacy store without one is a no-op).
-    */
+  /** [[recoverRelations]] over this store's swapped relations. */
   def recover(spark: SparkSession, path: String): Unit =
-    recoverRelations(spark, path, Seq("bands", "shingles", "counts", "layout"))
+    recoverRelations(spark, path, Seq("bands", "shingles", "counts"))
 
   /** Takedown: rewrite the store WITHOUT the given doc ids (first column
     * of `ids`, castable to long) — the DMCA/PII/right-to-be-forgotten
@@ -420,6 +331,7 @@ object DedupStore {
     * before further probes (a parquet dir with no rows has no schema).
     */
   def remove(spark: SparkSession, path: String, ids: DataFrame): Unit = {
+    val buckets = readLayout(spark, path, "id_buckets")
     val gone = ids.select(col(ids.columns.head).cast("long").as("id")).distinct()
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
@@ -428,20 +340,15 @@ object DedupStore {
     fs.delete(tmp, true)
     // Takedown lists are usually tiny (AQE broadcasts the anti-join
     // side); the store streams through the rewrite once per relation.
-    // The id-keyed relations rewrite in the store's declared layout.
     stagedWrite(spark, s"$tmp/bands") {
       spark.read.parquet(s"$path/bands").join(gone, Seq("id"), "left_anti")
         .write.partitionBy("band").parquet(s"$tmp/bands")
     }
-    val layout = readLayout(spark, path, "id_buckets")
     def rewrite(rel: String, cols: Seq[String]): Unit = stagedWrite(spark, s"$tmp/$rel") {
       val survivors = spark.read.parquet(s"$path/$rel")
         .select(cols.map(col): _*)
         .join(gone, Seq("id"), "left_anti")
-      layout match {
-        case Some(b) => writeIdBucketed(survivors, b, s"$tmp/$rel", "overwrite")
-        case None => survivors.write.parquet(s"$tmp/$rel")
-      }
+      writeIdBucketed(survivors, buckets, s"$tmp/$rel", "overwrite")
     }
     rewrite("shingles", Seq("id", "s"))
     rewrite("counts", Seq("id", "n_sh"))
@@ -522,6 +429,7 @@ object DedupStore {
       newDocs: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int, threshold: Double,
       alsoAppend: Boolean): DataFrame = {
+    val buckets = readLayout(spark, path, "id_buckets")
     val newSh = Dedup.shingleIndex(newDocs, idCol, textCol, n)
       .localCheckpoint(true)
     val newBands = Dedup.minhashBanded(newSh, bands, rowsPerBand)
@@ -542,31 +450,26 @@ object DedupStore {
     // shingle scan to those ids (a batch-hit-sized set), and read the
     // per-doc counts from the store instead of re-aggregating the
     // corpus-sized shingle relation — the two O(corpus) stages the first
-    // spelling of this probe still paid per increment. On a v2
-    // (id-bucketed) layout the restriction ALSO prunes files at
-    // planning time: the candidate ids' distinct buckets are a bounded
-    // driver scalar set (≤ id_buckets values, from a checkpointed
-    // batch-hit-sized relation), pushed as a partition filter — so the
-    // refine's stored IO is O(hit buckets), not O(corpus), no matter
-    // how many increments the store has absorbed. The explicit column
-    // projections keep a meta-less (pre-upgrade or mid-migration)
-    // store reading correctly as legacy.
+    // spelling of this probe still paid per increment. The restriction
+    // ALSO prunes files at planning time: the candidate ids' distinct
+    // buckets are a bounded driver scalar set (≤ id_buckets values, from
+    // a checkpointed batch-hit-sized relation), pushed as a partition
+    // filter — so the refine's stored IO is O(hit buckets), not
+    // O(corpus), no matter how many increments the store has absorbed.
     val candIds = candidates.select(col("doc_a").as("id"))
       .unionAll(candidates.select(col("doc_b").as("id")))
       .distinct()
-    val layout = readLayout(spark, path, "id_buckets")
     // Bucket discovery uses only the STORED candidate ids (ids are
     // globally unique, so a batch id can never be in the store — its
     // bucket would be read for nothing). The discovery job is gated on
     // the stored relation being big enough to pay for it, exactly as
-    // the span store's intersection pass (`layout` itself stays
-    // ungated — it also decides the APPEND write layout below).
-    val candBuckets = layout
-      .filter(_ => SpanStore.dirBytes(spark, s"$path/shingles") >=
-        SpanStore.PruneMinStoreBytes)
-      .map(b =>
+    // the span store's intersection pass.
+    val candBuckets =
+      if (SpanStore.dirBytes(spark, s"$path/shingles") < SpanStore.PruneMinStoreBytes)
+        None
+      else Some(
         candIds.join(newSh.select(col("id")).distinct(), Seq("id"), "left_anti")
-          .select(idbOf(col("id"), b).as("b")).distinct()
+          .select(idbOf(col("id"), buckets).as("b")).distinct()
           .collect().map(_.getInt(0)).toSeq)
     def pruned(rel: String, cols: Seq[String]): DataFrame = {
       val raw = spark.read.parquet(s"$path/$rel")
@@ -575,8 +478,7 @@ object DedupStore {
         // everything anyway — skip the useless filter. Pruning exists
         // for the hit-sparse regime (trickle batches, targeted checks),
         // where a handful of buckets carry every candidate id.
-        case Some(bks) if raw.columns.contains("idb") &&
-            bks.size < layout.get =>
+        case Some(bks) if bks.size < buckets =>
           raw.filter(col("idb").isin(bks: _*))
         case _ => raw
       }).select(cols.map(col): _*)
@@ -591,25 +493,12 @@ object DedupStore {
       // Materialize the probe BEFORE the store grows (the lazy stored
       // reads above would otherwise see the batch's own appended rows),
       // then append the already-computed relations: no second shingle
-      // or minhash pass over the batch. Same meta-vs-disk agreement
-      // check as [[append]]: a flat append into a meta-less bucketed
-      // store (crashed migration) would corrupt partition discovery.
-      if (layout.isEmpty)
-        require(!hasPartitionDirs(spark, s"$path/shingles", "idb"),
-          s"$path/shingles is idb-bucketed on disk but the layout meta " +
-            "is missing (crashed migration?) — run recover() then " +
-            "compact() before appending")
+      // or minhash pass over the batch.
       val res = refined.localCheckpoint(true)
       newBands.write.mode("append").partitionBy("band").parquet(s"$path/bands")
       val newCounts = newSh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
-      layout match {
-        case Some(b) =>
-          writeIdBucketed(newSh, b, s"$path/shingles", "append")
-          writeIdBucketed(newCounts, b, s"$path/counts", "append")
-        case None =>
-          newSh.write.mode("append").parquet(s"$path/shingles")
-          newCounts.write.mode("append").parquet(s"$path/counts")
-      }
+      writeIdBucketed(newSh, buckets, s"$path/shingles", "append")
+      writeIdBucketed(newCounts, buckets, s"$path/counts", "append")
       // res' eager checkpoint truncated lineage above everything here —
       // free the intermediates the caller's sweep could never reach.
       org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(newBands)

@@ -14,17 +14,17 @@ import org.apache.spark.sql.functions._
   *   `<path>/grams`:   (id, pos, g) — every complete minTokens-token
   *                     anchor window of every accepted document
   *                     ([[Dedup.anchorGrams]]), the blocking state AND
-  *                     the span-merge input in one. v2 stores Hive-
-  *                     partition it by gb = pmod(xxhash64(g),
-  *                     gram_buckets) for the probe's file pruning.
+  *                     the span-merge input in one, Hive-partitioned by
+  *                     gb = pmod(xxhash64(g), gram_buckets) for the
+  *                     probe's file pruning.
   *   `<path>/gramidx`: (gh) — the distinct gram HASHES, the cheap
   *                     existence index the probe consults to find which
   *                     gb partitions can hold a batch-matching gram
   *                     (matched grams are rare, so most partitions
   *                     prune even for broad batches).
-  *   `<path>/layout`:  one-row meta (gram_buckets); pre-upgrade stores
-  *                     lack it and read as legacy ([[compact]] migrates
-  *                     them).
+  *   `<path>/gramdf`:  (g, nd) — additive per-increment document-
+  *                     frequency partials, the stop-gram cap's input.
+  *   `<path>/layout`:  meta (gram_buckets), fixed by [[save]].
   *
   * The anchor-gram family is deterministic across batches, so probing
   * stored grams with a new batch's grams is EQUAL to running
@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   */
 object SpanStore {
 
-  /** Default gram-bucket count for new stores (the v2 layout). */
+  /** Gram-bucket count of every store [[save]] writes. */
   private[dedup] val DefaultGramBuckets = 32
 
   /** Minimum stored-relation size before a probe runs its pruning
@@ -64,20 +64,14 @@ object SpanStore {
     pmod(xxhash64(g), lit(buckets.toLong)).cast("int")
 
   private def writeGrams(
-      g: DataFrame, buckets: Option[Int], path: String, mode: String): Unit =
-    buckets match {
-      case Some(b) =>
-        g.select(col("id"), col("pos"), col("g"))
-          .withColumn("gb", gbOf(col("g"), b))
-          .repartition(b, col("gb"))
-          .write.mode(mode).partitionBy("gb").parquet(s"$path/grams")
-      case None =>
-        g.select(col("id"), col("pos"), col("g"))
-          .write.mode(mode).parquet(s"$path/grams")
-    }
+      g: DataFrame, buckets: Int, path: String, mode: String): Unit =
+    g.select(col("id"), col("pos"), col("g"))
+      .withColumn("gb", gbOf(col("g"), buckets))
+      .repartition(buckets, col("gb"))
+      .write.mode(mode).partitionBy("gb").parquet(s"$path/grams")
 
-  /** The per-increment df partials + (on the v2 layout) the existence
-    * INDEX, from ONE aggregation pass: the distinct-gram relation the
+  /** The per-increment df partials + the existence INDEX, from ONE
+    * aggregation pass: the distinct-gram relation the
     * partials are built on IS the index's row set, so gramidx is a
     * hash projection of the checkpointed aggregate — no second shuffle
     * over the batch's grams. The index holds one long per distinct
@@ -98,22 +92,19 @@ object SpanStore {
     * `maxDf` probe but never lose an uncapped match; re-running the
     * failed append (the batch-retry contract) or a compact settles it.
     */
-  private def writeDfAndIndex(
-      g: DataFrame, buckets: Option[Int], path: String, mode: String): Unit = {
+  private def writeDfAndIndex(g: DataFrame, path: String, mode: String): Unit = {
     val dfPart = g.select(col("g"), col("id")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("nd"))
       .localCheckpoint(true) // feeds gramidx AND gramdf
-    if (buckets.isDefined)
-      dfPart.select(xxhash64(col("g")).as("gh"))
-        .write.mode(mode).parquet(s"$path/gramidx")
+    dfPart.select(xxhash64(col("g")).as("gh"))
+      .write.mode(mode).parquet(s"$path/gramidx")
     dfPart.write.mode(mode).parquet(s"$path/gramdf")
     org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(dfPart)
   }
 
   private def write(
       docs: DataFrame, idCol: String, textCol: String,
-      minTokens: Int, path: String, mode: String,
-      buckets: Option[Int]): Unit = {
+      minTokens: Int, path: String, mode: String, buckets: Int): Unit = {
     val g = Dedup.anchorGrams(docs, idCol, textCol, minTokens)
       .localCheckpoint(true) // written twice (grams + df partials)
     // Per-increment document-frequency PARTIALS (g, nd) — additive like
@@ -123,77 +114,59 @@ object SpanStore {
     // [[remove]] appends negated rows (exact integer subtraction).
     // Index + partials BEFORE grams (see [[writeDfAndIndex]]'s order
     // invariant): a torn append leaves the existence index a superset.
-    writeDfAndIndex(g, buckets, path, mode)
+    writeDfAndIndex(g, path, mode)
     writeGrams(g, buckets, path, mode)
     org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(g)
   }
 
-  /** Build + persist the anchor-gram index for an initial corpus.
-    * `gramBuckets` picks the v2 layout's bucket count (≤ 1 = the legacy
-    * unbucketed layout, kept for the A/B harnesses and pre-upgrade
-    * parity).
+  /** Build + persist the anchor-gram index for an initial corpus, with
+    * [[DefaultGramBuckets]] gram buckets recorded in its layout meta.
     */
   def save(
       docs: DataFrame, idCol: String, textCol: String,
-      minTokens: Int, path: String,
-      gramBuckets: Int = DefaultGramBuckets): Unit = {
-    val b = if (gramBuckets > 1) Some(gramBuckets) else None
-    write(docs, idCol, textCol, minTokens, path, "overwrite", b)
-    val s = docs.sparkSession
-    b match {
-      case Some(x) => DedupStore.writeLayout(s, path, "gram_buckets", x)
-      case None =>
-        val lp = new org.apache.hadoop.fs.Path(s"$path/layout")
-        lp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(lp, true)
-        ()
-    }
+      minTokens: Int, path: String): Unit = {
+    write(docs, idCol, textCol, minTokens, path, "overwrite", DefaultGramBuckets)
+    DedupStore.writeLayout(docs.sparkSession, path, "gram_buckets",
+      DefaultGramBuckets)
   }
 
   /** Add a new batch to the stored index (call AFTER [[searchNew]] has
-    * adjudicated it). Append-only: old state is untouched; the batch
-    * lands in whatever layout the store declares.
+    * adjudicated it). Append-only: old state is untouched; the batch is
+    * bucketed by the store's own gram-bucket count.
     */
   def append(
       docs: DataFrame, idCol: String, textCol: String,
       minTokens: Int, path: String): Unit =
     write(docs, idCol, textCol, minTokens, path, "append",
-      DedupStore.appendLayout(
-        docs.sparkSession, path, "gram_buckets", "grams", "gb"))
+      DedupStore.readLayout(docs.sparkSession, path, "gram_buckets"))
 
-  /** Maintenance: rewrite the gram relation into `files` gram-clustered
+  /** Maintenance: rewrite the gram relation into one gram-sorted file
+    * per gram bucket, and the df partials into `files` gram-range-sorted
     * files. Each [[append]] leaves its own shuffle-parallelism-sized file
     * set, so a many-increment store's probe pays a file-count tax on the
     * two stored scans (the measured residual: 160 files / 3.5 s probe
     * at 512× and 16 appends) — the same fragmentation
     * [[DedupStore.compact]] and [[graft.sim.IndexStore.compact]] fix.
-    * Rows are range-repartitioned and sorted by gram content, so each
-    * file carries a tight min/max `g` range in its parquet footer and
-    * the probe's content equi-join reads gram-clustered runs. Crash
+    * Rows are sorted by gram content within each file, so the probe's
+    * content equi-join reads gram-clustered runs. The existence index
+    * is rebuilt exactly from the merged partials. Crash
     * safety is the shared rename-aside swap: stage to
     * `<path>/.compact.tmp`, live → `.old`, tmp → live, delete `.old`.
     * A crash anywhere in the swap leaves either the live `grams` dir or
     * its `grams.old` copy intact (recover by renaming `.old` back) —
     * never a hole, but note the window between the two renames has no
     * live path, so concurrent probes can fail until recovery.
-    * [[searchNew]] results are row-identical across layouts
+    * [[searchNew]] results are row-identical across the rewrite
     * (SpanStoreSpec pins it).
     */
   def compact(spark: SparkSession, path: String, files: Int = 8): Unit = {
     require(files >= 1, s"files must be >= 1; got $files")
+    val buckets = DedupStore.readLayout(spark, path, "gram_buckets")
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
     val tmp = new org.apache.hadoop.fs.Path(path, ".compact.tmp")
     fs.delete(tmp, true)
-    // A bucketed store compacts to one gram-sorted file per bucket; a
-    // LEGACY store MIGRATES to the bucketed layout here (the layout meta
-    // is STAGED into tmp and swaps LAST, so a crash mid-migration leaves
-    // bucketed relations with a missing — never wrong — meta: reads stay
-    // correct as legacy and appends are refused until the idempotent
-    // recover + compact re-run). The existence index is rebuilt EXACTLY
-    // from the live grams, retiring hashes whose grams a remove() purged.
-    val buckets = DedupStore.readLayout(spark, path, "gram_buckets")
-      .getOrElse(DefaultGramBuckets)
     // stagedWrite: retry-once on a transient task-commit denial — the
     // r18 driver run's VERIFY failure died exactly here (see
     // [[DedupStore.stagedWrite]] for the race: a denied commit wrapped
@@ -215,7 +188,7 @@ object SpanStore {
     // grams move through the same swaps in lockstep), so the existence
     // index rebuilds from the SAME merged aggregate — retiring removed
     // hashes without a second pass over the pos-level relation.
-    val merged = gramDf(spark, path)
+    val merged = spark.read.parquet(s"$path/gramdf")
       .groupBy(col("g")).agg(sum(col("nd")).as("nd"))
       .filter(col("nd") > 0)
       .localCheckpoint(true) // feeds gramdf AND gramidx
@@ -230,37 +203,16 @@ object SpanStore {
         .write.parquet(s"$tmp/gramidx")
     }
     org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(merged)
-    DedupStore.writeLayoutFile(spark, s"$tmp/layout", "gram_buckets", buckets)
     // gramidx swaps BEFORE grams so every kill point keeps the index a
     // superset of the live grams (the staged index covers the staged
     // grams AND, being rebuilt from merged partials, the still-live old
-    // generation); layout swaps last (missing beats wrong).
-    DedupStore.swapRelations(fs, root, tmp,
-      Seq("gramidx", "grams", "gramdf", "layout"))
+    // generation).
+    DedupStore.swapRelations(fs, root, tmp, Seq("gramidx", "grams", "gramdf"))
   }
 
-  /** [[DedupStore.recoverRelations]] over this store's relation set
-    * (incl. the swap-staged layout meta).
-    */
+  /** [[DedupStore.recoverRelations]] over this store's swapped relations. */
   def recover(spark: SparkSession, path: String): Unit =
-    DedupStore.recoverRelations(
-      spark, path, Seq("grams", "gramdf", "gramidx", "layout"))
-
-  /** The stored df-partials relation. A store written before the
-    * `gramdf` relation existed is backfilled from `grams` on the fly
-    * (one distinct + groupBy pass — the same derivation [[write]]
-    * persists), so [[compact]] / [[remove]] / a capped [[searchNew]]
-    * never fail on a pre-upgrade store; the next [[compact]] persists
-    * the merged relation and retires the backfill.
-    */
-  private def gramDf(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/gramdf")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(s"$path/gramdf")
-    else spark.read.parquet(s"$path/grams")
-      .select(col("g"), col("id")).distinct()
-      .groupBy(col("g")).agg(count(lit(1)).as("nd"))
-  }
+    DedupStore.recoverRelations(spark, path, Seq("grams", "gramdf", "gramidx"))
 
   /** Takedown: rewrite the gram relation WITHOUT the given doc ids
     * (first column of `ids`, castable to long) — [[DedupStore.remove]]'s
@@ -272,6 +224,7 @@ object SpanStore {
     * every stored doc leaves an empty store that must be re-[[save]]d.
     */
   def remove(spark: SparkSession, path: String, ids: DataFrame): Unit = {
+    val buckets = DedupStore.readLayout(spark, path, "gram_buckets")
     val gone = ids.select(col(ids.columns.head).cast("long").as("id")).distinct()
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
@@ -279,20 +232,13 @@ object SpanStore {
     val tmp = new org.apache.hadoop.fs.Path(path, ".remove.tmp")
     fs.delete(tmp, true)
     val live = spark.read.parquet(s"$path/grams")
-    // Survivors rewrite in the store's declared layout. The existence
-    // index is NOT rewritten: a removed gram's hash lingering there only
-    // adds pruning buckets (a superset — always correct); the next
-    // [[compact]] rebuilds it exactly.
+    // The existence index is NOT rewritten: a removed gram's hash
+    // lingering there only adds pruning buckets (a superset — always
+    // correct); the next [[compact]] rebuilds it exactly.
     val survivors = live.join(gone, Seq("id"), "left_anti")
       .select(col("id"), col("pos"), col("g"))
     DedupStore.stagedWrite(spark, s"$tmp/grams") {
-      DedupStore.readLayout(spark, path, "gram_buckets") match {
-        case Some(b) =>
-          survivors.withColumn("gb", gbOf(col("g"), b))
-            .repartition(b, col("gb"))
-            .write.partitionBy("gb").parquet(s"$tmp/grams")
-        case None => survivors.write.parquet(s"$tmp/grams")
-      }
+      writeGrams(survivors, buckets, tmp.toString, "overwrite")
     }
     // df partials: append the removed docs' NEGATED per-gram doc counts
     // (computed from the still-live gram relation), staged together with
@@ -301,7 +247,7 @@ object SpanStore {
       .select(col("g"), col("id")).distinct()
       .groupBy(col("g")).agg((-count(lit(1))).as("nd"))
     DedupStore.stagedWrite(spark, s"$tmp/gramdf") {
-      gramDf(spark, path).unionAll(negDf)
+      spark.read.parquet(s"$path/gramdf").unionAll(negDf)
         .write.parquet(s"$tmp/gramdf")
     }
     DedupStore.swapRelations(fs, root, tmp, Seq("grams", "gramdf"))
@@ -357,10 +303,10 @@ object SpanStore {
       spark: SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       minTokens: Int, maxDf: Int, alsoAppend: Boolean): DataFrame = {
+    val buckets = DedupStore.readLayout(spark, path, "gram_buckets")
     val newG0 = Dedup.anchorGrams(newDocs, idCol, textCol, minTokens)
       .localCheckpoint(true) // probed twice (store arm + self) + appended
-    val layout = DedupStore.readLayout(spark, path, "gram_buckets")
-    // v2 pruning: only grams present on BOTH sides can seed a span, and
+    // Pruning: only grams present on BOTH sides can seed a span, and
     // true matches are rare even when the batch's own gram set covers
     // every bucket — so discover the INTERSECTION's buckets through the
     // cheap hash-only existence index and read only those partitions of
@@ -370,21 +316,18 @@ object SpanStore {
     // stored relation is big enough for the pruned read to pay for it
     // (below [[PruneMinStoreBytes]] a straight scan is cheaper — the
     // p22 sf0.1 increment regressed 11.7→15.8 s before this gate).
-    // Explicit column projection keeps a meta-less (mid-migration)
-    // store reading as legacy.
-    val storedAll = layout match {
-      case Some(b) if dirBytes(spark, s"$path/grams") >= PruneMinStoreBytes =>
-        val hit = spark.read.parquet(s"$path/gramidx")
-          .join(newG0.select(xxhash64(col("g")).as("gh")).distinct(),
-            Seq("gh"), "left_semi")
-          .select(pmod(col("gh"), lit(b.toLong)).cast("int").as("gb"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val raw = spark.read.parquet(s"$path/grams")
-        (if (hit.size >= b) raw else raw.filter(col("gb").isin(hit: _*)))
-          .select(col("id"), col("pos"), col("g"))
-      case _ =>
-        spark.read.parquet(s"$path/grams").select(col("id"), col("pos"), col("g"))
-    }
+    val hit =
+      if (dirBytes(spark, s"$path/grams") < PruneMinStoreBytes) None
+      else Some(spark.read.parquet(s"$path/gramidx")
+        .join(newG0.select(xxhash64(col("g")).as("gh")).distinct(),
+          Seq("gh"), "left_semi")
+        .select(pmod(col("gh"), lit(buckets.toLong)).cast("int").as("gb"))
+        .distinct().collect().map(_.getInt(0)).toSeq)
+    val raw = spark.read.parquet(s"$path/grams")
+    val storedAll = (hit match {
+      case Some(h) if h.size < buckets => raw.filter(col("gb").isin(h: _*))
+      case _ => raw
+    }).select(col("id"), col("pos"), col("g"))
     val (newG, stored, heavyOpt) =
       if (maxDf == Int.MaxValue) (newG0, storedAll, None)
       else {
@@ -394,7 +337,7 @@ object SpanStore {
         // Union df = stored partial sums + batch df; the heavy list is
         // df-bounded (≤ total-grams / maxDf rows) and AQE broadcasts
         // both anti-joins. Checkpointed: consumed by both seed sides.
-        val heavy = gramDf(spark, path).unionAll(batchDf)
+        val heavy = spark.read.parquet(s"$path/gramdf").unionAll(batchDf)
           .groupBy(col("g")).agg(sum(col("nd")).as("nd"))
           .filter(col("nd") > maxDf)
           .select(col("g"))
@@ -427,19 +370,11 @@ object SpanStore {
     val spans = Dedup.spansFromSeeds(seeds, minTokens)
     if (!alsoAppend) spans
     else {
-      // Same meta-vs-disk agreement check as [[append]]: a flat append
-      // into a meta-less bucketed store (crashed migration) would
-      // corrupt partition discovery for every later read.
-      if (layout.isEmpty)
-        require(!DedupStore.hasPartitionDirs(spark, s"$path/grams", "gb"),
-          s"$path/grams is gb-bucketed on disk but the layout meta is " +
-            "missing (crashed migration?) — run recover() then compact() " +
-            "before appending")
       val res = spans.localCheckpoint(true)
       // Index + partials before grams (writeDfAndIndex's order
       // invariant): a torn append leaves the index a superset.
-      writeDfAndIndex(newG0, layout, path, "append")
-      writeGrams(newG0, layout, path, "append")
+      writeDfAndIndex(newG0, path, "append")
+      writeGrams(newG0, buckets, path, "append")
       // res' eager checkpoint truncated lineage above the gram
       // relation — free what the caller's sweep can no longer reach.
       org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(newG0)

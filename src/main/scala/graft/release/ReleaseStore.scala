@@ -374,27 +374,17 @@ object ReleaseStore {
     // id comes from the `maxid` ledger (one row per init/increment —
     // EVERY arriving id counts, gate-rejected included; a batch reusing
     // a rejected stored id would silently corrupt the classifier
-    // statistics additivity). Pre-upgrade stores lack the ledger and
-    // backfill its seed from the classifier's docs membership ledger,
-    // which has recorded every arriving doc since init.
-    // The three store-metadata scalars (clusters gen-max, max-seen id,
-    // batch id range) are FOLDED into one driver job (r18 verdict #5):
-    // three one-row aggregates cross-joined, so their source scans run
-    // as parallel stages of a single job instead of three sequential
-    // driver round-trips — and the same job materializes the `docs`
-    // checkpoint the batch-range aggregate reads. Values identical (the
-    // fold only changes how many jobs carry them).
-    val maxidPath = new org.apache.hadoop.fs.Path(s"$path/maxid")
-    val maxidFs = maxidPath.getFileSystem(hconf)
-    val seenSrc =
-      if (maxidFs.exists(maxidPath))
-        s.read.parquet(s"$path/maxid").agg(max(col("max_id")).as("sm"))
-      else
-        s.read.parquet(s"$path/classifier/docs")
-          .agg(max(col("doc_id")).as("sm"))
+    // statistics additivity). The three store-metadata scalars
+    // (clusters gen-max, max-seen id, batch id range) are FOLDED into
+    // one driver job (r18 verdict #5): three one-row aggregates
+    // cross-joined, so their source scans run as parallel stages of a
+    // single job instead of three sequential driver round-trips — and
+    // the same job materializes the `docs` checkpoint the batch-range
+    // aggregate reads. Values identical (the fold only changes how many
+    // jobs carry them).
     val meta = s.read.parquet(s"$path/clusters")
       .agg(coalesce(max(col("gen")), lit(0L)).as("g"))
-      .crossJoin(seenSrc)
+      .crossJoin(s.read.parquet(s"$path/maxid").agg(max(col("max_id")).as("sm")))
       .crossJoin(docs.agg(min(col("doc_id")).as("bmin"),
         max(col("doc_id")).as("bmax")))
       .first()
@@ -617,7 +607,7 @@ object ReleaseStore {
     * crash safety is the shared per-relation rename-aside swap.
     */
   def compact(s: SparkSession, path: String, files: Int = 8): Unit = {
-    DedupStore.compact(s, s"$path/neardup", files)
+    DedupStore.compact(s, s"$path/neardup")
     SpanStore.compact(s, s"$path/spans", files)
     val ivfP = new org.apache.hadoop.fs.Path(s"$path/ivf")
     if (ivfP.getFileSystem(s.sparkContext.hadoopConfiguration).exists(ivfP))

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Bench baselines are keyed by (sf, core count): [[Bench.previousMinWalls]]
   * reads only sources taken at this run's core count, and
   * [[Bench.writeFloorSnapshot]] merges only with a snapshot of the same sf
-  * and cores. Runs over a temp directory, never the committed artifacts.
+  * and cores, and never replaces one taken at another sf. Runs over a
+  * temp directory, never the committed artifacts.
   */
 class BenchFloorsSpec extends AnyFunSuite {
   private val Sf = "/data/sf0.1"
@@ -74,11 +75,12 @@ class BenchFloorsSpec extends AnyFunSuite {
       s"""{"queries_min":{"a":9.000},"sf":"$Sf","cores":32}""")
     assert(text(dir, "BENCH_r20_c8_floors.json") ==
       s"""{"queries_min":{"a":4.000,"b":1.000,"c":3.000},"sf":"$Sf","cores":8}""")
-    // Another sf replaces the file instead of merging into it.
-    Bench.writeFloorSnapshot(dir.toFile, "/data/sf0.01", 32, Map("b" -> 7.0))
+    // Another sf leaves the file untouched, and the note names the kept file.
+    val note = Bench.writeFloorSnapshot(dir.toFile, "/data/sf0.01", 32, Map("b" -> 7.0))
     assert(text(dir, "BENCH_r20_c32_floors.json") ==
-      """{"queries_min":{"b":7.000},"sf":"/data/sf0.01","cores":32}""")
-    // So does a snapshot that records no core count.
+      s"""{"queries_min":{"a":9.000},"sf":"$Sf","cores":32}""")
+    assert(note.exists(_.contains("BENCH_r20_c32_floors.json kept")), s"note: $note")
+    // A same-sf snapshot that records no core count is replaced.
     write(dir, "BENCH_r20_c32_floors.json", s"""{"queries_min":{"a":0.5},"sf":"$Sf"}""")
     Bench.writeFloorSnapshot(dir.toFile, Sf, 32, Map("a" -> 9.0))
     assert(text(dir, "BENCH_r20_c32_floors.json") ==

@@ -40,64 +40,62 @@ class DedupStoreSpec extends SparkSpec {
       "sf0.001 split yields no cross-batch near-dups; pick another split")
   }
 
-  test("v2 id-bucketed layout: probe == legacy layout; compact migrates; pruning reaches the scan") {
+  test("id-bucketed store: probe == batch operator on the union; pruning reaches the scan; append/remove/compact keep both") {
     // Fixture stores are far below the production size gate — force the
     // pruned path so the partition-filter pin means something.
+    val prune = graft.dedup.SpanStore.PruneMinStoreBytes
     graft.dedup.SpanStore.PruneMinStoreBytes = 0L
-    try v2LayoutScenario()
-    finally graft.dedup.SpanStore.PruneMinStoreBytes = 256L << 20
+    try bucketedScenario()
+    finally graft.dedup.SpanStore.PruneMinStoreBytes = prune
   }
 
-  private def v2LayoutScenario(): Unit = {
+  /** The batch operator on `union`, restricted to pairs touching an id
+    * at or above `cut` — what a probe of the ids >= cut must return.
+    */
+  private def unionPairs(union: org.apache.spark.sql.DataFrame, cut: Long) =
+    pairs(Dedup.minhashLshPairs(union, "doc_id", "text", n, bands, rpb, thr))
+      .filter { case (a, b, _) => a >= cut || b >= cut }
+
+  private def bucketedScenario(): Unit = {
     val dir = Files.createTempDirectory("graft_dedup_layout").toString
     val old = docs.filter(col("doc_id") < 300)
     val fresh = docs.filter(col("doc_id") >= 300)
-    DedupStore.save(old, "doc_id", "text", n, bands, rpb, s"$dir/legacy",
-      idBuckets = 0)
-    DedupStore.save(old, "doc_id", "text", n, bands, rpb, s"$dir/v2")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/legacy/layout")), "legacy store grew a layout meta")
+    DedupStore.save(old, "doc_id", "text", n, bands, rpb, s"$dir/ix")
     assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/v2/layout")), "v2 store lacks its layout meta")
-    def probe(p: String) = DedupStore.searchNew(
-      spark, p, fresh, "doc_id", "text", n, bands, rpb, thr)
-    val wantPairs = pairs(probe(s"$dir/legacy"))
-    assert(pairs(probe(s"$dir/v2")) == wantPairs,
-      "bucketed probe diverged from the legacy layout")
-    assert(wantPairs.nonEmpty, "probe found nothing; fixture too weak")
+      java.nio.file.Paths.get(s"$dir/ix/layout")), "store lacks its layout meta")
+    def probe(batch: org.apache.spark.sql.DataFrame) = DedupStore.searchNew(
+      spark, s"$dir/ix", batch, "doc_id", "text", n, bands, rpb, thr)
+    val want = unionPairs(docs, 300)
+    assert(pairs(probe(fresh)) == want, "bucketed probe diverged from the batch operator")
+    assert(want.nonEmpty, "probe found nothing; fixture too weak")
     // The candidate-bucket restriction really reaches the stored scans
     // as a planning-time partition filter.
     // Inspect the pre-execution physical plan (post-execution, AQE
     // folds scans into materialized leaf stages collect cannot enter).
-    val plan = probe(s"$dir/v2").queryExecution.sparkPlan
+    val plan = probe(fresh).queryExecution.sparkPlan
     val shingleScans = plan.collectWithSubqueries {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
-        if f.metadata("Location").contains("/v2/shingles") => f
+        if f.metadata("Location").contains("/ix/shingles") => f
     }
     assert(shingleScans.nonEmpty, "no stored shingle scan in the probe plan")
     assert(shingleScans.forall(_.metadata("PartitionFilters").contains("idb")),
       s"stored shingle scan carries no idb partition filter: " +
         shingleScans.map(_.metadata("PartitionFilters")).mkString(" | "))
-    // compact MIGRATES the legacy store to the bucketed layout, probe
-    // unchanged; append and remove then preserve it.
-    DedupStore.compact(spark, s"$dir/legacy")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/legacy/layout")), "compact did not migrate the layout")
-    assert(pairs(probe(s"$dir/legacy")) == wantPairs,
-      "probe diverged across the layout migration")
+    // compact keeps the probe; append and remove keep the layout.
+    DedupStore.compact(spark, s"$dir/ix")
+    assert(pairs(probe(fresh)) == want, "probe diverged across compact")
     val mid = docs.filter(col("doc_id") >= 300 && col("doc_id") < 350)
-    DedupStore.append(mid, "doc_id", "text", n, bands, rpb, s"$dir/legacy")
-    DedupStore.append(mid, "doc_id", "text", n, bands, rpb, s"$dir/v2")
-    DedupStore.remove(spark, s"$dir/v2", mid.select(col("doc_id")).limit(3))
-    DedupStore.remove(spark, s"$dir/legacy", mid.select(col("doc_id")).limit(3))
+    DedupStore.append(mid, "doc_id", "text", n, bands, rpb, s"$dir/ix")
+    val gone = mid.select(col("doc_id")).orderBy(col("doc_id")).limit(3)
+      .collect().map(_.getLong(0)).toSeq
+    import spark.implicits._
+    DedupStore.remove(spark, s"$dir/ix", gone.toDF("doc_id"))
     val later = docs.filter(col("doc_id") >= 350)
-    val a = pairs(DedupStore.searchNew(
-      spark, s"$dir/legacy", later, "doc_id", "text", n, bands, rpb, thr))
-    val b = pairs(DedupStore.searchNew(
-      spark, s"$dir/v2", later, "doc_id", "text", n, bands, rpb, thr))
-    assert(a == b, "append/remove diverged across layouts")
-    assert(spark.read.parquet(s"$dir/legacy/shingles").columns.contains("idb"),
-      "append after migration fell back to the legacy layout")
+    val union = docs.filter(!col("doc_id").isin(gone: _*))
+    assert(pairs(probe(later)) == unionPairs(union, 350),
+      "append/remove diverged from the batch operator on the union")
+    assert(spark.read.parquet(s"$dir/ix/shingles").columns.contains("idb"),
+      "append/remove wrote the shingles unbucketed")
   }
 
   test("searchNewAndAppend == searchNew then append: same probe, same store, leak-neutral") {
@@ -173,7 +171,7 @@ class DedupStoreSpec extends SparkSpec {
     }
     val filesBefore = Seq("bands", "shingles", "counts")
       .map(r => parquetFiles(s"$dir/ix/$r")).sum
-    DedupStore.compact(spark, s"$dir/ix", idFiles = 2)
+    DedupStore.compact(spark, s"$dir/ix")
     val filesAfter = Seq("bands", "shingles", "counts")
       .map(r => parquetFiles(s"$dir/ix/$r")).sum
     assert(filesAfter < filesBefore,
@@ -219,7 +217,7 @@ class DedupStoreSpec extends SparkSpec {
         fs, new org.apache.hadoop.fs.Path(s"$dir/ix/$rel.old"),
         false, spark.sparkContext.hadoopConfiguration)
     }
-    DedupStore.compact(spark, s"$dir/ix", idFiles = 2)
+    DedupStore.compact(spark, s"$dir/ix")
     Seq("bands", "shingles", "counts").foreach { rel =>
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/ix/$rel.old")),
         s"$rel.old survived compact")

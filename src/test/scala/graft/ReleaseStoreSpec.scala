@@ -477,17 +477,8 @@ class ReleaseStoreSpec extends SparkSpec {
     assert(err.getMessage.contains("max id ever seen"))
     assert(spark.read.parquet(s"$dir/st/classifier/docs").count() == ledgerBefore,
       "a refused increment still appended classifier statistics")
-    // Pre-upgrade store (no maxid ledger): the guard backfills its seed
-    // from the classifier docs ledger, which has seen every arrival.
-    deleteDir(s"$dir/st/maxid")
-    val err2 = intercept[IllegalArgumentException] {
-      ReleaseStore.increment(spark,
-        mkDocs(Seq(61L -> toks("b61", 24), 100L -> toks("b100", 24))),
-        "doc_id", "text", P, s"$dir/st")
-    }
-    assert(err2.getMessage.contains("max id ever seen"))
-    // A legitimately-monotone batch passes on the backfilled guard (and
-    // re-seeds the maxid ledger for the next increment).
+    // A legitimately-monotone batch passes and records its own max id
+    // in the ledger for the next increment.
     freedRows(ReleaseStore.increment(spark,
       mkDocs(Seq(100L -> toks("b100", 24)) ++ negDocs(120, 1)),
       "doc_id", "text", P, s"$dir/st"))
@@ -497,20 +488,12 @@ class ReleaseStoreSpec extends SparkSpec {
     // REPLAY refusal: the maxid row lands before any other append, so a
     // crash-retry of the same batch is refused loudly instead of
     // double-counting classifier statistics.
-    val err3 = intercept[IllegalArgumentException] {
+    val err2 = intercept[IllegalArgumentException] {
       ReleaseStore.increment(spark,
         mkDocs(Seq(100L -> toks("b100", 24)) ++ negDocs(120, 1)),
         "doc_id", "text", P, s"$dir/st")
     }
-    assert(err3.getMessage.contains("max id ever seen"))
-  }
-
-  private def deleteDir(p: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(p)
-    if (java.nio.file.Files.exists(root))
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
+    assert(err2.getMessage.contains("max id ever seen"))
   }
 
   test("composed takedown under crash: every swap kill point recovers, the re-run resumes, state matches a never-crashed takedown") {

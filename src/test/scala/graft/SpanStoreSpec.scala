@@ -92,8 +92,8 @@ class SpanStoreSpec extends SparkSpec {
     val filesBefore = parquetFiles(s"$dir/ix/grams")
     SpanStore.compact(spark, s"$dir/ix", files = 2)
     val filesAfter = parquetFiles(s"$dir/ix/grams")
-    // v2 layout: one file per gram bucket (the `files` knob sizes the
-    // unbucketed gramdf relation only).
+    // One file per gram bucket (the `files` knob sizes the unbucketed
+    // gramdf relation only).
     assert(filesAfter <= 32 && filesAfter < filesBefore,
       s"compaction did not collapse files: $filesBefore -> $filesAfter")
     val after = spans(SpanStore.searchNew(
@@ -232,72 +232,35 @@ class SpanStoreSpec extends SparkSpec {
       s"maxDf=$maxDf did not bite on this corpus; fixture too weak")
   }
 
-  test("a store written before gramdf exists is backfilled: compact, remove, capped probe all work") {
-    // r14 ADVICE: compact/remove (and now the capped probe) must
-    // tolerate a pre-upgrade store with no gramdf relation.
-    val dir = Files.createTempDirectory("graft_span_pregramdf").toString
-    SpanStore.save(docs.filter(col("doc_id") < 300), "doc_id", "text", L, s"$dir/ix")
-    val probeDocs = docs.filter(col("doc_id") >= 300)
-    def cappedProbe() = {
-      val df = SpanStore.searchNew(
-        spark, s"$dir/ix", probeDocs, "doc_id", "text", L, maxDf = 2)
-      val r = spans(df)
-      org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(df)
-      r
-    }
-    val before = cappedProbe()
-    def deleteGramdf(): Unit = {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(s"$dir/ix/gramdf"))
-    }
-    deleteGramdf()
-    assert(cappedProbe() == before, "backfilled capped probe diverged")
-    SpanStore.compact(spark, s"$dir/ix")
-    assert(new java.io.File(s"$dir/ix/gramdf").exists(),
-      "compact did not re-persist the backfilled gramdf")
-    assert(cappedProbe() == before, "post-compact capped probe diverged")
-    deleteGramdf()
-    import spark.implicits._
-    SpanStore.remove(spark, s"$dir/ix", Seq(3L).toDF("doc_id"))
-    val ref = Files.createTempDirectory("graft_span_pregramdf_ref").toString
-    SpanStore.save(docs.filter(col("doc_id") < 300 && col("doc_id") =!= 3L),
-      "doc_id", "text", L, s"$ref/ix")
-    val want = {
-      val df = SpanStore.searchNew(
-        spark, s"$ref/ix", probeDocs, "doc_id", "text", L, maxDf = 2)
-      val r = spans(df)
-      org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(df)
-      r
-    }
-    assert(cappedProbe() == want,
-      "post-remove backfilled store diverged from never-saw store")
-  }
-
-  test("v2 gram-bucketed layout: probe == legacy layout; compact migrates; pruning reaches the scan") {
+  test("gram-bucketed store: probe == batch spanDedup on the union; pruning reaches the scan; append/remove/compact keep both") {
     // Fixture stores are far below the production size gate — force the
     // pruned path so the partition-filter pin means something.
+    val prune = SpanStore.PruneMinStoreBytes
     SpanStore.PruneMinStoreBytes = 0L
-    try v2LayoutScenario()
-    finally SpanStore.PruneMinStoreBytes = 256L << 20
+    try bucketedScenario()
+    finally SpanStore.PruneMinStoreBytes = prune
   }
 
-  private def v2LayoutScenario(): Unit = {
+  /** Batch spanDedup (capped at `maxDf`) on `union`, restricted to pairs
+    * touching an id at or above `cut` — what a probe of the ids >= cut
+    * must return.
+    */
+  private def unionSpans(
+      union: org.apache.spark.sql.DataFrame, cut: Long, maxDf: Int = Int.MaxValue) =
+    spans(Dedup.spanDedup(union, "doc_id", "text", L, maxDf = maxDf))
+      .filter { case (a, b, _, _, _) => a >= cut || b >= cut }
+
+  private def bucketedScenario(): Unit = {
     val dir = Files.createTempDirectory("graft_span_layout").toString
     val old = docs.filter(col("doc_id") < 300)
     val fresh = docs.filter(col("doc_id") >= 300)
-    SpanStore.save(old, "doc_id", "text", L, s"$dir/legacy", gramBuckets = 0)
-    SpanStore.save(old, "doc_id", "text", L, s"$dir/v2")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/legacy/layout")), "legacy store grew a layout meta")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/v2/gramidx")), "v2 store lacks its existence index")
-    def probe(p: String) = SpanStore.searchNew(
-      spark, p, fresh, "doc_id", "text", L)
-    val want = spans(probe(s"$dir/legacy"))
-    assert(spans(probe(s"$dir/v2")) == want,
-      "bucketed probe diverged from the legacy layout")
+    SpanStore.save(old, "doc_id", "text", L, s"$dir/ix")
+    Seq("layout", "gramidx").foreach(f => assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$dir/ix/$f")), s"store lacks its $f"))
+    def probe(batch: org.apache.spark.sql.DataFrame, maxDf: Int = Int.MaxValue) =
+      spans(SpanStore.searchNew(spark, s"$dir/ix", batch, "doc_id", "text", L, maxDf))
+    val want = unionSpans(docs, 300)
+    assert(probe(fresh) == want, "bucketed probe diverged from batch spanDedup")
     assert(want.nonEmpty, "probe found nothing; fixture too weak")
     // The intersection-bucket restriction reaches the stored pos-level
     // scan as a planning-time partition filter. The broad `fresh` probe
@@ -313,48 +276,38 @@ class SpanStoreSpec extends SparkSpec {
       "zqa zqb zqc " + srcToks.take(12).mkString(" ") + " zqx zqy zqz"))
       .toDF("doc_id", "text")
     val narrowProbe = SpanStore.searchNew(
-      spark, s"$dir/v2", narrow, "doc_id", "text", L)
+      spark, s"$dir/ix", narrow, "doc_id", "text", L)
     val gramScans = narrowProbe.queryExecution.sparkPlan.collectWithSubqueries {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
-        if f.metadata("Location").contains("/v2/grams") => f
+        if f.metadata("Location").contains("/ix/grams") => f
     }
     assert(gramScans.nonEmpty, "no stored gram scan in the probe plan")
     assert(gramScans.forall(_.metadata("PartitionFilters").contains("gb")),
       s"stored gram scan carries no gb partition filter: " +
         gramScans.map(_.metadata("PartitionFilters")).mkString(" | "))
-    // ...and the pruned narrow probe still equals the legacy layout's.
-    assert(spans(narrowProbe) == spans(SpanStore.searchNew(
-        spark, s"$dir/legacy", narrow, "doc_id", "text", L)),
-      "pruned narrow probe diverged from the legacy layout")
-    assert(spans(narrowProbe).nonEmpty,
+    // ...and the pruned narrow probe still equals the batch operator.
+    val narrowGot = spans(narrowProbe)
+    assert(narrowGot == unionSpans(old.unionByName(narrow), 9000L),
+      "pruned narrow probe diverged from batch spanDedup")
+    assert(narrowGot.nonEmpty,
       "narrow probe found no spans; the pruning assert proved nothing")
-    // compact MIGRATES the legacy store; probe unchanged; append/remove
-    // preserve the layout; the capped probe agrees across layouts too.
-    SpanStore.compact(spark, s"$dir/legacy")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/legacy/layout")), "compact did not migrate the layout")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/legacy/gramidx")), "compact did not build the existence index")
-    assert(spans(probe(s"$dir/legacy")) == want,
-      "probe diverged across the layout migration")
+    // compact keeps the probe; append and remove keep the layout; the
+    // capped probe agrees with the capped batch operator.
+    SpanStore.compact(spark, s"$dir/ix")
+    assert(probe(fresh) == want, "probe diverged across compact")
     val mid = docs.filter(col("doc_id") >= 300 && col("doc_id") < 350)
-    Seq(s"$dir/legacy", s"$dir/v2").foreach { p =>
-      SpanStore.append(mid, "doc_id", "text", L, p)
-      SpanStore.remove(spark, p, mid.select(col("doc_id")).limit(3))
-    }
+    SpanStore.append(mid, "doc_id", "text", L, s"$dir/ix")
+    val gone = mid.select(col("doc_id")).orderBy(col("doc_id")).limit(3)
+      .collect().map(_.getLong(0)).toSeq
+    SpanStore.remove(spark, s"$dir/ix", gone.toDF("doc_id"))
     val later = docs.filter(col("doc_id") >= 350)
-    val a = spans(SpanStore.searchNew(
-      spark, s"$dir/legacy", later, "doc_id", "text", L))
-    val b = spans(SpanStore.searchNew(
-      spark, s"$dir/v2", later, "doc_id", "text", L))
-    assert(a == b, "append/remove diverged across layouts")
-    val ac = spans(SpanStore.searchNew(
-      spark, s"$dir/legacy", later, "doc_id", "text", L, maxDf = 3))
-    val bc = spans(SpanStore.searchNew(
-      spark, s"$dir/v2", later, "doc_id", "text", L, maxDf = 3))
-    assert(ac == bc, "capped probe diverged across layouts")
-    assert(spark.read.parquet(s"$dir/legacy/grams").columns.contains("gb"),
-      "append after migration fell back to the legacy layout")
+    val union = docs.filter(!col("doc_id").isin(gone: _*))
+    assert(probe(later) == unionSpans(union, 350),
+      "append/remove diverged from batch spanDedup on the union")
+    assert(probe(later, maxDf = 3) == unionSpans(union, 350, maxDf = 3),
+      "capped probe diverged from the capped batch operator on the union")
+    assert(spark.read.parquet(s"$dir/ix/grams").columns.contains("gb"),
+      "append/remove wrote the grams unbucketed")
   }
 
   test("probe plan never self-joins the stored gram relation") {

@@ -23,7 +23,7 @@ class SwapCrashSpec extends SparkSpec {
 
   private def docs = Tables.documents(spark, Sf001)
     .select(col("doc_id"), col("text"))
-    .filter(col("doc_id") < 220) // small: 16 crash scenarios re-probe below
+    .filter(col("doc_id") < 220) // small: 22 crash scenarios re-probe below
 
   private def copyDir(src: String, dst: String): Unit = {
     import scala.jdk.CollectionConverters._
@@ -63,7 +63,7 @@ class SwapCrashSpec extends SparkSpec {
     // stored endpoints of actual probe pairs, so the removal observably
     // changes the probe.
     copyDir(s"$root/base", s"$root/ref_compact")
-    DedupStore.compact(spark, s"$root/ref_compact", idFiles = 2)
+    DedupStore.compact(spark, s"$root/ref_compact")
     val wantCompact = probeStore(s"$root/ref_compact")
     val goneIds = wantCompact.flatMap { case (a, b) => Seq(a, b) }
       .filter(_ < 150).toSeq.sorted.take(2)
@@ -75,20 +75,21 @@ class SwapCrashSpec extends SparkSpec {
     assert(wantRemove != wantCompact,
       "removal had no observable effect on the probe; fixture too weak")
 
-    // 2 renames x (3 relations + the swap-staged layout meta) = 8.
-    val killPoints = 0 until 8
+    // 2 renames x 3 relations = 6 (the layout meta is written once by
+    // save and never swapped).
+    val killPoints = 0 until 6
     for (k <- killPoints) {
       val dir = s"$root/compact_k$k"
       copyDir(s"$root/base", dir)
       DedupStore.swapFailAfterRenames = k
       try {
         val e = intercept[java.io.IOException] {
-          DedupStore.compact(spark, dir, idFiles = 2)
+          DedupStore.compact(spark, dir)
         }
         assert(e.getMessage.contains("injected swap crash"))
       } finally DedupStore.swapFailAfterRenames = Int.MaxValue
       DedupStore.recover(spark, dir)
-      DedupStore.compact(spark, dir, idFiles = 2) // re-run, idempotent
+      DedupStore.compact(spark, dir) // re-run, idempotent
       assert(probeStore(dir) == wantCompact,
         s"compact kill point $k: recovered store probe diverged")
     }
@@ -151,20 +152,15 @@ class SwapCrashSpec extends SparkSpec {
     }
   }
 
-  test("SpanStore compact (incl. the v2 gramidx swap + legacy migration): every kill point recovers") {
-    // compact swaps the three relations PLUS the swap-staged layout
-    // meta (ordered last, so a crash can leave the meta missing but
-    // never wrong) and doubles as the legacy→v2 migration path: drive
-    // the kill points on a LEGACY store so every crash exercises the
-    // migration window too (meta absent → store keeps reading as
-    // legacy, appends refused → recover + re-run compact converges to
-    // v2). On a legacy base the swap spends 6 renames (no live gramidx
-    // or layout to move aside: 1 + 2 + 2 + 1); k = 6 runs clean and
-    // covers "crash after the last rename".
+  test("SpanStore compact: each of the swap's six renames crashes and recovers to a probe-identical store") {
+    // compact swaps gramidx, grams and gramdf: 2 renames x 3 relations =
+    // 6, including the live gramidx aside. Every k in 0..5 must really
+    // crash there; recover + re-run must then probe like a store that
+    // never crashed.
     val root = Files.createTempDirectory("graft_swapcrash_spancompact").toString
     val stored = docs.filter(col("doc_id") < 150)
     val probe = docs.filter(col("doc_id") >= 150)
-    SpanStore.save(stored, "doc_id", "text", L, s"$root/base", gramBuckets = 0)
+    SpanStore.save(stored, "doc_id", "text", L, s"$root/base")
     def probeStore(p: String) = {
       val df = SpanStore.searchNew(spark, p, probe, "doc_id", "text", L)
       val r = spansOf(df)
@@ -175,88 +171,53 @@ class SwapCrashSpec extends SparkSpec {
     SpanStore.compact(spark, s"$root/ref")
     val want = probeStore(s"$root/ref")
     assert(want.nonEmpty, "compacted reference probe found nothing; fixture too weak")
-    for (k <- 0 until 7) {
+    for (k <- 0 until 6) {
       val dir = s"$root/compact_k$k"
       copyDir(s"$root/base", dir)
       DedupStore.swapFailAfterRenames = k
-      val crashed =
-        try { SpanStore.compact(spark, dir); false }
-        catch { case e: java.io.IOException =>
-          assert(e.getMessage.contains("injected swap crash")); true }
-      finally DedupStore.swapFailAfterRenames = Int.MaxValue
-      // A legacy store has no live gramidx to move aside, so the swap
-      // spends fewer renames than the v2 worst case — later ks run clean.
-      if (crashed) {
-        SpanStore.recover(spark, dir)
-        SpanStore.compact(spark, dir)
-      }
+      try {
+        val e = intercept[java.io.IOException] {
+          SpanStore.compact(spark, dir)
+        }
+        assert(e.getMessage.contains("injected swap crash"))
+      } finally DedupStore.swapFailAfterRenames = Int.MaxValue
+      SpanStore.recover(spark, dir)
+      SpanStore.compact(spark, dir) // re-run, idempotent
       assert(probeStore(dir) == want,
         s"SpanStore compact kill point $k: recovered store probe diverged")
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/layout")),
-        s"kill point $k: migration did not converge to the v2 layout")
     }
   }
 
-  test("a meta-less bucketed store (crashed migration) refuses appends until compact re-commits the meta") {
-    // The wedge the guard prevents: a crash inside a migrating compact
-    // after the relation swaps but before the layout swap leaves
-    // bucketed partition dirs with no meta. An append would then read
-    // layout=None and write FLAT files next to the idb=/gb= dirs,
-    // corrupting partition discovery for every later read — so the
-    // append must refuse, and recover + compact (the documented repair)
-    // must restore appendability with probe parity.
-    val root = Files.createTempDirectory("graft_swapcrash_metaless").toString
+  test("a store without its layout meta fails every probe, append and compact, naming the path, before any write") {
+    val root = Files.createTempDirectory("graft_swapcrash_nolayout").toString
     val stored = docs.filter(col("doc_id") < 150)
     val batch = docs.filter(col("doc_id") >= 150)
-
-    // DedupStore: legacy base → migrating compact crashes before the
-    // layout rename (renames: bands 2 + shingles 2 + counts 2 = 6; the
-    // layout, with no live file to move aside, is rename #7 → k = 6).
-    DedupStore.save(stored, "doc_id", "text", 3, 8, 4, s"$root/nd", idBuckets = 0)
-    DedupStore.swapFailAfterRenames = 6
-    try intercept[java.io.IOException] {
-      DedupStore.compact(spark, s"$root/nd", idFiles = 2)
-    } finally DedupStore.swapFailAfterRenames = Int.MaxValue
-    assert(!Files.exists(Paths.get(s"$root/nd/layout")), "fixture: meta present")
-    val e1 = intercept[IllegalArgumentException] {
-      DedupStore.append(batch, "doc_id", "text", 3, 8, 4, s"$root/nd")
+    DedupStore.save(stored, "doc_id", "text", 3, 8, 4, s"$root/nd")
+    SpanStore.save(stored, "doc_id", "text", L, s"$root/sp")
+    Seq("nd", "sp").foreach(st => Files.delete(Paths.get(s"$root/$st/layout")))
+    /** Every file under the store with its size and mtime. */
+    def tree(p: String): Set[(String, Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(Paths.get(p)).iterator().asScala.map(f =>
+        (f.toString, Files.size(f), Files.getLastModifiedTime(f).toMillis)).toSet
     }
-    assert(e1.getMessage.contains("layout meta is missing"))
-    DedupStore.recover(spark, s"$root/nd")
-    DedupStore.compact(spark, s"$root/nd", idFiles = 2)
-    DedupStore.append(batch, "doc_id", "text", 3, 8, 4, s"$root/nd")
-    // The repaired store answers like one that never crashed.
-    val ref = s"$root/nd_ref"
-    DedupStore.save(docs, "doc_id", "text", 3, 8, 4, ref)
-    val probe2 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 120)
-    def pairs(p: String) = {
-      val df = DedupStore.searchNew(spark, p, probe2.select(
-        (col("doc_id") + 1000).as("doc_id"), col("text")),
-        "doc_id", "text", 3, 8, 4, 0.4)
-      val r = pairsOf(df)
-      org.apache.spark.sql.graft.GraftInternals.freeLocalCheckpoint(df)
-      r
+    def refused(store: String)(op: => Any): Unit = {
+      val before = tree(store)
+      val e = intercept[IllegalArgumentException](op)
+      assert(e.getMessage.contains(store) && e.getMessage.contains("layout"),
+        s"message does not name $store and its layout meta: ${e.getMessage}")
+      assert(tree(store) == before, s"a refused call wrote into $store")
     }
-    assert(pairs(s"$root/nd") == pairs(ref),
-      "repaired store probe diverged from a never-crashed store")
-
-    // SpanStore: same wedge, same guard (legacy base spends 5 renames
-    // before its layout rename: gramidx 1 + grams 2 + gramdf 2 → k = 5).
-    SpanStore.save(stored, "doc_id", "text", L, s"$root/sp", gramBuckets = 0)
-    DedupStore.swapFailAfterRenames = 5
-    try intercept[java.io.IOException] {
-      SpanStore.compact(spark, s"$root/sp")
-    } finally DedupStore.swapFailAfterRenames = Int.MaxValue
-    assert(!Files.exists(Paths.get(s"$root/sp/layout")), "fixture: meta present")
-    val e2 = intercept[IllegalArgumentException] {
-      SpanStore.append(batch, "doc_id", "text", L, s"$root/sp")
-    }
-    assert(e2.getMessage.contains("layout meta is missing"))
-    SpanStore.recover(spark, s"$root/sp")
-    SpanStore.compact(spark, s"$root/sp")
-    SpanStore.append(batch, "doc_id", "text", L, s"$root/sp")
-    assert(Files.exists(Paths.get(s"$root/sp/layout")),
-      "repair did not converge to the v2 layout")
+    val nd = s"$root/nd"
+    refused(nd)(DedupStore.searchNew(spark, nd, batch, "doc_id", "text", 3, 8, 4, 0.4))
+    refused(nd)(DedupStore.append(batch, "doc_id", "text", 3, 8, 4, nd))
+    refused(nd)(DedupStore.searchNewAndAppend(spark, nd, batch, "doc_id", "text", 3, 8, 4, 0.4))
+    refused(nd)(DedupStore.compact(spark, nd))
+    val sp = s"$root/sp"
+    refused(sp)(SpanStore.searchNew(spark, sp, batch, "doc_id", "text", L))
+    refused(sp)(SpanStore.append(batch, "doc_id", "text", L, sp))
+    refused(sp)(SpanStore.searchNewAndAppend(spark, sp, batch, "doc_id", "text", L))
+    refused(sp)(SpanStore.compact(spark, sp))
   }
 
   test("a crash during STAGING (partial .tmp, live intact) re-runs cleanly") {
@@ -276,7 +237,7 @@ class SwapCrashSpec extends SparkSpec {
     val tmp = Paths.get(s"$root/ix/.compact.tmp/bands")
     Files.createDirectories(tmp)
     Files.write(tmp.resolve("junk.txt"), "junk".getBytes)
-    DedupStore.compact(spark, s"$root/ix", idFiles = 2)
+    DedupStore.compact(spark, s"$root/ix")
     assert(probeStore() == before,
       "stale staging junk leaked into the compacted store")
   }
